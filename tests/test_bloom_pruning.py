@@ -71,7 +71,7 @@ def enc_root(spark, tmp_path_factory):
 def test_point_lookup_bloom_prunes_beyond_salt(spark, enc_root):
     """Within the target's salt the chunk doc_id ranges all cover a
     hash-spread point, so only the Bloom bits can skip chunks: the
-    pandas filter must keep strictly fewer chunks than salt+range."""
+    Bloom probe must keep strictly fewer chunks than salt+range."""
     import zlib
     df, root = enc_root
     target = "doc-000000000123"

@@ -2,6 +2,9 @@
 column pruning on the pages table, a single shuffle in the encode
 pipeline — asserted from .explain output (SURVEY.md §4)."""
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from tokencodec.spark import decode_job, encode_job, synth
@@ -150,3 +153,81 @@ def test_seq_aware_delete_plan_broadcasts(spark, tmp_path):
     assert "SortMergeJoin" not in plan, plan[:3000]
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
     assert "page_tokens" in read_schema
+
+
+# ------------------------------------------------- lookup plan shape
+#
+# A lookup reads only the candidate files its footers admit (see
+# decode_job._file_plan), decodes in ONE Python stage with the Bloom
+# probe inside the kernel — split documents included — and plans no
+# Exchange; a full decode keeps the repartitioned stitch.
+
+
+@pytest.fixture(scope="module")
+def split_table(spark, tmp_path_factory):
+    """A direct-written multi-file table holding exactly one split
+    document: the chunk budget is the second-longest document's length,
+    so only the longest one is cut into parts."""
+    root = str(tmp_path_factory.mktemp("lookup_plan") / "t")
+    df = synth.token_table(spark, 400, seed=11).cache()
+    lens = sorted(r.n_tok for r in df.select("n_tok").collect())
+    assert lens[-1] > lens[-2]
+    encode_job.encode(spark, df, root, commit_groups=4, n_salts=8,
+                      max_chunk_tokens=lens[-2], direct_write=True)
+    big = df.orderBy(F.desc("n_tok")).first().doc_id
+    return df, root, big
+
+
+def _executed(df) -> tuple[list, str]:
+    rows = df.collect()
+    return rows, df._jdf.queryExecution().executedPlan().toString()
+
+
+def _files(paths) -> set[str]:
+    return {decode_job._norm_path(p) for p in paths}
+
+
+def test_point_lookup_plan_one_scan_no_exchange(spark, split_table):
+    df, root, big = split_table
+    ids = sorted(r.doc_id for r in df.select("doc_id").collect())
+    d = next(i for i in ids if i != big
+             and not decode_job.lookup_report(root, [i])["stitch"])
+    rep = decode_job.lookup_report(root, [d])
+    assert 0 < rep["files_kept"] < rep["files_considered"], rep
+    out = decode_job.decode(spark, root, doc_id_min=d, doc_id_max=d)
+    rows, plan = _executed(out)
+    assert [r.doc_id for r in rows] == [d]
+    assert plan.count("FileScan") == 1, plan
+    assert f"InMemoryFileIndex({rep['files_kept']} paths)" in plan, plan
+    assert _files(out.inputFiles()) == _files(rep["paths"])
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+
+def test_split_lookup_plan_no_exchange(spark, split_table):
+    df, root, big = split_table
+    assert decode_job.lookup_report(root, [big])["stitch"]
+    out = decode_job.decode(spark, root, doc_id_min=big, doc_id_max=big)
+    rows, plan = _executed(out)
+    assert "Exchange" not in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
+    # whole chunks and split parts decode in the same single stage
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    want = df.filter(F.col("doc_id") == big).first()
+    assert len(rows) == 1 and rows[0].n_tok == want.n_tok
+    assert rows[0].tokens == want.tokens  # bit-identical reassembly
+    # the batch lookup shares the plan shape
+    out = decode_job.decode(spark, root, doc_ids=[big, rows[0].doc_id + "x"],
+                            packed=True)
+    rows, plan = _executed(out)
+    assert "Exchange" not in plan, plan
+    assert [r.doc_id for r in rows] == [big]
+
+
+def test_full_decode_keeps_repartitioned_stitch(spark, split_table):
+    df, root, _ = split_table
+    plan = _formatted(decode_job.decode(spark, root, packed=True), spark)
+    assert re.search(r"\(\d+\) Exchange\n.*\nArguments: hashpartitioning\(sgrp",
+                     plan), plan[:3000]

@@ -56,6 +56,22 @@ def test_string_page_roundtrip(blobs, force_fsst):
     assert dd == data
 
 
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.integers(min_value=-(1 << 24), max_value=1 << 24),
+                min_size=1, max_size=300),
+       st.integers(min_value=0, max_value=24))
+def test_dictionary_unique_inverse_paths_agree(xs, shift):
+    """The bincount and sort paths of dictionary._unique_inverse return
+    identical (uniques, inverse): dense values (range within 4x the
+    length) take the bincount path, sparse ones the sort."""
+    from tokencodec.codecs import dictionary
+    vals = np.array(xs, dtype=np.int64) >> shift
+    want_u, want_i = np.unique(vals, return_inverse=True)
+    got_u, got_i = dictionary._unique_inverse(vals)
+    np.testing.assert_array_equal(got_u, want_u)
+    np.testing.assert_array_equal(got_i.ravel(), want_i.ravel())
+
 # ---------------------------------------------------------------- nested trees
 
 def _nested_values(depth):

@@ -40,11 +40,13 @@ _BINCOUNT_MAX_RANGE = 1 << 22
 def _unique_inverse(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """np.unique(values, return_inverse=True), but O(n + R) via
     bincount when the value range R is small (token vocabularies are
-    ~2^16) instead of the O(n log n) full sort — identical outputs."""
+    ~2^16) instead of the O(n log n) full sort — identical outputs.
+    R must also be small relative to n: a short array spanning a wide
+    range would allocate and scan O(R) bins where the sort is cheap."""
     vmin = int(values.min())
     vmax = int(values.max())
     R = vmax - vmin + 1
-    if R > _BINCOUNT_MAX_RANGE:
+    if R > _BINCOUNT_MAX_RANGE or R > 4 * len(values):
         return np.unique(values, return_inverse=True)
     shifted = (values - vmin).astype(np.int64, copy=False)
     present = np.bincount(shifted, minlength=R) > 0

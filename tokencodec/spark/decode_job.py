@@ -29,6 +29,19 @@ data at all — and because both sides' scan subtrees live in one job,
 their stages overlap instead of running back-to-back; the
 double-exceptAll diff runs only when the signatures disagree
 (strict=True forces it).
+
+Lookups and range scans are narrowed on the driver before any job:
+`_file_plan` reads each committed data file's parquet footer row-group
+statistics (salt, doc-id and n_tok bounds, max doc_parts; cached by
+path) and the scan lists only candidate files — unknown stats and
+classic-write run directories always stay candidates. A point or batch
+lookup then plans one FileScan -> Filter (chunk range + salt) ->
+MapInArrow (in-kernel Bloom probe, then page decode) — no Exchange.
+Split documents are planned for only when a candidate row group may
+hold split parts: a lookup then adds coalesce(1) + a sort and stitches
+in the same MapInArrow; scans add a stitch branch co-located by
+repartition("sgrp"). `lookup_report` exposes the file decision
+without running a job.
 """
 
 from __future__ import annotations
@@ -55,7 +68,6 @@ STITCH_FLUSH_BYTES = 1 << 29
 STITCH_INT32_SAFE = (1 << 31) - 8
 _COL_PAGE = {"doc_id": "page_doc_id", "tokens": "page_tokens",
              "n_tok": "page_n_tok", "source": "page_source"}
-_LINEAGE_COLS = ["doc_part", "doc_parts", "split_uid"]
 
 
 def _binary_views(col: pa.Array) -> tuple[np.ndarray, memoryview]:
@@ -219,17 +231,46 @@ def spark_type_of_extra_page(page) -> str:
     return _KIND_TYPE[pageformat.read_header(page)["kind"]]
 
 
+def _bloom_rows(it: Iterator[pa.RecordBatch],
+                targets: list[str] | None) -> Iterator[pa.RecordBatch]:
+    """Drop chunk rows whose ``doc_bloom`` proves every target absent
+    (any-of, tokencodec/bloom.py), before any of their pages is parsed.
+    ``targets`` None passes batches through. A NULL or unparseable blob
+    keeps its row (unknown = keep); split parts carry their document's
+    id in every part's filter, so a split doc survives whole or not at
+    all."""
+    if targets is None:
+        yield from it
+        return
+    from tokencodec import bloom
+    for batch in it:
+        if batch.num_rows == 0:
+            continue
+        off, data = _binary_views(batch.column("doc_bloom"))
+        keep = bloom.series_might_contain_any(
+            [data[off[r]:off[r + 1]] for r in range(batch.num_rows)], targets)
+        if keep.all():
+            yield batch
+        elif keep.any():
+            yield batch.filter(pa.array(keep))
+
+
 def make_decode_batches(packed: bool = False, cols: list[str] | None = None,
-                        extras: tuple = (), with_seq: bool = False):
+                        extras: tuple = (), with_seq: bool = False,
+                        targets: list[str] | None = None):
+    """mapInArrow kernel decoding one chunk per input row, and the input
+    columns it needs. ``targets`` (point / batch lookups) adds the
+    in-kernel Bloom probe over ``doc_bloom``."""
     cols = list(ALL_COLUMNS) if cols is None else cols
     page_cols = sorted({_COL_PAGE[c] for c in cols}
                        | ({"page_n_tok"} if "tokens" in cols else set()))
 
-    scal = (tuple(_LINEAGE_COLS) + (("extra_pages",) if extras else ())
+    scal = ((("extra_pages",) if extras else ())
             + (("data_seq",) if with_seq else ()))
 
     def decode_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for _, pages, sc in iter_page_rows(it, page_cols, scal):
+        for _, pages, sc in iter_page_rows(_bloom_rows(it, targets),
+                                           page_cols, scal):
             chunk = _decode_chunk(pages, cols, packed)
             n = chunk.num_rows
             arrays = list(chunk.columns)
@@ -241,19 +282,16 @@ def make_decode_batches(packed: bool = False, cols: list[str] | None = None,
                 for name, t in extras:
                     arrays.append(_extra_array(m.get(name), t, n))
                     names.append(name)
-            arrays += [pa.array([sc["doc_part"]] * n, pa.int32()),
-                       pa.array([sc["doc_parts"]] * n, pa.int32()),
-                       pa.array([sc["split_uid"]] * n, pa.string())]
-            names = names + _LINEAGE_COLS
             if with_seq:
                 # per-chunk commit seq (delete masking): rows of one
                 # chunk share their file's group, hence its seq
                 arrays.append(pa.array([sc["data_seq"]] * n, pa.int64()))
-                names = names + ["data_seq"]
+                names.append("data_seq")
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return decode_batches, (page_cols + (["extra_pages"] if extras else [])
-                            + (["data_seq"] if with_seq else []))
+                            + (["data_seq"] if with_seq else [])
+                            + (["doc_bloom"] if targets is not None else []))
 
 
 def make_stitch_batches(packed: bool, cols: list[str], extras: tuple = (),
@@ -405,6 +443,25 @@ def make_stitch_batches(packed: bool, cols: list[str], extras: tuple = (),
     return stitch, in_cols
 
 
+def _lookup_batches(decode_fn, stitch_fn, targets: list[str]):
+    """mapInArrow kernel of a lookup that may touch split documents: ONE
+    partition sorted (sgrp, doc_part), whole chunks (``_split`` false)
+    decoded as they stream through ``decode_fn`` (which probes the
+    Bloom filters itself), split parts kept in order, Bloom-probed and
+    stitched at the end by ``stitch_fn`` — one Python stage instead of
+    a decode branch plus a stitch branch over the same files."""
+    def run(it):
+        parts = []
+        for batch in it:
+            split = batch.column("_split").to_numpy(zero_copy_only=False)
+            if not split.all():
+                yield from decode_fn(iter([batch.filter(pa.array(~split))]))
+            if split.any():
+                parts.append(batch.filter(pa.array(split)))
+        yield from stitch_fn(_bloom_rows(iter(parts), targets))
+    return run
+
+
 def _out_ddl(cols: list[str], packed: bool, extras: tuple = ()) -> str:
     types = {"doc_id": "string", "n_tok": "int", "source": "string",
              "tokens": "binary" if packed else "array<int>"}
@@ -412,8 +469,19 @@ def _out_ddl(cols: list[str], packed: bool, extras: tuple = ()) -> str:
                      + [f"{n} {t}" for n, t in extras])
 
 
+def _target_snapshot(tbl: SnapshotTable, snapshot_id: int | None,
+                     snap: dict | None = None) -> dict | None:
+    """``snap`` when the caller already resolved it, else the snapshot
+    ``snapshot_id`` (or the current one) — None on an empty root."""
+    if snap is not None:
+        return snap
+    return (tbl.current_snapshot() if snapshot_id is None
+            else tbl.snapshot(snapshot_id))
+
+
 def _scheme_from_manifest(root: str, snapshot_id: int | None,
-                          branch: str | None = None) -> dict | None:
+                          branch: str | None = None,
+                          snap: dict | None = None) -> dict | None:
     """The table's partitioning scheme, read from manifest JSON only.
     Encode stamps it on every group commit and REFUSES to mix schemes
     within one table (resume check in encode_job), and publish refuses
@@ -421,8 +489,7 @@ def _scheme_from_manifest(root: str, snapshot_id: int | None,
     is THE table's scheme. None when the chain predates the metric or
     expired past it (callers must then skip scheme-derived pruning)."""
     tbl = SnapshotTable(root, branch=branch)
-    snap = (tbl.current_snapshot() if snapshot_id is None
-            else tbl.snapshot(snapshot_id))
+    snap = _target_snapshot(tbl, snapshot_id, snap)
     while snap is not None:
         sch = snap.get("metrics", {}).get("scheme")
         if sch:
@@ -437,28 +504,9 @@ def _scheme_from_manifest(root: str, snapshot_id: int | None,
     return None
 
 
-def _bloom_keep(target_doc_ids: list[str]):
-    """pandas_udf testing target doc_ids against each chunk's Bloom
-    blob (any-of for batch lookups). Runs on chunk METADATA rows only
-    (the lookup paths filter after range+salt pruning, so the input is
-    already a small chunk list, not row data)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def keep(blobs):
-        import pandas as pd
-        from tokencodec import bloom
-        if len(target_doc_ids) == 1:
-            return pd.Series(bloom.series_might_contain(
-                blobs.to_numpy(), target_doc_ids[0]))
-        return pd.Series(bloom.series_might_contain_any(
-            blobs.to_numpy(), target_doc_ids))
-
-    return keep
-
-
 def _max_doc_parts_from_manifest(root: str, snapshot_id: int | None,
-                                 branch: str | None = None) -> int | None:
+                                 branch: str | None = None,
+                                 snap: dict | None = None) -> int | None:
     """Max doc_parts over the target snapshot's ancestry, read from
     manifest JSON only (no Spark job). Walks parent_id links — NOT the
     id<=target set, which would both miss expired ancestors (silently
@@ -470,8 +518,7 @@ def _max_doc_parts_from_manifest(root: str, snapshot_id: int | None,
     None — callers then probe — when the chain predates the metrics or
     was truncated by snapshot expiry before a cumulative field."""
     tbl = SnapshotTable(root, branch=branch)
-    snap = (tbl.current_snapshot() if snapshot_id is None
-            else tbl.snapshot(snapshot_id))
+    snap = _target_snapshot(tbl, snapshot_id, snap)
     if snap is None:
         return None
     best = 0
@@ -513,11 +560,10 @@ def _norm_path(p: str) -> str:
     return re.sub(r"^[a-zA-Z][a-zA-Z0-9+.-]*:", "", p).lstrip("/")
 
 
-def _delete_plan(spark: SparkSession, root: str,
-                 snapshot_id: int | None,
+def _delete_plan(spark: SparkSession, root: str, snap: dict,
                  branch: str | None = None) -> dict | None:
-    """Delete manifests of the target snapshot resolved into masking
-    inputs. None when the snapshot carries no deleted ids; otherwise
+    """Delete manifests of the target snapshot ``snap`` resolved into
+    masking inputs. None when the snapshot carries no deleted ids; otherwise
     ``{"dels": DF, "path_seqs": dict | None}``:
 
     - Legacy mode (no delete group has attributable first-commit seq —
@@ -533,12 +579,8 @@ def _delete_plan(spark: SparkSession, root: str,
       since the oldest unpurged delete, not by table size)."""
     from pyspark.sql import functions as F
 
-    from tokencodec.spark.table import SnapshotTable, is_delete_group
+    from tokencodec.spark.table import is_delete_group
     tbl = SnapshotTable(root, branch=branch)
-    snap = (tbl.current_snapshot() if snapshot_id is None
-            else tbl.snapshot(snapshot_id))
-    if snap is None:
-        return None
     groups = tbl.resolve_groups(snap)
     del_groups = {k: ps for k, ps in groups.items()
                   if is_delete_group(k) and ps}
@@ -619,6 +661,166 @@ def _attach_data_seq(spark: SparkSession, pages: DataFrame,
         .drop("_fp", "_fd", "_fseq", "_dseq"))
 
 
+# Per-file data skipping (Delta Lake's per-file statistics): before a
+# lookup or filtered scan is planned, the driver reads the parquet
+# footer row-group statistics of each committed data file and hands the
+# scan only the files a row group of which may hold a matching chunk.
+# Footers cover every writer (direct pyarrow writes and JVM-written
+# compaction output alike). Data files are immutable and uniquely
+# named, so their bounds are cached process-wide by path (bounded FIFO,
+# like table._GROUPSET_CACHE).
+_FOOTER_COLS = ("salt", "doc_id_min", "doc_id_max", "doc_parts",
+                "n_tok_min", "n_tok_max")
+_FOOTER_CACHE: dict[str, list[dict]] = {}
+_FOOTER_CACHE_MAX = 4096
+
+
+def _footer_bounds(path: str) -> list[dict] | None:
+    """Per-row-group ``{column: (min, max)}`` over _FOOTER_COLS for one
+    committed data file. A column without statistics, or holding any
+    NULL, is left out (unknown). None = the whole file is unknown: a
+    run directory from a classic JVM write, or an unreadable footer."""
+    if not path.endswith(".parquet"):
+        return None
+    cached = _FOOTER_CACHE.get(path)
+    if cached is not None:
+        return cached
+    from tokencodec.spark.encode_job import _open_parquet
+    try:
+        with _open_parquet(path) as pf:
+            md = pf.metadata
+    except (OSError, ValueError):
+        return None
+    idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
+    out = []
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        b = {}
+        for c in _FOOTER_COLS:
+            st = rg.column(idx[c]).statistics if c in idx else None
+            if (st is not None and st.has_min_max and st.has_null_count
+                    and st.null_count == 0):
+                b[c] = (st.min, st.max)
+        out.append(b)
+    if len(_FOOTER_CACHE) >= _FOOTER_CACHE_MAX:
+        _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
+    _FOOTER_CACHE[path] = out
+    return out
+
+
+def _rg_may_match(b: dict, targets: list[tuple[str, int | None]] | None,
+                  doc_id_min: str | None, doc_id_max: str | None,
+                  n_tok_min: int | None, n_tok_max: int | None) -> bool:
+    """False only when the row group's bounds prove that none of its
+    chunks passes decode's chunk filters — the same predicates, lifted
+    from chunks to the row group (min of the chunk minima, max of the
+    chunk maxima). ``targets`` pairs each lookup id with its salt
+    (None when the table's scheme derives none)."""
+    lo = b.get("doc_id_min", (None, None))[0]
+    hi = b.get("doc_id_max", (None, None))[1]
+    if doc_id_min is not None and hi is not None and hi < doc_id_min:
+        return False
+    if doc_id_max is not None and lo is not None and lo > doc_id_max:
+        return False
+    if targets is not None:
+        salt = b.get("salt")
+        if not any((lo is None or lo <= d) and (hi is None or hi >= d)
+                   and (s is None or salt is None
+                        or salt[0] <= s <= salt[1])
+                   for d, s in targets):
+            return False
+    if _rg_may_split(b):
+        return True  # split parts are exempt from n_tok pruning
+    if n_tok_min is not None and "n_tok_max" in b \
+            and b["n_tok_max"][1] < n_tok_min:
+        return False
+    if n_tok_max is not None and "n_tok_min" in b \
+            and b["n_tok_min"][0] > n_tok_max:
+        return False
+    return True
+
+
+def _rg_may_split(b: dict) -> bool:
+    """May the row group hold split parts? Unknown stats say yes."""
+    return "doc_parts" not in b or b["doc_parts"][1] > 1
+
+
+def _data_paths(tbl: SnapshotTable, snap: dict) -> list[str]:
+    from tokencodec.spark.table import is_delete_group
+    return [p for k, ps in tbl.resolve_groups(snap).items()
+            if not is_delete_group(k) for p in ps]
+
+
+def _file_plan(root: str, snap: dict, paths: list[str],
+               branch: str | None = None,
+               targets: list[str] | None = None,
+               doc_id_min: str | None = None, doc_id_max: str | None = None,
+               n_tok_min: int | None = None,
+               n_tok_max: int | None = None) -> dict:
+    """What a decode over ``paths`` at ``snap`` reads, decided on the
+    driver from manifests and parquet footers, with no Spark job:
+
+    - ``files_considered`` / ``files_kept``: counts before and after
+      footer narrowing, ``paths`` the kept files. Narrowing runs only
+      for lookups (``targets``) and doc-id / n_tok range filters;
+      other decodes keep every file.
+    - ``salts``: the salts ``targets`` hash to under the table's
+      salt_mod scheme, None when the scheme derives none.
+    - ``stitch``: whether split documents may be read, so the stitch
+      branch is planned. The manifest chain's max doc_parts rules it
+      out table-wide; a narrowed decode also needs a kept row group
+      with doc_parts max > 1 or unknown. None = unknown (a full decode
+      of a chain predating the metric; decode then probes).
+    """
+    salts = None
+    if targets:
+        sch = _scheme_from_manifest(root, None, branch=branch, snap=snap)
+        if sch is not None and sch.get("group_scheme") == "salt_mod" \
+                and int(sch.get("n_salts", 0)) > 0:
+            import zlib
+            n = int(sch["n_salts"])
+            salts = [zlib.crc32(d.encode("utf-8")) % n for d in targets]
+    max_parts = _max_doc_parts_from_manifest(root, None, branch=branch,
+                                             snap=snap)
+    stitch = None if max_parts is None else max_parts > 1
+    kept = paths
+    if targets is not None or any(v is not None for v in (
+            doc_id_min, doc_id_max, n_tok_min, n_tok_max)):
+        pairs = (None if targets is None else
+                 list(zip(targets, salts or [None] * len(targets))))
+        kept, may_split = [], False
+        for p in paths:
+            bounds = _footer_bounds(p)
+            hit = (None if bounds is None else
+                   [b for b in bounds if _rg_may_match(
+                       b, pairs, doc_id_min, doc_id_max, n_tok_min,
+                       n_tok_max)])
+            if hit is None or hit:
+                kept.append(p)
+                may_split = may_split or hit is None or any(
+                    _rg_may_split(b) for b in hit)
+        stitch = may_split and stitch is not False
+    return {"files_considered": len(paths), "files_kept": len(kept),
+            "paths": kept, "salts": sorted(set(salts)) if salts else None,
+            "stitch": stitch}
+
+
+def lookup_report(root: str, doc_ids: list[str],
+                  snapshot_id: int | None = None,
+                  branch: str | None = None) -> dict:
+    """What ``decode(root, doc_ids=doc_ids)`` will read, without running
+    a job: files considered, files kept (and their paths), the target
+    salts, and whether the stitch branch is planned. A point lookup of
+    ``d`` reads what ``lookup_report(root, [d])`` reports. Computed by
+    the same function decode plans with (_file_plan)."""
+    tbl = SnapshotTable(root, branch=branch)
+    snap = _target_snapshot(tbl, snapshot_id)
+    if snap is None:
+        raise FileNotFoundError(f"no committed snapshot under {root}")
+    return _file_plan(root, snap, _data_paths(tbl, snap), branch=branch,
+                      targets=sorted(set(doc_ids)))
+
+
 def decode(spark: SparkSession, root: str,
            doc_id_min: str | None = None, doc_id_max: str | None = None,
            doc_ids: list[str] | None = None,
@@ -661,19 +863,23 @@ def decode(spark: SparkSession, root: str,
                                 or doc_id_max is not None):
         raise ValueError("pass either doc_ids or doc_id_min/max, not both")
 
-    # time travel by name: a tag (SnapshotTable.create_tag) resolves to
-    # its pinned snapshot id — one manifest-dir read, no Spark job
+    # the target snapshot is resolved ONCE; every manifest helper below
+    # reads it from here. Time travel by name: a tag
+    # (SnapshotTable.create_tag) resolves to its pinned snapshot id
+    tbl = SnapshotTable(root, branch=branch)
     if tag is not None:
         if snapshot_id is not None:
             raise ValueError("pass either tag or snapshot_id, not both")
-        from tokencodec.spark.table import SnapshotTable
-        snapshot_id = SnapshotTable(root, branch=branch).tag(tag)["snapshot_id"]
+        snapshot_id = tbl.tag(tag)["snapshot_id"]
+    snap = _target_snapshot(tbl, snapshot_id)
+    if snap is None:
+        raise FileNotFoundError(f"no committed snapshot under {root}")
 
     # schema evolution: extra columns declared anywhere on the chain are
     # part of the logical schema — default projection includes them, and
     # chunks predating a column back-fill NULL (manifest-only resolution)
     from tokencodec.spark.encode_job import table_extra_schema
-    extra_schema = table_extra_schema(root, snapshot_id, branch=branch)
+    extra_schema = table_extra_schema(root, branch=branch, snap=snap)
     req = (list(ALL_COLUMNS) + sorted(extra_schema)
            if columns is None else list(columns))
     bad = [c for c in req if c not in ALL_COLUMNS and c not in extra_schema]
@@ -701,7 +907,7 @@ def decode(spark: SparkSession, root: str,
     # an incremental consumer sees appends only; delete commits are not
     # a changelog event in this engine.
     del_plan = None if paths is not None else _delete_plan(
-        spark, root, snapshot_id, branch=branch)
+        spark, root, snap, branch=branch)
     dels = del_plan["dels"] if del_plan is not None else None
     seq_aware = del_plan is not None and del_plan["path_seqs"] is not None
     needs_doc = (doc_id_min is not None or doc_id_max is not None
@@ -710,65 +916,57 @@ def decode(spark: SparkSession, root: str,
     if needs_doc and "doc_id" not in cols:
         cols = ["doc_id"] + cols
 
-    pages = read_pages(spark, root, snapshot_id=snapshot_id, paths=paths,
-                       branch=branch)
-    if seq_aware:
-        pages = _attach_data_seq(spark, pages, del_plan["path_seqs"])
-    if doc_id_min is not None:
-        pages = pages.filter(F.col("doc_id_max") >= doc_id_min)
-    if doc_id_max is not None:
-        pages = pages.filter(F.col("doc_id_min") <= doc_id_max)
-    if doc_id_min is not None and doc_id_min == doc_id_max:
-        # exact point lookup: under the (single, enforced) salt_mod
-        # scheme a doc's salt is crc32(doc_id) % n_salts — a pure
-        # function of the id — so the lookup prunes to ONE salt out of
-        # n_salts (65536 at design scale) on top of the min/max range
-        # skipping, which hash-bucketed layouts barely narrow. All
-        # split parts of a doc share its salt (partition.bucketed), and
-        # compaction/purge kernels preserve the salt column. NULL salt
-        # = unknown = keep (stats-pruning convention).
-        sch = _scheme_from_manifest(root, snapshot_id, branch=branch)
-        if sch is not None and sch.get("group_scheme") == "salt_mod" \
-                and int(sch.get("n_salts", 0)) > 0:
-            import zlib as _zlib
-            s_ = _zlib.crc32(doc_id_min.encode("utf-8")) % int(sch["n_salts"])
-            pages = pages.filter((F.col("salt") == int(s_))
-                                 | F.col("salt").isNull())
-        # Bloom pruning (tokencodec/bloom.py): within the surviving
-        # salt, skip chunks whose per-chunk doc-id filter proves the
-        # target absent — the remaining chunks of a salt share one
-        # hash-spread id range, so only the Bloom bits distinguish
-        # them. Chunk-granular pandas_udf over METADATA rows (the
-        # already-pruned chunk list), never row data; NULL blob
-        # (pre-bloom files) = unknown = keep. Split parts carry the
-        # doc's own id in every part's filter.
-        pages = pages.filter(_bloom_keep([doc_id_min])(F.col("doc_bloom")))
+    # lookup targets: an exact point lookup is the one-id batch lookup
     if doc_ids is not None:
-        if not doc_ids:
-            pages = pages.filter(F.lit(False))
-        else:
-            targets = sorted(set(doc_ids))
-            # a chunk survives only if its id range covers AT LEAST ONE
-            # target (exists over the literal array — JVM-side; the
-            # list is takedown-sized by contract). NULL stats = keep.
-            ids_arr = F.array(*[F.lit(d) for d in targets])
-            pages = pages.filter(
-                F.col("doc_id_min").isNull() | F.col("doc_id_max").isNull()
-                | F.exists(ids_arr, lambda d: (F.col("doc_id_min") <= d)
-                           & (F.col("doc_id_max") >= d)))
-            # union of the targets' derived salts (same scheme logic as
-            # the point lookup), then any-of Bloom membership
-            sch = _scheme_from_manifest(root, snapshot_id, branch=branch)
-            if sch is not None and sch.get("group_scheme") == "salt_mod" \
-                    and int(sch.get("n_salts", 0)) > 0:
-                import zlib as _zlib
-                salts = sorted({_zlib.crc32(d.encode("utf-8"))
-                                % int(sch["n_salts"]) for d in targets})
-                pages = pages.filter(F.col("salt").isin(salts)
-                                     | F.col("salt").isNull())
-            pages = pages.filter(_bloom_keep(targets)(F.col("doc_bloom")))
+        targets = sorted(set(doc_ids))
+    elif doc_id_min is not None and doc_id_min == doc_id_max:
+        targets = [doc_id_min]
+    else:
+        targets = None
+    # driver-side file narrowing and the stitch decision, from manifests
+    # and parquet footers (_file_plan — also what lookup_report shows):
+    # the scan lists only candidate files
+    plan = _file_plan(root, snap, _data_paths(tbl, snap) if paths is None
+                      else list(paths), branch=branch, targets=targets,
+                      doc_id_min=doc_id_min, doc_id_max=doc_id_max,
+                      n_tok_min=n_tok_min, n_tok_max=n_tok_max)
+    pages = read_pages(spark, root, paths=plan["paths"])
+    if seq_aware:
+        # no candidate file: the empty literal frame has no _metadata
+        # column, and every row is maskable anyway
+        pages = _attach_data_seq(
+            spark, pages, del_plan["path_seqs"] if plan["paths"] else {})
+    # chunk-level pruning: every predicate below is one conjunct of a
+    # single JVM-side filter over chunk metadata rows
+    keep = []
+    if doc_id_min is not None:
+        keep.append(F.col("doc_id_max") >= doc_id_min)
+    if doc_id_max is not None:
+        keep.append(F.col("doc_id_min") <= doc_id_max)
+    if doc_ids is not None and targets:
+        # a chunk survives only if its id range covers AT LEAST ONE
+        # target (exists over the literal array — JVM-side; the list is
+        # takedown-sized by contract). NULL stats = keep.
+        ids_arr = F.array(*[F.lit(d) for d in targets])
+        keep.append(
+            F.col("doc_id_min").isNull() | F.col("doc_id_max").isNull()
+            | F.exists(ids_arr, lambda d: (F.col("doc_id_min") <= d)
+                       & (F.col("doc_id_max") >= d)))
+    if plan["salts"] is not None:
+        # under the (single, enforced) salt_mod scheme a doc's salt is
+        # crc32(doc_id) % n_salts — a pure function of the id — so a
+        # lookup prunes to the targets' salts out of n_salts (65536 at
+        # design scale) on top of the min/max range skipping, which
+        # hash-bucketed layouts barely narrow. All split parts of a doc
+        # share its salt (partition.bucketed), and compaction/purge
+        # kernels preserve the salt column. NULL salt = unknown = keep.
+        keep.append(F.col("salt").isin(plan["salts"])
+                    | F.col("salt").isNull())
+    # (the remaining lookup pruning — per-chunk Bloom membership, which
+    # alone distinguishes the chunks of one salt — runs inside the
+    # decode kernels: make_decode_batches / _lookup_batches)
     if buckets is not None:
-        pages = pages.filter(F.col("bucket").isin(buckets))
+        keep.append(F.col("bucket").isin(buckets))
     if sources is not None:
         # keep chunks whose recorded source set overlaps the filter;
         # NULL set = unknown = keep. source_set is a JSON array (safe
@@ -782,58 +980,72 @@ def decode(spark: SparkSession, root: str,
         recorded = F.coalesce(
             F.from_json(F.col("source_set"), "array<string>"),
             F.split(F.col("source_set"), ","))
-        pages = pages.filter(
+        keep.append(
             F.col("source_set").isNull()
             | (F.size(F.array_intersect(
                 recorded,
                 F.array(*[F.lit(s) for s in sources]))) > 0))
-    split_exempt = F.coalesce(F.col("doc_parts"), F.lit(1)) > 1
-    if n_tok_min is not None:
-        pages = pages.filter(F.col("n_tok_max").isNull() | split_exempt
-                             | (F.col("n_tok_max") >= n_tok_min))
-    if n_tok_max is not None:
-        pages = pages.filter(F.col("n_tok_min").isNull() | split_exempt
-                             | (F.col("n_tok_min") <= n_tok_max))
     # read_pages stamps the explicit PAGES_DDL schema, so doc_part /
     # doc_parts columns always exist; rows from files predating them
-    # surface as NULL — which would fail BOTH split-branch filters and
-    # silently drop the rows without this fill
-    pages = pages.na.fill({"doc_part": 0, "doc_parts": 1})
-    # (split_uid likewise always exists under the explicit schema; the
-    # decode-side coalesce with doc_id below handles its NULLs)
+    # surface as NULL and read as whole chunks (part 0 of 1). (split_uid
+    # likewise always exists; the sgrp coalesce below handles NULLs)
+    n_parts = F.coalesce(F.col("doc_parts"), F.lit(1))
+    # the split group of a part: its encode-time split uid; legacy rows
+    # (pre-split_uid files) carry NULL there, and their chunks hold
+    # exactly one doc, so the chunk stat doc_id_min (== the doc's id) is
+    # the historical group key
+    sgrp = F.coalesce(F.col("split_uid"), F.col("doc_id_min"))
+    if n_tok_min is not None:
+        keep.append(F.col("n_tok_max").isNull() | (n_parts > 1)
+                    | (F.col("n_tok_max") >= n_tok_min))
+    if n_tok_max is not None:
+        keep.append(F.col("n_tok_min").isNull() | (n_parts > 1)
+                    | (F.col("n_tok_min") <= n_tok_max))
+    if keep:
+        cond = keep[0]
+        for c in keep[1:]:
+            cond = cond & c
+        pages = pages.filter(cond)
     # zero-job planning: encode commits record max_doc_parts in snapshot
-    # metrics, so the reassembly branch is decided from the manifest
-    # alone — building a decode plan over a 100-TB table must not run a
-    # metadata scan job. Legacy tables (commits predating the metric)
-    # fall back to a one-column probe job.
-    max_parts = _max_doc_parts_from_manifest(root, snapshot_id, branch=branch)
-    if max_parts is None:
+    # metrics, and narrowed decodes read doc_parts bounds from footers,
+    # so the reassembly branch is decided without a job — building a
+    # decode plan over a 100-TB table must not run a metadata scan.
+    # Legacy full decodes (commits predating the metric) fall back to a
+    # one-column probe job.
+    any_split = plan["stitch"]
+    if any_split is None:
         max_parts = pages.agg(F.max("doc_parts")).collect()[0][0]
-    any_split = bool(max_parts and max_parts > 1)
+        any_split = bool(max_parts and max_parts > 1)
     # column pruning down to the PAGE level: only requested columns'
-    # binary pages (+ part markers) cross the Arrow boundary
+    # binary pages cross the Arrow boundary
     fn, page_cols = make_decode_batches(packed, cols, extras,
-                                        with_seq=seq_aware)
+                                        with_seq=seq_aware, targets=targets)
     out_ddl = _out_ddl(cols, packed, extras)
     seq_ddl = ", data_seq bigint" if seq_aware else ""
-    lineage_ddl = (", doc_part int, doc_parts int, split_uid string"
-                   + seq_ddl)
     if not any_split:
-        out = (pages.select(page_cols + _LINEAGE_COLS)
-               .mapInArrow(fn, out_ddl + lineage_ddl)
-               .drop(*_LINEAGE_COLS))
+        out = pages.select(page_cols).mapInArrow(fn, out_ddl + seq_ddl)
     elif "tokens" not in cols and "n_tok" not in cols:
         # split parts duplicate (doc_id, source); part 0 is the identity
         # — pruned BEFORE decode, so parts 1..P-1 never even decode
-        out = (pages.filter(F.col("doc_part") == 0)
-               .select(page_cols + _LINEAGE_COLS)
-               .mapInArrow(fn, out_ddl + lineage_ddl)
-               .drop(*_LINEAGE_COLS))
+        out = (pages.filter(F.coalesce(F.col("doc_part"), F.lit(0)) == 0)
+               .select(page_cols).mapInArrow(fn, out_ddl + seq_ddl))
+    elif targets is not None:
+        # a lookup whose candidate row groups may hold split parts: the
+        # parts of one document meet in ONE task without an Exchange —
+        # lookups are takedown-sized by contract — and whole chunks
+        # decode in the same Python stage (_lookup_batches)
+        sfn, spage_cols = make_stitch_batches(packed, cols, extras,
+                                              with_seq=seq_aware)
+        out = (pages.withColumn("sgrp", sgrp).withColumn("_split", n_parts > 1)
+               .select(sorted(set(page_cols) | set(spage_cols))
+                       + ["sgrp", "doc_part", "_split"])
+               .coalesce(1)
+               .sortWithinPartitions("sgrp", "doc_part")
+               .mapInArrow(_lookup_batches(fn, sfn, targets),
+                           out_ddl + seq_ddl))
     else:
-        whole = (pages.filter(F.col("doc_parts") == 1)
-                 .select(page_cols + _LINEAGE_COLS)
-                 .mapInArrow(fn, out_ddl + lineage_ddl)
-                 .drop(*_LINEAGE_COLS))
+        whole = (pages.filter(n_parts == 1).select(page_cols)
+                 .mapInArrow(fn, out_ddl + seq_ddl))
         # oversized documents were split across chunks at encode time
         # (skew handling); co-locate their ENCODED part pages on the
         # encode-time split uid (NOT doc_id: a duplicate doc_id encoded
@@ -842,15 +1054,10 @@ def decode(spark: SparkSession, root: str,
         # the shuffle moves compressed pages, not decoded token arrays,
         # and reassembly is one np.concatenate per doc (the former
         # collect_list + binary fold-concat recopied the accumulated
-        # blob per part: O(P²) bytes). Legacy rows (pre-split_uid
-        # files, incl. inside mixed-version tables) carry NULL
-        # split_uid; their chunks hold exactly one doc, so the chunk
-        # stat doc_id_min (== the doc's id) is the historical group key.
+        # blob per part: O(P²) bytes).
         sfn, spage_cols = make_stitch_batches(packed, cols, extras,
                                               with_seq=seq_aware)
-        stitched = (pages.filter(F.col("doc_parts") > 1)
-                    .withColumn("sgrp", F.coalesce(F.col("split_uid"),
-                                                   F.col("doc_id_min")))
+        stitched = (pages.filter(n_parts > 1).withColumn("sgrp", sgrp)
                     .select(spage_cols + ["sgrp", "doc_part"])
                     .repartition("sgrp")
                     .sortWithinPartitions("sgrp", "doc_part")
@@ -877,7 +1084,7 @@ def decode(spark: SparkSession, root: str,
     if doc_id_max is not None:
         out = out.filter(F.col("doc_id") <= doc_id_max)
     if doc_ids is not None:
-        out = out.filter(F.col("doc_id").isin(list(doc_ids)))
+        out = out.filter(F.col("doc_id").isin(targets))
     if sources is not None:
         out = out.filter(F.col("source").isin(sources))
     if n_tok_min is not None:

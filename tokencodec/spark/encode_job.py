@@ -455,17 +455,22 @@ def extra_schema_of(df: DataFrame) -> dict[str, str]:
 
 
 def table_extra_schema(root: str, snapshot_id: int | None = None,
-                       branch: str | None = None) -> dict[str, str]:
-    """The merged extra-column schema visible at a snapshot: the chain
-    field when present, else a walk over the retained chain's
+                       branch: str | None = None,
+                       snap: dict | None = None) -> dict[str, str]:
+    """The merged extra-column schema visible at a snapshot (``snap``
+    when the caller already holds it): the chain field of that one
+    manifest when present, else a walk over the retained chain's
     per-commit declarations."""
     tbl = SnapshotTable(root, branch=branch)
-    chain = tbl.chain(snapshot_id)
-    if not chain:
+    if snap is None:
+        snap = (tbl.current_snapshot() if snapshot_id is None
+                else tbl.snapshot(snapshot_id))
+    if snap is None:
         return {}
-    tail = chain[-1].get("metrics", {})
+    tail = snap.get("metrics", {})
     if "extra_schema_chain" in tail:
         return dict(tail["extra_schema_chain"])
+    chain = tbl.chain(snap["snapshot_id"])
     out: dict[str, str] = {}
     for s in chain:
         out = merge_extra_schema(out, s.get("metrics", {}).get("extra_schema", {}))
