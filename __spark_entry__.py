@@ -743,10 +743,11 @@ def _segment_bucket_expr(col, segments: list[tuple[int, int, int]],
     """Order-preserving bucket id over dense key segments: buckets are
     allocated to segments proportionally to their row mass, and within
     a segment the id is linear in the key — O(segments) WHEN branches
-    per row (segments are capped at 8), NOT O(buckets) comparisons (a
-    flat sum of 100+ comparison terms measurably falls off the codegen
-    cliff). Monotone in the key by construction: per-segment ranges are
-    clamped into [base, base + nb - 1] and bases ascend."""
+    per row (at most ``_footer_key_segments``' ``max_segments``), NOT
+    O(buckets) comparisons (a flat sum of 100+ comparison terms
+    measurably falls off the codegen cliff). Monotone in the key by
+    construction: per-segment ranges are clamped into
+    [base, base + nb - 1] and bases ascend."""
     total = sum(r for _, _, r in segments) or 1
     expr = None
     base = 0
@@ -1658,10 +1659,11 @@ def q_rle_runs_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keys (the @Mx bench tables are id-shifted stripes with 10^12-wide
     # gaps) collapse a linear split over the global range into a few
     # hot buckets and the window serializes onto straggler tasks
-    # (guide §2.5 skew). Footer row-group stats merge into <= 8 dense
-    # segments (ONE for a uniformly keyed table — identical balance to
-    # the old linear split); buckets are dealt to segments by row mass
-    # and the id is linear within each, so the expression stays O(1)-ish
+    # (guide §2.5 skew). Footer row-group stats merge into at most
+    # _footer_key_segments' max_segments dense segments (ONE for a
+    # uniformly keyed table — identical balance to the old linear
+    # split); buckets are dealt to segments by row mass and the id is
+    # linear within each, so the expression stays O(1)-ish
     # per row. 4x more distinct buckets than partitions so the hash
     # repartition spreads them evenly (guide §2.5 on synthetic keys
     # with too few distinct values).

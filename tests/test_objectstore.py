@@ -771,3 +771,69 @@ def test_azure_ambiguous_409_retries_then_head_confirms():
     c3._BACKOFF_409 = 0.001
     with pytest.raises(RuntimeError, match="HTTP 409"):
         c3.put("amb/other", b"v", if_none_match=True)
+
+
+def test_azure_ambiguous_409_self_write_detection():
+    """A conditional PUT that LANDED but answered with an ambiguous 409
+    is retried; the retry sees BlobAlreadyExists against the writer's
+    own blob. Reading it back, equal content is success; different
+    content (another writer won meanwhile) is a lost race."""
+    from tokencodec.spark.objectstore import AzureBlobClient
+    fake = FakeAzure()
+
+    def landed_then_409(method, url, data, headers):
+        status, hdrs, body = fake(method, url, data, headers)
+        if method == "PUT" and landed_then_409.first:
+            landed_then_409.first = False
+            assert status == 201  # the write landed...
+            return 409, {}, b"proxy reset"  # ...but the answer is mangled
+        return status, hdrs, body
+
+    landed_then_409.first = True
+    c = AzureBlobClient(FakeAzure.HOST, "cont", transport=landed_then_409,
+                        token_provider=lambda: "t0k", sas_token="")
+    c._BACKOFF_409 = 0.001
+    c.put("self/k", b"mine", if_none_match=True)
+    assert fake.objs["self/k"] == b"mine"
+
+    # the ambiguous attempt did NOT land and a rival wrote other bytes
+    def lost_then_409(method, url, data, headers):
+        if method == "PUT" and lost_then_409.first:
+            lost_then_409.first = False
+            fake.objs["self/r"] = b"rival"
+            return 409, {}, b""
+        return fake(method, url, data, headers)
+
+    lost_then_409.first = True
+    c2 = AzureBlobClient(FakeAzure.HOST, "cont", transport=lost_then_409,
+                         token_provider=lambda: "t0k", sas_token="")
+    c2._BACKOFF_409 = 0.001
+    with pytest.raises(PreconditionFailed):
+        c2.put("self/r", b"mine", if_none_match=True)
+    assert fake.objs["self/r"] == b"rival"
+
+    # every attempt answers a codeless 409 but the first one landed:
+    # the exhausted-retry path reads back its own bytes too
+    def always_409(method, url, data, headers):
+        status, hdrs, body = fake(method, url, data, headers)
+        return (409, {}, b"") if method == "PUT" else (status, hdrs, body)
+
+    c3 = AzureBlobClient(FakeAzure.HOST, "cont", transport=always_409,
+                         token_provider=lambda: "t0k", sas_token="")
+    c3._BACKOFF_409 = 0.001
+    c3.put("self/z", b"mine", if_none_match=True)
+    assert fake.objs["self/z"] == b"mine"
+
+    # a plain lost race with no ambiguous attempt never reads back
+    fake.objs["self/w"] = b"mine"
+    gets = []
+
+    def spy(method, url, data, headers):
+        gets.append(method)
+        return fake(method, url, data, headers)
+
+    c4 = AzureBlobClient(FakeAzure.HOST, "cont", transport=spy,
+                         token_provider=lambda: "t0k", sas_token="")
+    with pytest.raises(PreconditionFailed):
+        c4.put("self/w", b"mine", if_none_match=True)
+    assert gets == ["PUT"]

@@ -478,6 +478,7 @@ class AzureBlobClient:
                    "Content-Type": "application/octet-stream"}
         if if_none_match:
             headers["If-None-Match"] = "*"
+        retried = False
         for attempt in range(self._RETRIES_409 + 1):
             status, _, body = self._call("PUT", self._url(key), data, headers)
             if status // 100 == 2:
@@ -485,9 +486,12 @@ class AzureBlobClient:
             if not if_none_match:
                 break
             # 412, or a 409 whose XML code SAYS the blob exists: a
-            # genuine lost race, which commit() handles by rebasing
+            # genuine lost race, which commit() handles by rebasing —
+            # unless an earlier ambiguous attempt of ours was the write
             if status == 412 or (status == 409 and
                                  self._error_code(body) == "BlobAlreadyExists"):
+                if retried and self._holds(key, data):
+                    return
                 raise PreconditionFailed(key)
             # ambiguous 409 (absent/unparseable <Code> — a proxy or
             # transient conflict): declaring a lost race here would
@@ -496,10 +500,13 @@ class AzureBlobClient:
             # (ADVICE r5 #3): bounded retry, then PreconditionFailed
             # only once the blob provably exists.
             if status == 409:
+                retried = True
                 if attempt < self._RETRIES_409:
                     time.sleep(self._BACKOFF_409 * (1 << attempt))
                     continue
                 if self.head(key) is not None:
+                    if self._holds(key, data):
+                        return
                     raise PreconditionFailed(key)
             break
         raise RuntimeError(f"Azure PUT {key}: HTTP {status} "
@@ -512,6 +519,14 @@ class AzureBlobClient:
         if status // 100 != 2:
             raise RuntimeError(f"Azure GET {key}: HTTP {status}")
         return body
+
+    def _holds(self, key: str, data: bytes) -> bool:
+        """Self-write detection: an ambiguous 409 may hide a PUT that
+        landed, so a blob equal to ``data`` is this writer's own."""
+        try:
+            return self.get(key) == data
+        except KeyError:
+            return False
 
     def head(self, key: str) -> tuple[int, float] | None:
         status, headers, _ = self._call("HEAD", self._url(key))
