@@ -21,8 +21,12 @@ BUDGET = 2048
 def table(spark, tmp_path):
     root = str(tmp_path / "enc")
     df = synth.token_table(spark, 400, seed=91).cache()
+    # a fixed task count gives each commit group several files, so a
+    # purge has files to leave untouched (left unset, the small encode
+    # coalesces to one task and one file per group)
     encode_job.encode(spark, df, root, commit_groups=2, n_salts=4,
-                      max_chunk_tokens=BUDGET, direct_write=True)
+                      max_chunk_tokens=BUDGET, direct_write=True,
+                      partitions=8)
     return root, df
 
 

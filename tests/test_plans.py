@@ -231,3 +231,68 @@ def test_full_decode_keeps_repartitioned_stitch(spark, split_table):
     plan = _formatted(decode_job.decode(spark, root, packed=True), spark)
     assert re.search(r"\(\d+\) Exchange\n.*\nArguments: hashpartitioning\(sgrp",
                      plan), plan[:3000]
+
+
+# ------------------------------------------- encode shuffle sizing
+#
+# encode() leaves its (bucket, salt) shuffle without a fixed count when
+# the caller passes no ``partitions``: adaptive execution coalesces it
+# from the bytes it measures, so a small append runs as one task.
+
+
+@pytest.fixture(scope="module")
+def append_table(spark, tmp_path_factory):
+    """A two-group direct-written table plus a 300-doc append under the
+    fresh prefix "a" (ids prefixed "z-"), with the executed plan of the
+    append's encode job."""
+    root = str(tmp_path_factory.mktemp("append_plan") / "t")
+    encode_job.encode(spark, synth.token_table(spark, 300, seed=5), root,
+                      commit_groups=2, direct_write=True)
+    app = synth.token_table(spark, 300, seed=6).withColumn(
+        "doc_id", F.concat(F.lit("z-"), "doc_id")).cache()
+    jobs = []
+    cls = type(app)  # the concrete DataFrame class of this session
+    real = cls.mapInArrow
+
+    def spy(self, *a, **kw):
+        jobs.append(real(self, *a, **kw))
+        return jobs[-1]
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(cls, "mapInArrow", spy)
+        encode_job.encode(spark, app, root, commit_groups=2,
+                          group_prefix="a", direct_write=True)
+    assert len(jobs) == 1
+    return root, app, jobs[0]._jdf.queryExecution().executedPlan().toString()
+
+
+def test_small_append_one_task_one_file_per_group(append_table):
+    from tokencodec.spark.table import SnapshotTable
+    root, _, plan = append_table
+    assert "isFinalPlan=true" in plan, plan
+    assert re.search(r"Exchange hashpartitioning\(bucket#\d+, salt#\d+, "
+                     r"\d+\), REPARTITION_BY_COL", plan), plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
+    assert "AQEShuffleRead coalesced" in plan, plan
+    groups = SnapshotTable(root).committed_groups()
+    assert [len(groups[k]) for k in ("a0", "a1")] == [1, 1], groups
+
+
+def test_range_scan_reads_reported_files(spark, append_table):
+    root, app, _ = append_table
+    rng = {"doc_id_min": "z-", "doc_id_max": "z-~", "n_tok_min": 600}
+    rep = decode_job.lookup_report(root, **rng)
+    assert rep["salts"] is None
+    assert 0 < rep["files_kept"] < rep["files_considered"], rep
+    out = decode_job.decode(spark, root, **rng)
+    rows, plan = _executed(out)
+    assert len(rows) == app.filter(F.col("n_tok") >= 600).count() > 0
+    assert _files(out.inputFiles()) == _files(rep["paths"])
+    scans = re.findall(r"InMemoryFileIndex\((\d+) paths\)", plan)
+    assert scans and all(int(n) == rep["files_kept"] for n in scans), plan
+    # a point range is a lookup: the report derives its salt
+    d = sorted(r.doc_id for r in app.select("doc_id").collect())[0]
+    assert decode_job.lookup_report(root, doc_id_min=d, doc_id_max=d) \
+        == decode_job.lookup_report(root, [d])
+    with pytest.raises(ValueError, match="not both"):
+        decode_job.lookup_report(root, [d], doc_id_min=d)

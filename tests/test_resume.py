@@ -70,15 +70,17 @@ def test_rerun_is_noop(spark, tmp_path):
 
 def test_deterministic_across_parallelism(spark, tmp_path):
     """Same input at different partition counts -> byte-identical chunks.
-    This is what makes the N vs 4N scaling runs comparable."""
+    This is what makes the N vs 4N scaling runs comparable. With no
+    ``partitions`` the shuffle is sized by adaptive execution from its
+    measured bytes; the chunks must still match the fixed-count runs."""
     df = synth.token_table(spark, N_ROWS, seed=SEED)
     fps = []
-    for p, tag in [(2, "p2"), (8, "p8")]:
+    for p, tag in [(2, "p2"), (8, "p8"), (None, "aqe")]:
         root = str(tmp_path / tag)
         encode_job.encode(spark, df, root, commit_groups=1,
                           max_chunk_tokens=1 << 17, partitions=p)
         fps.append(_fingerprint(spark, root))
-    assert fps[0] == fps[1]
+    assert fps[0] == fps[1] == fps[2]
 
 
 def test_synth_partition_independent(spark):

@@ -1,9 +1,13 @@
 """Structured Streaming encode: incremental catch-up runs commit new
 source files only, and the decoded union matches the full input."""
 
+import zlib
+
+import pytest
 from pyspark.sql import functions as F
 
-from tokencodec.spark import decode_job, streaming, synth
+from tokencodec.spark import decode_job, encode_job, streaming, synth
+from tokencodec.spark import partition as part
 from tokencodec.spark.table import SnapshotTable
 
 
@@ -134,3 +138,141 @@ def test_stream_readd_after_delete_is_visible(spark, tmp_path):
     out2 = decode_job.decode(spark, root)
     assert decode_job.audit(exp, out2) == {"missing": 0, "extra": 0,
                                            "ok": True}
+
+
+# ------------------------------------------------ salt scheme of streams
+#
+# Lookups derive a doc's salt from the one scheme the manifest chain
+# records. A micro-batch salted under any other count would be pruned
+# away by point and batch lookups while a full decode still shows it.
+
+
+def _short_docs(spark, n, seed, prefix):
+    """``n`` documents of at most 8 tokens: many rows (a large salt
+    count) at a small token cost."""
+    return (synth.token_table(spark, n, seed=seed)
+            .withColumn("tokens", F.slice("tokens", 1, 8))
+            .withColumn("n_tok", F.size("tokens"))
+            .withColumn("doc_id", F.concat(F.lit(prefix), "doc_id")))
+
+
+def _salt_differs(ids, a, b):
+    """The ids whose salt under ``a`` salts differs from under ``b``:
+    the ones a lookup misses when chunks and chain disagree."""
+    return [d for d in ids
+            if zlib.crc32(d.encode()) % a != zlib.crc32(d.encode()) % b]
+
+
+def _assert_lookups(spark, root, point_ids, batch_ids):
+    for d in point_ids:
+        got = decode_job.decode(spark, root, doc_id_min=d, doc_id_max=d,
+                                columns=["doc_id"]).collect()
+        assert [r.doc_id for r in got] == [d]
+    got = decode_job.decode(spark, root, doc_ids=batch_ids,
+                            columns=["doc_id"]).collect()
+    assert sorted(r.doc_id for r in got) == sorted(batch_ids)
+
+
+def _ids(df):
+    return sorted(r.doc_id for r in df.select("doc_id").collect())
+
+
+def test_stream_batch_adopts_table_n_salts(spark, tmp_path):
+    """A 300-doc micro-batch (4 salts by its own size) appended to a
+    table encoded with n_salts=8 is salted under 8 and stamped so."""
+    src, root = str(tmp_path / "src"), str(tmp_path / "enc")
+    base = synth.token_table(spark, 200, seed=31).cache()
+    encode_job.encode(spark, base, root, commit_groups=1, n_salts=8,
+                      direct_write=True)
+    batch = synth.token_table(spark, 300, seed=32).withColumn(
+        "doc_id", F.concat(F.lit("s-"), "doc_id")).cache()
+    batch.write.parquet(src)
+    streaming.encode_stream(spark, src, root, max_chunk_tokens=1 << 16)
+    snap = SnapshotTable(root).current_snapshot()
+    assert snap["metrics"]["scheme"]["n_salts"] == 8
+    ids = _ids(batch)
+    assert part.salts_for(len(ids)) == 4
+    _assert_lookups(spark, root, _salt_differs(ids, 8, 4)[:12], ids[:60])
+    assert decode_job.audit(base.unionByName(batch),
+                            decode_job.decode(spark, root)) == {
+        "missing": 0, "extra": 0, "ok": True}
+
+
+def test_stream_first_batch_stamps_scheme_for_appends(spark, tmp_path):
+    """A stream-only table (one 40k-doc batch, 16 salts) stamps its
+    scheme, so a 300-doc encode() append adopts 16 salts instead of
+    stamping 4 over the streamed chunks."""
+    src, root = str(tmp_path / "src"), str(tmp_path / "enc")
+    batch = _short_docs(spark, 40000, seed=33, prefix="s-").cache()
+    batch.write.parquet(src)
+    streaming.encode_stream(spark, src, root)
+    assert decode_job._scheme_from_manifest(root, None)["n_salts"] == 16
+    app = synth.token_table(spark, 300, seed=34).cache()
+    encode_job.encode(spark, app, root, commit_groups=1,
+                      group_prefix="a", direct_write=True)
+    assert decode_job._scheme_from_manifest(root, None)["n_salts"] == 16
+    ids = _ids(batch)
+    app_ids = _ids(app)
+    _assert_lookups(spark, root, _salt_differs(ids, 16, 4)[:12],
+                    ids[:50] + app_ids[:10])
+    assert decode_job.audit(batch.unionByName(app),
+                            decode_job.decode(spark, root)) == {
+        "missing": 0, "extra": 0, "ok": True}
+
+
+def test_stream_leaves_unstamped_table_unstamped(spark, tmp_path,
+                                                 monkeypatch):
+    """A table whose micro-batches were each salted by their own size
+    with no stamp (as older engine versions wrote them) follows no
+    single scheme: a new batch must not stamp one, so lookups keep
+    skipping salt pruning and find every document."""
+    src, root = str(tmp_path / "src"), str(tmp_path / "enc")
+    old = _short_docs(spark, 40000, seed=35, prefix="s-").cache()
+    old.write.parquet(src)
+    with monkeypatch.context() as m:
+        m.setattr(streaming, "_batch_scheme",
+                  lambda tbl, df: (part.salts_for(df.count()), None))
+        streaming.encode_stream(spark, src, root)
+    new = synth.token_table(spark, 300, seed=36).withColumn(
+        "doc_id", F.concat(F.lit("t-"), "doc_id")).cache()
+    new.write.mode("append").parquet(src)
+    streaming.encode_stream(spark, src, root)
+    snaps = SnapshotTable(root).snapshots()
+    assert len(snaps) == 2
+    assert all("scheme" not in s["metrics"] for s in snaps)
+    ids, new_ids = _ids(old), _ids(new)
+    _assert_lookups(spark, root, _salt_differs(ids, 16, 4)[:6]
+                    + new_ids[:6], ids[:30] + new_ids[:30])
+
+
+def test_encode_resumes_after_stream_commit(spark, tmp_path, monkeypatch):
+    """A micro-batch committed between a crashed encode and its resume
+    carries the table's scheme; the resume check still accepts the
+    resumed run."""
+    src, root = str(tmp_path / "src"), str(tmp_path / "enc")
+    df = synth.token_table(spark, 300, seed=37).cache()
+    real = SnapshotTable.commit
+
+    def dying(self, groups, metrics=None, **kw):
+        real(self, groups, metrics, **kw)
+        raise RuntimeError("injected failure after first commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotTable, "commit", dying)
+        with pytest.raises(RuntimeError, match="injected"):
+            encode_job.encode(spark, df, root, commit_groups=2, n_salts=8,
+                              direct_write=True)
+    batch = synth.token_table(spark, 100, seed=38).withColumn(
+        "doc_id", F.concat(F.lit("s-"), "doc_id")).cache()
+    batch.write.parquet(src)
+    streaming.encode_stream(spark, src, root)
+    scheme = SnapshotTable(root).current_snapshot()["metrics"]["scheme"]
+    assert scheme == {"group_scheme": "salt_mod", "n_salts": 8,
+                      "commit_groups": 2}
+    encode_job.encode(spark, df, root, commit_groups=2, direct_write=True)
+    assert {"g0", "g1"} <= set(SnapshotTable(root).committed_groups())
+    ids = _ids(batch)
+    _assert_lookups(spark, root, _salt_differs(ids, 8, 4)[:6], ids[:30])
+    assert decode_job.audit(df.unionByName(batch),
+                            decode_job.decode(spark, root)) == {
+        "missing": 0, "extra": 0, "ok": True}

@@ -376,3 +376,34 @@ def test_branch_purge_is_isolated(spark, table):
     tbl = SnapshotTable(root)
     assert not any(k.startswith("del:") for k in tbl.committed_groups())
     assert fsck.fsck(spark, root).filter(~F.col("ok")).count() == 0
+
+
+def test_upsert_chunks_match_fixed_count_encode(spark, table, tmp_path):
+    """upsert_docs leaves its shuffle to adaptive execution; the
+    replacement chunks are byte-identical to a fixed-count encode of
+    the same rows under the table's scheme."""
+    from tokencodec.spark.table import is_delete_group
+    root, df = table
+    targets = _targets(df, k=40)
+    rep = (df.filter(F.col("doc_id").isin(targets))
+           .withColumn("tokens", F.reverse("tokens")))
+    snap = maintenance.upsert_docs(spark, root, rep,
+                                   max_chunk_tokens=BUDGET)
+    out = decode_job.decode(spark, root)
+    assert decode_job.audit(_replaced(df, targets), out) == {
+        "missing": 0, "extra": 0, "ok": True}
+    groups = SnapshotTable(root).resolve_groups(snap)
+    paths = [p for k in snap["new_groups"] if not is_delete_group(k)
+             for p in groups[k]]
+    ref = str(tmp_path / "ref")
+    encode_job.encode(spark, rep, ref, commit_groups=1, n_salts=4,
+                      max_chunk_tokens=BUDGET, partitions=3)
+    h = F.md5(F.concat("page_tokens", "page_doc_id", "page_n_tok",
+                       "page_source"))
+
+    def digests(pages):
+        return sorted(tuple(r) for r in
+                      pages.select("bucket", "salt", h.alias("h")).collect())
+
+    assert (digests(encode_job.read_pages(spark, root, paths=paths))
+            == digests(encode_job.read_pages(spark, ref)))

@@ -504,6 +504,18 @@ def _scheme_from_manifest(root: str, snapshot_id: int | None,
     return None
 
 
+def _salt_scheme(root: str, branch: str | None = None,
+                 snap: dict | None = None) -> dict | None:
+    """The chain's scheme when it derives salts (salt_mod with a
+    positive n_salts), else None: lookups then skip salt pruning and
+    appends pick their own n_salts."""
+    sch = _scheme_from_manifest(root, None, branch=branch, snap=snap)
+    if sch and sch.get("group_scheme") == "salt_mod" \
+            and int(sch.get("n_salts", 0)) > 0:
+        return sch
+    return None
+
+
 def _max_doc_parts_from_manifest(root: str, snapshot_id: int | None,
                                  branch: str | None = None,
                                  snap: dict | None = None) -> int | None:
@@ -774,9 +786,8 @@ def _file_plan(root: str, snap: dict, paths: list[str],
     """
     salts = None
     if targets:
-        sch = _scheme_from_manifest(root, None, branch=branch, snap=snap)
-        if sch is not None and sch.get("group_scheme") == "salt_mod" \
-                and int(sch.get("n_salts", 0)) > 0:
+        sch = _salt_scheme(root, branch=branch, snap=snap)
+        if sch is not None:
             import zlib
             n = int(sch["n_salts"])
             salts = [zlib.crc32(d.encode("utf-8")) % n for d in targets]
@@ -805,20 +816,43 @@ def _file_plan(root: str, snap: dict, paths: list[str],
             "stitch": stitch}
 
 
-def lookup_report(root: str, doc_ids: list[str],
+def _lookup_targets(doc_ids: list[str] | None, doc_id_min: str | None,
+                    doc_id_max: str | None) -> list[str] | None:
+    """The exact ids a decode looks up: ``doc_ids``, or the one id of a
+    point range (doc_id_min == doc_id_max); None for a scan."""
+    if doc_ids is not None and (doc_id_min is not None
+                                or doc_id_max is not None):
+        raise ValueError("pass either doc_ids or doc_id_min/max, not both")
+    if doc_ids is not None:
+        return sorted(set(doc_ids))
+    if doc_id_min is not None and doc_id_min == doc_id_max:
+        return [doc_id_min]
+    return None
+
+
+def lookup_report(root: str, doc_ids: list[str] | None = None,
                   snapshot_id: int | None = None,
-                  branch: str | None = None) -> dict:
-    """What ``decode(root, doc_ids=doc_ids)`` will read, without running
-    a job: files considered, files kept (and their paths), the target
-    salts, and whether the stitch branch is planned. A point lookup of
-    ``d`` reads what ``lookup_report(root, [d])`` reports. Computed by
-    the same function decode plans with (_file_plan)."""
+                  branch: str | None = None,
+                  doc_id_min: str | None = None,
+                  doc_id_max: str | None = None,
+                  n_tok_min: int | None = None,
+                  n_tok_max: int | None = None) -> dict:
+    """What ``decode`` with the same ``doc_ids`` / doc-id range / n_tok
+    range will read, without running a job: files considered, files
+    kept (and their paths), the target salts, and whether the stitch
+    branch is planned. A point lookup of ``d`` reads what
+    ``lookup_report(root, [d])`` reports; a range scan reads what
+    ``lookup_report(root, doc_id_min=..., n_tok_min=...)`` reports.
+    Computed by the same function decode plans with (_file_plan)."""
+    targets = _lookup_targets(doc_ids, doc_id_min, doc_id_max)
     tbl = SnapshotTable(root, branch=branch)
     snap = _target_snapshot(tbl, snapshot_id)
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
     return _file_plan(root, snap, _data_paths(tbl, snap), branch=branch,
-                      targets=sorted(set(doc_ids)))
+                      targets=targets, doc_id_min=doc_id_min,
+                      doc_id_max=doc_id_max, n_tok_min=n_tok_min,
+                      n_tok_max=n_tok_max)
 
 
 def decode(spark: SparkSession, root: str,
@@ -859,9 +893,8 @@ def decode(spark: SparkSession, root: str,
     """
     from pyspark.sql import functions as F
 
-    if doc_ids is not None and (doc_id_min is not None
-                                or doc_id_max is not None):
-        raise ValueError("pass either doc_ids or doc_id_min/max, not both")
+    # lookup targets: an exact point lookup is the one-id batch lookup
+    targets = _lookup_targets(doc_ids, doc_id_min, doc_id_max)
 
     # the target snapshot is resolved ONCE; every manifest helper below
     # reads it from here. Time travel by name: a tag
@@ -916,13 +949,6 @@ def decode(spark: SparkSession, root: str,
     if needs_doc and "doc_id" not in cols:
         cols = ["doc_id"] + cols
 
-    # lookup targets: an exact point lookup is the one-id batch lookup
-    if doc_ids is not None:
-        targets = sorted(set(doc_ids))
-    elif doc_id_min is not None and doc_id_min == doc_id_max:
-        targets = [doc_id_min]
-    else:
-        targets = None
     # driver-side file narrowing and the stitch decision, from manifests
     # and parquet footers (_file_plan — also what lookup_report shows):
     # the scan lists only candidate files

@@ -629,6 +629,15 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
     Arrow for a JVM ``partitionBy`` write — same bytes per chunk, same
     read path, measurably faster end-to-end (BASELINE.md).
 
+    ``partitions`` fixes the task count of the encode shuffle. Left
+    unset, the shuffle has no fixed count and Spark's adaptive execution
+    coalesces it from the bytes it measures: a small append runs as one
+    task and writes one file per commit group, while a large frame gets
+    at most ``spark.sql.shuffle.partitions`` tasks (large sources go
+    through ``encode_from_parquet``, which sizes the count from parquet
+    footers). Chunk bytes do not depend on it: coalescing merges whole
+    hash partitions, so a (bucket, salt) group is never split.
+
     All remaining commit groups are encoded in ONE pass over the source
     (group = salt % commit_groups, written side-by-side via
     ``partitionBy``), then committed group-by-group in order — the
@@ -660,11 +669,8 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
     # sanctioned migration path).
     chain_scheme = None
     if done:
-        from tokencodec.spark.decode_job import _scheme_from_manifest
-        chain_scheme = _scheme_from_manifest(out_root, None, branch=branch)
-        if not (chain_scheme and chain_scheme.get("group_scheme")
-                == "salt_mod" and int(chain_scheme.get("n_salts", 0)) > 0):
-            chain_scheme = None
+        from tokencodec.spark.decode_job import _salt_scheme
+        chain_scheme = _salt_scheme(out_root, branch=branch)
     if n_salts is None and chain_scheme:
         n_salts = int(chain_scheme["n_salts"])
     if n_salts is None:
@@ -691,9 +697,6 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
             "different count break salt-derived lookup pruning; omit "
             "n_salts to adopt the table's scheme, or migrate with "
             "maintenance.resalt")
-    if partitions is None:
-        # 4x tasks per core smooths (bucket, salt) group-size stragglers
-        partitions = spark.sparkContext.defaultParallelism * 4
     t0 = time.time()
     sub = df
     if len(remaining) < commit_groups:

@@ -546,9 +546,7 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
     extra_cols = tuple(sorted(extra_schema.items()))
     cols = ["doc_id", "tokens", "n_tok", "source"] + [n for n, _ in extra_cols]
     rows = decode(spark, root, columns=cols)
-    bucketed = part.bucketed(rows.select(cols), n_salts=int(n_salts),
-                             partitions=spark.sparkContext
-                             .defaultParallelism * 4)
+    bucketed = part.bucketed(rows.select(cols), n_salts=int(n_salts))
     uid_prefix = f"rs{snap['snapshot_id'] + 1}"
     encoder = make_encoder(max_chunk_tokens, commit_groups=1,
                            extra_cols=extra_cols, group_prefix=uid_prefix)
@@ -674,14 +672,14 @@ def upsert_docs(spark: SparkSession, root: str, df: DataFrame,
     # (released in the finally below, error paths included)
     df = df.persist()
     try:
-        return _upsert_pinned(spark, tbl, snap, df, scheme, extra_schema,
+        return _upsert_pinned(tbl, snap, df, scheme, extra_schema,
                               extra_cols, nonce, prefix, max_chunk_tokens,
                               parquet_codec)
     finally:
         df.unpersist()
 
 
-def _upsert_pinned(spark, tbl, snap, df, scheme, extra_schema, extra_cols,
+def _upsert_pinned(tbl, snap, df, scheme, extra_schema, extra_cols,
                    nonce, prefix, max_chunk_tokens, parquet_codec) -> dict:
     from tokencodec.spark.encode_job import (make_encoder, next_chain_max,
                                              next_table_totals)
@@ -700,8 +698,7 @@ def _upsert_pinned(spark, tbl, snap, df, scheme, extra_schema, extra_cols,
     # re-encode the replacements under the table's own salt scheme
     sel = ["doc_id", "tokens", "n_tok", "source"] + [n for n, _ in extra_cols]
     bucketed = part.bucketed(df.select(sel),
-                             n_salts=int(scheme["n_salts"]),
-                             partitions=spark.sparkContext.defaultParallelism)
+                             n_salts=int(scheme["n_salts"]))
     encoder = make_encoder(max_chunk_tokens, commit_groups=1,
                            extra_cols=extra_cols, group_prefix=prefix)
     pages = bucketed.mapInArrow(encoder, PAGES_DDL)

@@ -45,7 +45,10 @@ def salts_for(n_rows: int) -> int:
 
 def bucketed(df: DataFrame, n_salts: int = DEFAULT_SALTS,
              partitions: int | None = None) -> DataFrame:
-    """Add (bucket, salt) and shuffle so each group is co-located."""
+    """Add (bucket, salt) and shuffle so each group is co-located.
+    ``partitions`` fixes the shuffle's task count; None leaves it to
+    adaptive execution, which coalesces whole hash partitions from the
+    shuffled bytes."""
     out = (df
            .withColumn("bucket", F.length(F.bin(F.col("n_tok"))).cast("int"))
            .withColumn("salt", F.pmod(F.crc32(F.col("doc_id")), F.lit(n_salts)).cast("int")))

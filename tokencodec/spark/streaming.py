@@ -36,6 +36,9 @@ def encode_stream(spark: SparkSession, source_dir: str, out_root: str,
     schema) into ``out_root``, one snapshot commit per micro-batch.
     Runs with availableNow and blocks until caught up.
 
+    Every micro-batch is salted under the table's scheme, so point and
+    batch lookups find streamed documents (``_batch_scheme``).
+
     Core-schema only by contract: the stream reads exactly
     (doc_id, tokens, n_tok, source) — schema-evolution extra columns
     in the source files are not ingested on this path (batch
@@ -49,10 +52,11 @@ def encode_stream(spark: SparkSession, source_dir: str, out_root: str,
         key = f"stream-batch-{batch_id}"
         if key in tbl.committed_groups():
             return  # replayed micro-batch after restart: already committed
+        n_salts, scheme = _batch_scheme(tbl, batch_df)
         # per-batch uid prefix: each micro-batch is its own commit group
         # and restarts chunk_seq per (bucket, salt), so appended batches
         # would otherwise repeat chunk uids
-        bucketed = part.bucketed(batch_df, n_salts=part.salts_for(batch_df.count()))
+        bucketed = part.bucketed(batch_df, n_salts=n_salts)
         if direct_write_supported(out_root):
             # direct task-side write (same path as batch encode's fast
             # default): pages parquet written by pyarrow inside the
@@ -79,6 +83,8 @@ def encode_stream(spark: SparkSession, source_dir: str, out_root: str,
                  "max_doc_parts": max((r["max_doc_parts"] for r in meta),
                                       default=0),
                  "batch_id": batch_id}
+            if scheme is not None:
+                m["scheme"] = scheme
             parent = tbl.current_snapshot()
             totals = next_table_totals(parent, m)
             if totals is not None:
@@ -112,6 +118,8 @@ def encode_stream(spark: SparkSession, source_dir: str, out_root: str,
         observed.write.mode("overwrite").parquet(run_dir)
         m = {k: int(v or 0) for k, v in obs.get.items()}
         m["batch_id"] = batch_id
+        if scheme is not None:
+            m["scheme"] = scheme
         parent = tbl.current_snapshot()
         totals = next_table_totals(parent, m)
         if totals is not None:
@@ -130,6 +138,39 @@ def encode_stream(spark: SparkSession, source_dir: str, out_root: str,
               .trigger(availableNow=True)
               .start())
     stream.awaitTermination()
+
+
+def _batch_scheme(tbl: SnapshotTable,
+                  batch_df: DataFrame) -> tuple[int, dict | None]:
+    """The micro-batch's salt count, and the scheme its commit stamps.
+
+    Lookups derive a doc's salt from the one scheme the chain records,
+    so every chunk of a stamped table must be salted under it:
+
+    - a stamped table: the batch adopts its n_salts and re-stamps the
+      same scheme (no row count needed);
+    - a table with no data: the batch picks ``salts_for(rows)`` and
+      stamps it, so later batches and ``encode()`` appends adopt it;
+    - data but no stamp (micro-batches of older engine versions, each
+      salted by its own size): the batch is salted by its size and
+      the table stays unstamped — lookups skip salt pruning there.
+
+    An empty batch stamps nothing, so it cannot pin a salt count."""
+    from tokencodec.spark.decode_job import _salt_scheme
+    from tokencodec.spark.table import is_delete_group
+    snap = tbl.current_snapshot()
+    sch = None if snap is None else _salt_scheme(tbl.root, snap=snap)
+    if sch is not None:
+        return int(sch["n_salts"]), sch
+    n_rows = batch_df.count()
+    n_salts = part.salts_for(n_rows)
+    has_data = snap is not None and any(
+        ps for k, ps in tbl.resolve_groups(snap).items()
+        if not is_delete_group(k))
+    if n_rows == 0 or has_data:
+        return n_salts, None
+    return n_salts, {"group_scheme": "salt_mod", "n_salts": n_salts,
+                     "commit_groups": 1}
 
 
 def dedup_stream(spark: SparkSession, source_dir: str, out_dir: str,
