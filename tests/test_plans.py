@@ -296,3 +296,37 @@ def test_range_scan_reads_reported_files(spark, append_table):
         == decode_job.lookup_report(root, [d])
     with pytest.raises(ValueError, match="not both"):
         decode_job.lookup_report(root, [d], doc_id_min=d)
+
+
+def test_compact_rewrite_one_salt_shuffle(spark, tmp_path):
+    """A compaction with pending sequence-aware deletes rewrites in one
+    salt shuffle into one MapInArrow: no Window, no join, no second
+    Exchange (each chunk's data seq comes from its scanned file path)."""
+    from tokencodec.spark import maintenance
+    root = str(tmp_path / "t")
+    df = synth.token_table(spark, 240, seed=77)
+    encode_job.encode(spark, df, root, commit_groups=2, n_salts=4,
+                      max_chunk_tokens=512, direct_write=True)
+    ids = sorted(r.doc_id for r in df.select("doc_id").collect())[:4]
+    maintenance.delete_docs(spark, root, ids)
+    jobs = []
+    cls = type(df)
+    real = cls.mapInArrow
+
+    def spy(self, *a, **kw):
+        jobs.append(real(self, *a, **kw))
+        return jobs[-1]
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(cls, "mapInArrow", spy)
+        snap = maintenance.compact(spark, root, max_chunk_tokens=512)
+    assert snap["metrics"]["n_purged_rows"] == 4
+    (job,) = jobs
+    plan = job._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in plan, plan
+    assert re.search(r"Exchange hashpartitioning\(salt#\d+, \d+\), "
+                     r"REPARTITION_BY_COL", plan), plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Window" not in plan and "Join" not in plan, plan

@@ -233,8 +233,8 @@ def test_upsert_chain_stacks(spark, table):
 
 
 def test_compact_after_upsert_keeps_replacements(spark, tmp_path):
-    """compact purges pending deletes FIRST (seq-aware since the
-    upsert landed): a compaction run over an upserted table must merge
+    """compact purges pending deletes in its merge pass (seq-aware
+    since the upsert landed): a compaction run over an upserted table must merge
     chunks without resurrecting superseded copies or dropping
     replacements."""
     root = str(tmp_path / "t")

@@ -508,13 +508,100 @@ def direct_write_supported(path: str) -> bool:
         return False
 
 
+def pyarrow_fs(path: str):
+    """(pyarrow filesystem, path inside it) for a URI; (None, path) for
+    a plain local path."""
+    if "://" not in path:
+        return None, path
+    from pyarrow import fs as pafs
+    return pafs.FileSystem.from_uri(path)
+
+
+# Hadoop-only URI schemes and the scheme pyarrow spells the same store with
+_PYARROW_SPELLING = {"s3a": "s3", "s3n": "s3"}
+
+
+def require_direct_write(root: str, what: str) -> None:
+    """Refuse a root pyarrow cannot address, for operations whose tasks
+    write their own files, naming the pyarrow spelling of the root."""
+    if direct_write_supported(root):
+        return
+    scheme, _, rest = root.partition("://")
+    alt = _PYARROW_SPELLING.get(scheme.lower())
+    hint = (f"; spell it {alt}://{rest}" if alt else
+            "; use a scheme pyarrow.fs.FileSystem.from_uri resolves")
+    raise ValueError(f"{what} writes its files from the tasks with pyarrow, "
+                     f"which cannot address {root}{hint}")
+
+
 # one summary row per (task, commit group) written file — small enough
 # to collect on the driver at any scale (files, not chunks: a 100-TB
 # run with 100k tasks x 2 groups collects 200k rows; per-chunk lineage
 # stays inside the pages files themselves)
+META_FIELDS = [("grp", pa.int32()), ("file", pa.string()),
+               ("n_chunks", pa.int64()), ("n_rows", pa.int64()),
+               ("n_tokens", pa.int64()), ("raw_bytes", pa.int64()),
+               ("enc_bytes", pa.int64()), ("max_doc_parts", pa.int32())]
 META_DDL = ("grp int, file string, n_chunks bigint, n_rows bigint, "
             "n_tokens bigint, raw_bytes bigint, enc_bytes bigint, "
             "max_doc_parts int")
+
+
+def meta_batch(rows: list[dict], fields=META_FIELDS) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array([r[k] for r in rows], type=t) for k, t in fields],
+        names=[k for k, _ in fields])
+
+
+def write_task_files(pieces, run_dir: str, parquet_codec: str,
+                     commit_groups: int = 1) -> list[dict]:
+    """Write pages batches (or tables) into this task's parquet files
+    under ``run_dir``: one file per commit group (salt % commit_groups),
+    each piece's rows of a group written as one row group. Returns one
+    summary row (META_FIELDS) per file. Task retries write under a fresh
+    taskAttemptId-suffixed name, so a lost attempt leaves only an orphan
+    file that the driver's post-job sweep (or snapshot GC) removes — the
+    manifest lists exactly the files of attempts whose summary row was
+    collected."""
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx else 0
+    att = ctx.taskAttemptId() if ctx else 0
+    pafs_fs, base = pyarrow_fs(run_dir)
+    schema = pa.schema(_PAGES_TYPES)
+    writers: dict[int, pq.ParquetWriter] = {}
+    files: dict[int, str] = {}
+    agg: dict[int, dict] = {}
+    try:
+        for piece in pieces:
+            if isinstance(piece, pa.RecordBatch):
+                piece = pa.Table.from_batches([piece])
+            grps = piece.column("salt").to_numpy() % commit_groups
+            for g in np.unique(grps):
+                g = int(g)
+                sub = piece.filter(pa.array(grps == g))
+                if g not in writers:
+                    name = f"part-{pid:05d}-{att}-g{g}.parquet"
+                    files[g] = posixpath.join(run_dir, name)
+                    writers[g] = pq.ParquetWriter(
+                        posixpath.join(base, name), schema,
+                        compression=parquet_codec, filesystem=pafs_fs)
+                    agg[g] = {"n_chunks": 0, "n_rows": 0, "n_tokens": 0,
+                              "raw_bytes": 0, "enc_bytes": 0,
+                              "max_doc_parts": 1}
+                writers[g].write_table(sub, row_group_size=max(1, sub.num_rows))
+                a = agg[g]
+                a["n_chunks"] += sub.num_rows
+                for k in ("n_rows", "n_tokens", "raw_bytes", "enc_bytes"):
+                    a[k] += int(pc.sum(sub.column(k)).as_py() or 0)
+                a["max_doc_parts"] = max(
+                    a["max_doc_parts"],
+                    int(pc.max(sub.column("doc_parts")).as_py() or 1))
+    finally:
+        for w in writers.values():
+            w.close()
+    return [{"grp": g, "file": files[g], **agg[g]} for g in sorted(writers)]
 
 
 def make_direct_writer(run_dir: str, parquet_codec: str,
@@ -525,68 +612,17 @@ def make_direct_writer(run_dir: str, parquet_codec: str,
     task (Iceberg's write pattern — tasks produce data files, the
     driver commits the file list). Skips the classic path's two costs:
     shipping ~chunk-sized page blobs back across the Arrow boundary and
-    the JVM row-assembly + parquet re-encode. Task retries write under
-    a fresh taskAttemptId-suffixed name, so a lost attempt leaves only
-    an orphan file that the driver's post-job sweep (or snapshot GC)
-    removes — the manifest lists exactly the files of attempts whose
-    result row was collected."""
+    the JVM row-assembly + parquet re-encode. Files and their summary
+    rows come from ``write_task_files``."""
     inner = make_encoder(max_chunk_tokens, uid_prefix=uid_prefix,
                          commit_groups=commit_groups, extra_cols=extra_cols,
                          group_prefix=group_prefix)
-    schema = pa.schema(_PAGES_TYPES)
 
     def write_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        att = ctx.taskAttemptId() if ctx else 0
-        if "://" in run_dir:
-            from pyarrow import fs as pafs
-            pafs_fs, base = pafs.FileSystem.from_uri(run_dir)
-        else:
-            pafs_fs, base = None, run_dir
-        writers: dict[int, pq.ParquetWriter] = {}
-        files: dict[int, str] = {}
-        agg: dict[int, dict] = {}
-        try:
-            for batch in inner(it):
-                salts = batch.column(1).to_numpy(zero_copy_only=False)
-                grps = salts % commit_groups
-                for g in np.unique(grps):
-                    g = int(g)
-                    sub = batch.filter(pa.array(grps == g))
-                    if g not in writers:
-                        name = f"part-{pid:05d}-{att}-g{g}.parquet"
-                        files[g] = posixpath.join(run_dir, name)
-                        writers[g] = pq.ParquetWriter(
-                            posixpath.join(base, name), schema,
-                            compression=parquet_codec, filesystem=pafs_fs)
-                        agg[g] = {"n_chunks": 0, "n_rows": 0, "n_tokens": 0,
-                                  "raw_bytes": 0, "enc_bytes": 0,
-                                  "max_doc_parts": 1}
-                    writers[g].write_table(pa.Table.from_batches([sub]))
-                    a = agg[g]
-                    a["n_chunks"] += sub.num_rows
-                    a["n_rows"] += int(pc.sum(sub.column(4)).as_py() or 0)
-                    a["n_tokens"] += int(pc.sum(sub.column(5)).as_py() or 0)
-                    a["raw_bytes"] += int(pc.sum(sub.column(15)).as_py() or 0)
-                    a["enc_bytes"] += int(pc.sum(sub.column(16)).as_py() or 0)
-                    a["max_doc_parts"] = max(
-                        a["max_doc_parts"], int(pc.max(sub.column(9)).as_py() or 1))
-        finally:
-            for w in writers.values():
-                w.close()
-        rows = [{"grp": g, "file": files[g], **agg[g]} for g in sorted(writers)]
+        rows = write_task_files(inner(it), run_dir, parquet_codec,
+                                commit_groups)
         if rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([r[k] for r in rows], type=t)
-                 for k, t in [("grp", pa.int32()), ("file", pa.string()),
-                              ("n_chunks", pa.int64()), ("n_rows", pa.int64()),
-                              ("n_tokens", pa.int64()), ("raw_bytes", pa.int64()),
-                              ("enc_bytes", pa.int64()), ("max_doc_parts", pa.int32())]],
-                names=["grp", "file", "n_chunks", "n_rows", "n_tokens",
-                       "raw_bytes", "enc_bytes", "max_doc_parts"])
+            yield meta_batch(rows)
 
     return write_batches
 

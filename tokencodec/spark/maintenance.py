@@ -1,21 +1,28 @@
-"""Table maintenance: chunk compaction and snapshot expiry.
+"""Table maintenance: compaction, row-level deletes and snapshot expiry.
 
 The reference is a read-only decoder; these are the Iceberg-style
 maintenance operations a 10^12-sequence table accumulates a need for —
-streaming micro-batches and small resume groups leave under-filled
-chunks, and every compaction/commit leaves superseded files behind.
+streaming micro-batches and small appends leave under-filled chunks,
+takedown deletes leave masked rows behind, and every rewrite leaves
+superseded files behind.
 
-``compact`` is "rewrite data files": within each (bucket, salt) run of
-committed chunks, consecutive under-filled whole-document chunks (below
-half the token budget) are decoded, concatenated in chunk_seq order,
-and re-encoded as budget-filled chunks; full chunks and split-document
-parts pass through untouched (their bytes are copied, not re-encoded).
-The result replaces the group's data paths in a new snapshot — decoded
-rows are bit-identical before and after (tests assert via the audit
-signature), only the physical chunk layout changes. Merge-group
-assignment is a running-sum window PARTITIONED by (bucket, salt), and
-re-encoding is one mapInArrow pass over chunks co-partitioned by merge
-group — no global ordering, no driver-side chunk list.
+``compact`` is "rewrite data files" in one pass and one commit. The
+driver plans from manifests and parquet footers: it reads the pending
+delete ids with pyarrow and selects small files, run directories and
+files whose footer doc-id ranges may hold a deleted id (a metadata scan
+of the files whose footers admit split parts finds split documents to
+re-slice). One Spark job then shuffles the selected chunk rows on ``salt``, sorts
+them (salt, bucket, chunk_uid) and runs one mapInArrow kernel. Per
+(bucket, salt) run the kernel drops deleted rows (dead chunks vanish,
+partly dead ones are re-encoded), merges consecutive under-filled
+whole-document chunks into budget-filled ones, and passes every other
+chunk through byte-identical. It writes its own parquet file, one salt
+per row group (the salt-major layout: a lookup's footer narrowing keeps
+only the files holding its salt). Split documents whose parts would
+shrink under the budget are reassembled and re-sliced before the
+shuffle. One replace-commit swaps the selected files for the written
+ones and empties the delete groups; decoded rows equal the
+pre-compaction decode (tests audit this).
 
 ``expire_snapshots`` drops manifests older than the last N snapshots
 and deletes run directories referenced ONLY by expired snapshots (the
@@ -25,117 +32,191 @@ never touched; time travel keeps working for the retained window.
 
 from __future__ import annotations
 
+import bisect
 import posixpath
 from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tokencodec import grouped, pageformat
 from tokencodec.spark import partition as part
-from tokencodec.spark.encode_job import (PAGES_DDL, _encode_chunk,
-                                         next_extra_schema_chain, read_pages)
+from tokencodec.spark.encode_job import (_PAGES_TYPES, META_DDL, META_FIELDS,
+                                         PAGES_DDL, _encode_chunk,
+                                         _rows_to_batch,
+                                         next_extra_schema_chain)
 from tokencodec.spark.table import SnapshotTable, is_delete_group
 
 _PAGE_COLS = ["page_tokens", "page_doc_id", "page_n_tok", "page_source"]
 
+# compaction tasks cut a row group at every salt change, and within one
+# salt once the buffered chunks hold this many page bytes
+_ROW_GROUP_BYTES = 128 << 20
 
-def _merge_batches(uid_prefix: str, extras: tuple = ()):
-    """mapInArrow: co-partitioned mergeable chunks -> re-encoded chunks.
-    Buffers one (bucket, salt, gid) merge group at a time; groups are
-    budget-bounded by construction, so memory stays bounded.
 
-    ``extras`` is the table's declared extra-column schema (sorted
-    (name, type) pairs). Extra-bearing chunks merge like any other
-    (round-5's pass-through limitation closed): each chunk's extra
-    pages decode at their recorded width, chunks predating a column
-    back-fill NULLs, and the merged chunk re-encodes at the DECLARED
-    width — so a merge also converges int-era chunks onto a later
-    bigint declaration. A column no chunk in the group ever carried is
-    omitted (a missing page IS the all-null representation); mixed
-    groups get a NULLABLE validity wrap (pageformat.wrap_nullable).
+class _Deletes:
+    """Pending delete ids: a frozenset (legacy chains: every copy of a
+    listed id dies) or {doc_id: newest delete seq} (sequence-aware
+    chains: a copy dies only when its chunk's data seq is strictly
+    older, so upsert replacements survive)."""
 
-    The batch/view/key-extraction plumbing all four sorted-row kernels
-    (merge, resplit, stitch, decode) previously re-implemented lives in
-    decode_job.iter_page_rows since round 5 — only the accumulate/flush
-    policies (the parts that genuinely differ) remain per kernel."""
+    def __init__(self, ids):
+        self.ids = ids
+        self.by_seq = isinstance(ids, dict)
+        self.sorted = sorted(d for d in ids if d is not None)
+
+    def may_hit(self, lo: str | None, hi: str | None) -> bool:
+        """May doc-id bounds [lo, hi] hold a deleted id? Unknown: yes."""
+        if lo is None or hi is None:
+            return True
+        i = bisect.bisect_left(self.sorted, lo)
+        return i < len(self.sorted) and self.sorted[i] <= hi
+
+    def dead(self, docs: list[str], data_seq: int) -> list[bool]:
+        if self.by_seq:
+            return [d in self.ids and self.ids[d] > data_seq for d in docs]
+        return [d in self.ids for d in docs]
+
+
+def _mask_chunk(dels: _Deletes, batch: pa.RecordBatch, r: int, pages: dict,
+                data_seq: int, uid_prefix: str) -> tuple[int, dict | None]:
+    """Apply pending deletes to chunk row ``r`` of ``batch`` (``pages``:
+    its page views). Returns (docs deleted, new row): (0, None) keeps
+    the chunk as it is, (n, None) drops it (split parts are single-doc,
+    so they die whole), else the survivors re-encoded — extras at their
+    RECORDED kinds (decode_extra_page sees through DEFLATED/NULLABLE
+    wraps; take() keeps NULL slots) — under a uid derived from the
+    original (chunk_seq repeats across commit groups)."""
+    from tokencodec.spark.decode_job import (_string_array, decode_extra_page,
+                                             spark_type_of_extra_page)
+    from tokencodec.spark.encode_job import encode_extra_page
+
+    def col(name):
+        return batch.column(name)[r].as_py()
+
+    if not dels.may_hit(col("doc_id_min"), col("doc_id_max")):
+        return 0, None
+    docs = _string_array(pages["page_doc_id"]).to_pylist()
+    dead = np.array(dels.dead(docs, data_seq), dtype=bool)
+    n_dead = int(dead.sum())
+    if n_dead in (0, len(docs)):
+        return n_dead, None
+    keep = ~dead
+    ntok = pageformat.decode_int_page(pages["page_n_tok"]).astype(np.int64)
+    toks = grouped.decode_tokens_column(pages["page_tokens"])
+    ends = np.cumsum(ntok)
+    kidx = pa.array(np.flatnonzero(keep))
+    ext = col("extra_pages")
+    row = _encode_chunk(
+        col("bucket"), col("salt"), col("chunk_seq"),
+        pa.array([d for d, k in zip(docs, keep) if k], pa.string()),
+        np.concatenate([toks[s:e] for s, e, k
+                        in zip(ends - ntok, ends, keep) if k]),
+        ntok[keep],
+        _string_array(pages["page_source"]).take(kidx).cast(pa.string()),
+        uid_prefix=uid_prefix,
+        extras={n: encode_extra_page(decode_extra_page(p).take(kidx),
+                                     spark_type_of_extra_page(p))
+                for n, p in ext} if ext else None)
+    row["chunk_uid"] = f"{uid_prefix}-{col('chunk_uid')}"
+    return n_dead, row
+
+
+class _MergeGroups:
+    """Merge groups over chunks in (bucket, salt, chunk_uid) order — by
+    chunk_uid because chunk_seq repeats across commit groups. Within a
+    (bucket, salt) run a chunk is mergeable when it holds whole
+    documents below half the budget; with ``cum`` the running sum of
+    mergeable tokens its group is ``(cum - 1) // budget``, so groups are
+    budget-bounded and a kernel buffers one at a time."""
+
+    def __init__(self, budget: int):
+        self.budget = budget
+        self.key = None
+        self.cum = 0
+
+    def gid(self, key: tuple, n_tokens: int, doc_parts: int) -> int | None:
+        if key != self.key:
+            self.key, self.cum = key, 0
+        if doc_parts != 1 or n_tokens >= self.budget // 2:
+            return None
+        self.cum += n_tokens
+        return (self.cum - 1) // self.budget
+
+
+def _merge_probe(budget: int):
+    """mapInArrow over sorted chunk METADATA rows -> one row ``n``: the
+    chunks sitting in merge groups of 2 or more."""
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from tokencodec.spark.decode_job import (_extra_array, _string_array,
-                                                 iter_page_rows)
-        from tokencodec.spark.encode_job import (_rows_to_batch,
-                                                 encode_extra_page)
-
-        cur_key = None
-        doc_ids: list[pa.Array] = []
-        sources: list[pa.Array] = []
-        toks: list[np.ndarray] = []
-        ntoks: list[np.ndarray] = []
-        ext_arrs: dict[str, list] = {n: [] for n, _ in extras}
-        ext_seen: dict[str, bool] = {n: False for n, _ in extras}
-        rows: list[dict] = []
-
-        def flush():
-            nonlocal doc_ids, sources, toks, ntoks, ext_arrs, ext_seen
-            if not ntoks:
-                return
-            ext_out = {n: encode_extra_page(pa.concat_arrays(ext_arrs[n]), t)
-                       for n, t in extras if ext_seen[n]} or None
-            rows.append(_encode_chunk(
-                cur_key[0], cur_key[1], cur_key[2],
-                pa.concat_arrays([a.cast(pa.string()) for a in doc_ids]),
-                np.concatenate(toks), np.concatenate(ntoks),
-                pa.concat_arrays([a.cast(pa.string()) for a in sources]),
-                uid_prefix=uid_prefix, extras=ext_out))
-            doc_ids, sources, toks, ntoks = [], [], [], []
-            ext_arrs = {n: [] for n, _ in extras}
-            ext_seen = {n: False for n, _ in extras}
-
-        # extra_pages is always requested (chunk-granular map scalar):
-        # even with no declared schema the kernel must SEE a stray page
-        # to refuse dropping it
-        for key, pages, sc in iter_page_rows(it, _PAGE_COLS, ("extra_pages",),
-                                             key_cols=("bucket", "salt", "gid")):
-            if key != cur_key:
-                flush()
-                cur_key = key
-                if len(rows) >= 4:  # emit early: bounded memory
-                    yield _rows_to_batch(rows)
-                    rows.clear()
-            ntok = pageformat.decode_int_page(pages["page_n_tok"]).astype(np.int64)
-            toks.append(grouped.decode_tokens_column(pages["page_tokens"]))
-            ntoks.append(ntok)
-            doc_ids.append(_string_array(pages["page_doc_id"]))
-            sources.append(_string_array(pages["page_source"]))
-            if extras or sc.get("extra_pages"):
-                m = dict(sc.get("extra_pages") or {})
-                unknown = set(m) - {n_ for n_, _ in extras}
-                if unknown:
-                    # merging would silently drop these pages — only
-                    # possible when an expired legacy chain lost the
-                    # column declaration; refuse instead of losing data
-                    raise RuntimeError(
-                        "compact: chunk carries extra page(s) "
-                        f"{sorted(unknown)} absent from the declared "
-                        "schema chain; refusing to merge (decode would "
-                        "not see them either — re-declare the column "
-                        "via encode(extra_cols=...) or purge it)")
-                for n_, t in extras:
-                    pg = m.get(n_)
-                    if pg is not None:
-                        ext_seen[n_] = True
-                    ext_arrs[n_].append(_extra_array(pg, t, len(ntok)))
-        flush()
-        if rows:
-            yield _rows_to_batch(rows)
+        groups = _MergeGroups(budget)
+        open_g, k, n = None, 0, 0
+        for batch in it:
+            for b, s, nt, dp in zip(*(batch.column(c).to_pylist() for c in (
+                    "bucket", "salt", "n_tokens", "doc_parts"))):
+                g = groups.gid((b, s), nt, dp)
+                if g is not None and (b, s, g) != open_g:
+                    n += k if k >= 2 else 0
+                    open_g, k = (b, s, g), 0
+                k += g is not None
+        n += k if k >= 2 else 0
+        yield pa.RecordBatch.from_arrays([pa.array([n], pa.int64())],
+                                         names=["n"])
 
     return fn
 
 
-def _resplit_batches(uid_prefix: str, max_chunk_tokens: int):
+def _merge_chunks(bucket: int, salt: int, gid: int, parts: list,
+                  uid_prefix: str, extras: tuple) -> dict:
+    """One chunk from a merge group's chunks, ``parts`` = [(pages,
+    extra-page map)] in chunk_uid order. ``extras`` is the table's
+    declared extra-column schema (sorted (name, type) pairs): pages
+    decode at their recorded width, chunks predating a column back-fill
+    NULLs, and the merged chunk re-encodes at the DECLARED width (int-era
+    chunks converge onto a later bigint). A column no part carries is
+    omitted (a missing page IS all-null); mixed groups get a NULLABLE
+    validity wrap."""
+    from tokencodec.spark.decode_job import _extra_array, _string_array
+    from tokencodec.spark.encode_job import encode_extra_page
+
+    doc_ids, sources, toks, ntoks = [], [], [], []
+    ext_arrs: dict[str, list] = {n: [] for n, _ in extras}
+    ext_seen: set[str] = set()
+    for pages, ext in parts:
+        ntok = pageformat.decode_int_page(pages["page_n_tok"]).astype(np.int64)
+        toks.append(grouped.decode_tokens_column(pages["page_tokens"]))
+        ntoks.append(ntok)
+        doc_ids.append(_string_array(pages["page_doc_id"]))
+        sources.append(_string_array(pages["page_source"]))
+        unknown = set(ext) - {n for n, _ in extras}
+        if unknown:
+            # merging would silently drop these pages — only possible
+            # when an expired legacy chain lost the column declaration
+            raise RuntimeError(
+                "compact: chunk carries extra page(s) "
+                f"{sorted(unknown)} absent from the declared schema "
+                "chain; refusing to merge (decode would not see them "
+                "either — re-declare the column via "
+                "encode(extra_cols=...) or purge it)")
+        for n, t in extras:
+            if ext.get(n) is not None:
+                ext_seen.add(n)
+            ext_arrs[n].append(_extra_array(ext.get(n), t, len(ntok)))
+    return _encode_chunk(
+        bucket, salt, gid,
+        pa.concat_arrays([a.cast(pa.string()) for a in doc_ids]),
+        np.concatenate(toks), np.concatenate(ntoks),
+        pa.concat_arrays([a.cast(pa.string()) for a in sources]),
+        uid_prefix=uid_prefix,
+        extras={n: encode_extra_page(pa.concat_arrays(ext_arrs[n]), t)
+                for n, t in extras if n in ext_seen} or None)
+
+
+def _resplit_batches(uid_prefix: str, max_chunk_tokens: int,
+                     carry: tuple = ()):
     """mapInArrow: split-doc part chunks co-partitioned by split group
     (``sgrp``) and sorted (sgrp, doc_part) -> re-chunked output. Each
     part chunk is single-row by construction; the group's tokens are
@@ -147,15 +228,17 @@ def _resplit_batches(uid_prefix: str, max_chunk_tokens: int):
     Schema-evolution extra pages ride along VERBATIM: every part of a
     split group carries the same single-doc extras (encode slices one
     oversized doc per group), so each emitted chunk copies the first
-    part's page bytes — no decode, no re-encode."""
+    part's page bytes — no decode, no re-encode. The ``carry`` string
+    columns are copied from the first part too: compaction carries each
+    part's source file path, which gives the new chunks their data seq
+    (all parts of a split group come from one commit)."""
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from tokencodec.spark.decode_job import _string_array, iter_page_rows
-        from tokencodec.spark.encode_job import _rows_to_batch
 
         cur = None  # (sgrp, bucket, salt)
         vals: list[np.ndarray] = []
-        doc_id = source = extras = None
+        doc_id = source = extras = carried = None
         rows: list[dict] = []
 
         def finish():
@@ -178,280 +261,425 @@ def _resplit_batches(uid_prefix: str, max_chunk_tokens: int):
                     extras=extras)
                 row["chunk_uid"] = (f"{uid_prefix}-r-{sgrp}-p{p}"
                                     if n_parts > 1 else f"{uid_prefix}-r-{sgrp}")
+                row.update(carried)
                 rows.append(row)
             vals, doc_id, source, extras = [], None, None, None
 
+        def emit():
+            b = _rows_to_batch(rows)
+            for c in carry:
+                b = b.append_column(c, pa.array([r[c] for r in rows],
+                                                 pa.string()))
+            rows.clear()
+            return b
+
         for key, pages, sc in iter_page_rows(
-                it, _PAGE_COLS, ("extra_pages",),
+                it, _PAGE_COLS, ("extra_pages", *carry),
                 key_cols=("sgrp", "bucket", "salt")):
             if key != cur:
                 finish()
                 cur = key
                 if len(rows) >= 4:
-                    yield _rows_to_batch(rows)
-                    rows.clear()
+                    yield emit()
             vals.append(grouped.decode_tokens_column(pages["page_tokens"]))
             if doc_id is None:
                 doc_id = _string_array(pages["page_doc_id"])
                 source = _string_array(pages["page_source"])
                 extras = dict(sc["extra_pages"] or {}) or None
+                carried = {c: sc[c] for c in carry}
         finish()
         if rows:
-            yield _rows_to_batch(rows)
+            yield emit()
 
     return fn
 
 
-def compact(spark: SparkSession, root: str,
-            max_chunk_tokens: int = part.MAX_CHUNK_TOKENS,
-            parquet_codec: str = "zstd",
-            small_file_bytes: int = 64 << 20) -> dict:
-    """Merge under-filled chunks; replace-commit the new layout.
-    Returns the new snapshot dict (or the current one if nothing to do).
+def _compact_stream(it: Iterator[pa.RecordBatch], budget: int,
+                    uid_prefix: str, extras: tuple, dels: _Deletes | None,
+                    path_seqs: dict | None, stats: dict) -> Iterator[pa.Table]:
+    """Chunk rows sorted (salt, bucket, chunk_uid) -> pages tables of one
+    salt each. Per chunk, in order: pending deletes apply (_mask_chunk),
+    the survivor joins a merge group (_MergeGroups), groups of 2+ chunks
+    re-encode as one (_merge_chunks); every other chunk passes through
+    byte-identical. ``stats`` counts purged documents (a split doc once)
+    and merged chunks."""
+    from tokencodec.spark.decode_job import (_ANCIENT_SEQ, _binary_views,
+                                             _norm_path)
 
-    FILE-GRANULAR (Iceberg's rewrite-data-files): when every committed
-    path is a file (the direct-write default), only files smaller than
-    ``small_file_bytes`` are read and rewritten — healthy big files stay
-    referenced untouched, so one compaction pass costs O(small files),
-    not O(table). Legacy tables with directory paths fall back to the
-    whole-table rewrite. Commit metrics are derived from metadata-column
-    aggregates (no post-write read-back of page blobs)."""
-    tbl = SnapshotTable(root)
-    snap = tbl.current_snapshot()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    grp_map = tbl.resolve_groups(snap)
-    if any(is_delete_group(k) and ps for k, ps in grp_map.items()):
-        # pending row-level deletes: purge them physically FIRST, so the
-        # rewrite below never re-compacts rows that are already dead
-        snap = purge_deletes(spark, root, parquet_codec=parquet_codec)
-        grp_map = tbl.resolve_groups(snap)
-    all_paths = [p for k, ps in grp_map.items()
-                 if not is_delete_group(k) for p in ps]
-    if not all_paths:
-        return snap
-    file_mode = all(not tbl.fs.isdir(p) for p in all_paths)
-    if file_mode:
-        selected = [p for p in all_paths if tbl.fs.size(p) < small_file_bytes]
-    else:
-        selected = all_paths
+    schema = pa.schema(_PAGES_TYPES)
+    groups = _MergeGroups(budget)
+    kept: list[tuple[pa.RecordBatch, list[int]]] = []  # pass-through rows
+    new_rows: list[dict] = []
+    buffered = 0
+    group: list[tuple] = []  # the open merge group: (batch | None, row, pages)
+    group_id = None
+    file_seqs: dict[str, int] = {}
 
-    # Split-group rechunk discovery (VERDICT r3 next #7): a split group
-    # whose parts would SHRINK under this budget (encode ran with a
-    # smaller one) is reassembled and re-sliced — otherwise a table
-    # re-compacted with a larger budget keeps its fragments forever.
-    # Discovery is a metadata-only scan over ALL committed paths (page
-    # blobs are never read; the manifest chain's cumulative
-    # max_doc_parts skips even that when the table never split a doc).
-    # Files contributing shrinkable parts must be rewritten in full —
-    # leaving them referenced would double-read the parts — so they
-    # join the selected set regardless of size.
-    from tokencodec.spark.decode_job import _max_doc_parts_from_manifest
-    mdp_chain = _max_doc_parts_from_manifest(root, None)
+    def seq_of(fp: str) -> int:
+        # the chunk's file, else its run directory (classic commits)
+        if fp not in file_seqs:
+            p = _norm_path(fp)
+            file_seqs[fp] = path_seqs.get(
+                p, path_seqs.get(p.rsplit("/", 1)[0], _ANCIENT_SEQ))
+        return file_seqs[fp]
+
+    def emit(batch, r, pages):
+        nonlocal buffered
+        if batch is None:
+            new_rows.append(r)
+            buffered += len(r["page_tokens"])
+            return
+        buffered += len(pages["page_tokens"])
+        if kept and kept[-1][0] is batch:
+            kept[-1][1].append(r)
+        else:
+            kept.append((batch, [r]))
+
+    def close_group():
+        if len(group) >= 2:
+            emit(None, _merge_chunks(
+                *group_id,
+                [(pages or r, dict((r["extra_pages"] if b is None else
+                                    b.column("extra_pages")[r].as_py())
+                                   or []))
+                 for b, r, pages in group], uid_prefix, extras), None)
+            stats["n_merged_chunks"] += len(group)
+        else:
+            for item in group:
+                emit(*item)
+        group.clear()
+
+    def flush() -> Iterator[pa.Table]:
+        nonlocal buffered
+        pieces = [pa.Table.from_batches([b.select(schema.names)
+                                         .take(pa.array(idx))]).cast(schema)
+                  for b, idx in kept]
+        if new_rows:
+            pieces.append(pa.Table.from_batches([_rows_to_batch(new_rows)]))
+        kept.clear()
+        new_rows.clear()
+        buffered = 0
+        if pieces:
+            yield pa.concat_tables(pieces)
+
+    key = None
+    for batch in it:
+        views = {c: _binary_views(batch.column(c)) for c in _PAGE_COLS}
+        cols = {c: batch.column(c).to_pylist() for c in
+                ("bucket", "salt", "n_tokens", "doc_part", "doc_parts")}
+        fps = batch.column("_fp").to_pylist() if path_seqs is not None else None
+        for r in range(batch.num_rows):
+            k = (cols["bucket"][r], cols["salt"][r])
+            if k != key:
+                close_group()
+                if key is not None and k[1] != key[1]:
+                    yield from flush()
+                key = k
+            if buffered >= _ROW_GROUP_BYTES:
+                yield from flush()
+            pages = {c: data[off[r]:off[r + 1]]
+                     for c, (off, data) in views.items()}
+            item = (batch, r, pages)
+            n_tok, parts = cols["n_tokens"][r], cols["doc_parts"][r]
+            if dels is not None:
+                n_dead, row = _mask_chunk(
+                    dels, batch, r, pages,
+                    _ANCIENT_SEQ if fps is None else seq_of(fps[r]),
+                    uid_prefix)
+                if n_dead and (parts == 1 or cols["doc_part"][r] == 0):
+                    stats["n_purged_rows"] += n_dead
+                if row is not None:
+                    item = (None, row, None)
+                    n_tok, parts = row["n_tokens"], row["doc_parts"]
+                elif n_dead:
+                    continue
+            g = groups.gid(k, n_tok, parts)
+            if g is None:
+                emit(*item)
+                continue
+            if (*k, g) != group_id:
+                close_group()
+                group_id = (*k, g)
+            group.append(item)
+    close_group()
+    yield from flush()
+
+
+# compaction summary rows: the direct writer's per-file columns plus
+# what the task purged and merged
+_COMPACT_FIELDS = META_FIELDS + [("n_purged_rows", pa.int64()),
+                                 ("n_merged_chunks", pa.int64())]
+_COMPACT_DDL = META_DDL + ", n_purged_rows bigint, n_merged_chunks bigint"
+
+
+def _compact_batches(run_dir: str, parquet_codec: str, budget: int,
+                     uid_prefix: str, extras: tuple, dels: _Deletes | None,
+                     path_seqs: dict | None):
+    """mapInArrow: sorted chunk rows -> this task's compacted file
+    (write_task_files) -> its summary row. A task whose every chunk was
+    deleted writes no file; its row (file NULL) still counts them."""
+
+    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from tokencodec.spark.encode_job import meta_batch, write_task_files
+
+        stats = {"n_purged_rows": 0, "n_merged_chunks": 0}
+        rows = write_task_files(
+            _compact_stream(it, budget, uid_prefix, extras, dels, path_seqs,
+                            stats), run_dir, parquet_codec)
+        if rows or stats["n_purged_rows"]:
+            rows = rows or [{**dict.fromkeys([n for n, _ in META_FIELDS], 0),
+                             "file": None}]
+            rows[0].update(stats)  # one file per task (commit_groups=1)
+            yield meta_batch(rows, _COMPACT_FIELDS)
+
+    return fn
+
+
+def _pending_deletes(tbl: SnapshotTable, snap: dict, grp_map: dict,
+                     del_groups: dict, read_ids) -> tuple:
+    """(ids, path_seqs) of the pending delete groups, whose ids
+    ``read_ids(paths)`` reads. Sequence-aware when any delete group's
+    first-commit attribution survives (table.group_seqs): ids map to
+    their newest delete seq and ``path_seqs`` maps normalized data paths
+    to their group's seq (decode_job._path_seq_map). Legacy chains get a
+    frozenset and None."""
+    from tokencodec.spark.decode_job import (_ANCIENT_SEQ, _LEGACY_DEL_SEQ,
+                                             _path_seq_map)
+    seqs = tbl.group_seqs(snap)
+    known = {k: seqs[k] for k in del_groups if k in seqs}
+    if not known:
+        return frozenset(read_ids([p for ps in del_groups.values()
+                                   for p in ps])), None
+    ids: dict[str, int] = {}
+    for k, ps in sorted(del_groups.items()):
+        s = known.get(k, _LEGACY_DEL_SEQ)
+        for d in read_ids(ps):
+            ids[d] = max(ids.get(d, _ANCIENT_SEQ), s)
+    return ids, _path_seq_map(grp_map, seqs, min(known.values()))
+
+
+def _read_ids_pyarrow(paths: list[str]) -> list[str]:
+    """doc_ids of delete manifest files (or run directories of them),
+    read on the driver: manifests are takedown-sized by delete_docs'
+    contract."""
+    from tokencodec.spark.encode_job import _list_parquet, _open_parquet
+    return [d for p in paths
+            for f in ([p] if p.endswith(".parquet") else _list_parquet(p))
+            for d in _open_parquet(f).read(columns=["doc_id"])
+            .column(0).to_pylist()]
+
+
+def _file_may_hit(path: str, dels: _Deletes) -> bool:
+    """May a data file hold a deleted id, by its footer's row-group
+    doc-id bounds? Unknown stats say yes."""
+    from tokencodec.spark.decode_job import _footer_bounds
+    bounds = _footer_bounds(path)
+    return bounds is None or any(
+        dels.may_hit(b.get("doc_id_min", (None, None))[0],
+                     b.get("doc_id_max", (None, None))[1]) for b in bounds)
+
+
+def _rechunk_groups(spark: SparkSession, paths: list[str],
+                    max_chunk_tokens: int) -> list:
+    """Complete split groups whose parts would SHRINK under
+    ``max_chunk_tokens`` (encode ran with a smaller budget), as rows
+    (sgrp, k, files) — a partial group (corruption, concurrent surgery)
+    passes through. Scans the metadata columns of only the files whose
+    footers may hold split parts; no job when none does."""
+    from tokencodec.spark.decode_job import _footer_bounds, _rg_may_split
+    cand = [p for p in paths
+            if (b := _footer_bounds(p)) is None or any(map(_rg_may_split, b))]
+    if not cand:
+        return []
     sgrp = F.coalesce(F.col("split_uid"), F.col("doc_id_min"))
-    rgrps = None
-    n_rech_groups = n_rech_parts = 0
-    if mdp_chain is None or mdp_chain > 1:
-        allm = (spark.read.schema(PAGES_DDL).parquet(*all_paths)
-                .na.fill({"doc_parts": 1})
-                .filter(F.col("doc_parts") > 1)
-                .select(sgrp.alias("sgrp"), "n_tokens", "doc_parts",
-                        F.input_file_name().alias("fname")))
-        rgrps = (allm.groupBy("sgrp")
-                 .agg(F.sum("n_tokens").alias("tot_tok"),
-                      F.count(F.lit(1)).alias("k"),
-                      F.max("doc_parts").alias("parts"),
-                      F.collect_set("fname").alias("files"))
-                 # only complete groups are rewritten (a partial group —
-                 # corruption or concurrent surgery — passes through),
-                 # and only when the new layout has FEWER parts. Extra
-                 # pages are no obstacle: a split group is single-doc,
-                 # so the resplit kernel copies them verbatim
-                 .filter((F.col("k") == F.col("parts"))
-                         & (F.ceil(F.col("tot_tok") / F.lit(max_chunk_tokens))
-                            < F.col("parts"))))
-        rgrps = rgrps.cache()
-        row = rgrps.agg(F.count(F.lit(1)).alias("g"),
-                        F.sum("k").alias("p")).collect()[0]
-        n_rech_groups, n_rech_parts = int(row["g"] or 0), int(row["p"] or 0)
-        if n_rech_groups and file_mode:
-            # map Spark's scan URIs back onto the committed path strings
-            def _norm(p: str) -> str:
-                for pref in ("file://", "file:"):
-                    if p.startswith(pref):
-                        return p[len(pref):]
-                return p
-            committed = {_norm(p): p for p in all_paths}
-            rfiles = [r.f for r in rgrps.select(F.explode("files").alias("f"))
-                      .distinct().collect()]
-            unmapped = [f for f in rfiles if _norm(f) not in committed]
-            if unmapped:
-                # proceeding would stitch groups from PARTIAL part sets
-                # while the unmapped file stays referenced — silent row
-                # corruption. Refuse instead; the mapping only fails on
-                # exotic URI encodings (e.g. %-escaped path characters).
-                raise RuntimeError(
-                    "compact: cannot map scan URI(s) back to committed "
-                    f"paths for split-group rechunk: {unmapped[:3]}")
-            selected = sorted(set(selected)
-                              | {committed[_norm(f)] for f in rfiles})
+    return (spark.read.schema(PAGES_DDL).parquet(*cand)
+            .na.fill({"doc_parts": 1})
+            .filter(F.col("doc_parts") > 1)
+            .select(sgrp.alias("sgrp"), "n_tokens", "doc_parts",
+                    F.input_file_name().alias("fname"))
+            .groupBy("sgrp")
+            .agg(F.sum("n_tokens").alias("tot_tok"),
+                 F.count(F.lit(1)).alias("k"),
+                 F.max("doc_parts").alias("parts"),
+                 F.collect_set("fname").alias("files"))
+            .filter((F.col("k") == F.col("parts"))
+                    & (F.ceil(F.col("tot_tok") / F.lit(max_chunk_tokens))
+                       < F.col("parts")))
+            .select("sgrp", "k", "files").collect())
 
-    if not selected:
-        if rgrps is not None:
-            rgrps.unpersist()
-        return snap
-    pages = spark.read.schema(PAGES_DDL).parquet(*selected)
-    pages = pages.na.fill({"doc_part": 0, "doc_parts": 1})
-    # the metrics below subtract the SELECTED FILES' original
-    # contribution; keep a handle to it before the rechunk splice
-    # replaces split parts with re-sliced chunks in `pages`
-    pages_orig = pages
-    uid_prefix = f"cmp{snap['snapshot_id'] + 1}"
-    if n_rech_groups:
-        # reassemble shrinkable split groups FIRST and splice the
-        # re-sliced chunks into the page stream, so a doc that
-        # reassembles small enough joins a merge group in this same
-        # pass (one compaction converges; no second pass needed)
-        rg_keys = rgrps.select("sgrp")
-        with_sgrp = (pages.filter(F.col("doc_parts") > 1)
-                     .withColumn("sgrp", sgrp))
-        resplit = (with_sgrp.join(rg_keys, "sgrp")
-                   .repartition("sgrp")
-                   .sortWithinPartitions("sgrp", "doc_part")
-                   .select("bucket", "salt", "sgrp", "extra_pages",
-                           *_PAGE_COLS)
-                   .mapInArrow(_resplit_batches(uid_prefix, max_chunk_tokens),
-                               PAGES_DDL))
-        pages = (pages.filter(F.col("doc_parts") == 1)
-                 .unionByName(with_sgrp.join(rg_keys, "sgrp", "left_anti")
-                              .drop("sgrp"))
-                 .unionByName(resplit))
 
-    # the merge kernel consumes the table's declared extra-column
-    # schema, so extra-bearing chunks merge like any other (the round-5
-    # pass-through limitation is closed)
-    from tokencodec.spark.encode_job import table_extra_schema
-    extras_schema = tuple(sorted(table_extra_schema(root).items()))
-    mergeable = ((F.col("doc_parts") == 1)
-                 & (F.col("n_tokens") < max_chunk_tokens // 2))
-    # budget-bounded merge groups per (bucket, salt): a running token
-    # sum divided by the budget. Ordered by chunk_uid — chunk_seq
-    # REPEATS across commit groups / streaming batches for one (bucket,
-    # salt), and duplicate ORDER BY keys are RANGE-frame peers whose
-    # running sums collapse. Bounded per-partition window (one (bucket,
-    # salt) never exceeds its committed chunk count).
-    w = Window.partitionBy("bucket", "salt").orderBy("chunk_uid")
-    marked = pages.withColumn(
-        "gid",
-        F.when(mergeable,
-               F.floor((F.sum(F.when(mergeable, F.col("n_tokens")).otherwise(0))
-                        .over(w) - 1) / F.lit(max_chunk_tokens)).cast("int"))
-        .otherwise(F.lit(None)))
-    small = marked.filter(F.col("gid").isNotNull())
-    # nothing worth rewriting: a group of one keeps its exact bytes, so
-    # only (bucket, salt) runs with >= 2 mergeable chunks are touched
-    counts = (small.groupBy("bucket", "salt", "gid")
-              .agg(F.count("*").alias("k")).filter(F.col("k") >= 2)
-              .select("bucket", "salt", "gid"))
-    todo = small.join(counts, ["bucket", "salt", "gid"])
-    n_todo = todo.count()
-    if n_todo == 0 and n_rech_groups == 0:
-        if rgrps is not None:
-            rgrps.unpersist()
-        return snap
-    merged = (todo
-              .repartition("bucket", "salt", "gid")
-              .sortWithinPartitions("bucket", "salt", "gid", "chunk_uid")
-              .select("bucket", "salt", "gid", "extra_pages", *_PAGE_COLS)
-              .mapInArrow(_merge_batches(uid_prefix, extras_schema),
-                          PAGES_DDL))
-    # non-mergeable chunks living in selected files ride along verbatim
-    # (their file is being dropped); chunks in unselected files are
-    # never read or rewritten
-    untouched = marked.join(counts, ["bucket", "salt", "gid"],
-                            "left_anti").select(*merged.columns)
-    out = untouched.unionByName(merged)
-    from pyspark.sql import Observation
-    obs = Observation()
-    out = out.observe(obs,
-                      F.count(F.lit(1)).alias("n_chunks"),
-                      F.sum("enc_bytes").alias("enc_bytes"))
-    run_dir = tbl.new_run_dir()
-    (out.write.mode("overwrite").option("compression", parquet_codec)
-        .parquet(run_dir))
-    written = {k: int(v or 0) for k, v in obs.get.items()}
-    # commit the written FILES, not the run dir, so the rewritten data
-    # stays file-granular for the next compaction (Spark's output
-    # committer has already cleaned attempt temporaries)
-    new_files = sorted(
-        posixpath.join(run_dir, n) for n in tbl.fs.listdir(run_dir)
-        if n.endswith(".parquet"))
-    # table-wide metrics = whole-table totals, minus the selected files'
-    # contribution, plus what was just written. Totals are RECOMPUTED
-    # from a metadata-column aggregate over the committed files (page
-    # blobs never read): the chain's cumulative metrics.table_totals is
-    # advisory (a lost optimistic-concurrency race can leave it missing
-    # the winner's delta), and compact re-anchors the chain from this
-    # value, so trusting it would make any drift permanent. Compact is
-    # already a table-scale job; one footer-stats aggregate is noise.
-    tot = (read_pages(spark, root).na.fill({"doc_parts": 1})
+def _page_totals(spark: SparkSession, paths: list[str]) -> dict:
+    """Chunk, row, token, byte totals and max doc_parts of ``paths``,
+    aggregated from metadata columns (page blobs never read)."""
+    if not paths:
+        return dict.fromkeys(("n_chunks", "n_rows", "n_tokens", "enc_bytes",
+                              "max_doc_parts"), 0)
+    tot = (spark.read.schema(PAGES_DDL).parquet(*paths)
+           .na.fill({"doc_parts": 1})
            .agg(F.count(F.lit(1)).alias("n_chunks"),
                 F.sum("n_rows").alias("n_rows"),
                 F.sum("n_tokens").alias("n_tokens"),
                 F.sum("enc_bytes").alias("enc_bytes"),
                 F.max("doc_parts").alias("max_doc_parts"))
            .collect()[0].asDict())
-    tot = {k: int(v or 0) for k, v in tot.items()}
-    # doc-part maxima must survive expiry even when the current layout
-    # has none left: carry the chain's historical max forward when it
-    # is larger than what the files show
-    from tokencodec.spark.decode_job import _max_doc_parts_from_manifest
-    mdp = _max_doc_parts_from_manifest(root, None)
-    if mdp is not None:
-        tot["max_doc_parts"] = max(tot["max_doc_parts"], int(mdp))
-    sel = (pages_orig.agg(F.count(F.lit(1)).alias("n_chunks"),
-                          F.sum("enc_bytes").alias("enc_bytes"))
-           .collect()[0].asDict())
-    m = {"n_chunks": tot["n_chunks"] - int(sel["n_chunks"] or 0) + written["n_chunks"],
-         "n_rows": tot["n_rows"], "n_tokens": tot["n_tokens"],
-         "enc_bytes": tot["enc_bytes"] - int(sel["enc_bytes"] or 0) + written["enc_bytes"],
-         "max_doc_parts": tot["max_doc_parts"],
-         "compacted_chunks": int(n_todo) + n_rech_parts,
+    return {k: int(v or 0) for k, v in tot.items()}
+
+
+def _salt_sorted(df: DataFrame) -> DataFrame:
+    return (df.repartition("salt")
+            .sortWithinPartitions("salt", "bucket", "chunk_uid"))
+
+
+def compact(spark: SparkSession, root: str,
+            max_chunk_tokens: int = part.MAX_CHUNK_TOKENS,
+            parquet_codec: str = "zstd",
+            small_file_bytes: int = 64 << 20) -> dict:
+    """Purge pending deletes and merge under-filled chunks in one
+    rewrite job and one replace-commit. Returns the new snapshot (or the
+    current one when there is nothing to do).
+
+    FILE-GRANULAR (Iceberg's rewrite-data-files): only files below
+    ``small_file_bytes``, run directories, files whose footers may hold
+    a pending deleted id and files holding shrinkable split parts are
+    rewritten; healthy big files stay referenced untouched. Without
+    pending deletes a metadata-only probe first looks for a merge group
+    of 2+ chunks: a no-op compaction writes and commits nothing. Commit
+    metrics come from the tasks' summary rows plus a metadata aggregate
+    over the untouched files. The tasks write with pyarrow, so a root
+    pyarrow cannot address is refused."""
+    from tokencodec.spark.decode_job import (_max_doc_parts_from_manifest,
+                                             _norm_path)
+    from tokencodec.spark.encode_job import (_sweep_orphans,
+                                             require_direct_write,
+                                             table_extra_schema)
+
+    require_direct_write(root, "compact")
+    tbl = SnapshotTable(root)
+    snap = tbl.current_snapshot()
+    if snap is None:
+        raise FileNotFoundError(f"no committed snapshot under {root}")
+    grp_map = tbl.resolve_groups(snap)
+    del_groups = {k: ps for k, ps in grp_map.items()
+                  if is_delete_group(k) and ps}
+    ids, path_seqs = (_pending_deletes(tbl, snap, grp_map, del_groups,
+                                       _read_ids_pyarrow)
+                      if del_groups else (frozenset(), None))
+    dels = _Deletes(ids) if ids else None
+    all_paths = [p for k, ps in grp_map.items()
+                 if not is_delete_group(k) for p in ps]
+    selected = {p for p in all_paths
+                if tbl.fs.isdir(p) or tbl.fs.size(p) < small_file_bytes
+                or (dels is not None and _file_may_hit(p, dels))}
+    # shrinkable split groups are reassembled and re-sliced (a table
+    # re-compacted with a larger budget would keep its fragments
+    # forever otherwise); their files are rewritten in full, whatever
+    # their size — leaving them referenced would double-read the parts
+    mdp = _max_doc_parts_from_manifest(root, None, snap=snap)
+    rech = (_rechunk_groups(spark, all_paths, max_chunk_tokens)
+            if mdp is None or mdp > 1 else [])
+    committed = {_norm_path(p): p for p in all_paths}
+    for f in {_norm_path(f) for r in rech for f in r["files"]}:
+        # a scan URI maps back to a committed file or its run directory;
+        # failing that, stitching from a PARTIAL part set while the
+        # unmapped file stays referenced would corrupt rows: refuse
+        p = committed.get(f) or committed.get(f.rsplit("/", 1)[0])
+        if p is None:
+            raise RuntimeError("compact: cannot map scan URI back to a "
+                               f"committed path for split-group rechunk: {f}")
+        selected.add(p)
+
+    uid_prefix = f"cmp{snap['snapshot_id'] + 1}"
+    meta, new_files = [], []
+    if selected:
+        pages = (spark.read.schema(PAGES_DDL).parquet(*sorted(selected))
+                 .na.fill({"doc_part": 0, "doc_parts": 1}))
+        if not del_groups and not rech:
+            # only a merge can change anything: look for a merge group
+            # of 2+ chunks in the metadata columns before writing a byte
+            probe = _salt_sorted(pages.select(
+                "bucket", "salt", "chunk_uid", "n_tokens", "doc_parts"))
+            if not sum(r["n"] for r in probe.mapInArrow(
+                    _merge_probe(max_chunk_tokens), "n bigint").collect()):
+                return snap
+        # sequence-aware deletes need each chunk's data seq: its file
+        # path rides along to the kernel (through the resplit too)
+        carry = ("_fp",) if path_seqs is not None else ()
+        if carry:
+            pages = pages.withColumn("_fp", F.col("_metadata.file_path"))
+        pages = pages.select(*_PAGES_TYPES, *carry)
+        if rech:
+            # re-slice FIRST, so a doc that reassembles small enough
+            # joins a merge group in this same pass
+            sgrp = F.coalesce(F.col("split_uid"), F.col("doc_id_min"))
+            in_rech = F.coalesce((F.col("doc_parts") > 1)
+                                 & sgrp.isin([r["sgrp"] for r in rech]),
+                                 F.lit(False))
+            resplit = (pages.filter(in_rech).withColumn("sgrp", sgrp)
+                       .repartition("sgrp")
+                       .sortWithinPartitions("sgrp", "doc_part")
+                       .select("bucket", "salt", "sgrp", "extra_pages",
+                               *_PAGE_COLS, *carry)
+                       .mapInArrow(
+                           _resplit_batches(uid_prefix, max_chunk_tokens,
+                                            carry),
+                           PAGES_DDL + "".join(f", {c} string"
+                                               for c in carry)))
+            pages = pages.filter(~in_rech).unionByName(resplit)
+        extras = tuple(sorted(table_extra_schema(root, snap=snap).items()))
+        run_dir = tbl.new_run_dir()
+        tbl.fs.mkdirs(run_dir)
+        meta = _salt_sorted(pages).mapInArrow(
+            _compact_batches(run_dir, parquet_codec, max_chunk_tokens,
+                             uid_prefix, extras, dels, path_seqs),
+            _COMPACT_DDL).collect()
+        # only files whose summary row was collected are real: sweep
+        # lost/retried attempts' files before committing
+        new_files = sorted(r["file"] for r in meta if r["file"])
+        _sweep_orphans(tbl.fs, run_dir,
+                       {f.rsplit("/", 1)[-1] for f in new_files})
+        if not new_files:
+            tbl.fs.delete(run_dir, recursive=True)
+
+    # table-wide metrics from measured values — what the tasks wrote
+    # plus the untouched files — re-anchor the chain's totals (advisory
+    # under optimistic-concurrency races); the chain's historical max
+    # doc_parts survives a layout that no longer splits
+    kept = [p for p in all_paths if p not in selected]
+    tot = _page_totals(spark, kept)
+    for k in ("n_chunks", "n_rows", "n_tokens", "enc_bytes"):
+        tot[k] += sum(r[k] for r in meta)
+    tot["max_doc_parts"] = max([tot["max_doc_parts"], int(mdp or 0)]
+                               + [r["max_doc_parts"] for r in meta])
+    n_rech_parts = sum(r["k"] for r in rech)
+    m = {**tot,
+         "compacted_chunks": sum(r["n_merged_chunks"] for r in meta)
+         + n_rech_parts,
          "rechunked_split_parts": n_rech_parts,
-         "rechunked_split_groups": n_rech_groups,
-         "kept_files": len(all_paths) - len(selected),
+         "rechunked_split_groups": len(rech),
+         "kept_files": len(kept),
+         "rewritten_files": len(selected),
+         "n_delete_ids": len(ids),
+         "n_purged_rows": sum(r["n_purged_rows"] for r in meta),
          "op": "compact"}
-    # re-anchor the cumulative chain: compact's metrics ARE table-wide
-    # (a rewrite never drops rows, so table max == historical max)
     m["table_totals"] = {k: m[k] for k in
                          ("n_chunks", "n_rows", "n_tokens", "enc_bytes")}
     m["max_doc_parts_chain"] = m["max_doc_parts"]
     esc = next_extra_schema_chain(snap, {})
     if esc is not None:
         m["extra_schema_chain"] = esc
-    # every group keeps its unselected files; the rewritten run dir is
-    # attached to the first group key (chunk group identity lives in the
-    # chunk_uid prefix, not in which file holds the chunk)
-    sel_set = set(selected)
+    # every group keeps its untouched files; the written files attach to
+    # the first group key (chunk group identity lives in the chunk_uid
+    # prefix); delete groups empty: nothing is left to mask
     new_groups = {}
     attached = False
     for k in sorted(grp_map):
         if is_delete_group(k):
-            new_groups[k] = list(grp_map[k])  # untouched here
+            new_groups[k] = []
             continue
-        survivors = [p for p in grp_map[k] if p not in sel_set]
+        survivors = [p for p in grp_map[k] if p not in selected]
         new_groups[k] = ([] if attached else new_files) + survivors
         attached = True
-    if rgrps is not None:
-        rgrps.unpersist()
     return tbl.commit(new_groups, metrics=m, replace=True)
-
-
-def _norm_uri(p: str) -> str:
-    for pref in ("file://", "file:"):
-        if p.startswith(pref):
-            return p[len(pref):]
-    return p
 
 
 def delete_docs(spark: SparkSession, root: str, doc_ids,
@@ -463,33 +691,50 @@ def delete_docs(spark: SparkSession, root: str, doc_ids,
     disappear), time travel before the delete still shows the rows, and
     ``purge_deletes`` / ``compact`` later rewrite them away physically.
 
-    ``doc_ids`` is an iterable of ids or a single-column DataFrame.
-    Designed for takedown/PII-removal request sizes (the id set rides
-    in a broadcast at decode and in task closures at purge); bulk
-    filtering of a corpus belongs in an encode-time predicate, not
-    here. ``branch`` commits the manifest on that branch only (audit a
-    takedown in isolation; purge_deletes(branch=...) applies it)."""
+    ``doc_ids`` is an iterable of ids or a single-column DataFrame. An
+    id list is written by the driver as one sorted, deduplicated
+    parquet file (no Spark job); a DataFrame, or a root pyarrow cannot
+    address, is written by a Spark job. Designed for takedown/PII-
+    removal request sizes (the id set rides in a broadcast at decode
+    and is read on the driver at compaction); bulk filtering of a corpus
+    belongs in an encode-time predicate, not here. ``branch`` commits
+    the manifest on that branch only (audit a takedown in isolation;
+    purge_deletes(branch=...) applies it)."""
     import uuid as _uuid
+
+    from tokencodec.spark.encode_job import (direct_write_supported,
+                                             next_chain_max,
+                                             next_table_totals, pyarrow_fs)
 
     tbl = SnapshotTable(root, branch=branch)
     snap = tbl.current_snapshot()
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
-    if isinstance(doc_ids, DataFrame):
-        df = doc_ids.select(
-            F.col(doc_ids.columns[0]).cast("string").alias("doc_id"))
-    else:
-        df = spark.createDataFrame([(str(d),) for d in doc_ids],
-                                   "doc_id string")
-    df = df.distinct()
-    n_ids = df.count()
     run_dir = tbl.new_run_dir()
-    df.write.mode("overwrite").parquet(run_dir)
-    files = sorted(posixpath.join(run_dir, n)
-                   for n in tbl.fs.listdir(run_dir) if n.endswith(".parquet"))
-    from tokencodec.spark.encode_job import (next_chain_max,
-                                             next_extra_schema_chain,
-                                             next_table_totals)
+    if isinstance(doc_ids, DataFrame) or not direct_write_supported(root):
+        if isinstance(doc_ids, DataFrame):
+            df = doc_ids.select(
+                F.col(doc_ids.columns[0]).cast("string").alias("doc_id"))
+        else:
+            df = spark.createDataFrame([(str(d),) for d in doc_ids],
+                                       "doc_id string")
+        df = df.distinct()
+        n_ids = df.count()
+        df.write.mode("overwrite").parquet(run_dir)
+        files = sorted(posixpath.join(run_dir, n)
+                       for n in tbl.fs.listdir(run_dir)
+                       if n.endswith(".parquet"))
+    else:
+        import pyarrow.parquet as pq
+        ids = pa.table({"doc_id": pa.array(sorted({str(d) for d in doc_ids}),
+                                           pa.string())})
+        n_ids = ids.num_rows
+        files = []
+        if n_ids:
+            tbl.fs.mkdirs(run_dir)
+            files = [posixpath.join(run_dir, "part-00000-ids.parquet")]
+            pafs_fs, path = pyarrow_fs(files[0])
+            pq.write_table(ids, path, filesystem=pafs_fs)
     m: dict = {"op": "delete", "n_delete_ids": int(n_ids)}
     totals = next_table_totals(snap, {})
     if totals is not None:
@@ -517,10 +762,9 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
     bit-identical; audit-tested); this is honestly O(table) — the same
     cost every engine pays to re-partition data that carries its
     partition in its layout. Pending row-level deletes are purged
-    first (like compact), so the rewrite starts from a clean masking
-    slate; time travel below the resalt keeps resolving under the OLD
-    scheme (the scheme metric is read from the target snapshot's own
-    chain)."""
+    first, so the rewrite starts from a clean masking slate; time
+    travel below the resalt keeps resolving under the OLD scheme (the
+    scheme metric is read from the target snapshot's own chain)."""
     from tokencodec.spark.decode_job import _scheme_from_manifest, decode
     from tokencodec.spark.encode_job import (make_encoder,
                                              next_extra_schema_chain,
@@ -743,89 +987,33 @@ def _upsert_pinned(tbl, snap, df, scheme, extra_schema, extra_cols,
 
 def _purge_batches(ids, uid_prefix: str):
     """mapInArrow over FULL page rows of delete-affected files: rows
-    whose chunk holds no deleted doc pass through byte-identical; chunks
-    losing some docs are decoded, row-masked, and re-encoded; chunks
-    losing every doc (incl. split-part chunks, single-doc by
-    construction) are dropped.
-
-    ``ids`` is a frozenset (legacy chains: every copy of a listed id
-    dies) or a {doc_id: del_seq} dict (sequence-aware chains: a copy
-    dies only when its chunk's ``data_seq`` — an extra input column —
-    is strictly below the id's newest delete seq, so upsert
-    replacements survive the purge of the versions they superseded)."""
-    seq_mode = isinstance(ids, dict)
+    whose chunk holds no deleted doc pass through byte-identical; the
+    rest go through _mask_chunk (dropped when every doc dies, else
+    re-encoded). Sequence-aware ``ids`` read each chunk's data seq from
+    the extra input column ``data_seq``."""
+    dels = _Deletes(ids)
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from tokencodec.spark.decode_job import (_ANCIENT_SEQ, _binary_views,
-                                                 _string_array)
-        from tokencodec.spark.encode_job import _rows_to_batch
+        from tokencodec.spark.decode_job import _ANCIENT_SEQ, _binary_views
 
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            views = {c: _binary_views(batch.column(idx[c])) for c in _PAGE_COLS}
+            views = {c: _binary_views(batch.column(c)) for c in _PAGE_COLS}
+            seqs = (batch.column("data_seq").to_pylist() if dels.by_seq
+                    else [None] * batch.num_rows)
             keep_mask = []
             rows: list[dict] = []
             for r in range(batch.num_rows):
-                off, data = views["page_doc_id"]
-                docs = _string_array(data[off[r]:off[r + 1]]).to_pylist()
-                if seq_mode:
-                    rs = batch.column(idx["data_seq"])[r].as_py()
-                    rs = _ANCIENT_SEQ if rs is None else int(rs)
-                    dead = [d in ids and ids[d] > rs for d in docs]
-                else:
-                    dead = [d in ids for d in docs]
-                if not any(dead):
-                    keep_mask.append(True)
-                    continue
-                keep_mask.append(False)
-                if all(dead):
-                    continue  # whole chunk deleted
-                pages = {c: d[o[r]:o[r + 1]]
-                         for c, (o, d) in views.items()}
-                ntok = pageformat.decode_int_page(
-                    pages["page_n_tok"]).astype(np.int64)
-                toks = grouped.decode_tokens_column(pages["page_tokens"])
-                src = _string_array(pages["page_source"])
-                keep = np.array([not d for d in dead])
-                ends = np.cumsum(ntok)
-                starts = ends - ntok
-                tok_keep = (np.concatenate(
-                    [toks[s:e] for s, e, k in zip(starts, ends, keep) if k])
-                    if keep.any() else np.empty(0, toks.dtype))
-                kidx = pa.array(np.flatnonzero(keep))
-                ext_raw = batch.column(idx["extra_pages"])[r].as_py()
-                extras_out = None
-                if ext_raw:
-                    # schema-evolution extras: mask and re-encode each
-                    # page at its RECORDED kind (no schema needed);
-                    # decode_extra_page sees through DEFLATED/NULLABLE
-                    # wraps and take() preserves NULL slots
-                    from tokencodec.spark.decode_job import (
-                        decode_extra_page, spark_type_of_extra_page)
-                    from tokencodec.spark.encode_job import encode_extra_page
-                    extras_out = {
-                        name: encode_extra_page(
-                            decode_extra_page(page).take(kidx),
-                            spark_type_of_extra_page(page))
-                        for name, page in dict(ext_raw).items()}
-                row = _encode_chunk(
-                    batch.column(idx["bucket"])[r].as_py(),
-                    batch.column(idx["salt"])[r].as_py(),
-                    batch.column(idx["chunk_seq"])[r].as_py(),
-                    pa.array([d for d, k in zip(docs, keep) if k],
-                             pa.string()),
-                    tok_keep, ntok[keep],
-                    src.take(kidx).cast(pa.string()),
-                    uid_prefix=uid_prefix, extras=extras_out)
-                # chunk_seq repeats across commit groups: derive the new
-                # uid from the (table-unique) original instead
-                row["chunk_uid"] = (
-                    f"{uid_prefix}-{batch.column(idx['chunk_uid'])[r].as_py()}")
-                rows.append(row)
+                pages = {c: d[o[r]:o[r + 1]] for c, (o, d) in views.items()}
+                n_dead, row = _mask_chunk(
+                    dels, batch, r, pages,
+                    _ANCIENT_SEQ if seqs[r] is None else seqs[r], uid_prefix)
+                keep_mask.append(n_dead == 0)
+                if row is not None:
+                    rows.append(row)
             passthrough = batch.filter(pa.array(keep_mask))
-            if seq_mode:
+            if dels.by_seq:
                 # the data_seq input column is not part of PAGES_DDL
                 passthrough = passthrough.select(
                     [n for n in batch.schema.names if n != "data_seq"])
@@ -865,26 +1053,16 @@ def purge_deletes(spark: SparkSession, root: str,
     if not del_paths:
         return snap
     # sequence-aware when any delete group's first-commit attribution
-    # survives (table.group_seqs): ids become {id: newest del seq} and
-    # only strictly-older copies die — upsert replacements survive the
-    # purge of the versions they superseded. Legacy chains keep the
-    # global frozenset semantics byte-for-byte.
-    from tokencodec.spark.decode_job import _ANCIENT_SEQ, _LEGACY_DEL_SEQ
-    seqs = tbl.group_seqs(snap)
-    known = {k: seqs[k] for k in del_groups if k in seqs}
-    if known:
-        ids: dict[str, int] = {}
-        for k, ps in sorted(del_groups.items()):
-            s = known.get(k, _LEGACY_DEL_SEQ)
-            for r in (spark.read.schema("doc_id string").parquet(*ps)
-                      .distinct().collect()):
-                ids[r[0]] = max(ids.get(r[0], _ANCIENT_SEQ), s)
-    else:
-        ids = frozenset(
-            r[0] for r in spark.read.schema("doc_id string")
-            .parquet(*del_paths).distinct().collect())
+    # survives: only strictly-older copies die, so upsert replacements
+    # survive the purge of the versions they superseded. Legacy chains
+    # keep the global frozenset semantics byte-for-byte.
+    ids, path_seqs = _pending_deletes(
+        tbl, snap, grp_map, del_groups,
+        lambda ps: [r[0] for r in spark.read.schema("doc_id string")
+                    .parquet(*ps).distinct().collect()])
     data_paths = [p for k, ps in grp_map.items()
                   if not is_delete_group(k) for p in ps]
+    from tokencodec.spark.decode_job import _norm_path
     uid_prefix = f"prg{snap['snapshot_id'] + 1}"
     new_files: list[str] = []
     selected: list[str] = []
@@ -906,25 +1084,21 @@ def purge_deletes(spark: SparkSession, root: str,
                                    | F.col("doc_id_max").isNull())
                        .select("fname"))
             fnames = [r[0] for r in hit.union(unknown).distinct().collect()]
-            committed = {_norm_uri(p): p for p in data_paths}
-            unmapped = [f for f in fnames if _norm_uri(f) not in committed]
+            committed = {_norm_path(p): p for p in data_paths}
+            unmapped = [f for f in fnames if _norm_path(f) not in committed]
             if unmapped:
                 raise RuntimeError(
                     "purge_deletes: cannot map scan URI(s) back to "
                     f"committed paths: {unmapped[:3]}")
-            selected = sorted(committed[_norm_uri(f)] for f in fnames)
+            selected = sorted(committed[_norm_path(f)] for f in fnames)
         else:
             selected = list(data_paths)
         if selected:
-            from tokencodec.spark.encode_job import _PAGES_TYPES
             pages = spark.read.schema(PAGES_DDL).parquet(*selected)
             sel_cols = list(_PAGES_TYPES)
-            if known:
-                from tokencodec.spark.decode_job import (_attach_data_seq,
-                                                         _path_seq_map)
-                pages = _attach_data_seq(
-                    spark, pages,
-                    _path_seq_map(grp_map, seqs, min(known.values())))
+            if path_seqs is not None:
+                from tokencodec.spark.decode_job import _attach_data_seq
+                pages = _attach_data_seq(spark, pages, path_seqs)
                 sel_cols = sel_cols + ["data_seq"]
             pages = pages.select(*sel_cols)
             out = pages.mapInArrow(_purge_batches(ids, uid_prefix),
@@ -947,20 +1121,8 @@ def purge_deletes(spark: SparkSession, root: str,
                 tbl.fs.delete(run_dir, recursive=True)
     # post-purge table totals from the surviving layout (metadata cols)
     sel_set = set(selected)
-    kept = [p for p in data_paths if p not in sel_set] + new_files
-    if kept:
-        tot = (spark.read.schema(PAGES_DDL).parquet(*kept)
-               .na.fill({"doc_parts": 1})
-               .agg(F.count(F.lit(1)).alias("n_chunks"),
-                    F.sum("n_rows").alias("n_rows"),
-                    F.sum("n_tokens").alias("n_tokens"),
-                    F.sum("enc_bytes").alias("enc_bytes"),
-                    F.max("doc_parts").alias("max_doc_parts"))
-               .collect()[0].asDict())
-        tot = {k: int(v or 0) for k, v in tot.items()}
-    else:
-        tot = {"n_chunks": 0, "n_rows": 0, "n_tokens": 0, "enc_bytes": 0,
-               "max_doc_parts": 0}
+    tot = _page_totals(
+        spark, [p for p in data_paths if p not in sel_set] + new_files)
     from tokencodec.spark.decode_job import _max_doc_parts_from_manifest
     mdp = _max_doc_parts_from_manifest(root, None, branch=branch)
     if mdp is not None:
