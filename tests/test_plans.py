@@ -4,6 +4,7 @@ pipeline — asserted from .explain output (SURVEY.md §4)."""
 
 import re
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -157,10 +158,10 @@ def test_seq_aware_delete_plan_broadcasts(spark, tmp_path):
 
 # ------------------------------------------------- lookup plan shape
 #
-# A lookup reads only the candidate files its footers admit (see
-# decode_job._file_plan), decodes in ONE Python stage with the Bloom
-# probe inside the kernel — split documents included — and plans no
-# Exchange; a full decode keeps the repartitioned stitch.
+# A point or batch lookup runs on the driver (decode_job._lookup): it
+# opens only the files its footers admit, reads their candidate row
+# groups with pyarrow and runs no Spark job — split documents included;
+# a full decode keeps the repartitioned stitch.
 
 
 @pytest.fixture(scope="module")
@@ -187,43 +188,59 @@ def _files(paths) -> set[str]:
     return {decode_job._norm_path(p) for p in paths}
 
 
-def test_point_lookup_plan_one_scan_no_exchange(spark, split_table):
+def test_point_lookup_plan_one_scan_no_exchange(spark, split_table,
+                                                run_lookup, monkeypatch):
+    import pyarrow.parquet as pq
     df, root, big = split_table
     ids = sorted(r.doc_id for r in df.select("doc_id").collect())
     d = next(i for i in ids if i != big
              and not decode_job.lookup_report(root, [i])["stitch"])
     rep = decode_job.lookup_report(root, [d])
     assert 0 < rep["files_kept"] < rep["files_considered"], rep
-    out = decode_job.decode(spark, root, doc_id_min=d, doc_id_max=d)
-    rows, plan = _executed(out)
-    assert [r.doc_id for r in rows] == [d]
-    assert plan.count("FileScan") == 1, plan
-    assert f"InMemoryFileIndex({rep['files_kept']} paths)" in plan, plan
-    assert _files(out.inputFiles()) == _files(rep["paths"])
-    assert "Exchange" not in plan, plan
-    assert plan.count("MapInArrow") == 1, plan
-    assert "ArrowEvalPython" not in plan, plan
+    # the report's row groups and their compressed bytes, from footers
+    nbytes = 0
+    for p, rgs in zip(rep["paths"], rep["row_groups"]):
+        md = pq.ParquetFile(p).metadata
+        assert rgs and set(rgs) <= set(range(md.num_row_groups))
+        nbytes += sum(md.row_group(i).column(j).total_compressed_size
+                      for i in rgs for j in range(md.num_columns))
+    assert rep["row_groups_kept"] == sum(map(len, rep["row_groups"]))
+    assert rep["bytes_kept"] == nbytes > 0
+    read = []
+    real = pq.ParquetFile.read_row_group
+
+    def spy(pf, i, **kw):
+        read.append(i)
+        return real(pf, i, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", spy)
+    rows, jobs, opened = run_lookup(root, doc_id_min=d, doc_id_max=d)
+    assert jobs == []
+    assert sorted(opened) == sorted(rep["paths"])
+    assert len(read) == rep["row_groups_kept"]
+    want = df.filter(F.col("doc_id") == d).first()
+    assert [(r.doc_id, r.n_tok, r.tokens) for r in rows] \
+        == [(d, want.n_tok, want.tokens)]
 
 
-def test_split_lookup_plan_no_exchange(spark, split_table):
+def test_split_lookup_plan_no_exchange(spark, split_table, run_lookup):
     df, root, big = split_table
-    assert decode_job.lookup_report(root, [big])["stitch"]
-    out = decode_job.decode(spark, root, doc_id_min=big, doc_id_max=big)
-    rows, plan = _executed(out)
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan, plan
-    # whole chunks and split parts decode in the same single stage
-    assert plan.count("FileScan") == 1, plan
-    assert plan.count("MapInArrow") == 1, plan
+    rep = decode_job.lookup_report(root, [big])
+    assert rep["stitch"]
+    rows, jobs, opened = run_lookup(root, doc_id_min=big, doc_id_max=big)
+    assert jobs == []
+    assert sorted(opened) == sorted(rep["paths"])
     want = df.filter(F.col("doc_id") == big).first()
     assert len(rows) == 1 and rows[0].n_tok == want.n_tok
     assert rows[0].tokens == want.tokens  # bit-identical reassembly
-    # the batch lookup shares the plan shape
-    out = decode_job.decode(spark, root, doc_ids=[big, rows[0].doc_id + "x"],
-                            packed=True)
-    rows, plan = _executed(out)
-    assert "Exchange" not in plan, plan
+    # the batch lookup, packed, runs no job either
+    ids = [big, big + "x"]
+    rows, jobs, opened = run_lookup(root, doc_ids=ids, packed=True)
+    assert jobs == []
+    assert sorted(opened) == sorted(decode_job.lookup_report(root, ids)
+                                    ["paths"])
     assert [r.doc_id for r in rows] == [big]
+    assert rows[0].tokens == np.asarray(want.tokens, np.int32).tobytes()
 
 
 def test_full_decode_keeps_repartitioned_stitch(spark, split_table):

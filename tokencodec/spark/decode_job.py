@@ -32,16 +32,21 @@ double-exceptAll diff runs only when the signatures disagree
 
 Lookups and range scans are narrowed on the driver before any job:
 `_file_plan` reads each committed data file's parquet footer row-group
-statistics (salt, doc-id and n_tok bounds, max doc_parts; cached by
-path) and the scan lists only candidate files — unknown stats and
-classic-write run directories always stay candidates. A point or batch
-lookup then plans one FileScan -> Filter (chunk range + salt) ->
-MapInArrow (in-kernel Bloom probe, then page decode) — no Exchange.
-Split documents are planned for only when a candidate row group may
-hold split parts: a lookup then adds coalesce(1) + a sort and stitches
-in the same MapInArrow; scans add a stitch branch co-located by
-repartition("sgrp"). `lookup_report` exposes the file decision
-without running a job.
+statistics (salt, doc-id and n_tok bounds, max doc_parts, compressed
+size; cached by path) and keeps only candidate files and row groups —
+unknown stats and classic-write run directories always stay
+candidates. A range scan lists the kept files in its FileScan and
+stitches split documents in a branch co-located by repartition("sgrp").
+A point or batch lookup runs no Spark job at all (`_lookup`): the
+driver reads the kept row groups with pyarrow (every row group of a
+kept run directory), one at a time, keeps the chunks whose doc-id range
+and salt admit a target, decodes them with the same kernels the tasks
+run (Bloom probe, page decode, split-part stitch), masks pending
+deletes by each file's commit seq and returns a local DataFrame. It
+holds one row group, the candidate chunks and the decoded hits at a
+time, and reads `lookup_report`'s ``bytes_kept`` from storage; the root
+must be one pyarrow can address. `lookup_report` exposes the file and
+row group decision without running a job.
 """
 
 from __future__ import annotations
@@ -442,12 +447,11 @@ def make_stitch_batches(packed: bool, cols: list[str], extras: tuple = (),
 
 
 def _lookup_batches(decode_fn, stitch_fn, targets: list[str]):
-    """mapInArrow kernel of a lookup that may touch split documents: ONE
-    partition sorted (sgrp, doc_part), whole chunks (``_split`` false)
-    decoded as they stream through ``decode_fn`` (which probes the
-    Bloom filters itself), split parts kept in order, Bloom-probed and
-    stitched at the end by ``stitch_fn`` — one Python stage instead of
-    a decode branch plus a stitch branch over the same files."""
+    """The decode of a lookup's chunk rows (_lookup), sorted (sgrp,
+    doc_part): whole chunks (``_split`` false) decoded as they stream
+    through ``decode_fn`` (which probes the Bloom filters itself),
+    split parts kept in order, Bloom-probed and stitched at the end by
+    ``stitch_fn``."""
     def run(it):
         parts = []
         for batch in it:
@@ -460,11 +464,15 @@ def _lookup_batches(decode_fn, stitch_fn, targets: list[str]):
     return run
 
 
-def _out_ddl(cols: list[str], packed: bool, extras: tuple = ()) -> str:
-    types = {"doc_id": "string", "n_tok": "int", "source": "string",
-             "tokens": "binary" if packed else "array<int>"}
-    return ", ".join([f"{c} {types[c]}" for c in cols]
-                     + [f"{n} {t}" for n, t in extras])
+def _out_schema(cols: list[str], packed: bool, extras: tuple,
+                with_seq: bool = False) -> pa.Schema:
+    """The Arrow schema of the decode kernels' output."""
+    types = {"doc_id": pa.string(), "n_tok": pa.int32(),
+             "source": pa.string(),
+             "tokens": pa.binary() if packed else pa.list_(pa.int32())}
+    return pa.schema([(c, types[c]) for c in cols]
+                     + [(n, _EXTRA_PA[t]) for n, t in extras]
+                     + ([("data_seq", pa.int64())] if with_seq else []))
 
 
 def _target_snapshot(tbl: SnapshotTable, snapshot_id: int | None,
@@ -687,9 +695,10 @@ _FOOTER_CACHE_MAX = 4096
 
 def _footer_bounds(path: str) -> list[dict] | None:
     """Per-row-group ``{column: (min, max)}`` over _FOOTER_COLS for one
-    committed data file. A column without statistics, or holding any
-    NULL, is left out (unknown). None = the whole file is unknown: a
-    run directory from a classic JVM write, or an unreadable footer."""
+    committed data file, plus ``bytes``: the row group's compressed
+    size. A column without statistics, or holding any NULL, is left out
+    (unknown). None = the whole file is unknown: a run directory from a
+    classic JVM write, or an unreadable footer."""
     if not path.endswith(".parquet"):
         return None
     cached = _FOOTER_CACHE.get(path)
@@ -705,7 +714,8 @@ def _footer_bounds(path: str) -> list[dict] | None:
     out = []
     for i in range(md.num_row_groups):
         rg = md.row_group(i)
-        b = {}
+        b = {"bytes": sum(rg.column(j).total_compressed_size
+                          for j in range(md.num_columns))}
         for c in _FOOTER_COLS:
             st = rg.column(idx[c]).statistics if c in idx else None
             if (st is not None and st.has_min_max and st.has_null_count
@@ -774,6 +784,11 @@ def _file_plan(root: str, snap: dict, paths: list[str],
       footer narrowing, ``paths`` the kept files. Narrowing runs only
       for lookups (``targets``) and doc-id / n_tok range filters;
       other decodes keep every file.
+    - ``row_groups``: per kept path, the indices of its kept row
+      groups, None when unknown (a run directory, a file without
+      footer stats, or no narrowing) — the whole path is then read.
+      ``row_groups_kept`` / ``bytes_kept`` total them and their
+      compressed sizes; None when any kept path is unknown.
     - ``salts``: the salts ``targets`` hash to under the table's
       salt_mod scheme, None when the scheme derives none.
     - ``stitch``: whether split documents may be read, so the stitch
@@ -792,25 +807,31 @@ def _file_plan(root: str, snap: dict, paths: list[str],
     max_parts = _max_doc_parts_from_manifest(root, None, branch=branch,
                                              snap=snap)
     stitch = None if max_parts is None else max_parts > 1
-    kept = paths
+    kept, rgs, nbytes = paths, [None] * len(paths), 0
     if targets is not None or any(v is not None for v in (
             doc_id_min, doc_id_max, n_tok_min, n_tok_max)):
         pairs = (None if targets is None else
                  list(zip(targets, salts or [None] * len(targets))))
-        kept, may_split = [], False
+        kept, rgs, may_split = [], [], False
         for p in paths:
             bounds = _footer_bounds(p)
             hit = (None if bounds is None else
-                   [b for b in bounds if _rg_may_match(
+                   [i for i, b in enumerate(bounds) if _rg_may_match(
                        b, pairs, doc_id_min, doc_id_max, n_tok_min,
                        n_tok_max)])
             if hit is None or hit:
                 kept.append(p)
+                rgs.append(hit)
                 may_split = may_split or hit is None or any(
-                    _rg_may_split(b) for b in hit)
+                    _rg_may_split(bounds[i]) for i in hit)
+                nbytes += sum(bounds[i]["bytes"] for i in hit or ())
         stitch = may_split and stitch is not False
+    known = None not in rgs
     return {"files_considered": len(paths), "files_kept": len(kept),
-            "paths": kept, "salts": sorted(set(salts)) if salts else None,
+            "paths": kept, "row_groups": rgs,
+            "row_groups_kept": sum(map(len, rgs)) if known else None,
+            "bytes_kept": nbytes if known else None,
+            "salts": sorted(set(salts)) if salts else None,
             "stitch": stitch}
 
 
@@ -837,11 +858,13 @@ def lookup_report(root: str, doc_ids: list[str] | None = None,
                   n_tok_max: int | None = None) -> dict:
     """What ``decode`` with the same ``doc_ids`` / doc-id range / n_tok
     range will read, without running a job: files considered, files
-    kept (and their paths), the target salts, and whether the stitch
-    branch is planned. A point lookup of ``d`` reads what
-    ``lookup_report(root, [d])`` reports; a range scan reads what
-    ``lookup_report(root, doc_id_min=..., n_tok_min=...)`` reports.
-    Computed by the same function decode plans with (_file_plan)."""
+    kept (and their paths), the kept row groups per path with their
+    count and compressed bytes, the target salts, and whether split
+    parts may be read. A point lookup of ``d`` reads on the driver
+    exactly the row groups ``lookup_report(root, [d])`` reports; a
+    range scan reads the files ``lookup_report(root, doc_id_min=...,
+    n_tok_min=...)`` reports. Computed by the same function decode
+    plans with (_file_plan)."""
     targets = _lookup_targets(doc_ids, doc_id_min, doc_id_max)
     tbl = SnapshotTable(root, branch=branch)
     snap = _target_snapshot(tbl, snapshot_id)
@@ -851,6 +874,151 @@ def lookup_report(root: str, doc_ids: list[str] | None = None,
                       targets=targets, doc_id_min=doc_id_min,
                       doc_id_max=doc_id_max, n_tok_min=n_tok_min,
                       n_tok_max=n_tok_max)
+
+
+# chunk metadata a lookup reads next to the page columns: the inputs of
+# its chunk masks, Bloom probe and split-part order
+_LOOKUP_META = ("salt", "doc_id_min", "doc_id_max", "doc_part", "doc_parts",
+                "split_uid", "doc_bloom")
+
+
+def _read_chunks(path: str, row_groups: list[int] | None,
+                 columns: list[str]) -> Iterator[pa.Table]:
+    """``columns`` of the chunk rows under one committed path, read
+    with pyarrow one row group at a time: the listed ``row_groups`` of
+    a data file, or all of it (None), or every file of a run directory.
+    A column a file predates reads as NULL, as under read_pages'
+    explicit schema."""
+    from tokencodec.spark.encode_job import (_PAGES_TYPES, _list_parquet,
+                                             _open_parquet)
+    for f in [path] if path.endswith(".parquet") else _list_parquet(path):
+        with _open_parquet(f) as pf:
+            have = [c for c in columns if c in pf.schema_arrow.names]
+            for i in (range(pf.num_row_groups) if row_groups is None
+                      else row_groups):
+                t = pf.read_row_group(i, columns=have)
+                yield pa.table([t[c].cast(_PAGES_TYPES[c]) if c in have
+                                else pa.nulls(t.num_rows, _PAGES_TYPES[c])
+                                for c in columns], names=columns)
+
+
+def _lookup(spark: SparkSession, root: str, tbl: SnapshotTable, snap: dict,
+            paths: list[str] | None, targets: list[str], req: list[str],
+            cols: list[str], extras: tuple, packed: bool, branch: str | None,
+            buckets: list[int] | None, sources: list[str] | None,
+            n_tok_min: int | None, n_tok_max: int | None) -> DataFrame:
+    """A point or batch lookup, run on the driver with no Spark job.
+    The row groups _file_plan keeps are read with pyarrow, masked to
+    chunks whose doc-id range covers a target and whose salt is a
+    target's (NULL stats = keep), sorted (sgrp, doc_part) and decoded
+    by the task kernels (_lookup_batches: Bloom probe and page decode,
+    split parts stitched). Pending deletes mask rows by each file's
+    commit seq — the seq of the committed path it was listed under —
+    and rows are re-filtered exactly (ids, sources, n_tok range).
+    Decodes ``cols`` and the extras; returns a local DataFrame of the
+    ``req`` columns."""
+    import pyarrow.compute as pc
+
+    from tokencodec.spark.maintenance import (_Deletes, _pending_deletes,
+                                              _read_ids_pyarrow)
+    from tokencodec.spark.table import is_delete_group
+
+    schema = _out_schema(cols, packed, extras)
+
+    def result(rows: pa.Table | None = None) -> DataFrame:
+        # a local relation: collect() runs no job. An empty result
+        # converts from one empty chunk, never from zero chunks
+        if rows is None or not rows.num_rows:
+            rows = schema.empty_table()
+        return spark.createDataFrame(rows.select(req))
+
+    if not targets:
+        return result()
+    grp_map = tbl.resolve_groups(snap)
+    # explicit-paths reads are scoped by their caller: no deletes
+    del_groups = {} if paths is not None else {
+        k: ps for k, ps in grp_map.items() if is_delete_group(k) and ps}
+    ids, path_seqs = (_pending_deletes(tbl, snap, grp_map, del_groups,
+                                       _read_ids_pyarrow)
+                      if del_groups else (None, None))
+    seq_aware = path_seqs is not None
+    plan = _file_plan(root, snap, _data_paths(tbl, snap) if paths is None
+                      else list(paths), branch=branch, targets=targets,
+                      n_tok_min=n_tok_min, n_tok_max=n_tok_max)
+    fn, page_cols = make_decode_batches(packed, cols, extras,
+                                        with_seq=seq_aware, targets=targets)
+    sfn, spage_cols = make_stitch_batches(packed, cols, extras,
+                                          with_seq=seq_aware)
+    read = sorted({*page_cols, *spage_cols, *_LOOKUP_META,
+                   *(["bucket"] if buckets is not None else [])}
+                  - {"data_seq"})
+    salts = (None if plan["salts"] is None
+             else pa.array(plan["salts"], pa.int32()))
+    tgt = np.array(targets, dtype=object)
+
+    def candidates(t: pa.Table) -> pa.Table:
+        """The chunks of ``t`` whose doc-id range covers a target — the
+        first target >= doc_id_min (targets are sorted) is also <=
+        doc_id_max — and whose salt is a target's; NULL stats = keep."""
+        lo, hi = t["doc_id_min"], t["doc_id_max"]
+        lo_s = pc.fill_null(lo, "").to_numpy(zero_copy_only=False)
+        hi_s = pc.fill_null(hi, "").to_numpy(zero_copy_only=False)
+        first = tgt[np.minimum(np.searchsorted(tgt, lo_s), len(tgt) - 1)]
+        keep = pc.or_(pa.array((lo_s <= first) & (first <= hi_s),
+                               pa.bool_()),
+                      pc.or_(pc.is_null(lo), pc.is_null(hi)))
+        if salts is not None:
+            # a doc's salt is crc32(doc_id) % n_salts under the table's
+            # one salt_mod scheme, and split parts and compaction
+            # rewrites keep it: a lookup reads only its targets' salts
+            # of n_salts (65536 at design scale), which hash-spread
+            # doc-id ranges alone barely narrow
+            keep = pc.and_(keep, pc.or_(
+                pc.is_in(t["salt"], value_set=salts), pc.is_null(t["salt"])))
+        if buckets is not None:
+            keep = pc.and_(keep, pc.is_in(
+                t["bucket"], value_set=pa.array(buckets, pa.int32())))
+        return t.filter(keep)
+
+    # one row group in memory at a time: only its candidate chunks stay
+    tables = []
+    for p, rgs in zip(plan["paths"], plan["row_groups"]):
+        for t in _read_chunks(p, rgs, read):
+            t = candidates(t)
+            if seq_aware:
+                seq = path_seqs.get(_norm_path(p), _ANCIENT_SEQ)
+                t = t.append_column("data_seq", pa.array(
+                    np.full(t.num_rows, seq, dtype=np.int64)))
+            tables.append(t)
+    if not tables:
+        return result()
+    chunks = pa.concat_tables(tables)
+    chunks = (chunks
+              .append_column("sgrp", pc.coalesce(chunks["split_uid"],
+                                                 chunks["doc_id_min"]))
+              .append_column("_split", pc.greater(
+                  pc.fill_null(chunks["doc_parts"], 1), 1))
+              .sort_by([("sgrp", "ascending"), ("doc_part", "ascending")]))
+    out = list(_lookup_batches(fn, sfn, targets)(chunks.to_batches()))
+    if not out:
+        return result()
+    rows = pa.Table.from_batches(out)
+
+    if ids:
+        docs = rows["doc_id"].to_pylist()
+        seqs = (rows["data_seq"].to_pylist() if seq_aware
+                else [_ANCIENT_SEQ] * len(docs))
+        rows = rows.filter(pa.array(
+            ~np.array(_Deletes(ids).dead(docs, seqs), dtype=bool)))
+    keep = pc.is_in(rows["doc_id"], value_set=pa.array(targets, pa.string()))
+    if sources is not None:
+        keep = pc.and_(keep, pc.is_in(
+            rows["source"], value_set=pa.array(sources, pa.string())))
+    if n_tok_min is not None:
+        keep = pc.and_(keep, pc.greater_equal(rows["n_tok"], n_tok_min))
+    if n_tok_max is not None:
+        keep = pc.and_(keep, pc.less_equal(rows["n_tok"], n_tok_max))
+    return result(rows.filter(keep))
 
 
 def decode(spark: SparkSession, root: str,
@@ -885,14 +1053,18 @@ def decode(spark: SparkSession, root: str,
     sample fetch): chunks are pruned by id-range overlap, the union of
     the targets' derived salts, and any-of Bloom membership, then rows
     re-filtered to the exact set. Takedown-sized lists by contract
-    (the same bound as delete sets — the list is broadcast in the plan
-    and hashed once per chunk batch); mutually exclusive with
-    doc_id_min/max.
+    (the same bound as delete sets); mutually exclusive with
+    doc_id_min/max. A lookup (``doc_ids``, or doc_id_min == doc_id_max)
+    runs on the driver and returns a local DataFrame: no Spark job
+    (_lookup). Its root must be one pyarrow can address.
     """
     from pyspark.sql import functions as F
 
     # lookup targets: an exact point lookup is the one-id batch lookup
     targets = _lookup_targets(doc_ids, doc_id_min, doc_id_max)
+    if targets is not None:
+        from tokencodec.spark.encode_job import require_direct_write
+        require_direct_write(root, "a lookup")
 
     # the target snapshot is resolved ONCE; every manifest helper below
     # reads it from here. Time travel by name: a tag
@@ -929,6 +1101,11 @@ def decode(spark: SparkSession, root: str,
         cols = cols + ["source"]
     if (n_tok_min is not None or n_tok_max is not None) and "n_tok" not in cols:
         cols = cols + ["n_tok"]
+    if targets is not None:
+        return _lookup(
+            spark, root, tbl, snap, paths, targets, req,
+            cols if "doc_id" in cols else ["doc_id"] + cols, extras, packed,
+            branch, buckets, sources, n_tok_min, n_tok_max)
     # row-level deletes (equality-delete manifests): applied as a
     # broadcast anti-join on doc_id after decode — sequence-aware when
     # attribution exists (a delete masks only rows committed strictly
@@ -942,8 +1119,7 @@ def decode(spark: SparkSession, root: str,
     dels = del_plan["dels"] if del_plan is not None else None
     seq_aware = del_plan is not None and del_plan["path_seqs"] is not None
     needs_doc = (doc_id_min is not None or doc_id_max is not None
-                 or doc_ids is not None or dels is not None
-                 or "tokens" in cols or "n_tok" in cols)
+                 or dels is not None or "tokens" in cols or "n_tok" in cols)
     if needs_doc and "doc_id" not in cols:
         cols = ["doc_id"] + cols
 
@@ -951,7 +1127,7 @@ def decode(spark: SparkSession, root: str,
     # and parquet footers (_file_plan — also what lookup_report shows):
     # the scan lists only candidate files
     plan = _file_plan(root, snap, _data_paths(tbl, snap) if paths is None
-                      else list(paths), branch=branch, targets=targets,
+                      else list(paths), branch=branch,
                       doc_id_min=doc_id_min, doc_id_max=doc_id_max,
                       n_tok_min=n_tok_min, n_tok_max=n_tok_max)
     pages = read_pages(spark, root, paths=plan["paths"])
@@ -967,28 +1143,6 @@ def decode(spark: SparkSession, root: str,
         keep.append(F.col("doc_id_max") >= doc_id_min)
     if doc_id_max is not None:
         keep.append(F.col("doc_id_min") <= doc_id_max)
-    if doc_ids is not None and targets:
-        # a chunk survives only if its id range covers AT LEAST ONE
-        # target (exists over the literal array — JVM-side; the list is
-        # takedown-sized by contract). NULL stats = keep.
-        ids_arr = F.array(*[F.lit(d) for d in targets])
-        keep.append(
-            F.col("doc_id_min").isNull() | F.col("doc_id_max").isNull()
-            | F.exists(ids_arr, lambda d: (F.col("doc_id_min") <= d)
-                       & (F.col("doc_id_max") >= d)))
-    if plan["salts"] is not None:
-        # under the (single, enforced) salt_mod scheme a doc's salt is
-        # crc32(doc_id) % n_salts — a pure function of the id — so a
-        # lookup prunes to the targets' salts out of n_salts (65536 at
-        # design scale) on top of the min/max range skipping, which
-        # hash-bucketed layouts barely narrow. All split parts of a doc
-        # share its salt (partition.bucketed), and compaction/purge
-        # kernels preserve the salt column. NULL salt = unknown = keep.
-        keep.append(F.col("salt").isin(plan["salts"])
-                    | F.col("salt").isNull())
-    # (the remaining lookup pruning — per-chunk Bloom membership, which
-    # alone distinguishes the chunks of one salt — runs inside the
-    # decode kernels: make_decode_batches / _lookup_batches)
     if buckets is not None:
         keep.append(F.col("bucket").isin(buckets))
     if sources is not None:
@@ -1043,33 +1197,19 @@ def decode(spark: SparkSession, root: str,
     # column pruning down to the PAGE level: only requested columns'
     # binary pages cross the Arrow boundary
     fn, page_cols = make_decode_batches(packed, cols, extras,
-                                        with_seq=seq_aware, targets=targets)
-    out_ddl = _out_ddl(cols, packed, extras)
-    seq_ddl = ", data_seq bigint" if seq_aware else ""
+                                        with_seq=seq_aware)
+    from pyspark.sql.pandas.types import from_arrow_schema
+    out_type = from_arrow_schema(_out_schema(cols, packed, extras, seq_aware))
     if not any_split:
-        out = pages.select(page_cols).mapInArrow(fn, out_ddl + seq_ddl)
+        out = pages.select(page_cols).mapInArrow(fn, out_type)
     elif "tokens" not in cols and "n_tok" not in cols:
         # split parts duplicate (doc_id, source); part 0 is the identity
         # — pruned BEFORE decode, so parts 1..P-1 never even decode
         out = (pages.filter(F.coalesce(F.col("doc_part"), F.lit(0)) == 0)
-               .select(page_cols).mapInArrow(fn, out_ddl + seq_ddl))
-    elif targets is not None:
-        # a lookup whose candidate row groups may hold split parts: the
-        # parts of one document meet in ONE task without an Exchange —
-        # lookups are takedown-sized by contract — and whole chunks
-        # decode in the same Python stage (_lookup_batches)
-        sfn, spage_cols = make_stitch_batches(packed, cols, extras,
-                                              with_seq=seq_aware)
-        out = (pages.withColumn("sgrp", sgrp).withColumn("_split", n_parts > 1)
-               .select(sorted(set(page_cols) | set(spage_cols))
-                       + ["sgrp", "doc_part", "_split"])
-               .coalesce(1)
-               .sortWithinPartitions("sgrp", "doc_part")
-               .mapInArrow(_lookup_batches(fn, sfn, targets),
-                           out_ddl + seq_ddl))
+               .select(page_cols).mapInArrow(fn, out_type))
     else:
         whole = (pages.filter(n_parts == 1).select(page_cols)
-                 .mapInArrow(fn, out_ddl + seq_ddl))
+                 .mapInArrow(fn, out_type))
         # oversized documents were split across chunks at encode time
         # (skew handling); co-locate their ENCODED part pages on the
         # encode-time split uid (NOT doc_id: a duplicate doc_id encoded
@@ -1085,7 +1225,7 @@ def decode(spark: SparkSession, root: str,
                     .select(spage_cols + ["sgrp", "doc_part"])
                     .repartition("sgrp")
                     .sortWithinPartitions("sgrp", "doc_part")
-                    .mapInArrow(sfn, out_ddl + seq_ddl))
+                    .mapInArrow(sfn, out_type))
         out = whole.unionByName(stitched)
     if dels is not None:
         # takedown-sized sets by contract (maintenance.delete_docs):
@@ -1107,8 +1247,6 @@ def decode(spark: SparkSession, root: str,
         out = out.filter(F.col("doc_id") >= doc_id_min)
     if doc_id_max is not None:
         out = out.filter(F.col("doc_id") <= doc_id_max)
-    if doc_ids is not None:
-        out = out.filter(F.col("doc_id").isin(targets))
     if sources is not None:
         out = out.filter(F.col("source").isin(sources))
     if n_tok_min is not None:

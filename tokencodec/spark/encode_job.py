@@ -522,16 +522,17 @@ _PYARROW_SPELLING = {"s3a": "s3", "s3n": "s3"}
 
 
 def require_direct_write(root: str, what: str) -> None:
-    """Refuse a root pyarrow cannot address, for operations whose tasks
-    write their own files, naming the pyarrow spelling of the root."""
+    """Refuse a root pyarrow cannot address, for operations that read or
+    write the table's files with pyarrow (on the driver or in the
+    tasks), naming the pyarrow spelling of the root."""
     if direct_write_supported(root):
         return
     scheme, _, rest = root.partition("://")
     alt = _PYARROW_SPELLING.get(scheme.lower())
     hint = (f"; spell it {alt}://{rest}" if alt else
             "; use a scheme pyarrow.fs.FileSystem.from_uri resolves")
-    raise ValueError(f"{what} writes its files from the tasks with pyarrow, "
-                     f"which cannot address {root}{hint}")
+    raise ValueError(f"{what} reads or writes the table's files with "
+                     f"pyarrow, which cannot address {root}{hint}")
 
 
 # one summary row per (task, commit group) written file — small enough

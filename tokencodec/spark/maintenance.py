@@ -75,9 +75,12 @@ class _Deletes:
         i = bisect.bisect_left(self.sorted, lo)
         return i < len(self.sorted) and self.sorted[i] <= hi
 
-    def dead(self, docs: list[str], data_seq: int) -> list[bool]:
+    def dead(self, docs: list[str], seqs: list[int]) -> list[bool]:
+        """Which of ``docs`` die, each read from a chunk of data seq
+        ``seqs[i]``."""
         if self.by_seq:
-            return [d in self.ids and self.ids[d] > data_seq for d in docs]
+            return [d in self.ids and self.ids[d] > s
+                    for d, s in zip(docs, seqs)]
         return [d in self.ids for d in docs]
 
 
@@ -100,7 +103,7 @@ def _mask_chunk(dels: _Deletes, batch: pa.RecordBatch, r: int, pages: dict,
     if not dels.may_hit(col("doc_id_min"), col("doc_id_max")):
         return 0, None
     docs = _string_array(pages["page_doc_id"]).to_pylist()
-    dead = np.array(dels.dead(docs, data_seq), dtype=bool)
+    dead = np.array(dels.dead(docs, [data_seq] * len(docs)), dtype=bool)
     n_dead = int(dead.sum())
     if n_dead in (0, len(docs)):
         return n_dead, None
