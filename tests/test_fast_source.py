@@ -1,6 +1,10 @@
 """The file-split/binary-blob fast source must produce a byte-identical
 encoded table to the generic DataFrame path on the same data."""
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from tokencodec.spark import decode_job, encode_job, synth
@@ -26,6 +30,33 @@ def test_fast_source_bit_identical_to_df_path(spark, tmp_path):
                       commit_groups=1, n_salts=n_salts, max_chunk_tokens=1 << 17)
     encode_job.encode_from_parquet(spark, src, root_b, commit_groups=1,
                                    n_salts=n_salts, max_chunk_tokens=1 << 17)
+    assert _fingerprint(spark, root_a) == _fingerprint(spark, root_b)
+
+
+@pytest.mark.parametrize("row_group_size", [
+    400,  # one file, 2 splits: fewer splits than cores
+    16,   # one file, 50 splits: more splits than source tasks
+])
+def test_fast_source_bit_identical_per_split_layout(spark, tmp_path,
+                                                   row_group_size):
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(pa.Table.from_batches([synth.generate_batch(
+        23, np.arange(800))]), str(src / "part-0.parquet"),
+        row_group_size=row_group_size)
+    src = str(src)
+    n_splits = len(encode_job.parquet_splits(src))
+    n_tasks = len(encode_job.assign_splits(
+        encode_job.parquet_splits(src, return_stats=True)[0],
+        spark.sparkContext.defaultParallelism))
+    assert (n_splits < spark.sparkContext.defaultParallelism
+            if row_group_size == 400 else n_splits > n_tasks)
+
+    root_a = str(tmp_path / "df_path")
+    root_b = str(tmp_path / "fast_path")
+    kw = dict(commit_groups=2, n_salts=4, max_chunk_tokens=1 << 17)
+    encode_job.encode(spark, spark.read.parquet(src), root_a, **kw)
+    encode_job.encode_from_parquet(spark, src, root_b, **kw)
     assert _fingerprint(spark, root_a) == _fingerprint(spark, root_b)
 
 

@@ -3,7 +3,8 @@ snapshot commits.
 
 Pipeline (SURVEY.md §3 "our engine's lifecycle"):
   source df -> add (bucket, salt) [no shuffle] -> hash repartition on
-  (bucket, salt) [the ONLY shuffle] -> sortWithinPartitions ->
+  (bucket, salt) [the one shuffle: encode_from_parquet's source is
+  range tasks with no Exchange] -> sortWithinPartitions ->
   mapInArrow vectorized encode [JVM->Python Arrow boundary] -> parquet
   write into a run dir -> snapshot commit [atomic manifest rename].
 
@@ -19,6 +20,7 @@ source — our analog of the reference's column chunks,
 
 from __future__ import annotations
 
+import heapq
 import json
 import os
 import posixpath
@@ -889,14 +891,15 @@ def _has_parquet(fs, d: str) -> bool:
 
 
 # --------------------------------------------------------------- fast source
-# File-split source: Spark distributes (file, row-group) splits; Python
-# workers read them with pyarrow's C++ parquet reader and ship tokens
-# across the JVM boundary as little-endian int32 BLOBS. Binary columns
-# cross Arrow boundaries as bulk buffer copies, whereas array<int32>
-# goes through Spark's per-element ArrowWriter — the dominant cost at
-# scale. Output is byte-identical to encode(df) on the same data: chunk
-# content depends only on the (bucket, salt, n_tok, doc_id) order,
-# never on split layout (tests/test_fast_source.py).
+# File-split source: the driver assigns (file, row-group) splits to a
+# whole number of waves of range tasks; Python workers read their splits
+# with pyarrow's C++ parquet reader and ship tokens across the JVM
+# boundary as little-endian int32 BLOBS. Binary columns cross Arrow
+# boundaries as bulk buffer copies, whereas array<int32> goes through
+# Spark's per-element ArrowWriter — the dominant cost at scale. Output
+# is byte-identical to encode(df) on the same data: chunk content
+# depends only on the (bucket, salt, n_tok, doc_id) order, never on
+# split layout (tests/test_fast_source.py).
 
 PACKED_DDL = "doc_id string, tokens binary, n_tok int, source string"
 
@@ -968,90 +971,139 @@ def _validated_urls(urls: list[str]) -> list[str]:
 def parquet_splits(src_dir,
                    return_stats: bool = False):
     """(file, row-group) splits; with return_stats also the total row
-    count and uncompressed byte size from the footers (one footer pass)."""
-    splits: list[tuple[str, int]] = []
+    count and uncompressed byte size from the footers (one footer pass),
+    and each split carries its row group's footer bytes as a third
+    field, the weight pack_source assigns tasks by."""
+    splits: list[tuple] = []
     n_rows = 0
-    n_bytes = 0
     for path in _list_parquet(src_dir):
-        md = _open_parquet(path).metadata
+        with _open_parquet(path) as pf:
+            md = pf.metadata
         n_rows += md.num_rows
         for rg in range(md.num_row_groups):
-            splits.append((path, rg))
-            n_bytes += md.row_group(rg).total_byte_size
+            splits.append((path, rg, md.row_group(rg).total_byte_size))
     if not splits:
         raise FileNotFoundError(f"no parquet files under {src_dir}")
-    return (splits, n_rows, n_bytes) if return_stats else splits
+    if return_stats:
+        return splits, n_rows, sum(s[2] for s in splits)
+    return [s[:2] for s in splits]
 
 
 def _read_and_pack(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Packed rows of the (path, rg) splits in each batch. Each file is
+    opened once per batch and its row groups are read in order."""
     max_blob = _MAX_BLOB_BYTES
     for batch in it:
-        paths = batch.column(0).to_pylist()
-        rgs = batch.column(1).to_pylist()
-        for path, rg in zip(paths, rgs):
-            tbl = _open_parquet(path).read_row_group(
-                rg, columns=["doc_id", "tokens", "n_tok", "source"])
-            tokens = tbl.column("tokens").combine_chunks()
-            t_off = tokens.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            rel = (t_off - t_off[0]) * 4
-            # a pyarrow-written row group can exceed 2^31 token bytes;
-            # slice on row boundaries so int32 blob offsets never wrap
-            lo = 0
-            n = len(tokens)
-            while lo < n:
-                hi = int(np.searchsorted(rel, rel[lo] + max_blob, side="right")) - 1
-                if hi <= lo:
-                    raise ValueError(
-                        f"single document with {int(rel[lo + 1] - rel[lo]) // 4} "
-                        "tokens exceeds the 2^31-byte binary transport limit")
-                hi = min(hi, n)
-                t_val = tokens.values.to_numpy(zero_copy_only=False)
-                base = t_off[lo]
-                blob_off = ((t_off[lo:hi + 1] - base) * 4).astype(np.int32)
-                blob_data = np.ascontiguousarray(
-                    t_val[base:t_off[hi]]).view(np.uint8)
-                blob = pa.Array.from_buffers(
-                    pa.binary(), hi - lo,
-                    [None, pa.py_buffer(blob_off), pa.py_buffer(blob_data)])
-                yield pa.RecordBatch.from_arrays(
-                    [tbl.column("doc_id").combine_chunks().slice(lo, hi - lo), blob,
-                     tbl.column("n_tok").combine_chunks().slice(lo, hi - lo),
-                     tbl.column("source").combine_chunks().slice(lo, hi - lo)],
-                    names=["doc_id", "tokens", "n_tok", "source"])
-                lo = hi
+        by_file: dict[str, list[int]] = {}
+        for path, rg in zip(batch.column(0).to_pylist(),
+                            batch.column(1).to_pylist()):
+            by_file.setdefault(path, []).append(rg)
+        for path, rgs in by_file.items():
+            with _open_parquet(path) as pf:
+                for rg in sorted(rgs):
+                    tbl = pf.read_row_group(
+                        rg, columns=["doc_id", "tokens", "n_tok", "source"])
+                    yield from _pack_row_group(tbl, max_blob)
+
+
+def _pack_row_group(tbl: pa.Table, max_blob: int) -> Iterator[pa.RecordBatch]:
+    tokens = tbl.column("tokens").combine_chunks()
+    t_off = tokens.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    rel = (t_off - t_off[0]) * 4
+    # a pyarrow-written row group can exceed 2^31 token bytes;
+    # slice on row boundaries so int32 blob offsets never wrap
+    lo = 0
+    n = len(tokens)
+    while lo < n:
+        hi = int(np.searchsorted(rel, rel[lo] + max_blob, side="right")) - 1
+        if hi <= lo:
+            raise ValueError(
+                f"single document with {int(rel[lo + 1] - rel[lo]) // 4} "
+                "tokens exceeds the 2^31-byte binary transport limit")
+        hi = min(hi, n)
+        t_val = tokens.values.to_numpy(zero_copy_only=False)
+        base = t_off[lo]
+        blob_off = ((t_off[lo:hi + 1] - base) * 4).astype(np.int32)
+        blob_data = np.ascontiguousarray(
+            t_val[base:t_off[hi]]).view(np.uint8)
+        blob = pa.Array.from_buffers(
+            pa.binary(), hi - lo,
+            [None, pa.py_buffer(blob_off), pa.py_buffer(blob_data)])
+        yield pa.RecordBatch.from_arrays(
+            [tbl.column("doc_id").combine_chunks().slice(lo, hi - lo), blob,
+             tbl.column("n_tok").combine_chunks().slice(lo, hi - lo),
+             tbl.column("source").combine_chunks().slice(lo, hi - lo)],
+            names=["doc_id", "tokens", "n_tok", "source"])
+        lo = hi
+
+
+# target footer-reported bytes per source and encode task: large enough
+# to amortize the per-task JVM->Python handoff (measured at
+# sf0.1/local[32]: 32 tasks = 1.5s vs 128 tasks = 2.1-5s, identical
+# output bytes), small enough that per-partition sorts never spill at
+# 100 TB (a fixed tasks-per-core multiplier would give 3 GB partitions
+# there). The footer's total_byte_size counts parquet-encoded (dict/RLE)
+# pages and undercounts decoded raw bytes ~2x on token data, so 16 MB
+# here means ~32-40 MB of raw tokens per task — and >1 wave of tasks
+# (straggler smoothing) as soon as the input outgrows cores * 16 MB.
+TARGET_TASK_BYTES = 16 << 20
+
+
+def assign_splits(splits: list[tuple], cores: int) -> list[list[tuple[str, int]]]:
+    """(path, rg) splits of each source task. The task count is a whole
+    number of waves of ``cores``, one task per TARGET_TASK_BYTES of
+    footer bytes, and never more than the splits. Splits go largest
+    first onto the least-loaded task (LPT), weighted by the footer
+    bytes a (path, rg, bytes) split carries; bare (path, rg) splits
+    weigh the same and size the task count to one wave."""
+    sized = all(len(s) == 3 for s in splits)
+    weights = [s[2] if sized else 1 for s in splits]
+    n_bytes = sum(weights) if sized else 0
+    waves = -(-max(cores, n_bytes // TARGET_TASK_BYTES) // cores)
+    k = min(len(splits), cores * waves)
+    tasks: list[list[tuple[str, int]]] = [[] for _ in range(k)]
+    load = [(0, t) for t in range(k)]
+    for i in sorted(range(len(splits)), key=lambda i: -weights[i]):
+        w, t = heapq.heappop(load)
+        tasks[t].append(splits[i][:2])
+        heapq.heappush(load, (w + weights[i], t))
+    return tasks
 
 
 def pack_source(spark: SparkSession, src_dir: "str | list[str]",
-                splits: list[tuple[str, int]] | None = None) -> DataFrame:
+                splits: list[tuple] | None = None) -> DataFrame:
     """Token table as (doc_id, tokens BINARY, n_tok, source) read by
     pyarrow inside workers — the fast transport for encode(). Reads any
-    pyarrow-resolvable source (local path or file://, s3://, ... URI)."""
+    pyarrow-resolvable source (local path or file://, s3://, ... URI).
+
+    The source is ``spark.range(0, k, 1, k)``: task t reads the splits
+    ``assign_splits`` gave it, carried in the pickled closure (O(splits)
+    bytes), so the plan has no Exchange of its own. ``splits`` default
+    to one footer pass over ``src_dir``."""
     if splits is None:
-        splits = parquet_splits(src_dir)
-    sdf = spark.createDataFrame(splits, "path string, rg int").repartition(len(splits))
-    return sdf.mapInArrow(_read_and_pack, PACKED_DDL)
+        splits, _, _ = parquet_splits(src_dir, return_stats=True)
+    batches = [pa.RecordBatch.from_arrays(
+        [pa.array([p for p, _ in t], pa.string()),
+         pa.array([rg for _, rg in t], pa.int32())], names=["path", "rg"])
+        for t in assign_splits(splits, spark.sparkContext.defaultParallelism)]
 
+    def read(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _read_and_pack(batches[t] for b in it
+                              for t in b.column(0).to_pylist())
 
-# target footer-reported bytes per encode task: large enough to amortize
-# the per-task JVM->Python handoff (measured at sf0.1/local[32]: 32
-# tasks = 1.5s vs 128 tasks = 2.1-5s, identical output bytes), small
-# enough that per-partition sorts never spill at 100 TB (a fixed
-# tasks-per-core multiplier would give 3 GB partitions there). The
-# footer's total_byte_size counts parquet-encoded (dict/RLE) pages and
-# undercounts decoded raw bytes ~2x on token data, so 16 MB here means
-# ~32-40 MB of raw tokens per task — and >1 wave of tasks (straggler
-# smoothing) as soon as the input outgrows cores * 16 MB.
-TARGET_TASK_BYTES = 16 << 20
+    k = len(batches)
+    return spark.range(0, k, 1, k).mapInArrow(read, PACKED_DDL)
 
 
 def encode_from_parquet(spark: SparkSession, src_dir: "str | list[str]",
                         out_root: str, **kw) -> DataFrame:
     """encode() over a parquet directory via the fast file-split source;
-    one footer pass discovers splits, the row count for salting, and the
-    byte size for task sizing. Defaults to the direct task-side write
-    (pages parquet never crosses the Arrow boundary back to the JVM):
-    measured at 149M tokens/local[32] it is ~13% faster warm with far
-    tighter walls (2.5-2.9 s vs 2.9-11.5 s) and byte-equal output."""
+    one footer pass discovers splits and their bytes (source task
+    assignment), the row count for salting, and the byte size for
+    shuffle sizing. Defaults to the direct task-side write (pages
+    parquet never crosses the Arrow boundary back to the JVM): measured
+    at 149M tokens/local[32] it is ~13% faster warm with far tighter
+    walls (2.5-2.9 s vs 2.9-11.5 s) and byte-equal output."""
     splits, n_rows, n_bytes = parquet_splits(src_dir, return_stats=True)
     kw.setdefault("n_salts", part.salts_for(n_rows))
     kw.setdefault("partitions", max(spark.sparkContext.defaultParallelism,
