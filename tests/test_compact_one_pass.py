@@ -256,3 +256,6 @@ def test_noop_compact_writes_nothing(spark, tmp_path):
 def test_compact_refuses_hadoop_only_root(spark):
     with pytest.raises(ValueError, match=r"s3://bucket/table"):
         maintenance.compact(spark, "s3a://bucket/table")
+    # purge_deletes runs compact's rewrite, and refuses the same way
+    with pytest.raises(ValueError, match=r"purge_deletes.*s3://bucket/table"):
+        maintenance.purge_deletes(spark, "s3a://bucket/table")

@@ -136,24 +136,56 @@ def test_epoch_shuffle_window_is_sharded(spark):
                         spec), f"under-partitioned Window: {spec}"
 
 
-def test_seq_aware_delete_plan_broadcasts(spark, tmp_path):
-    """Sequence-aware delete masking must stay broadcast-only: the
-    path->seq stamps and the (doc_id, del_seq) anti-join are broadcast
-    hash joins over chunk metadata / takedown-sized sets — no
-    sort-merge join, no extra shuffle of decoded rows — and the pages
-    scan still reads only the needed page columns."""
+def test_delete_masking_plan_has_no_join(spark, tmp_path):
+    """Pending deletes (an upsert and a delete) mask inside the decode
+    kernels: a full decode and a doc-id range scan plan no join and no
+    Exchange beyond the stitch branch's repartition("sgrp"), their scans
+    still read only the needed page columns, and decode() runs no Spark
+    job before the action."""
     from tokencodec.spark import maintenance
     root = str(tmp_path / "enc")
-    df = synth.token_table(spark, 200, seed=5)
-    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4)
-    maintenance.upsert_docs(
-        spark, root,
-        df.filter(F.col("doc_id") == "doc-000000000003"))
-    plan = _formatted(decode_job.decode(spark, root), spark)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan, plan[:3000]
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
-    assert "page_tokens" in read_schema
+    df = synth.token_table(spark, 200, seed=5).cache()
+    lens = sorted(r.n_tok for r in df.select("n_tok").collect())
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
+                      max_chunk_tokens=lens[-2], direct_write=True)
+    big = df.orderBy(F.desc("n_tok")).first().doc_id
+    ids = sorted(r.doc_id for r in df.select("doc_id").collect())
+    rep = (df.filter(F.col("doc_id") == ids[3])
+           .withColumn("tokens", F.reverse("tokens")))
+    maintenance.upsert_docs(spark, root, rep)
+    gone = [ids[5], big]
+    maintenance.delete_docs(spark, root, gone)
+    want = (df.filter(~F.col("doc_id").isin(gone + [ids[3]]))
+            .unionByName(rep))
+    sc = spark.sparkContext
+    for kw in ({}, {"doc_id_min": ids[0], "doc_id_max": ids[99]}):
+        group = f"plan-{len(kw)}"
+        sc.setJobGroup(group, "plan")
+        try:
+            out = decode_job.decode(spark, root, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], kw
+        plan = _formatted(out, spark)
+        assert "Join" not in plan, plan[:3000]
+        exchanges = re.findall(r"\(\d+\) (\w*Exchange\w*)\n.*\nArguments: (.*)",
+                               plan)
+        assert len(exchanges) <= 1, plan
+        # the table splits documents: a full decode plans the stitch
+        assert exchanges or kw, plan
+        assert all(name == "Exchange"
+                   and args.startswith("hashpartitioning(sgrp")
+                   for name, args in exchanges), exchanges
+        scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+        assert scans
+        for read_schema in scans:
+            assert "page_tokens" in read_schema
+            for unused in ("chunk_uid", "enc_bytes", "doc_bloom"):
+                assert unused not in read_schema, read_schema
+        lo, hi = kw.get("doc_id_min", ""), kw.get("doc_id_max", "~")
+        expect = want.filter(F.col("doc_id").between(lo, hi))
+        assert decode_job.audit(expect, out) == {
+            "missing": 0, "extra": 0, "ok": True}, kw
 
 
 # ------------------------------------------------- lookup plan shape

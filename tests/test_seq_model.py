@@ -2,7 +2,10 @@
 random program of append / delete / upsert / purge / compact / expire
 / resalt ops runs against BOTH the engine table and a plain
 {doc_id: tokens} reference model; after every op the decoded table
-must equal the model exactly (token streams included).
+must equal the model exactly (token streams included), and so must a
+doc-id range scan and a doc_id-only projection. Every reader masks
+deletes through the same kernels, so the model, not another decode,
+is the oracle.
 
 This is the adversarial interleaving coverage the per-feature tests
 cannot enumerate: re-adding deleted ids via append vs upsert, deleting
@@ -34,6 +37,28 @@ def _tokens(rng):
     return tuple(rng.randrange(0, 50000) for _ in range(rng.randrange(5, 30)))
 
 
+# the doc-id range scan each check compares (a range, not a point:
+# a point range is a driver-side lookup)
+RANGE = ("doc-000010", "doc-000029")
+
+
+def _check_model(spark, root, model: dict, where: str, branch=None):
+    """Full decode, doc-id range scan and doc_id projection of ``root``
+    (on ``branch``) against the ``model``: exact rows and tokens."""
+    ok = {"missing": 0, "extra": 0, "ok": True}
+    out = decode_job.decode(spark, root, branch=branch)
+    assert decode_job.audit(_df(spark, model), out) == ok, f"{where}: full"
+    lo, hi = RANGE
+    scan = decode_job.decode(spark, root, branch=branch,
+                             doc_id_min=lo, doc_id_max=hi)
+    in_range = {d: t for d, t in model.items() if lo <= d <= hi}
+    assert decode_job.audit(_df(spark, in_range), scan) == ok, \
+        f"{where}: range scan"
+    ids = decode_job.decode(spark, root, branch=branch, columns=["doc_id"])
+    assert sorted(r.doc_id for r in ids.collect()) == sorted(model), \
+        f"{where}: doc_id projection"
+
+
 @pytest.mark.parametrize("seed", [101, 202])
 def test_random_program_matches_reference_model(spark, tmp_path, seed):
     rng = random.Random(seed)
@@ -46,10 +71,7 @@ def test_random_program_matches_reference_model(spark, tmp_path, seed):
     ever_deleted: set = set()
 
     def check(step, op):
-        out = decode_job.decode(spark, root)
-        r = decode_job.audit(_df(spark, model), out)
-        assert r == {"missing": 0, "extra": 0, "ok": True}, \
-            f"seed {seed} step {step} after {op}: {r}"
+        _check_model(spark, root, model, f"seed {seed} step {step} after {op}")
 
     check(0, "init")
     for step in range(1, 13):
@@ -145,10 +167,8 @@ def test_random_branched_program_matches_dual_models(spark, tmp_path, seed):
 
     def check(step):
         for br, model in models.items():
-            out = decode_job.decode(spark, root, branch=br)
-            r = decode_job.audit(_df(spark, model), out)
-            assert r == {"missing": 0, "extra": 0, "ok": True}, \
-                f"seed {seed} step {step} side {br or 'main'}: {r}"
+            _check_model(spark, root, model,
+                         f"seed {seed} step {step} side {br or 'main'}", br)
 
     check("fork")
     for step in range(1, 11):
@@ -185,3 +205,49 @@ def test_random_branched_program_matches_dual_models(spark, tmp_path, seed):
         elif op == "purge":
             maintenance.purge_deletes(spark, root, branch=br)
         check(step)
+
+
+def test_run_directory_and_file_commits_mask_by_their_own_seq(spark,
+                                                              tmp_path):
+    """Upserts commit a classic run directory, encodes here commit
+    direct-written files: each masks by its own commit seq (a scan
+    matches a file exactly, else its run directory) through deletes,
+    revivals and a delete of an upserted replacement."""
+    from tokencodec.spark.table import SnapshotTable, is_delete_group
+    rng = random.Random(404)
+    root = str(tmp_path / "t")
+    ids = [f"doc-{i:06d}" for i in range(40)]
+    model = {d: _tokens(rng) for d in ids[:36]}
+    encode_job.encode(spark, _df(spark, model), root, commit_groups=1,
+                      n_salts=4, max_chunk_tokens=BUDGET, direct_write=True)
+
+    def step(where):
+        _check_model(spark, root, model, where)
+
+    a, b, c = ids[12], ids[20], ids[25]  # inside RANGE
+    maintenance.delete_docs(spark, root, [a, b])
+    del model[a], model[b]
+    step("delete")
+    ups = {b: _tokens(rng), c: _tokens(rng), ids[38]: _tokens(rng)}
+    maintenance.upsert_docs(spark, root, _df(spark, ups),
+                            max_chunk_tokens=BUDGET)
+    model.update(ups)
+    step("upsert")
+    add = {a: _tokens(rng)}
+    encode_job.encode(spark, _df(spark, add), root, commit_groups=1,
+                      group_prefix="rx", max_chunk_tokens=BUDGET,
+                      direct_write=True)
+    model.update(add)
+    step("append-revive")
+    maintenance.delete_docs(spark, root, [c])
+    del model[c]
+    step("delete-replacement")
+    ups = {c: _tokens(rng)}
+    maintenance.upsert_docs(spark, root, _df(spark, ups),
+                            max_chunk_tokens=BUDGET)
+    model.update(ups)
+    step("upsert-revive")
+    data = [p for k, ps in SnapshotTable(root).committed_groups().items()
+            if not is_delete_group(k) for p in ps]
+    assert any(p.endswith(".parquet") for p in data)
+    assert any(not p.endswith(".parquet") for p in data)

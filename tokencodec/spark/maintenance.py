@@ -22,7 +22,9 @@ only the files holding its salt). Split documents whose parts would
 shrink under the budget are reassembled and re-sliced before the
 shuffle. One replace-commit swaps the selected files for the written
 ones and empties the delete groups; decoded rows equal the
-pre-compaction decode (tests audit this).
+pre-compaction decode (tests audit this). ``purge_deletes`` runs the
+same rewrite over only the files that may hold a deleted id, with no
+merging.
 
 ``expire_snapshots`` drops manifests older than the last N snapshots
 and deletes run directories referenced ONLY by expired snapshots (the
@@ -32,7 +34,6 @@ never touched; time travel keeps working for the retained window.
 
 from __future__ import annotations
 
-import bisect
 import posixpath
 from collections.abc import Iterator
 
@@ -44,6 +45,14 @@ from pyspark.sql import functions as F
 
 from tokencodec import grouped, pageformat
 from tokencodec.spark import partition as part
+from tokencodec.spark.decode_job import (_Deletes, _binary_views,
+                                         _extra_array, _footer_bounds,
+                                         _max_doc_parts_from_manifest,
+                                         _norm_path, _pending_deletes,
+                                         _rg_may_split, _scheme_from_manifest,
+                                         _string_array, decode,
+                                         decode_extra_page, iter_page_rows,
+                                         spark_type_of_extra_page)
 from tokencodec.spark.encode_job import (_PAGES_TYPES, META_DDL, META_FIELDS,
                                          PAGES_DDL, _encode_chunk,
                                          _rows_to_batch,
@@ -57,44 +66,15 @@ _PAGE_COLS = ["page_tokens", "page_doc_id", "page_n_tok", "page_source"]
 _ROW_GROUP_BYTES = 128 << 20
 
 
-class _Deletes:
-    """Pending delete ids: a frozenset (legacy chains: every copy of a
-    listed id dies) or {doc_id: newest delete seq} (sequence-aware
-    chains: a copy dies only when its chunk's data seq is strictly
-    older, so upsert replacements survive)."""
-
-    def __init__(self, ids):
-        self.ids = ids
-        self.by_seq = isinstance(ids, dict)
-        self.sorted = sorted(d for d in ids if d is not None)
-
-    def may_hit(self, lo: str | None, hi: str | None) -> bool:
-        """May doc-id bounds [lo, hi] hold a deleted id? Unknown: yes."""
-        if lo is None or hi is None:
-            return True
-        i = bisect.bisect_left(self.sorted, lo)
-        return i < len(self.sorted) and self.sorted[i] <= hi
-
-    def dead(self, docs: list[str], seqs: list[int]) -> list[bool]:
-        """Which of ``docs`` die, each read from a chunk of data seq
-        ``seqs[i]``."""
-        if self.by_seq:
-            return [d in self.ids and self.ids[d] > s
-                    for d, s in zip(docs, seqs)]
-        return [d in self.ids for d in docs]
-
-
 def _mask_chunk(dels: _Deletes, batch: pa.RecordBatch, r: int, pages: dict,
-                data_seq: int, uid_prefix: str) -> tuple[int, dict | None]:
+                seq: int, uid_prefix: str) -> tuple[int, dict | None]:
     """Apply pending deletes to chunk row ``r`` of ``batch`` (``pages``:
-    its page views). Returns (docs deleted, new row): (0, None) keeps
+    its page views; ``seq``: its data seq). Returns (docs deleted, new row): (0, None) keeps
     the chunk as it is, (n, None) drops it (split parts are single-doc,
     so they die whole), else the survivors re-encoded — extras at their
     RECORDED kinds (decode_extra_page sees through DEFLATED/NULLABLE
     wraps; take() keeps NULL slots) — under a uid derived from the
     original (chunk_seq repeats across commit groups)."""
-    from tokencodec.spark.decode_job import (_string_array, decode_extra_page,
-                                             spark_type_of_extra_page)
     from tokencodec.spark.encode_job import encode_extra_page
 
     def col(name):
@@ -103,7 +83,7 @@ def _mask_chunk(dels: _Deletes, batch: pa.RecordBatch, r: int, pages: dict,
     if not dels.may_hit(col("doc_id_min"), col("doc_id_max")):
         return 0, None
     docs = _string_array(pages["page_doc_id"]).to_pylist()
-    dead = np.array(dels.dead(docs, [data_seq] * len(docs)), dtype=bool)
+    dead = dels.dead(docs, seq)
     n_dead = int(dead.sum())
     if n_dead in (0, len(docs)):
         return n_dead, None
@@ -182,7 +162,6 @@ def _merge_chunks(bucket: int, salt: int, gid: int, parts: list,
     chunks converge onto a later bigint). A column no part carries is
     omitted (a missing page IS all-null); mixed groups get a NULLABLE
     validity wrap."""
-    from tokencodec.spark.decode_job import _extra_array, _string_array
     from tokencodec.spark.encode_job import encode_extra_page
 
     doc_ids, sources, toks, ntoks = [], [], [], []
@@ -237,8 +216,6 @@ def _resplit_batches(uid_prefix: str, max_chunk_tokens: int,
     (all parts of a split group come from one commit)."""
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from tokencodec.spark.decode_job import _string_array, iter_page_rows
-
         cur = None  # (sgrp, bucket, salt)
         vals: list[np.ndarray] = []
         doc_id = source = extras = carried = None
@@ -299,16 +276,14 @@ def _resplit_batches(uid_prefix: str, max_chunk_tokens: int,
 
 def _compact_stream(it: Iterator[pa.RecordBatch], budget: int,
                     uid_prefix: str, extras: tuple, dels: _Deletes | None,
-                    path_seqs: dict | None, stats: dict) -> Iterator[pa.Table]:
+                    stats: dict) -> Iterator[pa.Table]:
     """Chunk rows sorted (salt, bucket, chunk_uid) -> pages tables of one
-    salt each. Per chunk, in order: pending deletes apply (_mask_chunk),
-    the survivor joins a merge group (_MergeGroups), groups of 2+ chunks
-    re-encode as one (_merge_chunks); every other chunk passes through
-    byte-identical. ``stats`` counts purged documents (a split doc once)
-    and merged chunks."""
-    from tokencodec.spark.decode_job import (_ANCIENT_SEQ, _binary_views,
-                                             _norm_path)
-
+    salt each. Per chunk, in order: pending deletes apply (_mask_chunk,
+    each chunk's seq from its ``_fp`` file path), the survivor joins a
+    merge group (_MergeGroups; a ``budget`` of 0 merges nothing), groups
+    of 2+ chunks re-encode as one (_merge_chunks); every other chunk
+    passes through byte-identical. ``stats`` counts purged documents (a
+    split doc once) and merged chunks."""
     schema = pa.schema(_PAGES_TYPES)
     groups = _MergeGroups(budget)
     kept: list[tuple[pa.RecordBatch, list[int]]] = []  # pass-through rows
@@ -316,15 +291,6 @@ def _compact_stream(it: Iterator[pa.RecordBatch], budget: int,
     buffered = 0
     group: list[tuple] = []  # the open merge group: (batch | None, row, pages)
     group_id = None
-    file_seqs: dict[str, int] = {}
-
-    def seq_of(fp: str) -> int:
-        # the chunk's file, else its run directory (classic commits)
-        if fp not in file_seqs:
-            p = _norm_path(fp)
-            file_seqs[fp] = path_seqs.get(
-                p, path_seqs.get(p.rsplit("/", 1)[0], _ANCIENT_SEQ))
-        return file_seqs[fp]
 
     def emit(batch, r, pages):
         nonlocal buffered
@@ -370,7 +336,7 @@ def _compact_stream(it: Iterator[pa.RecordBatch], budget: int,
         views = {c: _binary_views(batch.column(c)) for c in _PAGE_COLS}
         cols = {c: batch.column(c).to_pylist() for c in
                 ("bucket", "salt", "n_tokens", "doc_part", "doc_parts")}
-        fps = batch.column("_fp").to_pylist() if path_seqs is not None else None
+        fps = batch.column("_fp").to_pylist() if dels is not None else None
         for r in range(batch.num_rows):
             k = (cols["bucket"][r], cols["salt"][r])
             if k != key:
@@ -385,10 +351,8 @@ def _compact_stream(it: Iterator[pa.RecordBatch], budget: int,
             item = (batch, r, pages)
             n_tok, parts = cols["n_tokens"][r], cols["doc_parts"][r]
             if dels is not None:
-                n_dead, row = _mask_chunk(
-                    dels, batch, r, pages,
-                    _ANCIENT_SEQ if fps is None else seq_of(fps[r]),
-                    uid_prefix)
+                n_dead, row = _mask_chunk(dels, batch, r, pages,
+                                          dels.seq_of(fps[r]), uid_prefix)
                 if n_dead and (parts == 1 or cols["doc_part"][r] == 0):
                     stats["n_purged_rows"] += n_dead
                 if row is not None:
@@ -416,8 +380,7 @@ _COMPACT_DDL = META_DDL + ", n_purged_rows bigint, n_merged_chunks bigint"
 
 
 def _compact_batches(run_dir: str, parquet_codec: str, budget: int,
-                     uid_prefix: str, extras: tuple, dels: _Deletes | None,
-                     path_seqs: dict | None):
+                     uid_prefix: str, extras: tuple, dels: _Deletes | None):
     """mapInArrow: sorted chunk rows -> this task's compacted file
     (write_task_files) -> its summary row. A task whose every chunk was
     deleted writes no file; its row (file NULL) still counts them."""
@@ -427,8 +390,8 @@ def _compact_batches(run_dir: str, parquet_codec: str, budget: int,
 
         stats = {"n_purged_rows": 0, "n_merged_chunks": 0}
         rows = write_task_files(
-            _compact_stream(it, budget, uid_prefix, extras, dels, path_seqs,
-                            stats), run_dir, parquet_codec)
+            _compact_stream(it, budget, uid_prefix, extras, dels, stats),
+            run_dir, parquet_codec)
         if rows or stats["n_purged_rows"]:
             rows = rows or [{**dict.fromkeys([n for n, _ in META_FIELDS], 0),
                              "file": None}]
@@ -438,44 +401,9 @@ def _compact_batches(run_dir: str, parquet_codec: str, budget: int,
     return fn
 
 
-def _pending_deletes(tbl: SnapshotTable, snap: dict, grp_map: dict,
-                     del_groups: dict, read_ids) -> tuple:
-    """(ids, path_seqs) of the pending delete groups, whose ids
-    ``read_ids(paths)`` reads. Sequence-aware when any delete group's
-    first-commit attribution survives (table.group_seqs): ids map to
-    their newest delete seq and ``path_seqs`` maps normalized data paths
-    to their group's seq (decode_job._path_seq_map). Legacy chains get a
-    frozenset and None."""
-    from tokencodec.spark.decode_job import (_ANCIENT_SEQ, _LEGACY_DEL_SEQ,
-                                             _path_seq_map)
-    seqs = tbl.group_seqs(snap)
-    known = {k: seqs[k] for k in del_groups if k in seqs}
-    if not known:
-        return frozenset(read_ids([p for ps in del_groups.values()
-                                   for p in ps])), None
-    ids: dict[str, int] = {}
-    for k, ps in sorted(del_groups.items()):
-        s = known.get(k, _LEGACY_DEL_SEQ)
-        for d in read_ids(ps):
-            ids[d] = max(ids.get(d, _ANCIENT_SEQ), s)
-    return ids, _path_seq_map(grp_map, seqs, min(known.values()))
-
-
-def _read_ids_pyarrow(paths: list[str]) -> list[str]:
-    """doc_ids of delete manifest files (or run directories of them),
-    read on the driver: manifests are takedown-sized by delete_docs'
-    contract."""
-    from tokencodec.spark.encode_job import _list_parquet, _open_parquet
-    return [d for p in paths
-            for f in ([p] if p.endswith(".parquet") else _list_parquet(p))
-            for d in _open_parquet(f).read(columns=["doc_id"])
-            .column(0).to_pylist()]
-
-
 def _file_may_hit(path: str, dels: _Deletes) -> bool:
     """May a data file hold a deleted id, by its footer's row-group
     doc-id bounds? Unknown stats say yes."""
-    from tokencodec.spark.decode_job import _footer_bounds
     bounds = _footer_bounds(path)
     return bounds is None or any(
         dels.may_hit(b.get("doc_id_min", (None, None))[0],
@@ -489,7 +417,6 @@ def _rechunk_groups(spark: SparkSession, paths: list[str],
     (sgrp, k, files) — a partial group (corruption, concurrent surgery)
     passes through. Scans the metadata columns of only the files whose
     footers may hold split parts; no job when none does."""
-    from tokencodec.spark.decode_job import _footer_bounds, _rg_may_split
     cand = [p for p in paths
             if (b := _footer_bounds(p)) is None or any(map(_rg_may_split, b))]
     if not cand:
@@ -550,36 +477,44 @@ def compact(spark: SparkSession, root: str,
     metrics come from the tasks' summary rows plus a metadata aggregate
     over the untouched files. The tasks write with pyarrow, so a root
     pyarrow cannot address is refused."""
-    from tokencodec.spark.decode_job import (_max_doc_parts_from_manifest,
-                                             _norm_path)
+    return _rewrite(spark, root, max_chunk_tokens, parquet_codec,
+                    small_file_bytes)
+
+
+def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
+             parquet_codec: str, small_file_bytes: int, purge: bool = False,
+             branch: str | None = None) -> dict:
+    """compact's rewrite. ``purge`` is purge_deletes': it rewrites only
+    the files _file_may_hit selects, re-slices nothing and commits
+    ``op: purge``; its ``max_chunk_tokens`` of 0 merges nothing.
+    ``branch`` rewrites that branch's chain."""
     from tokencodec.spark.encode_job import (_sweep_orphans,
                                              require_direct_write,
                                              table_extra_schema)
 
-    require_direct_write(root, "compact")
-    tbl = SnapshotTable(root)
+    require_direct_write(root, "purge_deletes" if purge else "compact")
+    tbl = SnapshotTable(root, branch=branch)
     snap = tbl.current_snapshot()
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
     grp_map = tbl.resolve_groups(snap)
-    del_groups = {k: ps for k, ps in grp_map.items()
-                  if is_delete_group(k) and ps}
-    ids, path_seqs = (_pending_deletes(tbl, snap, grp_map, del_groups,
-                                       _read_ids_pyarrow)
-                      if del_groups else (frozenset(), None))
-    dels = _Deletes(ids) if ids else None
+    if purge and not any(is_delete_group(k) and ps
+                         for k, ps in grp_map.items()):
+        return snap
+    dels = _pending_deletes(spark, tbl, snap)
     all_paths = [p for k, ps in grp_map.items()
                  if not is_delete_group(k) for p in ps]
     selected = {p for p in all_paths
-                if tbl.fs.isdir(p) or tbl.fs.size(p) < small_file_bytes
+                if (not purge and (tbl.fs.isdir(p)
+                                   or tbl.fs.size(p) < small_file_bytes))
                 or (dels is not None and _file_may_hit(p, dels))}
     # shrinkable split groups are reassembled and re-sliced (a table
     # re-compacted with a larger budget would keep its fragments
     # forever otherwise); their files are rewritten in full, whatever
     # their size — leaving them referenced would double-read the parts
-    mdp = _max_doc_parts_from_manifest(root, None, snap=snap)
+    mdp = _max_doc_parts_from_manifest(root, None, branch=branch, snap=snap)
     rech = (_rechunk_groups(spark, all_paths, max_chunk_tokens)
-            if mdp is None or mdp > 1 else [])
+            if not purge and (mdp is None or mdp > 1) else [])
     committed = {_norm_path(p): p for p in all_paths}
     for f in {_norm_path(f) for r in rech for f in r["files"]}:
         # a scan URI maps back to a committed file or its run directory;
@@ -591,12 +526,12 @@ def compact(spark: SparkSession, root: str,
                                f"committed path for split-group rechunk: {f}")
         selected.add(p)
 
-    uid_prefix = f"cmp{snap['snapshot_id'] + 1}"
+    uid_prefix = f"{'prg' if purge else 'cmp'}{snap['snapshot_id'] + 1}"
     meta, new_files = [], []
     if selected:
         pages = (spark.read.schema(PAGES_DDL).parquet(*sorted(selected))
                  .na.fill({"doc_part": 0, "doc_parts": 1}))
-        if not del_groups and not rech:
+        if dels is None and not rech:
             # only a merge can change anything: look for a merge group
             # of 2+ chunks in the metadata columns before writing a byte
             probe = _salt_sorted(pages.select(
@@ -604,9 +539,9 @@ def compact(spark: SparkSession, root: str,
             if not sum(r["n"] for r in probe.mapInArrow(
                     _merge_probe(max_chunk_tokens), "n bigint").collect()):
                 return snap
-        # sequence-aware deletes need each chunk's data seq: its file
-        # path rides along to the kernel (through the resplit too)
-        carry = ("_fp",) if path_seqs is not None else ()
+        # deletes need each chunk's data seq: its file path rides along
+        # to the kernel (through the resplit too)
+        carry = ("_fp",) if dels is not None else ()
         if carry:
             pages = pages.withColumn("_fp", F.col("_metadata.file_path"))
         pages = pages.select(*_PAGES_TYPES, *carry)
@@ -628,12 +563,13 @@ def compact(spark: SparkSession, root: str,
                            PAGES_DDL + "".join(f", {c} string"
                                                for c in carry)))
             pages = pages.filter(~in_rech).unionByName(resplit)
-        extras = tuple(sorted(table_extra_schema(root, snap=snap).items()))
+        extras = tuple(sorted(table_extra_schema(
+            root, branch=branch, snap=snap).items()))
         run_dir = tbl.new_run_dir()
         tbl.fs.mkdirs(run_dir)
         meta = _salt_sorted(pages).mapInArrow(
             _compact_batches(run_dir, parquet_codec, max_chunk_tokens,
-                             uid_prefix, extras, dels, path_seqs),
+                             uid_prefix, extras, dels),
             _COMPACT_DDL).collect()
         # only files whose summary row was collected are real: sweep
         # lost/retried attempts' files before committing
@@ -661,9 +597,9 @@ def compact(spark: SparkSession, root: str,
          "rechunked_split_groups": len(rech),
          "kept_files": len(kept),
          "rewritten_files": len(selected),
-         "n_delete_ids": len(ids),
+         "n_delete_ids": len(dels.ids) if dels is not None else 0,
          "n_purged_rows": sum(r["n_purged_rows"] for r in meta),
-         "op": "compact"}
+         "op": "purge" if purge else "compact"}
     m["table_totals"] = {k: m[k] for k in
                          ("n_chunks", "n_rows", "n_tokens", "enc_bytes")}
     m["max_doc_parts_chain"] = m["max_doc_parts"]
@@ -689,18 +625,19 @@ def delete_docs(spark: SparkSession, root: str, doc_ids,
                 branch: str | None = None) -> dict:
     """Row-level takedown (VERDICT r4 next #3 — Iceberg v2 equality
     deletes): commit a DELETE manifest of doc_ids. No data file is
-    touched; decode() applies the deletes as a broadcast anti-join at
-    read time (all copies and all split parts of a listed doc_id
-    disappear), time travel before the delete still shows the rows, and
-    ``purge_deletes`` / ``compact`` later rewrite them away physically.
+    touched; every reader masks the deletes at read time, inside its
+    decode kernels (the whole document disappears, every copy committed
+    before the delete and every split part), time travel before the
+    delete still shows the rows, and ``purge_deletes`` / ``compact``
+    later rewrite them away physically.
 
     ``doc_ids`` is an iterable of ids or a single-column DataFrame. An
     id list is written by the driver as one sorted, deduplicated
     parquet file (no Spark job); a DataFrame, or a root pyarrow cannot
     address, is written by a Spark job. Designed for takedown/PII-
-    removal request sizes (the id set rides in a broadcast at decode
-    and is read on the driver at compaction); bulk filtering of a corpus
-    belongs in an encode-time predicate, not here. ``branch`` commits
+    removal request sizes (readers load the id set on the driver and
+    ship it in the kernels' closure); bulk filtering of a corpus belongs
+    in an encode-time predicate, not here. ``branch`` commits
     the manifest on that branch only (audit a takedown in isolation;
     purge_deletes(branch=...) applies it)."""
     import uuid as _uuid
@@ -764,11 +701,11 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
     scheme, and re-encoded (rows and their extra columns
     bit-identical; audit-tested); this is honestly O(table) — the same
     cost every engine pays to re-partition data that carries its
-    partition in its layout. Pending row-level deletes are purged
-    first, so the rewrite starts from a clean masking slate; time
-    travel below the resalt keeps resolving under the OLD scheme (the
-    scheme metric is read from the target snapshot's own chain)."""
-    from tokencodec.spark.decode_job import _scheme_from_manifest, decode
+    partition in its layout. Pending row-level deletes are applied by
+    the decode it re-encodes from, and the replace-commit empties the
+    delete groups, so the new layout starts from a clean masking slate;
+    time travel below the resalt keeps resolving under the OLD scheme
+    (the scheme metric is read from the target snapshot's own chain)."""
     from tokencodec.spark.encode_job import (make_encoder,
                                              next_extra_schema_chain,
                                              table_extra_schema)
@@ -786,13 +723,10 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
     if int(old.get("n_salts", 0)) == int(n_salts):
         return snap
     grp_map = tbl.resolve_groups(snap)
-    if any(is_delete_group(k) and ps for k, ps in grp_map.items()):
-        snap = purge_deletes(spark, root, parquet_codec=parquet_codec)
-        grp_map = tbl.resolve_groups(snap)
     extra_schema = table_extra_schema(root) or {}
     extra_cols = tuple(sorted(extra_schema.items()))
     cols = ["doc_id", "tokens", "n_tok", "source"] + [n for n, _ in extra_cols]
-    rows = decode(spark, root, columns=cols)
+    rows = decode(spark, root, columns=cols, snapshot_id=snap["snapshot_id"])
     bucketed = part.bucketed(rows.select(cols), n_salts=int(n_salts))
     uid_prefix = f"rs{snap['snapshot_id'] + 1}"
     encoder = make_encoder(max_chunk_tokens, commit_groups=1,
@@ -878,7 +812,6 @@ def upsert_docs(spark: SparkSession, root: str, df: DataFrame,
     are bucketed under the TABLE's committed salt scheme, so salt and
     Bloom pruning keep working on the replacements."""
     import uuid as _uuid
-    from tokencodec.spark.decode_job import _scheme_from_manifest
     from tokencodec.spark.encode_job import extra_schema_of
 
     tbl = SnapshotTable(root, branch=branch)
@@ -988,56 +921,17 @@ def _upsert_pinned(tbl, snap, df, scheme, extra_schema, extra_cols,
                        f"del:{nonce}": del_files}, metrics=m)
 
 
-def _purge_batches(ids, uid_prefix: str):
-    """mapInArrow over FULL page rows of delete-affected files: rows
-    whose chunk holds no deleted doc pass through byte-identical; the
-    rest go through _mask_chunk (dropped when every doc dies, else
-    re-encoded). Sequence-aware ``ids`` read each chunk's data seq from
-    the extra input column ``data_seq``."""
-    dels = _Deletes(ids)
-
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from tokencodec.spark.decode_job import _ANCIENT_SEQ, _binary_views
-
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            views = {c: _binary_views(batch.column(c)) for c in _PAGE_COLS}
-            seqs = (batch.column("data_seq").to_pylist() if dels.by_seq
-                    else [None] * batch.num_rows)
-            keep_mask = []
-            rows: list[dict] = []
-            for r in range(batch.num_rows):
-                pages = {c: d[o[r]:o[r + 1]] for c, (o, d) in views.items()}
-                n_dead, row = _mask_chunk(
-                    dels, batch, r, pages,
-                    _ANCIENT_SEQ if seqs[r] is None else seqs[r], uid_prefix)
-                keep_mask.append(n_dead == 0)
-                if row is not None:
-                    rows.append(row)
-            passthrough = batch.filter(pa.array(keep_mask))
-            if dels.by_seq:
-                # the data_seq input column is not part of PAGES_DDL
-                passthrough = passthrough.select(
-                    [n for n in batch.schema.names if n != "data_seq"])
-            if passthrough.num_rows:
-                yield passthrough
-            if rows:
-                yield _rows_to_batch(rows)
-
-    return fn
-
-
 def purge_deletes(spark: SparkSession, root: str,
                   parquet_codec: str = "zstd",
                   branch: str | None = None) -> dict:
     """Physically remove rows covered by committed DELETE manifests
     (Iceberg's rewrite-data-files over position/equality deletes):
-    ONLY files whose chunk doc_id ranges overlap a deleted id are read
-    and rewritten (metadata-scan file selection), the delete groups are
-    replace-committed to empty, and the superseded files age out with
-    snapshot expiry. Returns the new snapshot (or the current one when
-    there is nothing to purge).
+    compact's one-pass rewrite, restricted to the files whose footers
+    may hold a deleted id, with no merging. The delete groups are
+    replace-committed to empty (``op: purge``), and the superseded
+    files age out with snapshot expiry. Returns the new snapshot (or
+    the current one when there is nothing to purge). Like compact, it
+    refuses a root pyarrow cannot address.
 
     ``branch`` purges THAT branch's delete manifests: rewritten files
     are committed on the branch chain only (shared pre-fork files stay
@@ -1045,110 +939,8 @@ def purge_deletes(spark: SparkSession, root: str,
     never files), with attribution resolved in the branch's own
     timeline (fork-carried sub-zero seqs included). This is how a
     branch that audited an upsert cleans up without touching main."""
-    tbl = SnapshotTable(root, branch=branch)
-    snap = tbl.current_snapshot()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    grp_map = tbl.resolve_groups(snap)
-    del_groups = {k: ps for k, ps in grp_map.items()
-                  if is_delete_group(k) and ps}
-    del_paths = [p for ps in del_groups.values() for p in ps]
-    if not del_paths:
-        return snap
-    # sequence-aware when any delete group's first-commit attribution
-    # survives: only strictly-older copies die, so upsert replacements
-    # survive the purge of the versions they superseded. Legacy chains
-    # keep the global frozenset semantics byte-for-byte.
-    ids, path_seqs = _pending_deletes(
-        tbl, snap, grp_map, del_groups,
-        lambda ps: [r[0] for r in spark.read.schema("doc_id string")
-                    .parquet(*ps).distinct().collect()])
-    data_paths = [p for k, ps in grp_map.items()
-                  if not is_delete_group(k) for p in ps]
-    from tokencodec.spark.decode_job import _norm_path
-    uid_prefix = f"prg{snap['snapshot_id'] + 1}"
-    new_files: list[str] = []
-    selected: list[str] = []
-    n_purged_rows = 0
-    if data_paths and ids:
-        file_mode = all(not tbl.fs.isdir(p) for p in data_paths)
-        if file_mode:
-            idf = spark.createDataFrame([(i,) for i in sorted(ids)],
-                                        "did string")
-            meta = (spark.read.schema(PAGES_DDL).parquet(*data_paths)
-                    .select(F.input_file_name().alias("fname"),
-                            "doc_id_min", "doc_id_max"))
-            hit = (meta.join(F.broadcast(idf),
-                             (F.col("did") >= F.col("doc_id_min"))
-                             & (F.col("did") <= F.col("doc_id_max")))
-                   .select("fname"))
-            # NULL stats (legacy files) cannot be range-pruned: rewrite
-            unknown = (meta.filter(F.col("doc_id_min").isNull()
-                                   | F.col("doc_id_max").isNull())
-                       .select("fname"))
-            fnames = [r[0] for r in hit.union(unknown).distinct().collect()]
-            committed = {_norm_path(p): p for p in data_paths}
-            unmapped = [f for f in fnames if _norm_path(f) not in committed]
-            if unmapped:
-                raise RuntimeError(
-                    "purge_deletes: cannot map scan URI(s) back to "
-                    f"committed paths: {unmapped[:3]}")
-            selected = sorted(committed[_norm_path(f)] for f in fnames)
-        else:
-            selected = list(data_paths)
-        if selected:
-            pages = spark.read.schema(PAGES_DDL).parquet(*selected)
-            sel_cols = list(_PAGES_TYPES)
-            if path_seqs is not None:
-                from tokencodec.spark.decode_job import _attach_data_seq
-                pages = _attach_data_seq(spark, pages, path_seqs)
-                sel_cols = sel_cols + ["data_seq"]
-            pages = pages.select(*sel_cols)
-            out = pages.mapInArrow(_purge_batches(ids, uid_prefix),
-                                   PAGES_DDL)
-            from pyspark.sql import Observation
-            obs = Observation()
-            out = out.observe(obs, F.sum("n_rows").alias("rows_after"))
-            run_dir = tbl.new_run_dir()
-            (out.write.mode("overwrite")
-             .option("compression", parquet_codec).parquet(run_dir))
-            rows_after = int(obs.get["rows_after"] or 0)
-            rows_before = int(
-                spark.read.schema(PAGES_DDL).parquet(*selected)
-                .agg(F.sum("n_rows")).collect()[0][0] or 0)
-            n_purged_rows = rows_before - rows_after
-            new_files = sorted(
-                posixpath.join(run_dir, n) for n in tbl.fs.listdir(run_dir)
-                if n.endswith(".parquet"))
-            if not new_files:
-                tbl.fs.delete(run_dir, recursive=True)
-    # post-purge table totals from the surviving layout (metadata cols)
-    sel_set = set(selected)
-    tot = _page_totals(
-        spark, [p for p in data_paths if p not in sel_set] + new_files)
-    from tokencodec.spark.decode_job import _max_doc_parts_from_manifest
-    mdp = _max_doc_parts_from_manifest(root, None, branch=branch)
-    if mdp is not None:
-        tot["max_doc_parts"] = max(tot["max_doc_parts"], int(mdp))
-    m = {**tot, "op": "purge", "n_delete_ids": len(ids),
-         "n_purged_rows": int(n_purged_rows),
-         "rewritten_files": len(selected)}
-    m["table_totals"] = {k: m[k] for k in
-                         ("n_chunks", "n_rows", "n_tokens", "enc_bytes")}
-    m["max_doc_parts_chain"] = m["max_doc_parts"]
-    esc = next_extra_schema_chain(snap, {})
-    if esc is not None:
-        m["extra_schema_chain"] = esc
-    new_groups: dict[str, list[str]] = {}
-    attached = False
-    for k in sorted(grp_map):
-        if is_delete_group(k):
-            new_groups[k] = []  # applied physically: nothing left to mask
-            continue
-        survivors = [p for p in grp_map[k] if p not in sel_set]
-        new_groups[k] = ([] if attached else new_files) + survivors
-        attached = True
-    return tbl.commit(new_groups, metrics=m, replace=True)
+    return _rewrite(spark, root, 0, parquet_codec, 0, purge=True,
+                    branch=branch)
 
 
 def publish_staged(main_root: str, staging_root: str,

@@ -72,8 +72,9 @@ _TAG_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,63}$")
 
 # group keys carrying row-level DELETE manifests (parquet files of
 # deleted doc_ids) instead of page data — Iceberg v2 equality deletes.
-# Readers of page data must skip them; decode applies them as an
-# anti-join; purge_deletes rewrites them away physically.
+# Readers of page data must skip them; every reader masks them inside
+# its decode kernels (decode_job._Deletes); compact and purge_deletes
+# rewrite them away physically.
 DELETE_GROUP_PREFIX = "del:"
 
 
