@@ -40,3 +40,58 @@ def run_lookup(spark, monkeypatch):
             list(opened)
 
     return run
+
+
+def _jvm_commit(spark, df, root, group, n_salts, max_chunk_tokens,
+                deletes=None):
+    """Write ``df``'s pages with Spark's JVM parquet writer into one run
+    directory and commit the directory as data group ``group`` (and,
+    with ``deletes``, a JVM-written delete manifest of those ids in the
+    same commit, the shape upserts once had): the layout earlier engine
+    versions committed, which readers still serve."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from tokencodec.spark import encode_job
+    from tokencodec.spark import partition as part
+    from tokencodec.spark.table import SnapshotTable
+
+    extra = encode_job.extra_schema_of(df)
+    extra_cols = tuple(sorted(extra.items()))
+    pages = (part.bucketed(df, n_salts=n_salts)
+             .select(encode_job._COLS + [n for n, _ in extra_cols])
+             .mapInArrow(encode_job.make_encoder(
+                 max_chunk_tokens, uid_prefix=group, extra_cols=extra_cols),
+                 encode_job.PAGES_DDL)
+             .cache())
+    tbl = SnapshotTable(root)
+    groups = {group: [tbl.new_run_dir()]}
+    pages.write.parquet(groups[group][0])
+    m = pages.agg(
+        F.count(F.lit(1)).alias("n_chunks"),
+        F.sum(F.when(F.coalesce("doc_part", F.lit(0)) == 0, F.col("n_rows")))
+        .alias("n_rows"),
+        F.sum("n_tokens").alias("n_tokens"),
+        F.sum("enc_bytes").alias("enc_bytes"),
+        F.max("doc_parts").alias("max_doc_parts")).first().asDict()
+    pages.unpersist()
+    m = {k: int(v or 0) for k, v in m.items()}
+    m["scheme"] = {"group_scheme": "salt_mod", "n_salts": n_salts,
+                   "commit_groups": 1}
+    if extra:
+        m["extra_schema"] = extra
+    if deletes is not None:
+        del_dir = tbl.new_run_dir()
+        spark.createDataFrame([(d,) for d in deletes], "doc_id string") \
+            .write.parquet(del_dir)
+        groups[f"del:{uuid.uuid4().hex[:8]}"] = [del_dir]
+        m["n_delete_ids"] = len(set(deletes))
+    return tbl.commit(groups, metrics=m)
+
+
+@pytest.fixture(scope="session")
+def jvm_commit():
+    """``jvm_commit(spark, df, root, group, n_salts, max_chunk_tokens,
+    deletes=None)``: commit ``df`` as a JVM-written run directory."""
+    return _jvm_commit

@@ -192,7 +192,8 @@ def test_delete_docs_writes_sorted_distinct_ids(spark, tmp_path):
     assert len(files) == 1
     assert pq.read_table(files[0]).column("doc_id").to_pylist() == \
         ["a", "b", "c"]
-    # a DataFrame argument keeps the Spark write (a NULL id masks nothing)
+    # a DataFrame argument is collected and written the same way (a
+    # NULL id masks nothing)
     snap = maintenance.delete_docs(
         spark, root,
         spark.createDataFrame([("d",), ("d",), (None,)], "x string"))

@@ -100,10 +100,11 @@ def test_purge_rewrites_only_affected_files(spark, table):
         F.lit(doomed[0]).between(F.col("doc_id_min"), F.col("doc_id_max")))
     for r in hit.collect():  # any covering chunk must not CONTAIN it
         assert r["doc_id_min"] != doomed[0] and r["doc_id_max"] != doomed[0]
-    # table_totals counts chunk rows (split docs contribute one row per
+    # table_totals counts documents (a split doc once, in its first
     # part): must reconcile with the surviving files' metadata exactly
+    first = F.coalesce(F.col("doc_part"), F.lit(0)) == 0
     assert snap["metrics"]["table_totals"]["n_rows"] == (
-        pages.agg(F.sum("n_rows")).collect()[0][0])
+        pages.filter(first).agg(F.sum("n_rows")).collect()[0][0])
 
 
 def test_purge_then_expire_gc_proof(spark, table):

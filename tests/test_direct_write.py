@@ -2,9 +2,11 @@
 split): tasks write pages parquet with pyarrow and the driver commits
 the collected file list, instead of shipping page blobs back across the
 Arrow boundary for a JVM partitionBy write. These tests pin the
-contract: identical pages and metrics to the classic path, resume
-parity, exact-file manifests, orphan sweeping, and URI roots."""
+contract: the pages and metrics the removed JVM writer produced, resume
+parity, exact-file manifests, orphan sweeping, URI roots, and
+table_totals that count documents."""
 
+import hashlib
 import os
 
 import pytest
@@ -34,16 +36,55 @@ def _metrics(root):
             for s in SnapshotTable(root).snapshots()]
 
 
+# The JVM partitionBy writer, removed since, wrote these page bytes and
+# commit metrics for the encode below; the task-side writer must keep
+# them (digest of the sorted (chunk_uid, page md5) fingerprint).
+CLASSIC_DIGEST = "0aea305b78712ef571600eff3817094fe611cc4551656f033584aaa3f2f5d3f1"
+CLASSIC_METRICS = [{"enc_bytes": 213096,
+                    "extra_schema_chain": {},
+                    "max_doc_parts": 1,
+                    "max_doc_parts_chain": 1,
+                    "n_chunks": 12,
+                    "n_rows": 300,
+                    "n_tokens": 241184,
+                    "pass_groups": 2,
+                    "raw_bytes": 974203,
+                    "scheme": {"commit_groups": 2,
+                               "group_scheme": "salt_mod",
+                               "n_salts": 4},
+                    "table_totals": {"enc_bytes": 213096,
+                                     "n_chunks": 12,
+                                     "n_rows": 300,
+                                     "n_tokens": 241184}},
+                   {"enc_bytes": 399416,
+                    "extra_schema_chain": {},
+                    "max_doc_parts": 1,
+                    "max_doc_parts_chain": 1,
+                    "n_chunks": 11,
+                    "n_rows": 300,
+                    "n_tokens": 353450,
+                    "pass_groups": 2,
+                    "raw_bytes": 1423288,
+                    "scheme": {"commit_groups": 2,
+                               "group_scheme": "salt_mod",
+                               "n_salts": 4},
+                    "table_totals": {"enc_bytes": 612512,
+                                     "n_chunks": 23,
+                                     "n_rows": 600,
+                                     "n_tokens": 594634}}]
+
+
 def test_direct_matches_classic(spark, tmp_path):
     df = synth.token_table(spark, N_ROWS, seed=SEED)
-    classic = str(tmp_path / "classic")
-    direct = str(tmp_path / "direct")
-    encode_job.encode(spark, df, classic, commit_groups=2,
+    root = str(tmp_path / "direct")
+    encode_job.encode(spark, df, root, commit_groups=2,
                       max_chunk_tokens=1 << 17)
-    encode_job.encode(spark, df, direct, commit_groups=2,
-                      max_chunk_tokens=1 << 17, direct_write=True)
-    assert _fingerprint(spark, classic) == _fingerprint(spark, direct)
-    assert _metrics(classic) == _metrics(direct)
+    fp = repr(_fingerprint(spark, root)).encode()
+    assert hashlib.sha256(fp).hexdigest() == CLASSIC_DIGEST
+    assert _metrics(root) == CLASSIC_METRICS
+    with pytest.raises(ValueError, match="JVM page writer was removed"):
+        encode_job.encode(spark, df, str(tmp_path / "jvm"),
+                          direct_write=False)
 
 
 def test_manifest_lists_exact_files(spark, tmp_path):
@@ -167,6 +208,39 @@ def test_table_totals_chain(spark, tmp_path):
     assert totals["n_rows"] == agg["sum(n_rows)"]
     assert totals["n_tokens"] == agg["sum(n_tokens)"]
     assert totals["enc_bytes"] == agg["sum(enc_bytes)"]
+
+
+def test_table_totals_count_documents(spark, tmp_path):
+    """table_totals.n_rows counts documents, a split document once: it
+    equals the decoded row count after an encode with split documents,
+    a purge and a compact. Pending deletes mask rows without removing
+    pages, so after an upsert it still counts the replaced copies."""
+    from tokencodec.spark import decode_job, maintenance
+
+    df = synth.token_table(spark, 200, seed=SEED).cache()
+    budget = sorted(r.n_tok for r in df.select("n_tok").collect())[-4]
+    root = str(tmp_path / "t")
+    encode_job.encode(spark, df, root, max_chunk_tokens=budget)
+
+    def check(what, masked=0):
+        snap = SnapshotTable(root).current_snapshot()
+        n = decode_job.decode(spark, root, columns=["doc_id"]).count()
+        assert snap["metrics"]["table_totals"]["n_rows"] == n + masked, what
+
+    assert SnapshotTable(root).current_snapshot()["metrics"][
+        "max_doc_parts_chain"] > 1
+    check("encode")
+    longest = df.orderBy(F.desc("n_tok")).first().doc_id
+    ids = sorted(r.doc_id for r in df.select("doc_id").collect())
+    replaced = [longest, *ids[:4]]
+    maintenance.upsert_docs(
+        spark, root, synth.token_table(spark, 200, seed=SEED + 1)
+        .filter(F.col("doc_id").isin(replaced)), max_chunk_tokens=budget)
+    check("upsert", masked=len(replaced))
+    maintenance.purge_deletes(spark, root)
+    check("purge")
+    maintenance.compact(spark, root, max_chunk_tokens=1 << 21)
+    check("compact")
 
 
 def test_cli_describe(spark, tmp_path, capsys):

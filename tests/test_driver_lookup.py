@@ -45,7 +45,7 @@ def _with_lang(df):
 
 
 @pytest.fixture(scope="module")
-def table(spark, tmp_path_factory):
+def table(spark, tmp_path_factory, jvm_commit):
     root = str(tmp_path_factory.mktemp("driver_lookup") / "t")
     src = synth.token_table(spark, 320, seed=41).cache()
     lens = sorted(r.n_tok for r in src.select("n_tok").collect())
@@ -58,10 +58,9 @@ def table(spark, tmp_path_factory):
                       direct_write=True)
     tbl = SnapshotTable(root)
     tbl.create_tag("v1")
-    # a classic JVM write (run directory) adds the extra column
-    encode_job.encode(spark, _with_lang(src.filter(F.col("doc_id") >= cut)),
-                      root, commit_groups=1, n_salts=8,
-                      max_chunk_tokens=budget, group_prefix="cls")
+    # a JVM write committed as its run directory adds the extra column
+    jvm_commit(spark, _with_lang(src.filter(F.col("doc_id") >= cut)), root,
+               "cls0", n_salts=8, max_chunk_tokens=budget)
     before = tbl.current_snapshot()["snapshot_id"]
     gone, readded, replaced = ids[5], ids[7], ids[250]
     maintenance.delete_docs(spark, root, [gone, readded, split[0]])
@@ -141,13 +140,12 @@ def test_row_filters_apply_to_lookups(spark, table, run_lookup):
     assert {r.doc_id for r in rows} == want
 
 
-def test_classic_table_lookups(spark, tmp_path, run_lookup):
-    """A table written only by classic JVM writes: every committed path
+def test_classic_table_lookups(spark, tmp_path, run_lookup, jvm_commit):
+    """A table whose pages are one JVM write: its committed data path
     is a run directory, read whole; the report cannot size it."""
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 80, seed=13).cache()
-    encode_job.encode(spark, df, root, commit_groups=2, n_salts=4,
-                      max_chunk_tokens=64)
+    jvm_commit(spark, df, root, "g0", n_salts=4, max_chunk_tokens=64)
     big = df.orderBy(F.desc("n_tok")).first().doc_id
     ids = sorted(r.doc_id for r in df.select("doc_id").collect())
     dead = ids[1]

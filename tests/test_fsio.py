@@ -130,10 +130,16 @@ def test_encode_from_parquet_file_uri_byte_identical(spark, tmp_path):
 def test_commit_retry_rebases_on_lost_race(tmp_path):
     """A committer that loses the snapshot-id race to a COMPLETED
     competing commit must re-base onto the winner and succeed (Iceberg's
-    optimistic commit loop), preserving both groups."""
+    optimistic commit loop), preserving both groups, and re-derive its
+    chain totals from the winner."""
     root = str(tmp_path / "retry")
     tbl_a, tbl_b = SnapshotTable(root), SnapshotTable(root)
-    tbl_a.commit({"g0": ["a"]})
+
+    def delta(n):
+        return {"n_chunks": n, "n_rows": 10 * n, "n_tokens": 100 * n,
+                "enc_bytes": 1000 * n}
+
+    tbl_a.commit({"g0": ["a"]}, metrics=delta(1))
 
     # interleave: b reads parent (snapshot 0) ... a commits snapshot 1
     # ... b's first create_excl collides, retries against snapshot 1
@@ -143,13 +149,18 @@ def test_commit_retry_rebases_on_lost_race(tmp_path):
     def racing_create(path, text):
         if not raced["done"]:
             raced["done"] = True
-            tbl_a.commit({"g1": ["b"]})  # the competing committer wins
+            # the competing committer wins
+            winner.append(tbl_a.commit({"g1": ["b"]}, metrics=delta(2)))
         return orig(path, text)
 
+    winner = []
     tbl_b.fs.create_excl = racing_create
-    snap = tbl_b.commit({"g2": ["c"]})
+    snap = tbl_b.commit({"g2": ["c"]}, metrics=delta(4))
     assert snap["snapshot_id"] == 2
     assert sorted(snap["groups"]) == ["g0", "g1", "g2"]
+    won = winner[0]["metrics"]["table_totals"]
+    assert snap["metrics"]["table_totals"] == {
+        k: won[k] + v for k, v in delta(4).items()}
 
 
 def test_torn_snapshot_file_skipped_in_reads_loud_in_commits(tmp_path):

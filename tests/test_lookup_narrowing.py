@@ -39,7 +39,7 @@ def _rows(df) -> dict:
 
 
 @pytest.fixture(scope="module")
-def table(spark, tmp_path_factory):
+def table(spark, tmp_path_factory, jvm_commit):
     root = str(tmp_path_factory.mktemp("narrowing") / "t")
     src = synth.token_table(spark, 360, seed=23).cache()
     lens = sorted(r.n_tok for r in src.select("n_tok").collect())
@@ -57,10 +57,9 @@ def table(spark, tmp_path_factory):
         os.remove(crc)
     bare_ids = pq.read_table(bare, columns=["doc_id_min"]) \
         .column(0).to_pylist()
-    # a classic JVM write commits its run directory, not files
-    encode_job.encode(spark, src.filter(F.col("doc_id") >= "doc-000000000300"),
-                      root, commit_groups=1, n_salts=8,
-                      max_chunk_tokens=budget, group_prefix="cls")
+    # a JVM write committed as its run directory, not files
+    jvm_commit(spark, src.filter(F.col("doc_id") >= "doc-000000000300"),
+               root, "cls0", n_salts=8, max_chunk_tokens=budget)
     run_dir = next(p for p in tbl.data_paths() if not p.endswith(".parquet"))
     before = tbl.current_snapshot()["snapshot_id"]
     ids = sorted(r.doc_id for r in src.select("doc_id").collect())

@@ -292,15 +292,16 @@ def test_expire_removes_emptied_run_dirs(spark, tmp_path):
         assert any(os.path.join(d, n) in live for n in names)
 
 
-def test_expire_mixed_dir_and_file_commits_keeps_live_data(spark, tmp_path):
+def test_expire_mixed_dir_and_file_commits_keeps_live_data(spark, tmp_path,
+                                                           jvm_commit):
     """A legacy dir-granular snapshot superseded by a file-granular
     rewrite must expire without touching the live files: the dead run
     DIR's parent is {root}/data, and sweeping that would destroy every
     sibling run dir (regression test for exactly that)."""
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 300, seed=21)
-    # classic write commits the run DIRECTORY (legacy granularity)
-    encode_job.encode(spark, df, root, commit_groups=1, max_chunk_tokens=2000)
+    # a JVM write commits the run DIRECTORY (legacy granularity)
+    jvm_commit(spark, df, root, "g0", n_salts=4, max_chunk_tokens=2000)
     assert any(SnapshotTable(root).fs.isdir(p)
                for p in SnapshotTable(root).data_paths())
     # file-granular rewrite supersedes it
@@ -349,10 +350,22 @@ def test_remove_orphan_files(spark, tmp_path):
             "deleted_orphan_groupsets": 0}
 
 
-def test_direct_write_probe():
+def test_direct_write_probe(spark, tmp_path):
     """URI capability probe: plain paths and pyarrow-resolvable URIs
-    pass; Hadoop-only spellings fall back to the classic JVM write."""
+    pass; every token-page and delete-id writer refuses a Hadoop-only
+    spelling and names the pyarrow one."""
+    from tokencodec.spark import streaming
+
     assert encode_job.direct_write_supported("/tmp/x")
     assert encode_job.direct_write_supported("file:///tmp/x")
     assert not encode_job.direct_write_supported("s3a://bucket/x")
     assert not encode_job.direct_write_supported("nosuchscheme://x/y")
+    root = "s3a://bucket/x"
+    df = synth.token_table(spark, 4, seed=1)
+    for write in (lambda: encode_job.encode(spark, df, root),
+                  lambda: maintenance.upsert_docs(spark, root, df),
+                  lambda: maintenance.resalt(spark, root, 4),
+                  lambda: streaming.encode_stream(spark, str(tmp_path), root),
+                  lambda: maintenance.delete_docs(spark, root, ["x"])):
+        with pytest.raises(ValueError, match="s3://bucket/x"):
+            write()

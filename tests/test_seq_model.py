@@ -208,11 +208,13 @@ def test_random_branched_program_matches_dual_models(spark, tmp_path, seed):
 
 
 def test_run_directory_and_file_commits_mask_by_their_own_seq(spark,
-                                                              tmp_path):
-    """Upserts commit a classic run directory, encodes here commit
-    direct-written files: each masks by its own commit seq (a scan
-    matches a file exactly, else its run directory) through deletes,
-    revivals and a delete of an upserted replacement."""
+                                                              tmp_path,
+                                                              jvm_commit):
+    """The first upsert here commits JVM-written run directories (pages
+    and delete ids, the shape upserts once had), everything else
+    commits files: each masks by its own commit seq (a scan matches a
+    file exactly, else its run directory) through deletes, revivals and
+    a delete of an upserted replacement."""
     from tokencodec.spark.table import SnapshotTable, is_delete_group
     rng = random.Random(404)
     root = str(tmp_path / "t")
@@ -229,8 +231,8 @@ def test_run_directory_and_file_commits_mask_by_their_own_seq(spark,
     del model[a], model[b]
     step("delete")
     ups = {b: _tokens(rng), c: _tokens(rng), ids[38]: _tokens(rng)}
-    maintenance.upsert_docs(spark, root, _df(spark, ups),
-                            max_chunk_tokens=BUDGET)
+    jvm_commit(spark, _df(spark, ups), root, "upsjvm0", n_salts=4,
+               max_chunk_tokens=BUDGET, deletes=sorted(ups))
     model.update(ups)
     step("upsert")
     add = {a: _tokens(rng)}

@@ -407,3 +407,37 @@ def test_upsert_chunks_match_fixed_count_encode(spark, table, tmp_path):
 
     assert (digests(encode_job.read_pages(spark, root, paths=paths))
             == digests(encode_job.read_pages(spark, ref)))
+
+
+def test_upserted_docs_narrow(spark, table, run_lookup):
+    """An upsert commits task-written files, so a point lookup of an
+    upserted id narrows them by their footers like any other file. Each
+    encoder input batch becomes one row group; small Arrow batches give
+    this small upsert the many row groups a large one has."""
+    import pyarrow.parquet as pq
+
+    root, df = table
+    targets = _targets(df, k=60)
+    rep = (df.filter(F.col("doc_id").isin(targets))
+           .withColumn("tokens", F.reverse("tokens")))
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "8")
+    try:
+        snap = maintenance.upsert_docs(spark, root, rep)
+    finally:
+        spark.conf.set(conf, old)
+    files = next(ps for k, ps in snap["groups"].items()
+                 if k.startswith("ups"))
+    assert files and all(p.endswith(".parquet") for p in files)
+    written = sum(pq.ParquetFile(p).metadata.num_row_groups for p in files)
+    d = targets[len(targets) // 2]
+    plan = decode_job.lookup_report(root, [d])
+    assert plan["row_groups_kept"] is not None
+    kept = sum(len(rgs) for p, rgs in zip(plan["paths"], plan["row_groups"])
+               if p in files)
+    assert 0 < kept < written
+    rows, jobs, _ = run_lookup(root, doc_id_min=d, doc_id_max=d)
+    want = rep.filter(F.col("doc_id") == d).first()
+    assert jobs == [] and [(r.doc_id, list(r.tokens)) for r in rows] == \
+        [(d, list(want.tokens))]

@@ -653,38 +653,32 @@ def _read_ids_pyarrow(paths: list[str]) -> list[str]:
             .column(0).to_numpy(zero_copy_only=False).tolist()]
 
 
-def _pending_deletes(spark: SparkSession, tbl: SnapshotTable,
-                     snap: dict) -> _Deletes | None:
+def _pending_deletes(tbl: SnapshotTable, snap: dict) -> _Deletes | None:
     """The delete manifests of ``snap`` as one _Deletes; None when they
     list no id. Sequence-aware when any delete group's first-commit
     attribution survives (table.group_seqs), legacy (global) otherwise.
-    Ids are read on the driver with pyarrow; on a root pyarrow cannot
-    address (only full scans get here: every other caller refuses such
-    a root) a Spark collect reads them."""
-    from tokencodec.spark.encode_job import direct_write_supported
+    Ids are read on the driver with pyarrow, so a root pyarrow cannot
+    address is refused once it holds a delete manifest (no writer
+    creates one there)."""
+    from tokencodec.spark.encode_job import require_direct_write
     groups = tbl.resolve_groups(snap)
     del_groups = {k: ps for k, ps in groups.items()
                   if is_delete_group(k) and ps}
     if not del_groups:
         return None
-    if direct_write_supported(tbl.root):
-        read_ids = _read_ids_pyarrow
-    else:
-        def read_ids(ps):
-            return [r[0] for r in spark.read.schema("doc_id string")
-                    .parquet(*ps).distinct().collect()]
+    require_direct_write(tbl.root, "a read with pending deletes")
     seqs = tbl.group_seqs(snap)
     known = {k: seqs[k] for k in del_groups if k in seqs}
     if not known:
-        ids = frozenset(read_ids([p for ps in del_groups.values()
-                                  for p in ps]))
+        ids = frozenset(_read_ids_pyarrow([p for ps in del_groups.values()
+                                           for p in ps]))
         return _Deletes(ids) if ids else None
     by_id: dict[str, int] = {}
     # oldest delete first: a doc deleted more than once takes the
     # NEWEST delete's seq
     for s, k in sorted((known.get(k, _LEGACY_DEL_SEQ), k)
                        for k in del_groups):
-        by_id.update(dict.fromkeys(read_ids(del_groups[k]), s))
+        by_id.update(dict.fromkeys(_read_ids_pyarrow(del_groups[k]), s))
     return (_Deletes(by_id, _path_seq_map(groups, seqs, min(known.values())))
             if by_id else None)
 
@@ -693,8 +687,8 @@ def _pending_deletes(spark: SparkSession, tbl: SnapshotTable,
 # lookup or filtered scan is planned, the driver reads the parquet
 # footer row-group statistics of each committed data file and hands the
 # scan only the files a row group of which may hold a matching chunk.
-# Footers cover every writer (direct pyarrow writes and JVM-written
-# compaction output alike). Data files are immutable and uniquely
+# Footers cover every writer (the task writers and the JVM writes of
+# earlier engine versions alike). Data files are immutable and uniquely
 # named, so their bounds are cached process-wide by path (bounded FIFO,
 # like table._GROUPSET_CACHE).
 _FOOTER_COLS = ("salt", "doc_id_min", "doc_id_max", "doc_parts",
@@ -940,7 +934,7 @@ def _lookup(spark: SparkSession, root: str, tbl: SnapshotTable, snap: dict,
     if not targets:
         return result()
     # explicit-paths reads are scoped by their caller: no deletes
-    dels = None if paths is not None else _pending_deletes(spark, tbl, snap)
+    dels = None if paths is not None else _pending_deletes(tbl, snap)
     plan = _file_plan(root, snap, _data_paths(tbl, snap) if paths is None
                       else list(paths), branch=branch, targets=targets,
                       n_tok_min=n_tok_min, n_tok_max=n_tok_max)
@@ -1105,7 +1099,7 @@ def decode(spark: SparkSession, root: str,
     # reads (decode_changes) are scoped by their caller and skip them —
     # an incremental consumer sees appends only; delete commits are not
     # a changelog event in this engine.
-    dels = None if paths is not None else _pending_deletes(spark, tbl, snap)
+    dels = None if paths is not None else _pending_deletes(tbl, snap)
     needs_doc = (doc_id_min is not None or doc_id_max is not None
                  or dels is not None or "tokens" in cols or "n_tok" in cols)
     if needs_doc and "doc_id" not in cols:

@@ -55,9 +55,11 @@ from tokencodec.spark.decode_job import (_Deletes, _binary_views,
                                          spark_type_of_extra_page)
 from tokencodec.spark.encode_job import (_PAGES_TYPES, META_DDL, META_FIELDS,
                                          PAGES_DDL, _encode_chunk,
-                                         _rows_to_batch,
-                                         next_extra_schema_chain)
-from tokencodec.spark.table import SnapshotTable, is_delete_group
+                                         _rows_to_batch, make_direct_writer,
+                                         pyarrow_fs, require_direct_write,
+                                         sum_meta, table_extra_schema,
+                                         write_from_tasks)
+from tokencodec.spark.table import _TOTAL_KEYS, SnapshotTable, is_delete_group
 
 _PAGE_COLS = ["page_tokens", "page_doc_id", "page_n_tok", "page_source"]
 
@@ -439,15 +441,16 @@ def _rechunk_groups(spark: SparkSession, paths: list[str],
 
 
 def _page_totals(spark: SparkSession, paths: list[str]) -> dict:
-    """Chunk, row, token, byte totals and max doc_parts of ``paths``,
-    aggregated from metadata columns (page blobs never read)."""
+    """Chunk, document, token, byte totals and max doc_parts of
+    ``paths``, aggregated from metadata columns (page blobs never read).
+    A split document counts once, in its first part."""
     if not paths:
-        return dict.fromkeys(("n_chunks", "n_rows", "n_tokens", "enc_bytes",
-                              "max_doc_parts"), 0)
+        return dict.fromkeys(_TOTAL_KEYS + ("max_doc_parts",), 0)
     tot = (spark.read.schema(PAGES_DDL).parquet(*paths)
-           .na.fill({"doc_parts": 1})
+           .na.fill({"doc_part": 0, "doc_parts": 1})
            .agg(F.count(F.lit(1)).alias("n_chunks"),
-                F.sum("n_rows").alias("n_rows"),
+                F.sum(F.when(F.col("doc_part") == 0, F.col("n_rows")))
+                .alias("n_rows"),
                 F.sum("n_tokens").alias("n_tokens"),
                 F.sum("enc_bytes").alias("enc_bytes"),
                 F.max("doc_parts").alias("max_doc_parts"))
@@ -488,10 +491,6 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     the files _file_may_hit selects, re-slices nothing and commits
     ``op: purge``; its ``max_chunk_tokens`` of 0 merges nothing.
     ``branch`` rewrites that branch's chain."""
-    from tokencodec.spark.encode_job import (_sweep_orphans,
-                                             require_direct_write,
-                                             table_extra_schema)
-
     require_direct_write(root, "purge_deletes" if purge else "compact")
     tbl = SnapshotTable(root, branch=branch)
     snap = tbl.current_snapshot()
@@ -501,7 +500,7 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     if purge and not any(is_delete_group(k) and ps
                          for k, ps in grp_map.items()):
         return snap
-    dels = _pending_deletes(spark, tbl, snap)
+    dels = _pending_deletes(tbl, snap)
     all_paths = [p for k, ps in grp_map.items()
                  if not is_delete_group(k) for p in ps]
     selected = {p for p in all_paths
@@ -565,32 +564,24 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
             pages = pages.filter(~in_rech).unionByName(resplit)
         extras = tuple(sorted(table_extra_schema(
             root, branch=branch, snap=snap).items()))
-        run_dir = tbl.new_run_dir()
-        tbl.fs.mkdirs(run_dir)
-        meta = _salt_sorted(pages).mapInArrow(
-            _compact_batches(run_dir, parquet_codec, max_chunk_tokens,
-                             uid_prefix, extras, dels),
-            _COMPACT_DDL).collect()
-        # only files whose summary row was collected are real: sweep
-        # lost/retried attempts' files before committing
+        meta = write_from_tasks(
+            tbl, _salt_sorted(pages),
+            lambda run_dir: _compact_batches(
+                run_dir, parquet_codec, max_chunk_tokens, uid_prefix,
+                extras, dels),
+            _COMPACT_DDL)
         new_files = sorted(r["file"] for r in meta if r["file"])
-        _sweep_orphans(tbl.fs, run_dir,
-                       {f.rsplit("/", 1)[-1] for f in new_files})
-        if not new_files:
-            tbl.fs.delete(run_dir, recursive=True)
 
     # table-wide metrics from measured values — what the tasks wrote
-    # plus the untouched files — re-anchor the chain's totals (advisory
-    # under optimistic-concurrency races); the chain's historical max
-    # doc_parts survives a layout that no longer splits
+    # plus the untouched files — re-anchor the chain's totals; the
+    # chain's historical max doc_parts survives a layout that no longer
+    # splits
     kept = [p for p in all_paths if p not in selected]
-    tot = _page_totals(spark, kept)
-    for k in ("n_chunks", "n_rows", "n_tokens", "enc_bytes"):
-        tot[k] += sum(r[k] for r in meta)
-    tot["max_doc_parts"] = max([tot["max_doc_parts"], int(mdp or 0)]
-                               + [r["max_doc_parts"] for r in meta])
+    tot, new = _page_totals(spark, kept), sum_meta(meta)
     n_rech_parts = sum(r["k"] for r in rech)
-    m = {**tot,
+    m = {**{k: tot[k] + new[k] for k in _TOTAL_KEYS},
+         "max_doc_parts": max(tot["max_doc_parts"], new["max_doc_parts"],
+                              int(mdp or 0)),
          "compacted_chunks": sum(r["n_merged_chunks"] for r in meta)
          + n_rech_parts,
          "rechunked_split_parts": n_rech_parts,
@@ -600,12 +591,8 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
          "n_delete_ids": len(dels.ids) if dels is not None else 0,
          "n_purged_rows": sum(r["n_purged_rows"] for r in meta),
          "op": "purge" if purge else "compact"}
-    m["table_totals"] = {k: m[k] for k in
-                         ("n_chunks", "n_rows", "n_tokens", "enc_bytes")}
+    m["table_totals"] = {k: m[k] for k in _TOTAL_KEYS}
     m["max_doc_parts_chain"] = m["max_doc_parts"]
-    esc = next_extra_schema_chain(snap, {})
-    if esc is not None:
-        m["extra_schema_chain"] = esc
     # every group keeps its untouched files; the written files attach to
     # the first group key (chunk group identity lives in the chunk_uid
     # prefix); delete groups empty: nothing is left to mask
@@ -621,6 +608,25 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     return tbl.commit(new_groups, metrics=m, replace=True)
 
 
+def _write_ids(tbl: SnapshotTable, ids) -> tuple[list[str], int]:
+    """Write delete ids (a pyarrow string array, chunked or not) on the
+    driver as one sorted, de-duplicated parquet file under a fresh run
+    directory. Returns (its path, or none when there is no id; the
+    number of distinct ids)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ids = pc.unique(ids)  # a NULL id is kept: it masks nothing
+    if not len(ids):
+        return [], 0
+    path = posixpath.join(tbl.new_run_dir(), "part-00000-ids.parquet")
+    tbl.fs.mkdirs(posixpath.dirname(path))
+    pafs_fs, local = pyarrow_fs(path)
+    pq.write_table(pa.table({"doc_id": pc.take(ids, pc.sort_indices(ids))}),
+                   local, filesystem=pafs_fs)
+    return [path], len(ids)
+
+
 def delete_docs(spark: SparkSession, root: str, doc_ids,
                 branch: str | None = None) -> dict:
     """Row-level takedown (VERDICT r4 next #3 — Iceberg v2 equality
@@ -631,61 +637,30 @@ def delete_docs(spark: SparkSession, root: str, doc_ids,
     delete still shows the rows, and ``purge_deletes`` / ``compact``
     later rewrite them away physically.
 
-    ``doc_ids`` is an iterable of ids or a single-column DataFrame. An
-    id list is written by the driver as one sorted, deduplicated
-    parquet file (no Spark job); a DataFrame, or a root pyarrow cannot
-    address, is written by a Spark job. Designed for takedown/PII-
-    removal request sizes (readers load the id set on the driver and
-    ship it in the kernels' closure); bulk filtering of a corpus belongs
-    in an encode-time predicate, not here. ``branch`` commits
-    the manifest on that branch only (audit a takedown in isolation;
-    purge_deletes(branch=...) applies it)."""
+    ``doc_ids`` is an iterable of ids or a single-column DataFrame (its
+    ids collected with one ``toArrow()`` job). The driver writes them
+    as one sorted, deduplicated parquet file, so a root pyarrow cannot
+    address is refused. Designed for takedown/PII-removal request sizes
+    (readers load the id set on the driver and ship it in the kernels'
+    closure); bulk filtering of a corpus belongs in an encode-time
+    predicate, not here. ``branch`` commits the manifest on that branch
+    only (audit a takedown in isolation; purge_deletes(branch=...)
+    applies it)."""
     import uuid as _uuid
 
-    from tokencodec.spark.encode_job import (direct_write_supported,
-                                             next_chain_max,
-                                             next_table_totals, pyarrow_fs)
-
+    require_direct_write(root, "delete_docs")
     tbl = SnapshotTable(root, branch=branch)
-    snap = tbl.current_snapshot()
-    if snap is None:
+    if tbl.current_snapshot() is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
-    run_dir = tbl.new_run_dir()
-    if isinstance(doc_ids, DataFrame) or not direct_write_supported(root):
-        if isinstance(doc_ids, DataFrame):
-            df = doc_ids.select(
-                F.col(doc_ids.columns[0]).cast("string").alias("doc_id"))
-        else:
-            df = spark.createDataFrame([(str(d),) for d in doc_ids],
-                                       "doc_id string")
-        df = df.distinct()
-        n_ids = df.count()
-        df.write.mode("overwrite").parquet(run_dir)
-        files = sorted(posixpath.join(run_dir, n)
-                       for n in tbl.fs.listdir(run_dir)
-                       if n.endswith(".parquet"))
+    if isinstance(doc_ids, DataFrame):
+        ids = doc_ids.select(F.col(doc_ids.columns[0]).cast("string")) \
+            .toArrow().column(0)
     else:
-        import pyarrow.parquet as pq
-        ids = pa.table({"doc_id": pa.array(sorted({str(d) for d in doc_ids}),
-                                           pa.string())})
-        n_ids = ids.num_rows
-        files = []
-        if n_ids:
-            tbl.fs.mkdirs(run_dir)
-            files = [posixpath.join(run_dir, "part-00000-ids.parquet")]
-            pafs_fs, path = pyarrow_fs(files[0])
-            pq.write_table(ids, path, filesystem=pafs_fs)
-    m: dict = {"op": "delete", "n_delete_ids": int(n_ids)}
-    totals = next_table_totals(snap, {})
-    if totals is not None:
-        m["table_totals"] = totals  # logical deletes change no pages
-    cmax = next_chain_max(snap, 0)
-    if cmax is not None:
-        m["max_doc_parts_chain"] = cmax
-    esc = next_extra_schema_chain(snap, {})
-    if esc is not None:
-        m["extra_schema_chain"] = esc
-    return tbl.commit({f"del:{_uuid.uuid4().hex[:8]}": files}, metrics=m)
+        ids = pa.array([str(d) for d in doc_ids], pa.string())
+    files, n_ids = _write_ids(tbl, ids)
+    # a logical delete changes no pages: the chain totals carry over
+    return tbl.commit({f"del:{_uuid.uuid4().hex[:8]}": files},
+                      metrics={"op": "delete", "n_delete_ids": n_ids})
 
 
 def resalt(spark: SparkSession, root: str, n_salts: int,
@@ -705,11 +680,10 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
     the decode it re-encodes from, and the replace-commit empties the
     delete groups, so the new layout starts from a clean masking slate;
     time travel below the resalt keeps resolving under the OLD scheme
-    (the scheme metric is read from the target snapshot's own chain)."""
-    from tokencodec.spark.encode_job import (make_encoder,
-                                             next_extra_schema_chain,
-                                             table_extra_schema)
-
+    (the scheme metric is read from the target snapshot's own chain).
+    The tasks write the new layout with pyarrow, so a root pyarrow
+    cannot address is refused."""
+    require_direct_write(root, "resalt")
     if int(n_salts) <= 0:
         raise ValueError("n_salts must be positive")
     tbl = SnapshotTable(root)
@@ -729,35 +703,19 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
     rows = decode(spark, root, columns=cols, snapshot_id=snap["snapshot_id"])
     bucketed = part.bucketed(rows.select(cols), n_salts=int(n_salts))
     uid_prefix = f"rs{snap['snapshot_id'] + 1}"
-    encoder = make_encoder(max_chunk_tokens, commit_groups=1,
-                           extra_cols=extra_cols, group_prefix=uid_prefix)
-    pages = bucketed.mapInArrow(encoder, PAGES_DDL)
-    from pyspark.sql import Observation
-    obs = Observation()
-    pages = pages.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.max("doc_parts").alias("max_doc_parts"))
-    run_dir = tbl.new_run_dir()
-    (pages.write.mode("overwrite")
-     .option("compression", parquet_codec).parquet(run_dir))
-    got = obs.get
-    m = {k: int(got[k] or 0) for k in
-         ("n_chunks", "n_rows", "n_tokens", "enc_bytes", "max_doc_parts")}
+    meta = write_from_tasks(
+        tbl, bucketed,
+        lambda run_dir: make_direct_writer(
+            run_dir, parquet_codec, max_chunk_tokens, extra_cols=extra_cols,
+            group_prefix=uid_prefix))
+    m = sum_meta(meta)
     scheme = {"group_scheme": "salt_mod", "n_salts": int(n_salts),
               "commit_groups": 1}
     m.update({"op": "resalt", "scheme": scheme,
               "n_salts_before": int(old["n_salts"])})
-    m["table_totals"] = {"n_chunks": m["n_chunks"], "n_rows": m["n_rows"],
-                         "n_tokens": m["n_tokens"],
-                         "enc_bytes": m["enc_bytes"]}
+    # the new layout holds the whole table: it re-anchors the chain
+    m["table_totals"] = {k: m[k] for k in _TOTAL_KEYS}
     m["max_doc_parts_chain"] = m["max_doc_parts"]
-    esc = next_extra_schema_chain(snap, {})
-    if esc is not None:
-        m["extra_schema_chain"] = esc
     # replace-commit: every old data group empties, the first carries
     # the new layout (purge's attachment shape); old files stay
     # referenced by parent snapshots until expiry, so time travel
@@ -768,7 +726,7 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
         if is_delete_group(k):
             new_groups[k] = []
             continue
-        new_groups[k] = [] if attached else [run_dir]
+        new_groups[k] = [] if attached else sorted(r["file"] for r in meta)
         attached = True
     if not attached:
         raise ValueError(f"no data groups to resalt under {root}")
@@ -810,10 +768,16 @@ def upsert_docs(spark: SparkSession, root: str, df: DataFrame,
     ``df`` must carry the core columns (doc_id, tokens, n_tok, source);
     extra columns follow encode's schema-evolution rules. New chunks
     are bucketed under the TABLE's committed salt scheme, so salt and
-    Bloom pruning keep working on the replacements."""
+    Bloom pruning keep working on the replacements.
+
+    The tasks write the replacements' pages files with pyarrow, so
+    lookups narrow them by their footers like any other file; the
+    driver writes the delete manifest from ids collected with one
+    ``toArrow()`` job. A root pyarrow cannot address is refused."""
     import uuid as _uuid
     from tokencodec.spark.encode_job import extra_schema_of
 
+    require_direct_write(root, "upsert_docs")
     tbl = SnapshotTable(root, branch=branch)
     snap = tbl.current_snapshot()
     if snap is None:
@@ -847,77 +811,40 @@ def upsert_docs(spark: SparkSession, root: str, df: DataFrame,
     nonce = _uuid.uuid4().hex[:8]
     prefix = f"ups{nonce}-"
 
-    # the source frame feeds two jobs (the delete-manifest write and
-    # the re-encode) and may itself be an expensive pipeline: pin it
+    # the source frame feeds two jobs (the delete-id collect and the
+    # re-encode) and may itself be an expensive pipeline: pin it
     # (released in the finally below, error paths included)
     df = df.persist()
     try:
-        return _upsert_pinned(tbl, snap, df, scheme, extra_schema,
-                              extra_cols, nonce, prefix, max_chunk_tokens,
-                              parquet_codec)
+        return _upsert_pinned(tbl, df, scheme, extra_schema, extra_cols,
+                              nonce, prefix, max_chunk_tokens, parquet_codec)
     finally:
         df.unpersist()
 
 
-def _upsert_pinned(tbl, snap, df, scheme, extra_schema, extra_cols,
-                   nonce, prefix, max_chunk_tokens, parquet_codec) -> dict:
-    from tokencodec.spark.encode_job import (make_encoder, next_chain_max,
-                                             next_table_totals)
+def _upsert_pinned(tbl, df, scheme, extra_schema, extra_cols, nonce, prefix,
+                   max_chunk_tokens, parquet_codec) -> dict:
     # replacement ids -> delete manifest (same shape as delete_docs)
-    ids_df = df.select("doc_id").distinct()
-    n_ids = ids_df.count()
+    del_files, n_ids = _write_ids(tbl, df.select("doc_id").toArrow().column(0))
     if n_ids == 0:
         raise ValueError("empty upsert frame (use delete_docs for "
                          "pure deletions)")
-    del_dir = tbl.new_run_dir()
-    ids_df.write.mode("overwrite").parquet(del_dir)
-    del_files = sorted(posixpath.join(del_dir, n)
-                       for n in tbl.fs.listdir(del_dir)
-                       if n.endswith(".parquet"))
-
     # re-encode the replacements under the table's own salt scheme
     sel = ["doc_id", "tokens", "n_tok", "source"] + [n for n, _ in extra_cols]
     bucketed = part.bucketed(df.select(sel),
                              n_salts=int(scheme["n_salts"]))
-    encoder = make_encoder(max_chunk_tokens, commit_groups=1,
-                           extra_cols=extra_cols, group_prefix=prefix)
-    pages = bucketed.mapInArrow(encoder, PAGES_DDL)
-    from pyspark.sql import Observation
-    obs = Observation()
-    pages = pages.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.max("doc_parts").alias("max_doc_parts"))
-    run_dir = tbl.new_run_dir()
-    (pages.write.mode("overwrite")
-     .option("compression", parquet_codec).parquet(run_dir))
-    got = obs.get
-    m = {k: int(got[k] or 0) for k in
-         ("n_chunks", "n_rows", "n_tokens", "raw_bytes", "enc_bytes",
-          "max_doc_parts")}
-    m.update({"op": "upsert", "n_delete_ids": int(n_ids),
-              "scheme": scheme})
+    meta = write_from_tasks(
+        tbl, bucketed,
+        lambda run_dir: make_direct_writer(
+            run_dir, parquet_codec, max_chunk_tokens, extra_cols=extra_cols,
+            group_prefix=prefix))
+    m = {**sum_meta(meta), "op": "upsert", "n_delete_ids": n_ids,
+         "scheme": scheme}
     if extra_schema:
         m["extra_schema"] = extra_schema
-    esc = next_extra_schema_chain(snap, extra_schema)
-    if esc is not None:
-        m["extra_schema_chain"] = esc
-    totals = next_table_totals(snap, m)
-    if totals is not None:
-        m["table_totals"] = totals
-    cmax = next_chain_max(snap, m["max_doc_parts"])
-    if cmax is not None:
-        m["max_doc_parts_chain"] = cmax
-    data_files = [run_dir] if m["n_chunks"] else []
-    if not m["n_chunks"]:
-        tbl.fs.delete(run_dir, recursive=True)
     # ONE commit: replacements + their equality-delete manifest land
     # at the same sequence number (all-or-nothing for readers)
-    return tbl.commit({f"{prefix}0": data_files,
+    return tbl.commit({f"{prefix}0": sorted(r["file"] for r in meta),
                        f"del:{nonce}": del_files}, metrics=m)
 
 
@@ -976,10 +903,6 @@ def publish_staged(main_root: str, staging_root: str,
     table references. Pass False only if you delete the staging
     manifests yourself."""
     from urllib.parse import urlparse
-    from tokencodec.spark.encode_job import (next_chain_max,
-                                             next_extra_schema_chain,
-                                             next_table_totals,
-                                             table_extra_schema)
 
     if urlparse(main_root).scheme != urlparse(staging_root).scheme:
         raise ValueError(
@@ -1048,15 +971,6 @@ def publish_staged(main_root: str, staging_root: str,
         m["scheme"] = s_scheme  # first data on an empty main table
     if s_extra:
         m["extra_schema"] = s_extra
-    esc = next_extra_schema_chain(parent, s_extra)
-    if esc is not None:
-        m["extra_schema_chain"] = esc
-    totals = next_table_totals(parent, m)
-    if totals is not None:
-        m["table_totals"] = totals
-    cmax = next_chain_max(parent, s_parts)
-    if cmax is not None:
-        m["max_doc_parts_chain"] = cmax
     snap = dst.commit(dict(s_groups), metrics=m)
     if retire_staging:
         src.fs.delete(src.manifest_dir, recursive=True)
@@ -1136,11 +1050,6 @@ def publish_branch(root: str, name: str, drop: bool = False,
     successful publish. The default keeps it (an Iceberg fast-forward
     leaves the branch in place); either way the data files are shared
     with main, so nothing is moved or re-owned."""
-    from tokencodec.spark.encode_job import (next_chain_max,
-                                             next_extra_schema_chain,
-                                             next_table_totals,
-                                             table_extra_schema)
-
     main = SnapshotTable(root, fs=fs)
     br = SnapshotTable(root, fs=fs, branch=name)
     head = br.current_snapshot()
@@ -1171,7 +1080,6 @@ def publish_branch(root: str, name: str, drop: bool = False,
     if h_tot is None or f_tot is None:
         raise ValueError(
             f"branch {name!r} predates table_totals metrics; re-fork it")
-    parent = main.current_snapshot()
     b_parts = max((int(s.get("metrics", {}).get("max_doc_parts", 0))
                    for s in br.chain()), default=0)
     b_parts = max(b_parts, int(hm.get("max_doc_parts_chain", 0)))
@@ -1187,15 +1095,6 @@ def publish_branch(root: str, name: str, drop: bool = False,
     }
     if b_extra:
         m["extra_schema"] = b_extra
-    esc = next_extra_schema_chain(parent, b_extra)
-    if esc is not None:
-        m["extra_schema_chain"] = esc
-    totals = next_table_totals(parent, m)
-    if totals is not None:
-        m["table_totals"] = totals
-    cmax = next_chain_max(parent, b_parts)
-    if cmax is not None:
-        m["max_doc_parts_chain"] = cmax
     snap = main.commit(delta, metrics=m)
     if drop:
         main.drop_branch(name)
@@ -1214,9 +1113,6 @@ def rewrite_manifests(root: str, fs=None) -> dict:
     expiry / orphan GC. No-op (returns the current snapshot) when the
     metadata is already in its best shape: no sets and an inline map
     under the spill threshold, or a single consolidated set."""
-    from tokencodec.spark.encode_job import (next_chain_max,
-                                             next_extra_schema_chain,
-                                             next_table_totals)
     from tokencodec.spark.table import spill_threshold
 
     tbl = SnapshotTable(root, fs=fs)
@@ -1227,18 +1123,8 @@ def rewrite_manifests(root: str, fs=None) -> dict:
     if (not sets and len(snap["groups"]) <= spill_threshold()) or \
             (len(sets) == 1 and not snap["groups"]):
         return snap
-    m: dict = {"op": "rewrite_manifests",
-               "sets_before": len(sets),
-               "inline_before": len(snap["groups"])}
-    totals = next_table_totals(snap, {})
-    if totals is not None:
-        m["table_totals"] = totals  # metadata-only: no page changes
-    cmax = next_chain_max(snap, 0)
-    if cmax is not None:
-        m["max_doc_parts_chain"] = cmax
-    esc = next_extra_schema_chain(snap, {})
-    if esc is not None:
-        m["extra_schema_chain"] = esc
+    m = {"op": "rewrite_manifests", "sets_before": len(sets),
+         "inline_before": len(snap["groups"])}
     return tbl.commit({}, metrics=m, consolidate=True)
 
 

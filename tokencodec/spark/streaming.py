@@ -18,13 +18,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from tokencodec.spark import partition as part
-from tokencodec.spark.encode_job import (META_DDL, PAGES_DDL, _COLS,
-                                         _sweep_orphans,
-                                         direct_write_supported,
-                                         make_direct_writer, make_encoder,
-                                         next_chain_max,
-                                         next_extra_schema_chain,
-                                         next_table_totals)
+from tokencodec.spark.encode_job import (_COLS, make_direct_writer,
+                                         require_direct_write, sum_meta,
+                                         write_from_tasks)
 from tokencodec.spark.synth import SCHEMA_DDL
 from tokencodec.spark.table import SnapshotTable
 
@@ -43,7 +39,11 @@ def encode_stream(spark: SparkSession, source_dir: str, out_root: str,
     (doc_id, tokens, n_tok, source) — schema-evolution extra columns
     in the source files are not ingested on this path (batch
     ``encode`` handles them); the fixed readStream schema makes that
-    explicit rather than silent."""
+    explicit rather than silent.
+
+    Tasks write each micro-batch's pages files with pyarrow and the
+    commit lists them, so a root pyarrow cannot address is refused."""
+    require_direct_write(out_root, "encode_stream")
     if checkpoint_dir is None:
         checkpoint_dir = os.path.join(out_root, "_stream_checkpoint")
     tbl = SnapshotTable(out_root)
@@ -57,80 +57,15 @@ def encode_stream(spark: SparkSession, source_dir: str, out_root: str,
         # and restarts chunk_seq per (bucket, salt), so appended batches
         # would otherwise repeat chunk uids
         bucketed = part.bucketed(batch_df, n_salts=n_salts)
-        if direct_write_supported(out_root):
-            # direct task-side write (same path as batch encode's fast
-            # default): pages parquet written by pyarrow inside the
-            # task, file list committed from the collected summary rows,
-            # orphaned attempt files swept; max_doc_parts mirrors batch
-            # encode so decode() plans job-free
-            run_dir = tbl.new_run_dir()
-            tbl.fs.mkdirs(run_dir)
-            writer_fn = make_direct_writer(run_dir, "zstd", max_chunk_tokens,
-                                           commit_groups=1, uid_prefix=key)
-            meta = (bucketed.select(_COLS)
-                    .mapInArrow(writer_fn, META_DDL).collect())
-            _sweep_orphans(tbl.fs, run_dir,
-                           {r["file"].rsplit("/", 1)[-1] for r in meta})
-            if not meta:
-                # zero-row micro-batch: nothing was written — drop the
-                # run dir instead of stranding it unreferenced forever
-                tbl.fs.delete(run_dir, recursive=True)
-            m = {"n_chunks": sum(r["n_chunks"] for r in meta),
-                 "n_rows": sum(r["n_rows"] for r in meta),
-                 "n_tokens": sum(r["n_tokens"] for r in meta),
-                 "raw_bytes": sum(r["raw_bytes"] for r in meta),
-                 "enc_bytes": sum(r["enc_bytes"] for r in meta),
-                 "max_doc_parts": max((r["max_doc_parts"] for r in meta),
-                                      default=0),
-                 "batch_id": batch_id}
-            if scheme is not None:
-                m["scheme"] = scheme
-            parent = tbl.current_snapshot()
-            totals = next_table_totals(parent, m)
-            if totals is not None:
-                m["table_totals"] = totals
-            cmax = next_chain_max(parent, m["max_doc_parts"])
-            if cmax is not None:
-                m["max_doc_parts_chain"] = cmax
-            # the stream ingests no extras, but a commit that DROPS the
-            # cumulative extra-column chain would force every later
-            # reader back onto the chain-walk fallback (and lose the
-            # declarations once the declaring commits expire)
-            esc = next_extra_schema_chain(parent, {})
-            if esc is not None:
-                m["extra_schema_chain"] = esc
-            tbl.commit({key: sorted(r["file"] for r in meta)}, metrics=m)
-            return
-        # Hadoop-only scheme the pyarrow workers can't address: classic
-        # JVM write, run-dir commit
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-        encoder = make_encoder(max_chunk_tokens, uid_prefix=key)
-        pages = bucketed.select(_COLS).mapInArrow(encoder, PAGES_DDL)
-        obs = Observation()
-        observed = pages.observe(
-            obs, F.count(F.lit(1)).alias("n_chunks"),
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.max("doc_parts").alias("max_doc_parts"))
-        run_dir = tbl.new_run_dir()
-        observed.write.mode("overwrite").parquet(run_dir)
-        m = {k: int(v or 0) for k, v in obs.get.items()}
-        m["batch_id"] = batch_id
+        meta = write_from_tasks(
+            tbl, bucketed.select(_COLS),
+            lambda run_dir: make_direct_writer(
+                run_dir, "zstd", max_chunk_tokens, commit_groups=1,
+                uid_prefix=key))
+        m = {**sum_meta(meta), "batch_id": batch_id}
         if scheme is not None:
             m["scheme"] = scheme
-        parent = tbl.current_snapshot()
-        totals = next_table_totals(parent, m)
-        if totals is not None:
-            m["table_totals"] = totals
-        cmax = next_chain_max(parent, m["max_doc_parts"])
-        if cmax is not None:
-            m["max_doc_parts_chain"] = cmax
-        esc = next_extra_schema_chain(parent, {})
-        if esc is not None:
-            m["extra_schema_chain"] = esc
-        tbl.commit({key: [run_dir]}, metrics=m)
+        tbl.commit({key: sorted(r["file"] for r in meta)}, metrics=m)
 
     stream = (spark.readStream.schema(SCHEMA_DDL).parquet(source_dir)
               .writeStream.foreachBatch(sink)

@@ -16,7 +16,7 @@ is scheme-transparent end to end (Spark jobs read/write the same URIs
 natively).
 
 Layout:
-    {root}/data/run-{run_id}/...parquet     (written by Spark jobs)
+    {root}/data/run-{run_id}/...parquet     (written by Spark tasks)
     {root}/_manifest/snapshot-{N}.json      (immutable; THE commit)
     {root}/_manifest/CURRENT                (advisory roll-forward hint)
     {root}/_manifest/groupsets/groupset-*.json  (immutable spilled group
@@ -114,6 +114,93 @@ def spill_threshold() -> int:
 
 def merge_sets_threshold() -> int:
     return int(os.environ.get("TOKENCODEC_MANIFEST_MERGE_SETS", "32"))
+
+
+# ------------------------------------------------------- chain metrics
+# Every commit carries cumulative whole-table metrics derived from its
+# parent (SnapshotTable.commit): table_totals (so maintenance never
+# scans to size the table), max_doc_parts_chain (decode plans the
+# split-document stitch from one manifest) and extra_schema_chain (the
+# merged extra-column schema). They survive snapshot expiry because
+# every descendant carries them forward. A None return means a legacy
+# chain whose parent predates the field: the commit then omits it and
+# readers walk the retained chain instead.
+
+_TOTAL_KEYS = ("n_chunks", "n_rows", "n_tokens", "enc_bytes")
+
+
+def next_table_totals(parent: dict | None, delta: dict) -> dict | None:
+    """The parent's ``table_totals`` plus this commit's ``delta`` counts
+    (``n_rows`` counts documents: a split document once). None when the
+    parent predates the field."""
+    if parent is None:
+        base = dict.fromkeys(_TOTAL_KEYS, 0)
+    else:
+        base = parent.get("metrics", {}).get("table_totals")
+        if base is None:
+            return None
+    return {k: int(base[k]) + int(delta.get(k, 0)) for k in _TOTAL_KEYS}
+
+
+def merge_extra_schema(base: dict, add: dict) -> dict:
+    """Merge two extra-column schemas: identical types agree, int
+    widens to bigint and float to double (Iceberg's legal promotions),
+    anything else is an incompatible redefinition and fails loudly."""
+    out = dict(base)
+    for k, t in add.items():
+        prev = out.get(k)
+        if prev is None or prev == t:
+            out[k] = t
+        elif {prev, t} == {"int", "bigint"}:
+            out[k] = "bigint"
+        elif {prev, t} == {"float", "double"}:
+            out[k] = "double"
+        else:
+            raise ValueError(
+                f"incompatible schema evolution for column '{k}': "
+                f"{prev} -> {t} (only int -> bigint and float -> double "
+                "widening are allowed)")
+    return out
+
+
+def next_extra_schema_chain(parent: dict | None, this_schema: dict) -> dict | None:
+    """The parent's ``extra_schema_chain`` merged with this commit's
+    schema. None on a legacy chain whose parent lacks the field AND
+    declares extras: consumers then walk the retained chain's
+    per-commit ``extra_schema`` entries."""
+    if parent is None:
+        return dict(this_schema)
+    pm = parent.get("metrics", {})
+    if "extra_schema_chain" in pm:
+        return merge_extra_schema(pm["extra_schema_chain"], this_schema)
+    if "extra_schema" in pm:
+        return None  # legacy-style chain with extras: walk instead
+    # parent chain never declared extras: safe to start the chain here
+    return dict(this_schema)
+
+
+def next_chain_max(parent: dict | None, this_max: int) -> int | None:
+    """The max doc_parts over the whole ancestry: the parent's
+    ``max_doc_parts_chain`` and ``this_max``. None when the parent
+    lacks the field: decode then walks the chain."""
+    if parent is None:
+        return int(this_max)
+    pm = parent.get("metrics", {})
+    if "max_doc_parts_chain" not in pm:
+        return None
+    return max(int(pm["max_doc_parts_chain"]), int(this_max))
+
+
+def _chain_metrics(parent: dict | None, m: dict) -> dict:
+    """The chain metrics a commit of ``m`` on ``parent`` carries, except
+    those ``m`` sets itself (a whole-table rewrite re-anchors them from
+    measured values)."""
+    out = {"table_totals": next_table_totals(parent, m),
+           "max_doc_parts_chain": next_chain_max(
+               parent, m.get("max_doc_parts", 0)),
+           "extra_schema_chain": next_extra_schema_chain(
+               parent, m.get("extra_schema", {}))}
+    return {k: v for k, v in out.items() if v is not None and k not in m}
 
 
 class SnapshotTable:
@@ -607,7 +694,15 @@ class SnapshotTable:
         exists, a replace retries unless its key vanished. After
         ``retries`` lost races the FileExistsError propagates. The
         CURRENT hint write afterwards is advisory; crashing before it
-        does not un-commit (readers roll forward past the hint)."""
+        does not un-commit (readers roll forward past the hint).
+
+        ``metrics`` holds this commit's own delta (``n_chunks``,
+        ``n_rows``, ``n_tokens``, ``enc_bytes``, ``max_doc_parts``,
+        ``extra_schema``); the commit adds the cumulative
+        ``table_totals``, ``max_doc_parts_chain`` and
+        ``extra_schema_chain`` from the parent it lands on. A caller
+        that sets one of them itself re-anchors it (compact, purge and
+        resalt measure whole-table values)."""
         last_err: Exception | None = None
         for _ in range(retries + 1):
             parent = self.current_snapshot()
@@ -625,6 +720,22 @@ class SnapshotTable:
                         f"{pid} while this operation planned against "
                         f"{require_parent_id}; re-run it against the "
                         "current state")
+            m = dict(metrics or {})
+            # the partitioning scheme is chain-invariant between resalt
+            # migrations, but only scheme-stamping commits (encode /
+            # upsert / resalt) used to carry it — a maintenance commit
+            # (delete, purge, compact) followed by expire_snapshots
+            # could truncate the chain past the last stamped one,
+            # silently disabling salt-derived lookup pruning and the
+            # append n_salts guard. Inherit the parent's scheme (O(1);
+            # self-perpetuating once any commit carries it).
+            if "scheme" not in m and parent is not None:
+                psch = parent.get("metrics", {}).get("scheme")
+                if psch:
+                    m["scheme"] = psch
+            # the chain metrics are derived from THIS parent, so a commit
+            # that lost a race re-derives them from the winner
+            m.update(_chain_metrics(parent, m))
             sid = parent["snapshot_id"] + 1 if parent else 0
             inline = dict(parent["groups"]) if parent else {}
             sets = list(parent.get("group_manifests", [])) if parent else []
@@ -693,19 +804,6 @@ class SnapshotTable:
                 else:
                     sets = sets + [self._write_groupset(inline)]
                 inline = {}
-            m = dict(metrics or {})
-            # the partitioning scheme is chain-invariant between resalt
-            # migrations, but only scheme-stamping commits (encode /
-            # upsert / resalt) used to carry it — a maintenance commit
-            # (delete, purge, compact) followed by expire_snapshots
-            # could truncate the chain past the last stamped one,
-            # silently disabling salt-derived lookup pruning and the
-            # append n_salts guard. Inherit the parent's scheme (O(1);
-            # self-perpetuating once any commit carries it).
-            if "scheme" not in m and parent is not None:
-                psch = parent.get("metrics", {}).get("scheme")
-                if psch:
-                    m["scheme"] = psch
             snap = {
                 "snapshot_id": sid,
                 "parent_id": parent["snapshot_id"] if parent else None,
