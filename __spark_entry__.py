@@ -44,8 +44,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tokencodec.spark.table import FORMAT
+
 SEED = 42
 _ENGINE_CACHE: dict[str, str] = {}
+# tables are cached across runs under a directory named for the table
+# format: every entry point refuses a table of another format, so a
+# cache an engine of another format built is never reused
+_CACHE = f"/tmp/tokencodec_entry/format{FORMAT}"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -68,7 +74,7 @@ def _engine_root(spark: SparkSession, sf_dir: str) -> str:
     """Encode a deterministic synth token table sized off the sf dir."""
     from tokencodec.spark import encode_job, synth
     n_rows = _t(spark, sf_dir, "documents").count() * 4
-    root = f"/tmp/tokencodec_entry/v4_n{n_rows}_s{SEED}"
+    root = f"{_CACHE}/v4_n{n_rows}_s{SEED}"
     key = root
     if key not in _ENGINE_CACHE:
         # encode() unconditionally: a complete table is a manifest-only
@@ -187,7 +193,7 @@ def _docs_root(spark: SparkSession, sf_dir: str) -> str:
     from tokencodec.spark import encode_job
     from tokencodec.spark.table import SnapshotTable
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/docs_v2_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/docs_v2_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         # unconditional: no-op when complete, resume when partial
         encode_job.encode(spark, _docs_token_df(spark, sf_dir), root,
@@ -364,7 +370,7 @@ def _upsert_root(spark: SparkSession, sf_dir: str) -> str:
     from tokencodec.spark import maintenance
     from tokencodec.spark.table import SnapshotTable
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/docs_upsert2_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/docs_upsert2_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         from tokencodec.spark import encode_job
         df = _docs_token_df(spark, sf_dir)
@@ -480,7 +486,7 @@ def q_engine_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tokencodec.spark import decode_job, encode_job, maintenance
     from tokencodec.spark.table import SnapshotTable
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/cmp_v2_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/cmp_v2_{_sfkey(sf_dir)}_n{n}"
     key = root + "/compacted"
     if key not in _ENGINE_CACHE:
         encode_job.encode(spark, _docs_token_df(spark, sf_dir), root,
@@ -810,7 +816,7 @@ def _vectors_root(spark: SparkSession, sf_dir: str) -> str:
     per sf dir (float pages; tokencodec/spark/vectors.py)."""
     from tokencodec.spark import vectors
     n = _t(spark, sf_dir, "embeddings").count()
-    root = f"/tmp/tokencodec_entry/vecs_v1_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/vecs_v1_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         vectors.encode_vectors(
             spark, _t(spark, sf_dir, "embeddings"), root, chunk_rows=64)
@@ -852,7 +858,7 @@ def _vectors_wap_root(spark: SparkSession, sf_dir: str) -> str:
     from tokencodec.spark import maintenance, vectors
     from tokencodec.spark.table import SnapshotTable
     n = _t(spark, sf_dir, "embeddings").count()
-    base = f"/tmp/tokencodec_entry/vecwap_v1_{_sfkey(sf_dir)}_n{n}"
+    base = f"{_CACHE}/vecwap_v1_{_sfkey(sf_dir)}_n{n}"
     main, stage = f"{base}/main", f"{base}/stage"
     if main not in _ENGINE_CACHE:
         emb = _t(spark, sf_dir, "embeddings")
@@ -924,7 +930,7 @@ def q_engine_stream_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tokencodec.spark import decode_job, streaming
     from tokencodec.spark.table import SnapshotTable
     n = _t(spark, sf_dir, "documents").count()
-    base = f"/tmp/tokencodec_entry/stream_v1_{_sfkey(sf_dir)}_n{n}"
+    base = f"{_CACHE}/stream_v1_{_sfkey(sf_dir)}_n{n}"
     src, root = f"{base}/src", f"{base}/enc"
     if SnapshotTable(root).current_snapshot() is None:
         _docs_token_df(spark, sf_dir).write.mode("overwrite").parquet(src)
@@ -949,7 +955,7 @@ def _incr_root(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     from tokencodec.spark import streaming
     from tokencodec.spark.table import SnapshotTable
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/incr_v1_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/incr_v1_{_sfkey(sf_dir)}_n{n}"
     src = root + "_src"
     if root not in _ENGINE_CACHE:
         df = _docs_token_df(spark, sf_dir)
@@ -1009,7 +1015,7 @@ def _tag_root(spark: SparkSession, sf_dir: str) -> str:
     from tokencodec.spark import maintenance, streaming
     from tokencodec.spark.table import SnapshotTable
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/tag_v1_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/tag_v1_{_sfkey(sf_dir)}_n{n}"
     src = root + "_src"
     if root not in _ENGINE_CACHE:
         df = _docs_token_df(spark, sf_dir)
@@ -1072,7 +1078,7 @@ def _publish_root(spark: SparkSession, sf_dir: str) -> str:
     from tokencodec.spark import decode_job, encode_job, maintenance
     from tokencodec.spark.table import SnapshotTable
     n = _t(spark, sf_dir, "documents").count()
-    base = f"/tmp/tokencodec_entry/wap_v1_{_sfkey(sf_dir)}_n{n}"
+    base = f"{_CACHE}/wap_v1_{_sfkey(sf_dir)}_n{n}"
     main, stage = f"{base}/main", f"{base}/stage"
     if main not in _ENGINE_CACHE:
         df = _docs_token_df(spark, sf_dir)
@@ -1126,7 +1132,7 @@ def _branch_root(spark: SparkSession, sf_dir: str) -> str:
     from tokencodec.spark import decode_job, encode_job, maintenance
     from tokencodec.spark.table import SnapshotTable
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/brwap_v1_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/brwap_v1_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         df = _docs_token_df(spark, sf_dir)
         num = F.substring("doc_id", 2, 9).cast("bigint")
@@ -1184,7 +1190,7 @@ def _spill_root(spark: SparkSession, sf_dir: str) -> str:
     metadata path serves reads byte-identically."""
     from tokencodec.spark import encode_job
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/spill_v1_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/spill_v1_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         encode_job.encode(spark, _docs_token_df(spark, sf_dir), root,
                           commit_groups=72, direct_write=True)
@@ -1232,7 +1238,7 @@ def _del_root(spark: SparkSession, sf_dir: str) -> str:
     number ends in 3 is equality-deleted (round-5 row-level deletes)."""
     from tokencodec.spark import encode_job, maintenance
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/docsdel_v1_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/docsdel_v1_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         encode_job.encode(spark, _docs_token_df(spark, sf_dir), root,
                           commit_groups=1, max_chunk_tokens=64,
@@ -1292,7 +1298,7 @@ def _evo_root(spark: SparkSession, sf_dir: str) -> str:
     float32 can hold."""
     from tokencodec.spark import encode_job
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/docsevo_v2_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/docsevo_v2_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         t = _docs_token_df(spark, sf_dir)
         num = F.substring("doc_id", 2, 18).cast("bigint")
@@ -1362,7 +1368,7 @@ def _pack_root(spark: SparkSession, sf_dir: str) -> str:
     packing, VERDICT r4 next #1)."""
     from tokencodec.spark import packing
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/pack_v1_{_sfkey(sf_dir)}_n{n}_L{_PACK_L}"
+    root = f"{_CACHE}/pack_v1_{_sfkey(sf_dir)}_n{n}_L{_PACK_L}"
     if root not in _ENGINE_CACHE:
         packing.encode_packed(spark, _docs_token_df(spark, sf_dir), root,
                               seq_len=_PACK_L, commit_groups=1)
@@ -2202,7 +2208,7 @@ def _dedup_del_root(spark: SparkSession, sf_dir: str) -> str:
     from tokencodec.spark import encode_job, maintenance
     from tokencodec.spark.table import SnapshotTable, is_delete_group
     n = _t(spark, sf_dir, "documents").count()
-    root = f"/tmp/tokencodec_entry/dedupdel_v1_{_sfkey(sf_dir)}_n{n}"
+    root = f"{_CACHE}/dedupdel_v1_{_sfkey(sf_dir)}_n{n}"
     if root not in _ENGINE_CACHE:
         encode_job.encode(spark, _docs_token_df(spark, sf_dir), root,
                           commit_groups=1, direct_write=True)

@@ -42,15 +42,11 @@ def run_lookup(spark, monkeypatch):
     return run
 
 
-def _jvm_commit(spark, df, root, group, n_salts, max_chunk_tokens,
-                deletes=None):
+def _jvm_commit(spark, df, root, group, n_salts, max_chunk_tokens):
     """Write ``df``'s pages with Spark's JVM parquet writer into one run
-    directory and commit the directory as data group ``group`` (and,
-    with ``deletes``, a JVM-written delete manifest of those ids in the
-    same commit, the shape upserts once had): the layout earlier engine
-    versions committed, which readers still serve."""
-    import uuid
-
+    directory and commit the directory as data group ``group``: the
+    commit granularity vector tables still use, which snapshot expiry
+    handles. Token readers do not serve it (fsck reports the path)."""
     from pyspark.sql import functions as F
 
     from tokencodec.spark import encode_job
@@ -81,17 +77,63 @@ def _jvm_commit(spark, df, root, group, n_salts, max_chunk_tokens,
                    "commit_groups": 1}
     if extra:
         m["extra_schema"] = extra
-    if deletes is not None:
-        del_dir = tbl.new_run_dir()
-        spark.createDataFrame([(d,) for d in deletes], "doc_id string") \
-            .write.parquet(del_dir)
-        groups[f"del:{uuid.uuid4().hex[:8]}"] = [del_dir]
-        m["n_delete_ids"] = len(set(deletes))
     return tbl.commit(groups, metrics=m)
 
 
 @pytest.fixture(scope="session")
 def jvm_commit():
-    """``jvm_commit(spark, df, root, group, n_salts, max_chunk_tokens,
-    deletes=None)``: commit ``df`` as a JVM-written run directory."""
+    """``jvm_commit(spark, df, root, group, n_salts, max_chunk_tokens)``:
+    commit ``df`` as a JVM-written run directory."""
     return _jvm_commit
+
+
+def _set_format(root, value=None):
+    """Rewrite every snapshot manifest of ``root``'s main chain with its
+    ``format`` stamp set to ``value``, or removed when None: the chain
+    an engine of another table format leaves."""
+    import glob
+    import json
+    import os
+
+    paths = glob.glob(os.path.join(root, "_manifest", "snapshot-*.json"))
+    assert paths
+    for p in paths:
+        with open(p) as f:
+            snap = json.load(f)
+        snap.pop("format", None)
+        if value is not None:
+            snap["format"] = value
+        with open(p, "w") as f:
+            json.dump(snap, f, indent=1)
+
+
+@pytest.fixture(scope="session")
+def set_format():
+    """``set_format(root, value=None)``: restamp (or strip) the format
+    of every snapshot of ``root``."""
+    return _set_format
+
+
+def _file_state(root):
+    """{relative path: (size, mtime_ns, sha256)} of every file under
+    ``root``: equal before and after a call that writes nothing."""
+    import hashlib
+    import os
+
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            p = os.path.join(d, n)
+            st = os.stat(p)
+            with open(p, "rb") as f:
+                digest = hashlib.sha256(f.read()).hexdigest()
+            out[os.path.relpath(p, root)] = (st.st_size, st.st_mtime_ns,
+                                             digest)
+    return out
+
+
+@pytest.fixture(scope="session")
+def file_state():
+    """``file_state(root)``: every file under ``root`` with its size,
+    mtime and digest."""
+    return _file_state

@@ -212,28 +212,30 @@ def test_fsck_catches_wrong_bloom(spark, tmp_path):
 
 def test_blob_scheme_dispatch_never_false_negatives():
     """ADVICE r5 #2: probes may say 'no' only for blobs whose hashing
-    this build provably reproduces. Legacy (schemeless) blobs still
-    probe exactly; an unknown scheme id degrades to keep; fsck's
-    contains_all conversely FAILS on what it cannot validate."""
+    this build provably reproduces. A schemeless blob (the round-5
+    layout, never written since) and an unknown scheme id degrade to
+    keep; fsck's contains_all conversely FAILS on what it cannot
+    validate."""
     import numpy as np
     from tokencodec import bloom
 
     ids = np.array([f"doc-{i:012d}" for i in range(50)], dtype=object)
     blob = bloom.build(ids)
     # v2 layout: scheme byte present and probes exact
-    assert blob[bloom._HEADER.size] == bloom._SCHEME_PANDAS_SIPHASH13
+    scheme_at = bloom._HEADER_V2.size - 1
+    assert blob[scheme_at] == bloom._SCHEME_PANDAS_SIPHASH13
     assert bloom.might_contain(blob, "doc-000000000007")
     assert bloom.contains_all(blob, ids)
-    # legacy blob (round-5 layout, no scheme byte) probes identically
-    legacy = blob[:bloom._HEADER.size] + blob[bloom._HEADER_V2.size:]
-    assert bloom.might_contain(legacy, "doc-000000000007")
-    assert bloom.contains_all(legacy, ids)
+    absent = next(f"absent-{i}" for i in range(1000)
+                  if not bloom.might_contain(blob, f"absent-{i}"))
+    # schemeless blob (round-5 layout): keep, and fsck refuses to vouch
+    legacy = blob[:scheme_at] + blob[bloom._HEADER_V2.size:]
+    assert bloom.might_contain(legacy, absent)
     assert (bloom.series_might_contain(np.array([legacy, blob], dtype=object),
-                                       "doc-000000000007") == [True, True]).all()
-    # a legacy 'no' stays a 'no' (pruning power preserved)
-    assert bloom.might_contain(legacy, "absent-id") == \
-        bloom.might_contain(blob, "absent-id")
+                                       absent) == [True, False]).all()
+    assert bloom.series_might_contain_any([legacy], [absent]).all()
+    assert not bloom.contains_all(legacy, ids)
     # unknown scheme: probes keep, fsck refuses to vouch
-    alien = blob[:bloom._HEADER.size] + b"\xfe" + blob[bloom._HEADER_V2.size:]
+    alien = blob[:scheme_at] + b"\xfe" + blob[bloom._HEADER_V2.size:]
     assert bloom.might_contain(alien, "definitely-not-there")
     assert not bloom.contains_all(alien, ids)

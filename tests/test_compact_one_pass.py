@@ -73,21 +73,27 @@ def _assert_one_compact_snapshot(spark, root, pre_sid, snap, n_ids, purged):
 
 @pytest.mark.parametrize("chain", ["legacy", "sequence"])
 def test_compact_purges_deletes_in_one_snapshot(spark, tmp_path, monkeypatch,
-                                                chain):
+                                                chain, file_state):
     """Whole docs and a split doc deleted, then one compaction: one new
     snapshot, delete groups emptied, purged rows recorded, merged chunks
-    (extras included) and rows equal to the pre-compaction decode."""
+    (extras included) and rows equal to the pre-compaction decode. On a
+    chain whose delete manifests lost their sequence attribution
+    ("legacy") compaction refuses, naming the group, and writes
+    nothing."""
     root = str(tmp_path / "t")
     df = _source(spark)
     _encode(spark, root, df, 512)
-    if chain == "legacy":
-        # a chain whose delete manifests carry no sequence attribution:
-        # every copy of a deleted id dies
-        monkeypatch.setattr(SnapshotTable, "group_seqs",
-                            lambda self, snap=None: {})
     doomed = _whole_ids(spark, root, 6) + _split_ids(spark, root)[:1]
     maintenance.delete_docs(spark, root, doomed)
     pre_sid = SnapshotTable(root).current_snapshot()["snapshot_id"]
+    if chain == "legacy":
+        monkeypatch.setattr(SnapshotTable, "group_seqs",
+                            lambda self, snap=None: {})
+        before = file_state(root)
+        with pytest.raises(RuntimeError, match="del:"):
+            maintenance.compact(spark, root, max_chunk_tokens=4096)
+        assert file_state(root) == before
+        return
     n_before = encode_job.read_pages(spark, root).count()
 
     snap = maintenance.compact(spark, root, max_chunk_tokens=4096)

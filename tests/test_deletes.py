@@ -169,3 +169,30 @@ def test_incremental_changes_skip_delete_commits(spark, table):
     assert decode_job.decode_changes(spark, root, sid).count() == 0
     maintenance.purge_deletes(spark, root)
     assert decode_job.decode_changes(spark, root, sid).count() == 0
+
+
+def test_lookups_read_delete_ids_once(spark, tmp_path, monkeypatch):
+    """Delete-id files are immutable and uniquely named: two point
+    lookups on one snapshot with pending deletes open each delete file
+    once between them."""
+    root = str(tmp_path / "t")
+    df = synth.token_table(spark, 60, seed=12).cache()
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4)
+    ids = sorted(r.doc_id for r in df.select("doc_id").collect())
+    maintenance.delete_docs(spark, root, ids[:2])
+    maintenance.delete_docs(spark, root, ids[2:3])
+    del_files = sorted(p for k, ps in SnapshotTable(root).committed_groups()
+                       .items() if is_delete_group(k) for p in ps)
+    assert len(del_files) == 2
+    opened = []
+    real = encode_job._open_parquet
+
+    def spy(path):
+        opened.append(path)
+        return real(path)
+
+    monkeypatch.setattr(encode_job, "_open_parquet", spy)
+    got = [decode_job.decode(spark, root, doc_id_min=d,
+                             doc_id_max=d).count() for d in (ids[0], ids[5])]
+    assert got == [0, 1]
+    assert sorted(p for p in opened if p in del_files) == del_files

@@ -4,9 +4,8 @@ run no Spark job.
 Every lookup here must equal a full decode() — a Spark scan — filtered
 to the same ids, bit-identical per token array, packed and unpacked,
 and must leave no job in its job group. The table mixes what a lookup
-has to get right: direct-written files and a classic JVM write
-committed as a run directory, split documents, an extra column added
-by a later commit, pending sequence-aware deletes with an upsert re-add,
+has to get right: direct-written files of several appends, split
+documents, an extra column added by a later commit, pending sequence-aware deletes with an upsert re-add,
 a tag, a branch and absent ids.
 """
 
@@ -45,7 +44,7 @@ def _with_lang(df):
 
 
 @pytest.fixture(scope="module")
-def table(spark, tmp_path_factory, jvm_commit):
+def table(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("driver_lookup") / "t")
     src = synth.token_table(spark, 320, seed=41).cache()
     lens = sorted(r.n_tok for r in src.select("n_tok").collect())
@@ -58,9 +57,10 @@ def table(spark, tmp_path_factory, jvm_commit):
                       direct_write=True)
     tbl = SnapshotTable(root)
     tbl.create_tag("v1")
-    # a JVM write committed as its run directory adds the extra column
-    jvm_commit(spark, _with_lang(src.filter(F.col("doc_id") >= cut)), root,
-               "cls0", n_salts=8, max_chunk_tokens=budget)
+    # an append in one task adds the extra column
+    encode_job.encode(spark, _with_lang(src.filter(F.col("doc_id") >= cut)),
+                      root, commit_groups=1, group_prefix="cls",
+                      max_chunk_tokens=budget, partitions=1)
     before = tbl.current_snapshot()["snapshot_id"]
     gone, readded, replaced = ids[5], ids[7], ids[250]
     maintenance.delete_docs(spark, root, [gone, readded, split[0]])
@@ -140,18 +140,22 @@ def test_row_filters_apply_to_lookups(spark, table, run_lookup):
     assert {r.doc_id for r in rows} == want
 
 
-def test_classic_table_lookups(spark, tmp_path, run_lookup, jvm_commit):
-    """A table whose pages are one JVM write: its committed data path
-    is a run directory, read whole; the report cannot size it."""
+def test_classic_table_lookups(spark, tmp_path, run_lookup):
+    """A table whose pages are one encode task's single file (the shape
+    a classic one-job write had, now task-written like every table):
+    split documents and a pending delete, and the report sizes what
+    each lookup reads."""
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 80, seed=13).cache()
-    jvm_commit(spark, df, root, "g0", n_salts=4, max_chunk_tokens=64)
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
+                      max_chunk_tokens=64, partitions=1)
+    assert len(SnapshotTable(root).data_paths()) == 1
     big = df.orderBy(F.desc("n_tok")).first().doc_id
     ids = sorted(r.doc_id for r in df.select("doc_id").collect())
     dead = ids[1]
     maintenance.delete_docs(spark, root, [dead])
     rep = decode_job.lookup_report(root, [big])
-    assert rep["row_groups_kept"] is None and rep["bytes_kept"] is None
+    assert rep["row_groups_kept"] >= 1 and rep["bytes_kept"] > 0
     cols = ["doc_id", "tokens", "n_tok", "source"]
     want = _rows(df.filter(F.col("doc_id") != dead).collect(), cols)
     for d in (big, ids[0], dead, "zz"):

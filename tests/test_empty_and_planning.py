@@ -12,6 +12,8 @@
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tokencodec.spark import decode_job, encode_job, synth
@@ -61,15 +63,20 @@ def test_decode_plan_build_runs_no_job(spark, tmp_path):
     assert out.count() == 300
 
 
-def test_decode_plan_probe_fallback_for_legacy_manifest(spark, tmp_path):
+def test_decode_plan_probe_fallback_for_legacy_manifest(spark, tmp_path,
+                                                        set_format):
     """Commits without the max_doc_parts metric (older engine versions)
-    must fall back to the metadata probe, not mis-plan."""
+    once made decode fall back to a metadata probe job. Such a chain
+    lacks the format stamp, so decode now refuses it while planning,
+    with no Spark job, and a current chain plans from the snapshot's
+    max_doc_parts_chain alone."""
     import json
     from tokencodec.spark.table import SnapshotTable
 
     root = str(tmp_path / "legacy")
     df = synth.token_table(spark, 200, seed=11)
     encode_job.encode(spark, df, root, commit_groups=1)
+    assert decode_job.decode(spark, root).count() == 200
     tbl = SnapshotTable(root)
     # strip the metric from every snapshot in place (manifests are JSON)
     mdir = tbl.manifest_dir
@@ -81,5 +88,12 @@ def test_decode_plan_probe_fallback_for_legacy_manifest(spark, tmp_path):
             snap["metrics"].pop("max_doc_parts_chain", None)
             with open(p, "w") as f:
                 json.dump(snap, f)
-    assert decode_job._max_doc_parts_from_manifest(root, None) is None
-    assert decode_job.decode(spark, root).count() == 200
+    set_format(root)
+    sc = spark.sparkContext
+    sc.setJobGroup("legacy-plan", "legacy-plan")
+    try:
+        with pytest.raises(ValueError, match="re-encode"):
+            decode_job.decode(spark, root)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("legacy-plan") == []

@@ -39,3 +39,57 @@ def test_fsck_clean_and_corrupt(spark, tmp_path):
     bad_rows = rep2.filter(~F.col("ok")).collect()
     assert len(bad_rows) == 1
     assert "crc" in bad_rows[0].error.lower() or "mismatch" in bad_rows[0].error.lower()
+
+
+def _rewrite_column(f, name, values):
+    import os
+
+    import pyarrow as pa
+    t = pq.read_table(f)
+    i = t.column_names.index(name)
+    t = t.set_column(i, t.schema.field(i),
+                     pa.array(values, t.schema.field(i).type))
+    pq.write_table(t, f)
+    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def test_fsck_reports_null_stats_and_non_json_source_set(spark, tmp_path):
+    """Readers assume every chunk's n_tok bounds are set and its source
+    set is NULL or a JSON array: a hand-nulled n_tok_max and a
+    comma-joined source set are each reported bad, by name."""
+    root = str(tmp_path / "enc")
+    df = synth.token_table(spark, 200, seed=42)
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4)
+    f = next(p for p in sorted(glob.glob(f"{root}/data/run-*/*.parquet"))
+             if pq.ParquetFile(p).metadata.num_rows > 1)
+    t = pq.read_table(f)
+    n_tok_max = t.column("n_tok_max").to_pylist()
+    n_tok_max[0] = None
+    _rewrite_column(f, "n_tok_max", n_tok_max)
+    sets = t.column("source_set").to_pylist()
+    sets[1] = "web,code"
+    _rewrite_column(f, "source_set", sets)
+    uids = t.column("chunk_uid").to_pylist()
+    bad = {r.chunk_uid: r.error
+           for r in fsck.fsck(spark, root).filter(~F.col("ok")).collect()}
+    assert set(bad) == {uids[0], uids[1]}
+    assert "NULL n_tok_max" in bad[uids[0]]
+    assert "not a JSON array" in bad[uids[1]]
+
+
+def test_fsck_reports_committed_directory(spark, tmp_path, jvm_commit):
+    """A committed token data path must be a task-written parquet file:
+    a run directory committed with SnapshotTable.commit is reported bad
+    (its chunks are still checked)."""
+    root = str(tmp_path / "enc")
+    df = synth.token_table(spark, 100, seed=43)
+    snap = jvm_commit(spark, df, root, "g0", n_salts=4,
+                      max_chunk_tokens=2000)
+    run_dir = snap["groups"]["g0"][0]
+    rep = fsck.fsck(spark, root)
+    bad = rep.filter(~F.col("ok")).collect()
+    assert [(r.chunk_uid, r.error) for r in bad] == [
+        (run_dir, "committed data path is not a .parquet file")]
+    assert rep.filter(F.col("ok")).count() > 0

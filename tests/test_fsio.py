@@ -68,9 +68,10 @@ def test_commit_race_never_overwrites_and_rebases(tmp_path):
     tbl = SnapshotTable(root)
     tbl.commit({"g0": ["a"]})
     # a racing committer landed snapshot 1 (complete, well-formed)
-    winner = {"snapshot_id": 1, "parent_id": 0, "timestamp_ms": 0,
-              "groups": {"g0": ["a"], "gwin": ["w"]},
-              "new_groups": ["gwin"], "metrics": {}}
+    winner = {"format": 1, "snapshot_id": 1, "parent_id": 0,
+              "timestamp_ms": 0, "groups": {"g0": ["a"], "gwin": ["w"]},
+              "new_groups": ["gwin"],
+              "metrics": tbl.current_snapshot()["metrics"]}
     tbl.fs.create_excl(f"{root}/_manifest/snapshot-000001.json",
                        json.dumps(winner))
     snap = tbl.commit({"g1": ["b"]})

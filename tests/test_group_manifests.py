@@ -336,11 +336,11 @@ def test_commit_race_loser_rebases_across_sets(tmp_path):
     tbl = _mk(tmp_path)
     tbl.commit(_groups(20))  # spilled set
     parent = tbl.current_snapshot()
-    winner = {"snapshot_id": parent["snapshot_id"] + 1,
+    winner = {"format": 1, "snapshot_id": parent["snapshot_id"] + 1,
               "parent_id": parent["snapshot_id"],
               "timestamp_ms": 0,
               "groups": dict(parent["groups"], w0=["/w0.parquet"]),
-              "new_groups": ["w0"], "metrics": {}}
+              "new_groups": ["w0"], "metrics": parent["metrics"]}
     if parent.get("group_manifests"):
         winner["group_manifests"] = list(parent["group_manifests"])
     real_excl = tbl.fs.create_excl
@@ -376,11 +376,11 @@ def test_commit_race_loser_reclaims_spilled_sets(tmp_path):
     tbl = _mk(tmp_path)
     tbl.commit(_groups(20))  # parent already owns spilled sets
     parent = tbl.current_snapshot()
-    winner = {"snapshot_id": parent["snapshot_id"] + 1,
+    winner = {"format": 1, "snapshot_id": parent["snapshot_id"] + 1,
               "parent_id": parent["snapshot_id"],
               "timestamp_ms": 0,
               "groups": dict(parent["groups"], w0=["/w0.parquet"]),
-              "new_groups": ["w0"], "metrics": {},
+              "new_groups": ["w0"], "metrics": parent["metrics"],
               "group_manifests": list(parent["group_manifests"])}
     real_excl = tbl.fs.create_excl
     state = {"planted": False}
@@ -417,11 +417,11 @@ def test_commit_race_duplicate_after_rebase_refused(tmp_path):
     tbl = _mk(tmp_path)
     tbl.commit(_groups(20))
     parent = tbl.current_snapshot()
-    winner = {"snapshot_id": parent["snapshot_id"] + 1,
+    winner = {"format": 1, "snapshot_id": parent["snapshot_id"] + 1,
               "parent_id": parent["snapshot_id"],
               "timestamp_ms": 0,
               "groups": dict(parent["groups"], w0=["/theirs.parquet"]),
-              "new_groups": ["w0"], "metrics": {}}
+              "new_groups": ["w0"], "metrics": parent["metrics"]}
     if parent.get("group_manifests"):
         winner["group_manifests"] = list(parent["group_manifests"])
     real_excl = tbl.fs.create_excl

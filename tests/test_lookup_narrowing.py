@@ -5,8 +5,8 @@ statistics admit a match (decode_job._file_plan). Hypothesis draws
 present, absent and split ids and n_tok / doc-id ranges; every point
 lookup, batch lookup and range scan must equal a full-scan decode()
 filtered the same way. The table mixes every case narrowing must keep:
-direct-written files, a file rewritten without statistics, a classic
-JVM write committed as a run directory, split documents, and
+direct-written files, a file rewritten without statistics, a one-task
+append, split documents, and
 sequence-aware deletes with an upsert re-add — read both at the current
 snapshot and by time travel to a snapshot before the deletes.
 """
@@ -39,7 +39,7 @@ def _rows(df) -> dict:
 
 
 @pytest.fixture(scope="module")
-def table(spark, tmp_path_factory, jvm_commit):
+def table(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("narrowing") / "t")
     src = synth.token_table(spark, 360, seed=23).cache()
     lens = sorted(r.n_tok for r in src.select("n_tok").collect())
@@ -57,10 +57,10 @@ def table(spark, tmp_path_factory, jvm_commit):
         os.remove(crc)
     bare_ids = pq.read_table(bare, columns=["doc_id_min"]) \
         .column(0).to_pylist()
-    # a JVM write committed as its run directory, not files
-    jvm_commit(spark, src.filter(F.col("doc_id") >= "doc-000000000300"),
-               root, "cls0", n_salts=8, max_chunk_tokens=budget)
-    run_dir = next(p for p in tbl.data_paths() if not p.endswith(".parquet"))
+    # an append in one task: one file holding every salt it touches
+    encode_job.encode(spark, src.filter(F.col("doc_id") >= "doc-000000000300"),
+                      root, commit_groups=1, group_prefix="cls",
+                      max_chunk_tokens=budget, partitions=1)
     before = tbl.current_snapshot()["snapshot_id"]
     ids = sorted(r.doc_id for r in src.select("doc_id").collect())
     split = [r.doc_id for r in src.orderBy(F.desc("n_tok")).limit(3).collect()]
@@ -82,14 +82,14 @@ def table(spark, tmp_path_factory, jvm_commit):
                    "doc-999999999999", "a"})
     return {"root": root, "full": full, "before": before, "pool": pool,
             "split": split, "bare_ids": bare_ids[:4],
-            "bare": bare, "run_dir": run_dir, "budget": budget,
+            "bare": bare, "budget": budget,
             "n_tok": {s: {d: v[0] for d, v in rows.items()}
                       for s, rows in full.items()}}
 
 
 def _always_kept(t, rep):
     kept = set(rep["paths"])
-    assert t["run_dir"] in kept and t["bare"] in kept, rep
+    assert t["bare"] in kept, rep
     assert rep["files_kept"] == len(kept) <= rep["files_considered"]
 
 

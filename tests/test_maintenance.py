@@ -294,18 +294,25 @@ def test_expire_removes_emptied_run_dirs(spark, tmp_path):
 
 def test_expire_mixed_dir_and_file_commits_keeps_live_data(spark, tmp_path,
                                                            jvm_commit):
-    """A legacy dir-granular snapshot superseded by a file-granular
-    rewrite must expire without touching the live files: the dead run
-    DIR's parent is {root}/data, and sweeping that would destroy every
-    sibling run dir (regression test for exactly that)."""
+    """A dir-granular snapshot (the run-directory commits vector tables
+    still make) superseded by a file-granular replace-commit must
+    expire without touching the live files: the dead run DIR's parent
+    is {root}/data, and sweeping that would destroy every sibling run
+    dir (regression test for exactly that)."""
+    from tokencodec.spark import partition as part
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 300, seed=21)
-    # a JVM write commits the run DIRECTORY (legacy granularity)
+    # a JVM write commits the run DIRECTORY
     jvm_commit(spark, df, root, "g0", n_salts=4, max_chunk_tokens=2000)
-    assert any(SnapshotTable(root).fs.isdir(p)
-               for p in SnapshotTable(root).data_paths())
-    # file-granular rewrite supersedes it
-    maintenance.compact(spark, root, max_chunk_tokens=1 << 21)
+    tbl = SnapshotTable(root)
+    assert any(tbl.fs.isdir(p) for p in tbl.data_paths())
+    # the same pages written by the tasks as files in a sibling run
+    # directory replace it
+    meta = encode_job.write_from_tasks(
+        tbl, part.bucketed(df, n_salts=4).select(encode_job._COLS),
+        lambda run_dir: encode_job.make_direct_writer(
+            run_dir, "zstd", 2000, uid_prefix="g0"))
+    tbl.commit({"g0": sorted(r["file"] for r in meta)}, replace=True)
     live = SnapshotTable(root).data_paths()
     assert all(not SnapshotTable(root).fs.isdir(p) for p in live)
 

@@ -106,12 +106,15 @@ def test_chunk_uids_table_unique(spark, enc_root):
     assert pages.select("chunk_uid").distinct().count() == n
 
 
-def test_decode_legacy_pages_without_split_columns(spark, tmp_path):
-    """Tables written before doc splitting / split_uid existed decode
-    through the back-compat branches — including MIXED tables where a
-    legacy run (with split docs) and a modern run coexist: legacy split
-    parts must regroup per doc_id, never merge across docs via the NULL
-    split_uid."""
+def test_decode_legacy_pages_without_split_columns(spark, tmp_path,
+                                                   set_format):
+    """Pages written before split_uid existed (NULL split_uid, committed
+    as a run directory) only ever sat in chains without the format
+    stamp: decode refuses such a chain. Committed into a current table
+    by hand, they break invariants the readers assume, and fsck reports
+    the directory and every chunk without a split_uid."""
+    from tokencodec.spark import fsck
+
     root = str(tmp_path / "legacy")
     df_old = synth.token_table(spark, 120, seed=17)
     # splits in the legacy data: budget below the median doc length
@@ -123,16 +126,14 @@ def test_decode_legacy_pages_without_split_columns(spark, tmp_path):
     legacy_dir = str(tmp_path / "legacy_run")
     legacy.write.mode("overwrite").parquet(legacy_dir)
 
+    set_format(root)
+    for packed in (False, True):
+        with pytest.raises(ValueError, match="re-encode"):
+            decode_job.decode(spark, root, packed=packed)
+
     mixed_root = str(tmp_path / "mixed")
-    tbl2 = SnapshotTable(mixed_root)
-    tbl2.commit({"legacy": [legacy_dir]})
-    # modern run appended into the same table (doc ids disjoint)
-    df_new = (synth.token_table(spark, 60, seed=17)
-              .withColumn("doc_id", F.concat(F.lit("new-"), F.col("doc_id"))))
-    encode_job.encode(spark, df_new, mixed_root, commit_groups=1,
-                      max_chunk_tokens=1 << 9)
-    out = decode_job.decode(spark, mixed_root)
-    expected = df_old.unionByName(df_new)
-    assert decode_job.audit(expected, out) == {"missing": 0, "extra": 0, "ok": True}
-    packed = decode_job.decode(spark, mixed_root, packed=True)
-    assert packed.count() == 180
+    SnapshotTable(mixed_root).commit({"legacy": [legacy_dir]},
+                                     metrics={"max_doc_parts": 8})
+    bad = fsck.fsck(spark, mixed_root).filter(~F.col("ok")).collect()
+    assert legacy_dir in {r.chunk_uid for r in bad}
+    assert sum("NULL split_uid" in r.error for r in bad) == legacy.count()

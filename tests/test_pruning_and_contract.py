@@ -157,22 +157,23 @@ def test_n_tok_pruning_never_drops_split_docs(spark, tmp_path):
     assert decode_job.audit(expected, out) == {"missing": 0, "extra": 0, "ok": True}
 
 
-def test_stats_nulls_from_legacy_files_never_prune(spark, enc_root):
-    """Pages written before the stats columns existed surface them as
-    NULL under the explicit read schema; decode must keep such chunks."""
-    df, root = enc_root
-    pages = encode_job.read_pages(spark, root)
-    legacy = pages.withColumn("n_tok_min", F.lit(None).cast("int")) \
-                  .withColumn("n_tok_max", F.lit(None).cast("int")) \
-                  .withColumn("source_set", F.lit(None).cast("string"))
-    import tokencodec.spark.decode_job as dj
-    orig = dj.read_pages
-    try:
-        dj.read_pages = lambda *a, **k: legacy
-        out = decode_job.decode(spark, root, sources=["web"], n_tok_min=500)
-    finally:
-        dj.read_pages = orig
-    expected = df.filter((F.col("source") == "web") & (F.col("n_tok") >= 500))
+def test_stats_nulls_from_legacy_files_never_prune(spark, tmp_path):
+    """The one stat a current writer leaves NULL is the source set of a
+    chunk holding more than 8 sources (the recording cap); decode must
+    keep such chunks. (Pages whose n_tok stats were NULL came only from
+    engines before the table-format stamp, whose chains are refused.)"""
+    df = (synth.token_table(spark, 600, seed=3)
+          .withColumn("source", F.concat(F.lit("s"), F.pmod(
+              F.xxhash64("doc_id"), F.lit(40)).cast("string")))
+          .cache())
+    root = str(tmp_path / "t")
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=1)
+    sets = [r.source_set for r in encode_job.read_pages(spark, root)
+            .select("source_set").collect()]
+    assert sum(s is None for s in sets) > len(sets) // 2
+    out = decode_job.decode(spark, root, sources=["s3"], n_tok_min=500)
+    expected = df.filter((F.col("source") == "s3") & (F.col("n_tok") >= 500))
+    assert expected.count() > 0
     assert decode_job.audit(expected, out) == {"missing": 0, "extra": 0, "ok": True}
 
 

@@ -207,14 +207,11 @@ def test_random_branched_program_matches_dual_models(spark, tmp_path, seed):
         check(step)
 
 
-def test_run_directory_and_file_commits_mask_by_their_own_seq(spark,
-                                                              tmp_path,
-                                                              jvm_commit):
-    """The first upsert here commits JVM-written run directories (pages
-    and delete ids, the shape upserts once had), everything else
-    commits files: each masks by its own commit seq (a scan matches a
-    file exactly, else its run directory) through deletes, revivals and
-    a delete of an upserted replacement."""
+def test_file_commits_mask_by_their_own_seq(spark, tmp_path):
+    """Every commit here (encodes, deletes, upserts) commits files: each
+    masks by its own commit seq (a scan matches its file exactly)
+    through deletes, revivals and a delete of an upserted
+    replacement."""
     from tokencodec.spark.table import SnapshotTable, is_delete_group
     rng = random.Random(404)
     root = str(tmp_path / "t")
@@ -231,8 +228,8 @@ def test_run_directory_and_file_commits_mask_by_their_own_seq(spark,
     del model[a], model[b]
     step("delete")
     ups = {b: _tokens(rng), c: _tokens(rng), ids[38]: _tokens(rng)}
-    jvm_commit(spark, _df(spark, ups), root, "upsjvm0", n_salts=4,
-               max_chunk_tokens=BUDGET, deletes=sorted(ups))
+    maintenance.upsert_docs(spark, root, _df(spark, ups),
+                            max_chunk_tokens=BUDGET)
     model.update(ups)
     step("upsert")
     add = {a: _tokens(rng)}
@@ -251,5 +248,4 @@ def test_run_directory_and_file_commits_mask_by_their_own_seq(spark,
     step("upsert-revive")
     data = [p for k, ps in SnapshotTable(root).committed_groups().items()
             if not is_delete_group(k) for p in ps]
-    assert any(p.endswith(".parquet") for p in data)
-    assert any(not p.endswith(".parquet") for p in data)
+    assert data and all(p.endswith(".parquet") for p in data)

@@ -26,9 +26,9 @@ def _plant_unswapped_commit(root):
     tbl = SnapshotTable(root)
     cur = tbl.current_snapshot()
     sid = cur["snapshot_id"] + 1
-    snap = {"snapshot_id": sid, "parent_id": cur["snapshot_id"],
+    snap = {"format": 1, "snapshot_id": sid, "parent_id": cur["snapshot_id"],
             "timestamp_ms": 0, "groups": {**cur["groups"], "gnew": []},
-            "new_groups": ["gnew"], "metrics": {}}
+            "new_groups": ["gnew"], "metrics": cur["metrics"]}
     path = os.path.join(root, "_manifest", f"snapshot-{sid:06d}.json")
     with open(path, "w") as f:
         json.dump(snap, f)
@@ -143,8 +143,9 @@ def test_orphan_gc_refuses_without_chain_anchor(tmp_path, monkeypatch):
     root = str(tmp_path / "t")
     os.makedirs(os.path.join(root, "_manifest"))
     with open(os.path.join(root, "_manifest", "snapshot-000000.json"), "w") as f:
-        json.dump({"snapshot_id": 0, "parent_id": None, "timestamp_ms": 0,
-                   "groups": {"g0": []}, "new_groups": ["g0"], "metrics": {}}, f)
+        json.dump({"format": 1, "snapshot_id": 0, "parent_id": None,
+                   "timestamp_ms": 0, "groups": {"g0": []},
+                   "new_groups": ["g0"], "metrics": {}}, f)
     # sanity: with a readable anchor GC runs fine
     assert maintenance.remove_orphan_files(root, older_than_hours=0) == {
         "deleted_orphan_dirs": 0, "deleted_claim_manifests": 0,
@@ -208,8 +209,8 @@ def test_split_doc_planning_survives_expiry(spark, tmp_path):
 
     maintenance.expire_snapshots(root, keep_last=1)
     # manifest-only planning still knows about the splits
-    mdp = decode_job._max_doc_parts_from_manifest(root, None)
-    assert mdp is not None and mdp > 1
+    snap = SnapshotTable(root).current_snapshot()
+    assert snap["metrics"]["max_doc_parts_chain"] > 1
     # and the decoded rows are the full original rows
     both = df.unionByName(spark.read.parquet(src2))
     assert decode_job.audit(both, decode_job.decode(spark, root), strict=True)["ok"]

@@ -5,8 +5,9 @@ delete manifest in ONE commit — replaces rows atomically, a deleted
 doc re-added later becomes visible again, purge keeps replacements
 while removing superseded copies physically, and expire_snapshots
 persists attribution (table.group_seqs side file) so none of this
-degrades when history is truncated. Legacy chains without attribution
-keep the global-masking behavior byte-for-byte.
+degrades when history is truncated. A chain of an older table format
+(no attribution) is refused, and a pending delete without attribution
+is a fault.
 
 The reference is a read-only decoder (no write surface at all); this
 is engine-added Iceberg-parity semantics over the snapshot table."""
@@ -143,33 +144,40 @@ def test_expire_persists_attribution(spark, table):
                                           "ok": True}
 
 
-def test_legacy_chain_keeps_global_masking(spark, table):
-    """A chain with NO surviving attribution (tables written before
-    sequence tracking, simulated by stripping new_groups and the side
-    file) masks every copy of a deleted id — the pre-seq behavior,
-    preserved bit-for-bit."""
+def _strip_attribution(root):
+    """Drop every snapshot's new_groups: no delete group keeps its
+    first-commit attribution."""
+    tbl = SnapshotTable(root)
+    for name in tbl.fs.listdir(tbl.manifest_dir):
+        if name.startswith("snapshot-"):
+            p = os.path.join(tbl.manifest_dir, name)
+            s = json.loads(tbl.fs.read_text(p))
+            s.pop("new_groups", None)
+            tbl.fs.write_atomic(p, json.dumps(s))
+    assert tbl.group_seqs() == {}
+
+
+def test_unattributed_delete_is_a_fault(spark, table, set_format):
+    """A pending delete whose attribution is gone (stripped new_groups,
+    no side file) is a fault every read reports by group, never a
+    global mask; the same chain without the format stamp, as engines
+    before sequence tracking wrote it, is refused outright."""
     root, df = table
     gone = _targets(df, 2)
-    maintenance.delete_docs(spark, root, gone)
-    # re-add via a plain append (what a legacy-era operator would do)
+    snap = maintenance.delete_docs(spark, root, gone)
     encode_job.encode(spark, df.filter(F.col("doc_id").isin(gone)), root,
                       commit_groups=1, n_salts=4, group_prefix="readd",
                       max_chunk_tokens=BUDGET, direct_write=True)
-    tbl = SnapshotTable(root)
-    # strip attribution: legacy manifests never recorded new_groups
-    for name in tbl.fs.listdir(tbl.manifest_dir):
-        if not name.startswith("snapshot-"):
-            continue
-        p = os.path.join(tbl.manifest_dir, name)
-        s = json.loads(tbl.fs.read_text(p))
-        s.pop("new_groups", None)
-        tbl.fs.write_atomic(p, json.dumps(s))
-    assert tbl.group_seqs() == {}
-    out = decode_job.decode(spark, root)
-    # the delete masks the ORIGINAL and the re-added copy alike
-    assert out.filter(F.col("doc_id").isin(gone)).count() == 0
-    assert decode_job.audit(df.filter(~F.col("doc_id").isin(gone)),
-                            out) == {"missing": 0, "extra": 0, "ok": True}
+    _strip_attribution(root)
+    del_group = next(k for k in snap["new_groups"] if k.startswith("del:"))
+    for read in (lambda: decode_job.decode(spark, root),
+                 lambda: decode_job.decode(spark, root, doc_ids=gone),
+                 lambda: maintenance.compact(spark, root)):
+        with pytest.raises(RuntimeError, match=del_group):
+            read()
+    set_format(root)
+    with pytest.raises(ValueError, match="re-encode"):
+        decode_job.decode(spark, root)
 
 
 def test_upsert_incremental_changes_sees_new_rows(spark, table):
@@ -303,30 +311,34 @@ def test_branch_fork_carries_upsert_attribution(spark, table):
         "missing": 0, "extra": 0, "ok": True}
 
 
-def test_upsert_refuses_unattributed_deletes(spark, table):
-    """A delete manifest with no sequence attribution (pre-seq chain)
-    masks EVERY copy — an upsert on top would silently lose its
-    replacements, so it must refuse and point at purge_deletes."""
+def test_upsert_refuses_unattributed_deletes(spark, tmp_path, table,
+                                            set_format, file_state):
+    """A chain whose deletes carry no sequence attribution is one an
+    engine before sequence tracking wrote: upsert refuses it as an older
+    table format and writes nothing. On this engine's chains every
+    delete is attributed, so an upsert re-adding deleted ids shows them
+    again, before and after a purge."""
+    import shutil
+
     root, df = table
     gone = _targets(df, 2)
     maintenance.delete_docs(spark, root, gone)
-    tbl = SnapshotTable(root)
-    for name in tbl.fs.listdir(tbl.manifest_dir):
-        if name.startswith("snapshot-"):
-            p = os.path.join(tbl.manifest_dir, name)
-            s = json.loads(tbl.fs.read_text(p))
-            s.pop("new_groups", None)
-            tbl.fs.write_atomic(p, json.dumps(s))
-    with pytest.raises(ValueError, match="purge_deletes first"):
+    old = str(tmp_path / "old")
+    shutil.copytree(root, old)
+    _strip_attribution(old)
+    set_format(old)
+    before = file_state(old)
+    with pytest.raises(ValueError, match="re-encode"):
         maintenance.upsert_docs(
-            spark, root, df.filter(F.col("doc_id").isin(gone)))
-    # purging applies the legacy deletes physically and unblocks upsert
-    maintenance.purge_deletes(spark, root)
+            spark, old, df.filter(F.col("doc_id").isin(gone)))
+    assert file_state(old) == before
     maintenance.upsert_docs(spark, root,
                             df.filter(F.col("doc_id").isin(gone)))
-    out = decode_job.decode(spark, root)
-    assert decode_job.audit(df, out) == {"missing": 0, "extra": 0,
-                                         "ok": True}
+    assert decode_job.audit(df, decode_job.decode(spark, root)) == {
+        "missing": 0, "extra": 0, "ok": True}
+    maintenance.purge_deletes(spark, root)
+    assert decode_job.audit(df, decode_job.decode(spark, root)) == {
+        "missing": 0, "extra": 0, "ok": True}
 
 
 def test_duplicate_branch_fork_cannot_clobber_attribution(spark, table):

@@ -300,14 +300,12 @@ def main(argv: list[str] | None = None) -> int:
                "n_data_paths": n_files,
                "group_manifests": len(snap.get("group_manifests", [])),
                "inline_groups": len(snap["groups"]),
-               "table_totals": snap.get("metrics", {}).get("table_totals"),
-               "max_doc_parts": None,
+               "table_totals": snap["metrics"]["table_totals"],
+               "max_doc_parts": snap["metrics"]["max_doc_parts_chain"],
                "n_snapshots": len(tbl.snapshots()),
                "tags": {r["name"]: r["snapshot_id"] for r in tbl.tags()},
                "branches": {b["name"]: b["head_snapshot_id"]
                             for b in tbl.branches()}}
-        from tokencodec.spark.decode_job import _max_doc_parts_from_manifest
-        out["max_doc_parts"] = _max_doc_parts_from_manifest(args.root, None)
         print(json.dumps(out))
         return 0
 

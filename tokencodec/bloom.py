@@ -15,9 +15,8 @@ Layout (little-endian, stored in the pages table's `doc_bloom` binary
 column, NULL = unknown = never prune):
     u32 m_bits (power of two) | u8 k | u8 hash_scheme
                               | bitmap (m_bits/8 bytes)
-Legacy blobs (round 5) lack the hash_scheme byte; the two layouts are
-length-disambiguated (5 + 2^a == 6 + 2^b has no solution at m >= 64
-bits), and an UNKNOWN scheme id reads as "keep" — so a probe can never
+A blob of any other length (a malformed one, or one without the scheme
+byte) or with an UNKNOWN scheme id reads as "keep" — so a probe can never
 false-negative against a blob whose hashing it cannot reproduce
 (ADVICE r5 #2: a silently changed hash would otherwise DROP rows that
 exist, not just cost pruning power).
@@ -38,8 +37,7 @@ import struct
 
 import numpy as np
 
-_HEADER = struct.Struct("<IB")        # legacy round-5 layout (no scheme)
-_HEADER_V2 = struct.Struct("<IBB")    # + u8 hash scheme id
+_HEADER_V2 = struct.Struct("<IBB")    # m_bits, k, hash scheme id
 _SCHEME_PANDAS_SIPHASH13 = 1
 _K = 7
 _BITS_PER_DOC = 10
@@ -55,20 +53,14 @@ def _parse(blob) -> tuple[int, int, np.ndarray] | None:
     if blob is None:
         return None
     mv = memoryview(blob)
-    if len(mv) < _HEADER.size:
+    if len(mv) < _HEADER_V2.size:
         return None
-    m, k = _HEADER.unpack_from(mv, 0)
-    if m & (m - 1) or not (1 <= k <= 32):
+    m, k, scheme = _HEADER_V2.unpack_from(mv, 0)
+    if (m & (m - 1) or not (1 <= k <= 32)
+            or len(mv) != _HEADER_V2.size + (m >> 3)
+            or scheme != _SCHEME_PANDAS_SIPHASH13):
         return None
-    if len(mv) == _HEADER_V2.size + (m >> 3):
-        if mv[_HEADER.size] != _SCHEME_PANDAS_SIPHASH13:
-            return None  # unknown scheme: keep
-        off = _HEADER_V2.size
-    elif len(mv) == _HEADER.size + (m >> 3):
-        off = _HEADER.size  # legacy blob: scheme 1 implicitly
-    else:
-        return None
-    return m, k, np.frombuffer(mv, dtype=np.uint8, offset=off)
+    return m, k, np.frombuffer(mv, dtype=np.uint8, offset=_HEADER_V2.size)
 
 
 def _hashes(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -30,23 +30,29 @@ their stages overlap instead of running back-to-back; the
 double-exceptAll diff runs only when the signatures disagree
 (strict=True forces it).
 
+Every reader resolves its snapshot through SnapshotTable, which
+refuses a table of another format (table.FORMAT), so the readers below
+assume the one shape this engine writes: every committed token data
+path is a task-written parquet file, every snapshot carries the chain
+metrics, every pending delete has a sequence, and every chunk's salt,
+doc-id bounds, split and n_tok columns are set (fsck checks them).
+
 Lookups and range scans are narrowed on the driver before any job:
 `_file_plan` reads each committed data file's parquet footer row-group
 statistics (salt, doc-id and n_tok bounds, max doc_parts, compressed
 size; cached by path) and keeps only candidate files and row groups —
-unknown stats and classic-write run directories always stay
-candidates. A range scan lists the kept files in its FileScan and
-stitches split documents in a branch co-located by repartition("sgrp").
-A point or batch lookup runs no Spark job at all (`_lookup`): the
-driver reads the kept row groups with pyarrow (every row group of a
-kept run directory), one at a time, keeps the chunks whose doc-id range
-and salt admit a target, decodes them with the same kernels the tasks
-run (Bloom probe, page decode, split-part stitch), masks pending
-deletes by each file's commit seq and returns a local DataFrame. It
-holds one row group, the candidate chunks and the decoded hits at a
-time, and reads `lookup_report`'s ``bytes_kept`` from storage; the root
-must be one pyarrow can address. `lookup_report` exposes the file and
-row group decision without running a job.
+unknown stats always stay candidates. A range scan lists the kept files
+in its FileScan and stitches split documents in a branch co-located by
+repartition("sgrp"). A point or batch lookup runs no Spark job at all
+(`_lookup`): the driver reads the kept row groups with pyarrow, one at
+a time, keeps the chunks whose doc-id range and salt admit a target,
+decodes them with the same kernels the tasks run (Bloom probe, page
+decode, split-part stitch), masks pending deletes by each file's commit
+seq and returns a local DataFrame. It holds one row group, the
+candidate chunks and the decoded hits at a time, and reads
+`lookup_report`'s ``bytes_kept`` from storage; the root must be one
+pyarrow can address. `lookup_report` exposes the file and row group
+decision without running a job.
 """
 
 from __future__ import annotations
@@ -497,26 +503,15 @@ def _target_snapshot(tbl: SnapshotTable, snapshot_id: int | None,
 def _scheme_from_manifest(root: str, snapshot_id: int | None,
                           branch: str | None = None,
                           snap: dict | None = None) -> dict | None:
-    """The table's partitioning scheme, read from manifest JSON only.
-    Encode stamps it on every group commit and REFUSES to mix schemes
-    within one table (resume check in encode_job), and publish refuses
-    scheme mismatches — so the first scheme found walking parent links
-    is THE table's scheme. None when the chain predates the metric or
-    expired past it (callers must then skip scheme-derived pruning)."""
-    tbl = SnapshotTable(root, branch=branch)
-    snap = _target_snapshot(tbl, snapshot_id, snap)
-    while snap is not None:
-        sch = snap.get("metrics", {}).get("scheme")
-        if sch:
-            return dict(sch)
-        pid = snap.get("parent_id")
-        if pid is None:
-            return None
-        try:
-            snap = tbl.snapshot(pid)
-        except FileNotFoundError:
-            return None
-    return None
+    """The table's partitioning scheme, read from the target snapshot:
+    encode stamps it, every later commit inherits it, and encode and
+    publish refuse to mix schemes within one table. None when no commit
+    carried one (callers then skip scheme-derived pruning)."""
+    if snap is None:
+        snap = _target_snapshot(SnapshotTable(root, branch=branch),
+                                snapshot_id)
+    sch = snap["metrics"].get("scheme") if snap is not None else None
+    return dict(sch) if sch else None
 
 
 def _salt_scheme(root: str, branch: str | None = None,
@@ -531,46 +526,6 @@ def _salt_scheme(root: str, branch: str | None = None,
     return None
 
 
-def _max_doc_parts_from_manifest(root: str, snapshot_id: int | None,
-                                 branch: str | None = None,
-                                 snap: dict | None = None) -> int | None:
-    """Max doc_parts over the target snapshot's ancestry, read from
-    manifest JSON only (no Spark job). Walks parent_id links — NOT the
-    id<=target set, which would both miss expired ancestors (silently
-    underestimating and decoding split docs as corrupt partial rows)
-    and count unreachable claim files from crashed committers. Commits
-    carrying the cumulative ``max_doc_parts_chain`` metric terminate
-    the walk at the first (usually the target) manifest, so planning is
-    O(1) reads on any table written since the field landed. Returns
-    None — callers then probe — when the chain predates the metrics or
-    was truncated by snapshot expiry before a cumulative field."""
-    tbl = SnapshotTable(root, branch=branch)
-    snap = _target_snapshot(tbl, snapshot_id, snap)
-    if snap is None:
-        return None
-    best = 0
-    while True:
-        m = snap.get("metrics", {})
-        if "max_doc_parts_chain" in m:
-            return max(best, int(m["max_doc_parts_chain"]))
-        if "max_doc_parts" not in m:
-            return None
-        best = max(best, int(m["max_doc_parts"]))
-        pid = snap.get("parent_id")
-        if pid is None:
-            return best
-        try:
-            snap = tbl.snapshot(pid)
-        except FileNotFoundError:
-            # ancestry expired away without a cumulative field to carry
-            # its maxima forward: the walk cannot bound doc_parts
-            return None
-
-
-# legacy delete manifests (chains whose first-commit attribution
-# predates both the retained chain and the side file) mask EVERY data
-# seq — the pre-sequence-number global semantics
-_LEGACY_DEL_SEQ = 1 << 62
 # data with no attribution at all sorts below EVERY attributed seq —
 # including the sub-zero band branch forks remap carried attribution
 # into (create_branch) — so every delete masks it
@@ -594,17 +549,14 @@ class _Deletes:
     lookups, compact and purge_deletes all mask through this object,
     inside their kernels.
 
-    ``ids`` is {doc_id: newest delete seq} on sequence-aware chains (a
-    copy dies only when its data seq is strictly older, so upsert
-    replacements and later re-adds survive), or a frozenset on legacy
-    chains (every copy of a listed id dies). ``path_seqs`` maps
-    normalized committed data paths, files and run directories, to
-    their group's seq (_path_seq_map)."""
+    ``ids`` is {doc_id: newest delete seq}: a copy dies only when its
+    data seq is strictly older, so upsert replacements and later
+    re-adds survive. ``path_seqs`` maps normalized committed data files
+    to their group's seq (_path_seq_map)."""
 
-    def __init__(self, ids, path_seqs: dict | None = None):
+    def __init__(self, ids: dict[str, int], path_seqs: dict[str, int]):
         self.ids = ids
-        self.by_seq = isinstance(ids, dict)
-        self.path_seqs = path_seqs or {}
+        self.path_seqs = path_seqs
         self.sorted = sorted(d for d in ids if d is not None)
 
     def may_hit(self, lo: str | None, hi: str | None) -> bool:
@@ -616,20 +568,14 @@ class _Deletes:
 
     def seq_of(self, file_path: str) -> int:
         """The data seq of rows read from ``file_path`` (any scheme
-        spelling): its committed file's, else its run directory's
-        (classic commits), else _ANCIENT_SEQ — data older than the
-        oldest pending delete, which every delete masks."""
-        p = _norm_path(file_path)
-        s = self.path_seqs.get(p)
-        return (self.path_seqs.get(p.rsplit("/", 1)[0], _ANCIENT_SEQ)
-                if s is None else s)
+        spelling): its committed file's, else _ANCIENT_SEQ — data older
+        than the oldest pending delete, which every delete masks."""
+        return self.path_seqs.get(_norm_path(file_path), _ANCIENT_SEQ)
 
     def dead(self, docs: list[str], seq: int) -> np.ndarray:
         """Which of ``docs``, all read from data of seq ``seq``, die."""
-        if self.by_seq:
-            return np.array([d in self.ids and self.ids[d] > seq
-                             for d in docs], dtype=bool)
-        return np.array([d in self.ids for d in docs], dtype=bool)
+        return np.array([d in self.ids and self.ids[d] > seq
+                         for d in docs], dtype=bool)
 
 
 def _path_seq_map(groups: dict, seqs: dict, min_seq: int) -> dict:
@@ -642,24 +588,34 @@ def _path_seq_map(groups: dict, seqs: dict, min_seq: int) -> dict:
             for p in groups.get(g, [])}
 
 
-def _read_ids_pyarrow(paths: list[str]) -> list[str]:
-    """doc_ids of delete manifest files (or run directories of them),
-    read on the driver: manifests are takedown-sized by delete_docs'
-    contract."""
-    from tokencodec.spark.encode_job import _list_parquet, _open_parquet
-    return [d for p in paths
-            for f in ([p] if p.endswith(".parquet") else _list_parquet(p))
-            for d in _open_parquet(f).read(columns=["doc_id"])
-            .column(0).to_numpy(zero_copy_only=False).tolist()]
+# the ids of the last-read set of delete files, keyed by their sorted
+# paths (one entry): delete-id files are immutable and uniquely named,
+# so repeated lookups and scans of one snapshot read them once. The
+# driver holds this id set during every read of that snapshot anyway.
+_IDS_CACHE: dict[tuple, dict[str, list[str]]] = {}
+
+
+def _read_ids_pyarrow(paths: list[str]) -> dict[str, list[str]]:
+    """{delete file: its doc_ids}, read on the driver: delete files are
+    takedown-sized by delete_docs' contract."""
+    from tokencodec.spark.encode_job import _open_parquet
+    key = tuple(sorted(paths))
+    ids = _IDS_CACHE.get(key)
+    if ids is None:
+        ids = {p: _open_parquet(p).read(columns=["doc_id"]).column(0)
+               .to_numpy(zero_copy_only=False).tolist() for p in key}
+        _IDS_CACHE.clear()
+        _IDS_CACHE[key] = ids
+    return ids
 
 
 def _pending_deletes(tbl: SnapshotTable, snap: dict) -> _Deletes | None:
     """The delete manifests of ``snap`` as one _Deletes; None when they
-    list no id. Sequence-aware when any delete group's first-commit
-    attribution survives (table.group_seqs), legacy (global) otherwise.
-    Ids are read on the driver with pyarrow, so a root pyarrow cannot
-    address is refused once it holds a delete manifest (no writer
-    creates one there)."""
+    list no id. Each delete group masks by its first-commit sequence
+    (table.group_seqs); a pending group without one is a fault. Ids are
+    read on the driver with pyarrow, so a root pyarrow cannot address
+    is refused once it holds a delete manifest (no writer creates one
+    there)."""
     from tokencodec.spark.encode_job import require_direct_write
     groups = tbl.resolve_groups(snap)
     del_groups = {k: ps for k, ps in groups.items()
@@ -668,29 +624,29 @@ def _pending_deletes(tbl: SnapshotTable, snap: dict) -> _Deletes | None:
         return None
     require_direct_write(tbl.root, "a read with pending deletes")
     seqs = tbl.group_seqs(snap)
-    known = {k: seqs[k] for k in del_groups if k in seqs}
-    if not known:
-        ids = frozenset(_read_ids_pyarrow([p for ps in del_groups.values()
-                                           for p in ps]))
-        return _Deletes(ids) if ids else None
+    unattributed = sorted(k for k in del_groups if k not in seqs)
+    if unattributed:
+        raise RuntimeError(
+            f"pending delete group(s) {unattributed[:3]} under {tbl.root} "
+            "have no sequence attribution (the chain and group-seqs.json "
+            "both lack them): the table's metadata is damaged")
+    ids = _read_ids_pyarrow([p for ps in del_groups.values() for p in ps])
     by_id: dict[str, int] = {}
     # oldest delete first: a doc deleted more than once takes the
     # NEWEST delete's seq
-    for s, k in sorted((known.get(k, _LEGACY_DEL_SEQ), k)
-                       for k in del_groups):
-        by_id.update(dict.fromkeys(_read_ids_pyarrow(del_groups[k]), s))
-    return (_Deletes(by_id, _path_seq_map(groups, seqs, min(known.values())))
-            if by_id else None)
+    for s, k in sorted((seqs[k], k) for k in del_groups):
+        for p in del_groups[k]:
+            by_id.update(dict.fromkeys(ids[p], s))
+    return (_Deletes(by_id, _path_seq_map(
+        groups, seqs, min(seqs[k] for k in del_groups))) if by_id else None)
 
 
 # Per-file data skipping (Delta Lake's per-file statistics): before a
 # lookup or filtered scan is planned, the driver reads the parquet
 # footer row-group statistics of each committed data file and hands the
 # scan only the files a row group of which may hold a matching chunk.
-# Footers cover every writer (the task writers and the JVM writes of
-# earlier engine versions alike). Data files are immutable and uniquely
-# named, so their bounds are cached process-wide by path (bounded FIFO,
-# like table._GROUPSET_CACHE).
+# Data files are immutable and uniquely named, so their bounds are
+# cached process-wide by path (bounded FIFO, like table._GROUPSET_CACHE).
 _FOOTER_COLS = ("salt", "doc_id_min", "doc_id_max", "doc_parts",
                 "n_tok_min", "n_tok_max")
 _FOOTER_CACHE: dict[str, list[dict]] = {}
@@ -701,10 +657,7 @@ def _footer_bounds(path: str) -> list[dict] | None:
     """Per-row-group ``{column: (min, max)}`` over _FOOTER_COLS for one
     committed data file, plus ``bytes``: the row group's compressed
     size. A column without statistics, or holding any NULL, is left out
-    (unknown). None = the whole file is unknown: a run directory from a
-    classic JVM write, or an unreadable footer."""
-    if not path.endswith(".parquet"):
-        return None
+    (unknown). None = the whole file is unknown: an unreadable footer."""
     cached = _FOOTER_CACHE.get(path)
     if cached is not None:
         return cached
@@ -788,17 +741,16 @@ def _file_plan(root: str, snap: dict, paths: list[str],
       for lookups (``targets``) and doc-id / n_tok range filters;
       other decodes keep every file.
     - ``row_groups``: per kept path, the indices of its kept row
-      groups, None when unknown (a run directory, a file without
-      footer stats, or no narrowing) — the whole path is then read.
+      groups, None when unknown (a file without footer stats, or no
+      narrowing) — the whole path is then read.
       ``row_groups_kept`` / ``bytes_kept`` total them and their
       compressed sizes; None when any kept path is unknown.
     - ``salts``: the salts ``targets`` hash to under the table's
       salt_mod scheme, None when the scheme derives none.
     - ``stitch``: whether split documents may be read, so the stitch
-      branch is planned. The manifest chain's max doc_parts rules it
-      out table-wide; a narrowed decode also needs a kept row group
-      with doc_parts max > 1 or unknown. None = unknown (a full decode
-      of a chain predating the metric; decode then probes).
+      branch is planned. The snapshot's ``max_doc_parts_chain`` rules
+      it out table-wide; a narrowed decode also needs a kept row group
+      with doc_parts max > 1 or unknown.
     """
     salts = None
     if targets:
@@ -807,9 +759,7 @@ def _file_plan(root: str, snap: dict, paths: list[str],
             import zlib
             n = int(sch["n_salts"])
             salts = [zlib.crc32(d.encode("utf-8")) % n for d in targets]
-    max_parts = _max_doc_parts_from_manifest(root, None, branch=branch,
-                                             snap=snap)
-    stitch = None if max_parts is None else max_parts > 1
+    stitch = snap["metrics"]["max_doc_parts_chain"] > 1
     kept, rgs, nbytes = paths, [None] * len(paths), 0
     if targets is not None or any(v is not None for v in (
             doc_id_min, doc_id_max, n_tok_min, n_tok_max)):
@@ -828,7 +778,7 @@ def _file_plan(root: str, snap: dict, paths: list[str],
                 may_split = may_split or hit is None or any(
                     _rg_may_split(bounds[i]) for i in hit)
                 nbytes += sum(bounds[i]["bytes"] for i in hit or ())
-        stitch = may_split and stitch is not False
+        stitch = stitch and may_split
     known = None not in rgs
     return {"files_considered": len(paths), "files_kept": len(kept),
             "paths": kept, "row_groups": rgs,
@@ -887,22 +837,14 @@ _LOOKUP_META = ("salt", "doc_id_min", "doc_id_max", "doc_part", "doc_parts",
 
 def _read_chunks(path: str, row_groups: list[int] | None,
                  columns: list[str]) -> Iterator[pa.Table]:
-    """``columns`` of the chunk rows under one committed path, read
-    with pyarrow one row group at a time: the listed ``row_groups`` of
-    a data file, or all of it (None), or every file of a run directory.
-    A column a file predates reads as NULL, as under read_pages'
-    explicit schema."""
-    from tokencodec.spark.encode_job import (_PAGES_TYPES, _list_parquet,
-                                             _open_parquet)
-    for f in [path] if path.endswith(".parquet") else _list_parquet(path):
-        with _open_parquet(f) as pf:
-            have = [c for c in columns if c in pf.schema_arrow.names]
-            for i in (range(pf.num_row_groups) if row_groups is None
-                      else row_groups):
-                t = pf.read_row_group(i, columns=have)
-                yield pa.table([t[c].cast(_PAGES_TYPES[c]) if c in have
-                                else pa.nulls(t.num_rows, _PAGES_TYPES[c])
-                                for c in columns], names=columns)
+    """``columns`` of the chunk rows of one committed data file, read
+    with pyarrow one row group at a time: the listed ``row_groups``, or
+    all of them (None)."""
+    from tokencodec.spark.encode_job import _open_parquet
+    with _open_parquet(path) as pf:
+        for i in (range(pf.num_row_groups) if row_groups is None
+                  else row_groups):
+            yield pf.read_row_group(i, columns=columns)
 
 
 def _lookup(spark: SparkSession, root: str, tbl: SnapshotTable, snap: dict,
@@ -913,11 +855,11 @@ def _lookup(spark: SparkSession, root: str, tbl: SnapshotTable, snap: dict,
     """A point or batch lookup, run on the driver with no Spark job.
     The row groups _file_plan keeps are read with pyarrow, masked to
     chunks whose doc-id range covers a target and whose salt is a
-    target's (NULL stats = keep), sorted (sgrp, doc_part) and decoded
-    by the task kernels (_lookup_batches: Bloom probe and page decode,
-    split parts stitched), which also mask pending deletes by each
-    chunk's committed path (_Deletes.seq_of), as scans do; rows are
-    re-filtered exactly (ids, sources, n_tok range).
+    target's, sorted (sgrp, doc_part) and decoded by the task kernels
+    (_lookup_batches: Bloom probe and page decode, split parts
+    stitched), which also mask pending deletes by each chunk's
+    committed path (_Deletes.seq_of), as scans do; rows are re-filtered
+    exactly (ids, sources, n_tok range).
     Decodes ``cols`` and the extras; returns a local DataFrame of the
     ``req`` columns."""
     import pyarrow.compute as pc
@@ -951,22 +893,18 @@ def _lookup(spark: SparkSession, root: str, tbl: SnapshotTable, snap: dict,
     def candidates(t: pa.Table) -> pa.Table:
         """The chunks of ``t`` whose doc-id range covers a target — the
         first target >= doc_id_min (targets are sorted) is also <=
-        doc_id_max — and whose salt is a target's; NULL stats = keep."""
-        lo, hi = t["doc_id_min"], t["doc_id_max"]
-        lo_s = pc.fill_null(lo, "").to_numpy(zero_copy_only=False)
-        hi_s = pc.fill_null(hi, "").to_numpy(zero_copy_only=False)
+        doc_id_max — and whose salt is a target's."""
+        lo_s = t["doc_id_min"].to_numpy(zero_copy_only=False)
+        hi_s = t["doc_id_max"].to_numpy(zero_copy_only=False)
         first = tgt[np.minimum(np.searchsorted(tgt, lo_s), len(tgt) - 1)]
-        keep = pc.or_(pa.array((lo_s <= first) & (first <= hi_s),
-                               pa.bool_()),
-                      pc.or_(pc.is_null(lo), pc.is_null(hi)))
+        keep = pa.array((lo_s <= first) & (first <= hi_s), pa.bool_())
         if salts is not None:
             # a doc's salt is crc32(doc_id) % n_salts under the table's
             # one salt_mod scheme, and split parts and compaction
             # rewrites keep it: a lookup reads only its targets' salts
             # of n_salts (65536 at design scale), which hash-spread
             # doc-id ranges alone barely narrow
-            keep = pc.and_(keep, pc.or_(
-                pc.is_in(t["salt"], value_set=salts), pc.is_null(t["salt"])))
+            keep = pc.and_(keep, pc.is_in(t["salt"], value_set=salts))
         if buckets is not None:
             keep = pc.and_(keep, pc.is_in(
                 t["bucket"], value_set=pa.array(buckets, pa.int32())))
@@ -985,10 +923,8 @@ def _lookup(spark: SparkSession, root: str, tbl: SnapshotTable, snap: dict,
         return result()
     chunks = pa.concat_tables(tables)
     chunks = (chunks
-              .append_column("sgrp", pc.coalesce(chunks["split_uid"],
-                                                 chunks["doc_id_min"]))
-              .append_column("_split", pc.greater(
-                  pc.fill_null(chunks["doc_parts"], 1), 1))
+              .append_column("sgrp", chunks["split_uid"])
+              .append_column("_split", pc.greater(chunks["doc_parts"], 1))
               .sort_by([("sgrp", "ascending"), ("doc_part", "ascending")]))
     out = list(_lookup_batches(fn, sfn, targets)(chunks.to_batches()))
     if not out:
@@ -1026,11 +962,11 @@ def decode(spark: SparkSession, root: str,
     chunks BEFORE any page crosses the Arrow boundary, min/max skipping
     exactly like Iceberg/parquet row-group stats. Every chunk predicate
     is re-applied row-level after decode (chunk ranges merely overlap
-    the predicate; rows must match it exactly). NULL stats (files from
-    older engine versions, or source sets over the recording cap) mean
-    "unknown" and are never pruned. Split-document parts are exempt
-    from n_tok pruning: their stats describe part lengths, and the
-    filter applies to the reassembled document length.
+    the predicate; rows must match it exactly). A NULL source set (over
+    the recording cap) means "unknown" and is never pruned.
+    Split-document parts are exempt from n_tok pruning: their stats
+    describe part lengths, and the filter applies to the reassembled
+    document length.
     ``columns`` projects at the page level: only the requested columns'
     binary pages are read and parsed.
     ``doc_ids`` is the batch exact-match lookup (takedown verification,
@@ -1074,8 +1010,8 @@ def decode(spark: SparkSession, root: str,
         raise ValueError(f"unknown columns {bad}; available: "
                          f"{ALL_COLUMNS + sorted(extra_schema)}")
     extras = tuple((c, extra_schema[c]) for c in req if c in extra_schema)
-    # columns needed internally for row-level re-filters and for legacy
-    # split-group keys; decoded if missing, dropped again at the end
+    # columns needed internally for row-level re-filters; decoded if
+    # missing, dropped again at the end
     cols = [c for c in req if c in ALL_COLUMNS]
     if extras and not cols:
         # an extras-only projection still needs one core page for the
@@ -1092,10 +1028,9 @@ def decode(spark: SparkSession, root: str,
             branch, buckets, sources, n_tok_min, n_tok_max)
     # row-level deletes (equality-delete manifests): the ids are read
     # on the driver into one _Deletes, which the decode kernels apply
-    # to each chunk by its file's commit seq — sequence-aware when
-    # attribution exists (a delete masks only rows committed strictly
-    # BEFORE it, Iceberg's equality-delete rule, which is what makes
-    # upsert re-adds visible), global on legacy chains. Explicit-paths
+    # to each chunk by its file's commit seq (a delete masks only rows
+    # committed strictly BEFORE it, Iceberg's equality-delete rule,
+    # which is what makes upsert re-adds visible). Explicit-paths
     # reads (decode_changes) are scoped by their caller and skip them —
     # an incremental consumer sees appends only; delete commits are not
     # a changelog event in this engine.
@@ -1129,54 +1064,29 @@ def decode(spark: SparkSession, root: str,
     if buckets is not None:
         keep.append(F.col("bucket").isin(buckets))
     if sources is not None:
-        # keep chunks whose recorded source set overlaps the filter;
-        # NULL set = unknown = keep. source_set is a JSON array (safe
-        # for any source value); legacy tables recorded a comma-joined
-        # string — try the JSON parse first and COALESCE to the legacy
-        # split when it fails (a leading-'[' sniff would misparse a
-        # legacy set whose first source itself starts with '[' into
-        # NULL and silently prune the chunk). Historical caveat stays:
-        # a legacy source containing a comma may be mis-pruned
-        # (re-encode or compact to migrate).
-        recorded = F.coalesce(
-            F.from_json(F.col("source_set"), "array<string>"),
-            F.split(F.col("source_set"), ","))
+        # keep chunks whose recorded source set (a JSON array, safe for
+        # any source value) overlaps the filter; NULL set = unknown =
+        # keep
         keep.append(
             F.col("source_set").isNull()
             | (F.size(F.array_intersect(
-                recorded,
+                F.from_json(F.col("source_set"), "array<string>"),
                 F.array(*[F.lit(s) for s in sources]))) > 0))
-    # read_pages stamps the explicit PAGES_DDL schema, so doc_part /
-    # doc_parts columns always exist; rows from files predating them
-    # surface as NULL and read as whole chunks (part 0 of 1). (split_uid
-    # likewise always exists; the sgrp coalesce below handles NULLs)
-    n_parts = F.coalesce(F.col("doc_parts"), F.lit(1))
-    # the split group of a part: its encode-time split uid; legacy rows
-    # (pre-split_uid files) carry NULL there, and their chunks hold
-    # exactly one doc, so the chunk stat doc_id_min (== the doc's id) is
-    # the historical group key
-    sgrp = F.coalesce(F.col("split_uid"), F.col("doc_id_min"))
+    n_parts = F.col("doc_parts")
     if n_tok_min is not None:
-        keep.append(F.col("n_tok_max").isNull() | (n_parts > 1)
-                    | (F.col("n_tok_max") >= n_tok_min))
+        keep.append((n_parts > 1) | (F.col("n_tok_max") >= n_tok_min))
     if n_tok_max is not None:
-        keep.append(F.col("n_tok_min").isNull() | (n_parts > 1)
-                    | (F.col("n_tok_min") <= n_tok_max))
+        keep.append((n_parts > 1) | (F.col("n_tok_min") <= n_tok_max))
     if keep:
         cond = keep[0]
         for c in keep[1:]:
             cond = cond & c
         pages = pages.filter(cond)
-    # zero-job planning: encode commits record max_doc_parts in snapshot
-    # metrics, and narrowed decodes read doc_parts bounds from footers,
-    # so the reassembly branch is decided without a job — building a
-    # decode plan over a 100-TB table must not run a metadata scan.
-    # Legacy full decodes (commits predating the metric) fall back to a
-    # one-column probe job.
+    # zero-job planning: every snapshot carries max_doc_parts_chain,
+    # and narrowed decodes read doc_parts bounds from footers, so the
+    # reassembly branch is decided without a job — building a decode
+    # plan over a 100-TB table must not run a metadata scan
     any_split = plan["stitch"]
-    if any_split is None:
-        max_parts = pages.agg(F.max("doc_parts")).collect()[0][0]
-        any_split = bool(max_parts and max_parts > 1)
     # column pruning down to the PAGE level: only requested columns'
     # binary pages cross the Arrow boundary
     fn, page_cols = make_decode_batches(packed, cols, extras, dels=dels)
@@ -1187,7 +1097,7 @@ def decode(spark: SparkSession, root: str,
     elif "tokens" not in cols and "n_tok" not in cols:
         # split parts duplicate (doc_id, source); part 0 is the identity
         # — pruned BEFORE decode, so parts 1..P-1 never even decode
-        out = (pages.filter(F.coalesce(F.col("doc_part"), F.lit(0)) == 0)
+        out = (pages.filter(F.col("doc_part") == 0)
                .select(page_cols).mapInArrow(fn, out_type))
     else:
         whole = (pages.filter(n_parts == 1).select(page_cols)
@@ -1203,7 +1113,8 @@ def decode(spark: SparkSession, root: str,
         # blob per part: O(P²) bytes).
         sfn, spage_cols = make_stitch_batches(packed, cols, extras,
                                               dels=dels)
-        stitched = (pages.filter(n_parts > 1).withColumn("sgrp", sgrp)
+        stitched = (pages.filter(n_parts > 1)
+                    .withColumn("sgrp", F.col("split_uid"))
                     .select(spage_cols + ["sgrp", "doc_part"])
                     .repartition("sgrp")
                     .sortWithinPartitions("sgrp", "doc_part")

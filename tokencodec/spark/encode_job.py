@@ -37,12 +37,9 @@ from pyspark.sql import functions as F
 
 from tokencodec import bloom, codecs, pageformat
 from tokencodec.spark import partition as part
-from tokencodec.spark.table import SnapshotTable, merge_extra_schema
+from tokencodec.spark.table import SnapshotTable, merge_extra_schema  # noqa: F401
 
-# Appended columns must go LAST: read_pages uses this DDL as the
-# explicit read schema, so files written by older engine versions
-# surface missing trailing columns as NULLs (decode treats NULL stats
-# as "unknown - cannot prune").
+# the pages schema every task writer stamps and read_pages reads with
 PAGES_DDL = (
     "bucket int, salt int, chunk_seq int, chunk_uid string, "
     "n_rows int, n_tokens bigint, doc_id_min string, doc_id_max string, "
@@ -53,11 +50,11 @@ PAGES_DDL = (
     "n_tok_min int, n_tok_max int, source_set string, "
     # schema evolution (round 5): per-chunk pages of user-added columns,
     # keyed by column name; chunks from commits predating a column
-    # simply lack its key (or the whole map, on pre-r5 files) and decode
-    # it as NULL — Iceberg's add-column back-fill semantics
+    # simply lack its key and decode it as NULL — Iceberg's add-column
+    # back-fill semantics
     "extra_pages map<string,binary>, "
     # per-chunk doc-id Bloom filter (tokencodec/bloom.py): point lookups
-    # prune chunks the id provably isn't in; NULL (pre-bloom files) =
+    # prune chunks the id provably isn't in; NULL (an empty chunk) =
     # unknown = keep
     "doc_bloom binary"
 )
@@ -403,23 +400,13 @@ def table_extra_schema(root: str, snapshot_id: int | None = None,
                        branch: str | None = None,
                        snap: dict | None = None) -> dict[str, str]:
     """The merged extra-column schema visible at a snapshot (``snap``
-    when the caller already holds it): the chain field of that one
-    manifest when present, else a walk over the retained chain's
-    per-commit declarations."""
-    tbl = SnapshotTable(root, branch=branch)
+    when the caller already holds it): that manifest's
+    ``extra_schema_chain``."""
     if snap is None:
+        tbl = SnapshotTable(root, branch=branch)
         snap = (tbl.current_snapshot() if snapshot_id is None
                 else tbl.snapshot(snapshot_id))
-    if snap is None:
-        return {}
-    tail = snap.get("metrics", {})
-    if "extra_schema_chain" in tail:
-        return dict(tail["extra_schema_chain"])
-    chain = tbl.chain(snap["snapshot_id"])
-    out: dict[str, str] = {}
-    for s in chain:
-        out = merge_extra_schema(out, s.get("metrics", {}).get("extra_schema", {}))
-    return out
+    return dict(snap["metrics"]["extra_schema_chain"]) if snap else {}
 
 
 def direct_write_supported(path: str) -> bool:
@@ -658,7 +645,8 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
     extra_schema = extra_schema_of(df)
     extra_cols = tuple(sorted(extra_schema.items()))
     tbl = SnapshotTable(out_root, branch=branch)
-    done = set(tbl.committed_groups())
+    snap = tbl.current_snapshot()
+    done = set(tbl.resolve_groups(snap)) if snap else set()
     remaining = [g for g in range(commit_groups)
                  if f"{group_prefix}{g}" not in done]
     if not remaining:
@@ -674,7 +662,7 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
     chain_scheme = None
     if done:
         from tokencodec.spark.decode_job import _salt_scheme
-        chain_scheme = _salt_scheme(out_root, branch=branch)
+        chain_scheme = _salt_scheme(out_root, branch=branch, snap=snap)
     if n_salts is None and chain_scheme:
         n_salts = int(chain_scheme["n_salts"])
     if n_salts is None:
@@ -688,8 +676,7 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
         k.startswith(group_prefix) and k[len(group_prefix):].isdigit()
         for k in done)
     if has_batch_groups:
-        prev = next((s["metrics"]["scheme"] for s in reversed(tbl.snapshots())
-                     if s.get("metrics", {}).get("scheme")), None)
+        prev = snap["metrics"].get("scheme")
         if prev != scheme:
             raise ValueError(
                 f"cannot resume {out_root}: committed scheme {prev} != "
@@ -991,8 +978,6 @@ def read_pages(spark: SparkSession, root: str,
              if not is_delete_group(k) for p in ps]
     if not paths:
         return spark.createDataFrame([], PAGES_DDL)
-    # explicit schema (the union of every engine version's columns):
-    # files written before a lineage column existed surface it as NULL —
-    # the same result mergeSchema inference would produce, but with zero
-    # footer reads / schema-merge jobs at plan-construction time
+    # explicit schema: zero footer reads / schema-merge jobs at
+    # plan-construction time
     return spark.read.schema(PAGES_DDL).parquet(*paths)

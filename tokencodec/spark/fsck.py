@@ -6,12 +6,17 @@ validation discipline (`validate_consumed_page_bytes`
 checks :111-120): every committed chunk's four pages are parsed,
 CRC-verified, and cross-checked — tokens page value count must equal
 the n_tok page's sum, string pages must carry n_rows values, and the
-recorded enc/raw byte metrics must match the page headers. Runs as one
-mapInArrow pass; returns a per-chunk report DataFrame.
+recorded enc/raw byte metrics must match the page headers. It also
+checks the invariants the readers assume of this table format: a
+chunk's salt, doc-id bounds, split and n_tok columns are set, its
+source set is NULL or a JSON array, and every committed data path is a
+parquet file. Runs as
+one mapInArrow pass; returns a per-chunk report DataFrame.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 
 import numpy as np
@@ -20,19 +25,36 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from tokencodec import pageformat
-from tokencodec.spark.decode_job import decode_extra_page
+from tokencodec.spark.decode_job import _data_paths, decode_extra_page
 from tokencodec.spark.encode_job import read_pages
+from tokencodec.spark.table import SnapshotTable
 
 REPORT_DDL = ("chunk_uid string, ok boolean, error string, "
               "n_rows int, n_tokens bigint, crc_checked int")
 
 _COLS = ["chunk_uid", "n_rows", "n_tokens", "raw_bytes", "enc_bytes",
          "page_tokens", "page_doc_id", "page_n_tok", "page_source",
-         "extra_pages", "doc_bloom"]
+         "extra_pages", "doc_bloom", "salt", "doc_id_min", "doc_id_max",
+         "doc_part", "doc_parts", "split_uid", "n_tok_min", "n_tok_max",
+         "source_set"]
+# chunk columns every writer sets: decode, lookups and compaction read
+# them without a NULL fallback
+_NOT_NULL = ("salt", "doc_id_min", "doc_id_max", "doc_part", "doc_parts",
+             "split_uid", "n_tok_min", "n_tok_max")
 
 
 def _check_chunk(row: dict) -> tuple[bool, str, int]:
     checked = 0
+    nulls = [c for c in _NOT_NULL if row[c] is None]
+    if nulls:
+        return False, f"NULL {', '.join(nulls)}", checked
+    try:
+        ss = row["source_set"]
+        ss_ok = ss is None or isinstance(json.loads(ss), list)
+    except ValueError:
+        ss_ok = False
+    if not ss_ok:
+        return False, f"source_set {ss[:60]!r} is not a JSON array", checked
     try:
         ntok = pageformat.decode_int_page(row["page_n_tok"])
         checked += 1
@@ -44,7 +66,7 @@ def _check_chunk(row: dict) -> tuple[bool, str, int]:
         # Bloom integrity: every stored doc_id must test positive in the
         # chunk's filter (false positives are fine; a false negative
         # means decode's point-lookup pruning would DROP this chunk's
-        # rows). NULL blob (pre-bloom files) is legitimate.
+        # rows). A NULL blob (an empty chunk) is legitimate.
         if row.get("doc_bloom") is not None and len(do) - 1 == row["n_rows"]:
             from tokencodec import bloom
             ids = pa.Array.from_buffers(
@@ -137,8 +159,20 @@ def fsck_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
 
 def fsck(spark: SparkSession, root: str,
          branch: str | None = None) -> DataFrame:
-    pages = read_pages(spark, root, branch=branch).select(_COLS)
-    return pages.mapInArrow(fsck_batches, REPORT_DDL)
+    """One report row per chunk of the current snapshot, plus one bad
+    row (``chunk_uid`` holding the path) per committed data path that
+    is not a ``.parquet`` file."""
+    tbl = SnapshotTable(root, branch=branch)
+    snap = tbl.current_snapshot()
+    if snap is None:
+        raise FileNotFoundError(f"no committed snapshot under {root}")
+    paths = _data_paths(tbl, snap)
+    rep = (read_pages(spark, root, paths=paths).select(_COLS)
+           .mapInArrow(fsck_batches, REPORT_DDL))
+    bad = [(p, False, "committed data path is not a .parquet file", 0, 0, 0)
+           for p in paths if not p.endswith(".parquet")]
+    return rep.unionByName(spark.createDataFrame(bad, REPORT_DDL)) \
+        if bad else rep
 
 
 # ------------------------------------------------------------ vector tables

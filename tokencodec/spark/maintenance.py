@@ -8,8 +8,8 @@ superseded files behind.
 
 ``compact`` is "rewrite data files" in one pass and one commit. The
 driver plans from manifests and parquet footers: it reads the pending
-delete ids with pyarrow and selects small files, run directories and
-files whose footer doc-id ranges may hold a deleted id (a metadata scan
+delete ids with pyarrow and selects small files and files whose footer
+doc-id ranges may hold a deleted id (a metadata scan
 of the files whose footers admit split parts finds split documents to
 re-slice). One Spark job then shuffles the selected chunk rows on ``salt``, sorts
 them (salt, bucket, chunk_uid) and runs one mapInArrow kernel. Per
@@ -47,7 +47,6 @@ from tokencodec import grouped, pageformat
 from tokencodec.spark import partition as part
 from tokencodec.spark.decode_job import (_Deletes, _binary_views,
                                          _extra_array, _footer_bounds,
-                                         _max_doc_parts_from_manifest,
                                          _norm_path, _pending_deletes,
                                          _rg_may_split, _scheme_from_manifest,
                                          _string_array, decode,
@@ -178,7 +177,7 @@ def _merge_chunks(bucket: int, salt: int, gid: int, parts: list,
         unknown = set(ext) - {n for n, _ in extras}
         if unknown:
             # merging would silently drop these pages — only possible
-            # when an expired legacy chain lost the column declaration
+            # when the manifest's schema and the pages disagree
             raise RuntimeError(
                 "compact: chunk carries extra page(s) "
                 f"{sorted(unknown)} absent from the declared schema "
@@ -423,11 +422,9 @@ def _rechunk_groups(spark: SparkSession, paths: list[str],
             if (b := _footer_bounds(p)) is None or any(map(_rg_may_split, b))]
     if not cand:
         return []
-    sgrp = F.coalesce(F.col("split_uid"), F.col("doc_id_min"))
     return (spark.read.schema(PAGES_DDL).parquet(*cand)
-            .na.fill({"doc_parts": 1})
             .filter(F.col("doc_parts") > 1)
-            .select(sgrp.alias("sgrp"), "n_tokens", "doc_parts",
+            .select(F.col("split_uid").alias("sgrp"), "n_tokens", "doc_parts",
                     F.input_file_name().alias("fname"))
             .groupBy("sgrp")
             .agg(F.sum("n_tokens").alias("tot_tok"),
@@ -447,7 +444,6 @@ def _page_totals(spark: SparkSession, paths: list[str]) -> dict:
     if not paths:
         return dict.fromkeys(_TOTAL_KEYS + ("max_doc_parts",), 0)
     tot = (spark.read.schema(PAGES_DDL).parquet(*paths)
-           .na.fill({"doc_part": 0, "doc_parts": 1})
            .agg(F.count(F.lit(1)).alias("n_chunks"),
                 F.sum(F.when(F.col("doc_part") == 0, F.col("n_rows")))
                 .alias("n_rows"),
@@ -472,8 +468,8 @@ def compact(spark: SparkSession, root: str,
     current one when there is nothing to do).
 
     FILE-GRANULAR (Iceberg's rewrite-data-files): only files below
-    ``small_file_bytes``, run directories, files whose footers may hold
-    a pending deleted id and files holding shrinkable split parts are
+    ``small_file_bytes``, files whose footers may hold a pending
+    deleted id and files holding shrinkable split parts are
     rewritten; healthy big files stay referenced untouched. Without
     pending deletes a metadata-only probe first looks for a merge group
     of 2+ chunks: a no-op compaction writes and commits nothing. Commit
@@ -504,22 +500,21 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     all_paths = [p for k, ps in grp_map.items()
                  if not is_delete_group(k) for p in ps]
     selected = {p for p in all_paths
-                if (not purge and (tbl.fs.isdir(p)
-                                   or tbl.fs.size(p) < small_file_bytes))
+                if (not purge and tbl.fs.size(p) < small_file_bytes)
                 or (dels is not None and _file_may_hit(p, dels))}
     # shrinkable split groups are reassembled and re-sliced (a table
     # re-compacted with a larger budget would keep its fragments
     # forever otherwise); their files are rewritten in full, whatever
     # their size — leaving them referenced would double-read the parts
-    mdp = _max_doc_parts_from_manifest(root, None, branch=branch, snap=snap)
+    mdp = snap["metrics"]["max_doc_parts_chain"]
     rech = (_rechunk_groups(spark, all_paths, max_chunk_tokens)
-            if not purge and (mdp is None or mdp > 1) else [])
+            if not purge and mdp > 1 else [])
     committed = {_norm_path(p): p for p in all_paths}
     for f in {_norm_path(f) for r in rech for f in r["files"]}:
-        # a scan URI maps back to a committed file or its run directory;
-        # failing that, stitching from a PARTIAL part set while the
-        # unmapped file stays referenced would corrupt rows: refuse
-        p = committed.get(f) or committed.get(f.rsplit("/", 1)[0])
+        # a scan URI maps back to a committed file; failing that,
+        # stitching from a PARTIAL part set while the unmapped file
+        # stays referenced would corrupt rows: refuse
+        p = committed.get(f)
         if p is None:
             raise RuntimeError("compact: cannot map scan URI back to a "
                                f"committed path for split-group rechunk: {f}")
@@ -528,8 +523,7 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     uid_prefix = f"{'prg' if purge else 'cmp'}{snap['snapshot_id'] + 1}"
     meta, new_files = [], []
     if selected:
-        pages = (spark.read.schema(PAGES_DDL).parquet(*sorted(selected))
-                 .na.fill({"doc_part": 0, "doc_parts": 1}))
+        pages = spark.read.schema(PAGES_DDL).parquet(*sorted(selected))
         if dels is None and not rech:
             # only a merge can change anything: look for a merge group
             # of 2+ chunks in the metadata columns before writing a byte
@@ -547,11 +541,10 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
         if rech:
             # re-slice FIRST, so a doc that reassembles small enough
             # joins a merge group in this same pass
-            sgrp = F.coalesce(F.col("split_uid"), F.col("doc_id_min"))
-            in_rech = F.coalesce((F.col("doc_parts") > 1)
-                                 & sgrp.isin([r["sgrp"] for r in rech]),
-                                 F.lit(False))
-            resplit = (pages.filter(in_rech).withColumn("sgrp", sgrp)
+            in_rech = ((F.col("doc_parts") > 1)
+                       & F.col("split_uid").isin([r["sgrp"] for r in rech]))
+            resplit = (pages.filter(in_rech)
+                       .withColumn("sgrp", F.col("split_uid"))
                        .repartition("sgrp")
                        .sortWithinPartitions("sgrp", "doc_part")
                        .select("bucket", "salt", "sgrp", "extra_pages",
@@ -581,7 +574,7 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     n_rech_parts = sum(r["k"] for r in rech)
     m = {**{k: tot[k] + new[k] for k in _TOTAL_KEYS},
          "max_doc_parts": max(tot["max_doc_parts"], new["max_doc_parts"],
-                              int(mdp or 0)),
+                              int(mdp)),
          "compacted_chunks": sum(r["n_merged_chunks"] for r in meta)
          + n_rech_parts,
          "rechunked_split_parts": n_rech_parts,
@@ -690,14 +683,14 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
     snap = tbl.current_snapshot()
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
-    old = _scheme_from_manifest(root, None)
+    old = _scheme_from_manifest(root, None, snap=snap)
     if not old or old.get("group_scheme") != "salt_mod":
         raise ValueError(f"resalt requires a salt_mod table; chain "
                          f"records {old!r}")
     if int(old.get("n_salts", 0)) == int(n_salts):
         return snap
     grp_map = tbl.resolve_groups(snap)
-    extra_schema = table_extra_schema(root) or {}
+    extra_schema = table_extra_schema(root, snap=snap)
     extra_cols = tuple(sorted(extra_schema.items()))
     cols = ["doc_id", "tokens", "n_tok", "source"] + [n for n, _ in extra_cols]
     rows = decode(spark, root, columns=cols, snapshot_id=snap["snapshot_id"])
@@ -782,27 +775,13 @@ def upsert_docs(spark: SparkSession, root: str, df: DataFrame,
     snap = tbl.current_snapshot()
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
-    scheme = _scheme_from_manifest(root, None, branch=branch)
+    scheme = _scheme_from_manifest(root, None, snap=snap)
     if not scheme or scheme.get("group_scheme") != "salt_mod" \
             or int(scheme.get("n_salts", 0)) <= 0:
         raise ValueError(
             "upsert_docs requires a table with a committed salt_mod "
             "scheme (encode_job.encode writes one); this chain records "
             f"{scheme!r}")
-    # a delete manifest with NO sequence attribution (pre-seq engine,
-    # attribution expired without a side file) masks EVERY copy of its
-    # ids — it would hide this upsert's replacements, and a later purge
-    # would physically destroy them. Refuse rather than silently lose
-    # the upsert; purging applies those legacy deletes and clears them.
-    seqs = tbl.group_seqs(snap)
-    stale = sorted(k for k, ps in tbl.resolve_groups(snap).items()
-                   if is_delete_group(k) and ps and k not in seqs)
-    if stale:
-        raise ValueError(
-            f"upsert refused: delete manifest(s) {stale[:3]} carry no "
-            "sequence attribution (written before sequence tracking, or "
-            "attribution expired) and would mask these replacements "
-            "too; run purge_deletes first to apply them physically")
     missing = {"doc_id", "tokens", "n_tok", "source"} - set(df.columns)
     if missing:
         raise ValueError(f"upsert frame lacks core columns {sorted(missing)}")
@@ -929,35 +908,26 @@ def publish_staged(main_root: str, staging_root: str,
     # namespace for no reason
     s_groups = {k: ps for k, ps in s_groups.items()
                 if not is_delete_group(k)}
-    sm = s_snap.get("metrics", {})
-    s_totals = sm.get("table_totals")
-    if s_totals is None:
-        raise ValueError(
-            "staging table predates table_totals metrics; re-encode or "
-            "compact it before publishing")
+    sm = s_snap["metrics"]
+    s_totals = sm["table_totals"]
 
     dst = SnapshotTable(main_root, fs=fs)
     parent = dst.current_snapshot()
-
-    def _scheme(tbl):
-        return next((s["metrics"]["scheme"] for s in reversed(tbl.chain())
-                     if s.get("metrics", {}).get("scheme")), None)
-
-    s_scheme = _scheme(src)
-    d_scheme = _scheme(dst) if parent is not None else None
-    if parent is not None and d_scheme is not None and s_scheme is not None \
+    # every commit inherits its parent's scheme
+    s_scheme = sm.get("scheme")
+    d_scheme = parent["metrics"].get("scheme") if parent is not None else None
+    if d_scheme is not None and s_scheme is not None \
             and s_scheme != d_scheme:
         raise ValueError(
             f"staging partitioning scheme {s_scheme} != main "
             f"{d_scheme}; encode the staging batch with the main "
             "table's n_salts/commit_groups")
 
-    s_extra = table_extra_schema(staging_root)
-    # upper bound over the retained staging chain: compaction may have
-    # shrunk real part counts, and an overestimate only makes decode
-    # plan the (correct) reassembly branch conservatively
-    s_parts = max((int(s.get("metrics", {}).get("max_doc_parts", 0))
-                   for s in src.chain()), default=0)
+    s_extra = sm["extra_schema_chain"]
+    # the staging chain's max doc_parts: compaction may have shrunk real
+    # part counts, and an overestimate only makes decode plan the
+    # (correct) reassembly branch conservatively
+    s_parts = sm["max_doc_parts_chain"]
     m = {
         "published_from": staging_root,
         "published_snapshot_id": s_snap["snapshot_id"],
@@ -1074,16 +1044,10 @@ def publish_branch(root: str, name: str, drop: bool = False,
     if not delta:
         raise ValueError(f"branch {name!r} has no appended groups to publish")
 
-    hm = head.get("metrics", {})
-    fm = fork.get("metrics", {})
-    h_tot, f_tot = hm.get("table_totals"), fm.get("table_totals")
-    if h_tot is None or f_tot is None:
-        raise ValueError(
-            f"branch {name!r} predates table_totals metrics; re-fork it")
-    b_parts = max((int(s.get("metrics", {}).get("max_doc_parts", 0))
-                   for s in br.chain()), default=0)
-    b_parts = max(b_parts, int(hm.get("max_doc_parts_chain", 0)))
-    b_extra = table_extra_schema(root, branch=name)
+    hm = head["metrics"]
+    h_tot, f_tot = hm["table_totals"], fork["metrics"]["table_totals"]
+    b_parts = hm["max_doc_parts_chain"]
+    b_extra = hm["extra_schema_chain"]
     m = {
         "published_branch": name,
         "published_snapshot_id": head["snapshot_id"],
@@ -1326,10 +1290,10 @@ def expire_snapshots(root: str, keep_last: int = 1,
     # delete individual parquet files; their parent run dir may now hold
     # nothing, or only Spark's _SUCCESS marker). Candidates are ONLY the
     # parents of dead FILE paths and only run-* dirs themselves: a dead
-    # DIRECTORY path (legacy dir-granular commit) has {root}/data as its
-    # parent, and sweeping that would destroy every sibling run dir —
-    # including the live ones, whose parquet files are invisible to a
-    # non-recursive listdir of data/.
+    # DIRECTORY path (a vector table's run-directory commit) has
+    # {root}/data as its parent, and sweeping that would destroy every
+    # sibling run dir — including the live ones, whose parquet files
+    # are invisible to a non-recursive listdir of data/.
     parents = {p.rsplit("/", 1)[0] for p in dead
                if "/" in p and p.endswith(".parquet")}
     live_parents = {p.rsplit("/", 1)[0] for p in live if "/" in p} | live

@@ -122,23 +122,18 @@ def merge_sets_threshold() -> int:
 # scans to size the table), max_doc_parts_chain (decode plans the
 # split-document stitch from one manifest) and extra_schema_chain (the
 # merged extra-column schema). They survive snapshot expiry because
-# every descendant carries them forward. A None return means a legacy
-# chain whose parent predates the field: the commit then omits it and
-# readers walk the retained chain instead.
+# every descendant carries them forward, and readers take them from the
+# one snapshot they hold: the format stamp guarantees every snapshot
+# has them.
 
 _TOTAL_KEYS = ("n_chunks", "n_rows", "n_tokens", "enc_bytes")
 
 
-def next_table_totals(parent: dict | None, delta: dict) -> dict | None:
+def next_table_totals(parent: dict | None, delta: dict) -> dict:
     """The parent's ``table_totals`` plus this commit's ``delta`` counts
-    (``n_rows`` counts documents: a split document once). None when the
-    parent predates the field."""
-    if parent is None:
-        base = dict.fromkeys(_TOTAL_KEYS, 0)
-    else:
-        base = parent.get("metrics", {}).get("table_totals")
-        if base is None:
-            return None
+    (``n_rows`` counts documents: a split document once)."""
+    base = (parent["metrics"]["table_totals"] if parent is not None
+            else dict.fromkeys(_TOTAL_KEYS, 0))
     return {k: int(base[k]) + int(delta.get(k, 0)) for k in _TOTAL_KEYS}
 
 
@@ -163,32 +158,19 @@ def merge_extra_schema(base: dict, add: dict) -> dict:
     return out
 
 
-def next_extra_schema_chain(parent: dict | None, this_schema: dict) -> dict | None:
+def next_extra_schema_chain(parent: dict | None, this_schema: dict) -> dict:
     """The parent's ``extra_schema_chain`` merged with this commit's
-    schema. None on a legacy chain whose parent lacks the field AND
-    declares extras: consumers then walk the retained chain's
-    per-commit ``extra_schema`` entries."""
-    if parent is None:
-        return dict(this_schema)
-    pm = parent.get("metrics", {})
-    if "extra_schema_chain" in pm:
-        return merge_extra_schema(pm["extra_schema_chain"], this_schema)
-    if "extra_schema" in pm:
-        return None  # legacy-style chain with extras: walk instead
-    # parent chain never declared extras: safe to start the chain here
-    return dict(this_schema)
+    schema."""
+    return merge_extra_schema(
+        parent["metrics"]["extra_schema_chain"] if parent is not None
+        else {}, this_schema)
 
 
-def next_chain_max(parent: dict | None, this_max: int) -> int | None:
+def next_chain_max(parent: dict | None, this_max: int) -> int:
     """The max doc_parts over the whole ancestry: the parent's
-    ``max_doc_parts_chain`` and ``this_max``. None when the parent
-    lacks the field: decode then walks the chain."""
-    if parent is None:
-        return int(this_max)
-    pm = parent.get("metrics", {})
-    if "max_doc_parts_chain" not in pm:
-        return None
-    return max(int(pm["max_doc_parts_chain"]), int(this_max))
+    ``max_doc_parts_chain`` and ``this_max``."""
+    return max(int(parent["metrics"]["max_doc_parts_chain"])
+               if parent is not None else 0, int(this_max))
 
 
 def _chain_metrics(parent: dict | None, m: dict) -> dict:
@@ -200,7 +182,27 @@ def _chain_metrics(parent: dict | None, m: dict) -> dict:
                parent, m.get("max_doc_parts", 0)),
            "extra_schema_chain": next_extra_schema_chain(
                parent, m.get("extra_schema", {}))}
-    return {k: v for k, v in out.items() if v is not None and k not in m}
+    return {k: v for k, v in out.items() if k not in m}
+
+
+# ------------------------------------------------------------ table format
+# Every snapshot commit and create_branch writes carries a top-level
+# "format" stamp (Delta Lake's protocol version): the shape of the pages
+# files, chain metrics and delete attribution it implies is the only one
+# the readers understand. current_snapshot() and snapshot(), through
+# which every reader, writer and maintenance entry point resolves its
+# snapshot, refuse any other value instead of guessing at an older
+# shape; there is no migration path, a table of an older format is
+# re-encoded.
+FORMAT = 1
+
+
+class TableFormatError(ValueError):
+    """A well-formed snapshot of a format this engine does not read."""
+
+
+def _is_manifest(s) -> bool:
+    return isinstance(s, dict) and "snapshot_id" in s and "groups" in s
 
 
 class SnapshotTable:
@@ -246,9 +248,18 @@ class SnapshotTable:
             s = json.loads(self.fs.read_text(path))
         except ValueError:
             return None
-        if isinstance(s, dict) and "snapshot_id" in s and "groups" in s:
-            return s
-        return None
+        return s if _is_manifest(s) else None
+
+    def _checked(self, snap: dict | None) -> dict | None:
+        """``snap`` if it carries this engine's table format; raises
+        TableFormatError for any other well-formed manifest."""
+        if _is_manifest(snap) and snap.get("format") != FORMAT:
+            raise TableFormatError(
+                f"snapshot {snap['snapshot_id']} under {self.manifest_dir} "
+                f"has table format {snap.get('format')!r}, but this engine "
+                f"reads format {FORMAT} only: re-encode the table with "
+                "this engine version")
+        return snap
 
     def current_snapshot(self) -> dict | None:
         """The newest committed snapshot: start from the CURRENT hint
@@ -262,7 +273,8 @@ class SnapshotTable:
         whose parent_id points at a STALE ancestor (a lost-race rebase
         that crashed before its swap); adopting it would shadow the
         committed snapshot and expose its solely-referenced data to
-        GC."""
+        GC. Raises TableFormatError (a ValueError) when that snapshot
+        is not of this engine's table format."""
         snap = None
         cur = posixpath.join(self.manifest_dir, "CURRENT")
         if self.fs.exists(cur):
@@ -270,7 +282,7 @@ class SnapshotTable:
             path = posixpath.join(self.manifest_dir, name)
             try:
                 s = json.loads(self.fs.read_text(path))
-                if isinstance(s, dict) and "snapshot_id" in s and "groups" in s:
+                if _is_manifest(s):
                     snap = s
             except (OSError, ValueError):
                 snap = None  # stale hint (e.g. expired away): fall back
@@ -282,15 +294,16 @@ class SnapshotTable:
         while True:
             nxt = self._read_snap(snap["snapshot_id"] + 1)
             if nxt is None or nxt.get("parent_id") != snap["snapshot_id"]:
-                return snap
+                return self._checked(snap)
             snap = nxt
 
     def snapshot(self, snapshot_id: int) -> dict:
-        """Load a specific (immutable) snapshot — time travel."""
+        """Load a specific (immutable) snapshot — time travel. Refuses
+        one of another table format, like current_snapshot()."""
         path = self._snap_path(snapshot_id)
         if not self.fs.exists(path):
             raise FileNotFoundError(f"no snapshot {snapshot_id} under {self.root}")
-        return json.loads(self.fs.read_text(path))
+        return self._checked(json.loads(self.fs.read_text(path)))
 
     # ---------------------------------------------------------- groupsets
     def groupsets_dir(self) -> str:
@@ -359,11 +372,12 @@ class SnapshotTable:
     # op compact/purge/rewrite_manifests — re-list keys they rewrote
     # and are skipped; first-wins guards legacy rewrite snapshots), then
     # the group-seqs.json side file expire_snapshots maintains so
-    # attribution survives chain truncation. A group absent from both is
-    # "ancient" (predates seq tracking): callers treat it as a deep
-    # negative for data (decode_job._ANCIENT_SEQ — masked by every
-    # delete, including deletes remapped below zero by a branch fork)
-    # and as +inf for delete groups (legacy global masking preserved).
+    # attribution survives chain truncation. A data group absent from
+    # both is "ancient": older than every pending delete, so readers
+    # treat it as a deep negative (decode_job._ANCIENT_SEQ — masked by
+    # every delete, including deletes remapped below zero by a branch
+    # fork). A pending delete group is always attributed; one that is
+    # not is a fault decode_job._pending_deletes reports.
 
     _REWRITE_OPS = frozenset({"compact", "purge", "rewrite_manifests",
                               "resalt"})
@@ -424,7 +438,8 @@ class SnapshotTable:
         6-digit name padding). Under the sequential-claim protocol every
         one of these is committed; use :meth:`chain` for the unexpired
         ancestry of the current snapshot. Torn/partial files are skipped
-        rather than poisoning every metadata walk."""
+        rather than poisoning every metadata walk, and the table format
+        is not checked, so orphan GC can classify any manifest."""
         out = []
         for name in self.fs.listdir(self.manifest_dir):
             if name.startswith("snapshot-"):
@@ -433,7 +448,7 @@ class SnapshotTable:
                         posixpath.join(self.manifest_dir, name)))
                 except ValueError:
                     continue
-                if isinstance(s, dict) and "snapshot_id" in s and "groups" in s:
+                if _is_manifest(s):
                     out.append(s)
         out.sort(key=lambda s: s["snapshot_id"])
         return out
@@ -556,19 +571,16 @@ class SnapshotTable:
                 else self.snapshot(snapshot_id))
         if base is None:
             raise ValueError(f"cannot branch an empty table at {self.root}")
-        # carry the cumulative chain metrics into the fork so branch
-        # commits keep accumulating totals / schema / doc-part bounds
-        carried: dict = {}
-        bm = base.get("metrics", {})
-        for k in ("table_totals", "extra_schema_chain", "max_doc_parts_chain"):
-            if k in bm:
-                carried[k] = bm[k]
-        scheme = next((s["metrics"]["scheme"]
-                       for s in reversed(self.chain(base["snapshot_id"]))
-                       if s.get("metrics", {}).get("scheme")), None)
-        if scheme is not None:
-            carried["scheme"] = scheme
+        # carry the cumulative chain metrics (and the scheme every commit
+        # inherits) into the fork so branch commits keep accumulating
+        # totals / schema / doc-part bounds
+        bm = base["metrics"]
+        carried = {k: bm[k] for k in ("table_totals", "extra_schema_chain",
+                                      "max_doc_parts_chain")}
+        if "scheme" in bm:
+            carried["scheme"] = bm["scheme"]
         fork = {
+            "format": FORMAT,
             "snapshot_id": 0,
             "parent_id": None,
             "timestamp_ms": int(time.time() * 1000),
@@ -586,9 +598,8 @@ class SnapshotTable:
         # carry sequence attribution INSIDE the fork manifest: the
         # branch chain starts at a lone snapshot with new_groups=[], so
         # without carried attribution a branch forked after an upsert
-        # would resolve group_seqs() == {} and fall back to legacy
-        # GLOBAL delete masking — silently hiding replaced/re-added
-        # docs that are visible on main. Embedding it in the fork
+        # would resolve group_seqs() == {} and could not mask its
+        # pending deletes. Embedding it in the fork
         # (rather than a side file) makes it atomic with the branch's
         # existence: no clobber from a duplicate create_branch, no
         # crash window leaving a fork without attribution. Carried
@@ -604,15 +615,11 @@ class SnapshotTable:
                   if is_delete_group(k) and ps]
         if active:
             attr = self.group_seqs(base)
-            known = {k: attr[k] for k in active if k in attr}
-            if known:
-                min_seq = min(known.values())
-                shift = base["snapshot_id"] + 2
-                fork["metrics"]["group_seqs"] = {
-                    g: s - shift for g, s in sorted(attr.items())
-                    if is_delete_group(g) or s >= min_seq}
-            # all-legacy deletes: no attribution to carry — the branch
-            # falls back to global masking exactly like its base
+            min_seq = min(attr[k] for k in active)
+            shift = base["snapshot_id"] + 2
+            fork["metrics"]["group_seqs"] = {
+                g: s - shift for g, s in sorted(attr.items())
+                if is_delete_group(g) or s >= min_seq}
         try:
             self.fs.create_excl(self._snap_path_in(bdir, 0),
                                 json.dumps(fork, indent=1))
@@ -650,6 +657,8 @@ class SnapshotTable:
                 b = SnapshotTable(self.root, fs=self.fs, branch=name)
                 head = b.current_snapshot()
                 fork = b.snapshot(0)
+            except TableFormatError:
+                raise  # never skip a branch GC must hold
             except (OSError, ValueError):
                 continue
             if head is None:
@@ -702,7 +711,11 @@ class SnapshotTable:
         ``table_totals``, ``max_doc_parts_chain`` and
         ``extra_schema_chain`` from the parent it lands on. A caller
         that sets one of them itself re-anchors it (compact, purge and
-        resalt measure whole-table values)."""
+        resalt measure whole-table values). ``table_totals`` counts
+        every committed page, so it includes the copies pending deletes
+        mask (delete and upsert commits remove no page) until compact or
+        purge_deletes rewrites them away. Every snapshot written carries
+        the table-format stamp (``"format": FORMAT``)."""
         last_err: Exception | None = None
         for _ in range(retries + 1):
             parent = self.current_snapshot()
@@ -722,17 +735,11 @@ class SnapshotTable:
                         "current state")
             m = dict(metrics or {})
             # the partitioning scheme is chain-invariant between resalt
-            # migrations, but only scheme-stamping commits (encode /
-            # upsert / resalt) used to carry it — a maintenance commit
-            # (delete, purge, compact) followed by expire_snapshots
-            # could truncate the chain past the last stamped one,
-            # silently disabling salt-derived lookup pruning and the
-            # append n_salts guard. Inherit the parent's scheme (O(1);
-            # self-perpetuating once any commit carries it).
-            if "scheme" not in m and parent is not None:
-                psch = parent.get("metrics", {}).get("scheme")
-                if psch:
-                    m["scheme"] = psch
+            # migrations: every commit inherits its parent's, so readers
+            # take it from the one snapshot they hold
+            if "scheme" not in m and parent is not None \
+                    and parent["metrics"].get("scheme"):
+                m["scheme"] = parent["metrics"]["scheme"]
             # the chain metrics are derived from THIS parent, so a commit
             # that lost a race re-derives them from the winner
             m.update(_chain_metrics(parent, m))
@@ -805,6 +812,7 @@ class SnapshotTable:
                     sets = sets + [self._write_groupset(inline)]
                 inline = {}
             snap = {
+                "format": FORMAT,
                 "snapshot_id": sid,
                 "parent_id": parent["snapshot_id"] if parent else None,
                 "timestamp_ms": int(time.time() * 1000),
