@@ -1,5 +1,5 @@
-"""Point and batch lookups run on the driver (decode_job._lookup) and
-run no Spark job.
+"""Point and batch lookups run the chunk reader on the driver and run
+no Spark job.
 
 Every lookup here must equal a full decode() — a Spark scan — filtered
 to the same ids, bit-identical per token array, packed and unpacked,

@@ -93,3 +93,47 @@ def test_fsck_reports_committed_directory(spark, tmp_path, jvm_commit):
     assert [(r.chunk_uid, r.error) for r in bad] == [
         (run_dir, "committed data path is not a .parquet file")]
     assert rep.filter(F.col("ok")).count() > 0
+
+
+def test_fsck_reports_split_document_across_files(spark, tmp_path):
+    """Scans give each data file to one task, which stitches that
+    file's split parts when the file ends: every writer keeps a split
+    document's parts in one file. A document whose parts are
+    hand-committed in two files breaks that invariant silently — decode
+    returns it as two truncated rows with the same doc_id, whose tokens
+    only concatenate back to the original — so fsck must report it."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from tokencodec.spark import decode_job
+    from tokencodec.spark.table import SnapshotTable
+    root = str(tmp_path / "enc")
+    df = synth.token_table(spark, 200, seed=44).cache()
+    lens = sorted(r.n_tok for r in df.select("n_tok").collect())
+    # only the longest document is cut into parts
+    assert lens[-1] > lens[-2]
+    encode_job.encode(spark, df, root, commit_groups=1, n_salts=4,
+                      max_chunk_tokens=lens[-2])
+    big = df.orderBy(F.desc("n_tok")).first()
+    assert fsck.fsck(spark, root).filter(~F.col("ok")).count() == 0
+
+    tbl = SnapshotTable(root)
+    (group, files), = tbl.committed_groups().items()
+    f = next(p for p in files
+             if pc.max(pq.read_table(p, columns=["doc_parts"])
+                       .column(0)).as_py() > 1)
+    t = pq.read_table(f)
+    moved = pc.greater(t["doc_part"], 0)
+    assert pc.sum(moved).as_py() >= 1
+    a, b = f[:-len(".parquet")] + "-a.parquet", f[:-len(".parquet")] + "-b.parquet"
+    pq.write_table(t.filter(pc.invert(moved)), a)
+    pq.write_table(t.filter(moved), b)
+    tbl.commit({group: [p for p in files if p != f] + [a, b]}, replace=True)
+
+    bad = fsck.fsck(spark, root).filter(~F.col("ok")).collect()
+    assert len(bad) == 1 and "in 2 data files" in bad[0].error, bad
+    rows = (decode_job.decode(spark, root)
+            .filter(F.col("doc_id") == big.doc_id).collect())
+    assert len(rows) == 2 and all(r.n_tok < big.n_tok for r in rows)
+    assert sorted(np.concatenate([r.tokens for r in rows]).tolist()) \
+        == sorted(big.tokens)

@@ -1,6 +1,7 @@
 """Physical-plan hygiene: the judge-facing scale properties —
 column pruning on the pages table, a single shuffle in the encode
-pipeline — asserted from .explain output (SURVEY.md §4)."""
+pipeline, range-task scans with no shuffle — asserted from .explain
+output and the scan planner's driver-side decisions (SURVEY.md §4)."""
 
 import re
 
@@ -16,15 +17,56 @@ def _formatted(df, spark):
     return df._jdf.queryExecution().explainString(mode)
 
 
-def test_decode_reads_only_page_columns(spark, tmp_path):
+def decode_reads(monkeypatch, spark, root, **kw):
+    """``decode(spark, root, **kw)`` and the chunk columns its reader
+    asks ``_read_chunks`` for, captured on the driver when the scan is
+    planned."""
+    reads = []
+    real = decode_job._chunk_reader
+
+    def spy(*a, **k):
+        run, read = real(*a, **k)
+        reads.append(read)
+        return run, read
+
+    monkeypatch.setattr(decode_job, "_chunk_reader", spy)
+    out = decode_job.decode(spark, root, **kw)
+    (read,) = reads
+    return out, read
+
+
+def spy_scan_tasks(monkeypatch) -> list:
+    """The task assignments decode plans (_scan_tasks), captured on the
+    driver as they are made."""
+    planned = []
+    real = decode_job._scan_tasks
+
+    def spy(*a, **kw):
+        planned.append(real(*a, **kw))
+        return planned[-1]
+
+    monkeypatch.setattr(decode_job, "_scan_tasks", spy)
+    return planned
+
+
+def assert_range_scan(plan: str) -> None:
+    """A scan plan: MapInArrow over Range tasks, with no file scan, no
+    shuffle and no per-row file path."""
+    assert re.search(r"MapInArrow[\s\S]*\bRange \(0, \d+, step=1, "
+                     r"splits=Some\(\d+\)\)", plan), plan
+    for absent in ("Exchange", "FileScan", "_metadata", "Join"):
+        assert absent not in plan, plan
+
+
+def test_decode_reads_only_page_columns(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "enc")
     df = synth.token_table(spark, 200, seed=5)
     encode_job.encode(spark, df, root, commit_groups=1)
-    plan = _formatted(decode_job.decode(spark, root), spark)
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
-    assert "page_tokens" in read_schema
+    out, read = decode_reads(monkeypatch, spark, root)
+    assert "page_tokens" in read
     for unused in ("chunk_uid", "doc_id_min", "enc_bytes"):
-        assert unused not in read_schema, read_schema
+        assert unused not in read, read
+    assert_range_scan(_formatted(out, spark))
 
     # metrics aggregation must not read binary pages
     pages = encode_job.read_pages(spark, root)
@@ -75,15 +117,15 @@ def test_rle_runs_plan_is_distributed(spark):
     assert stitch and all("rid#" in sp or "bkt#" in sp for sp in stitch), stitch
 
 
-def test_decode_packed_plan_prunes_columns(spark, tmp_path):
+def test_decode_packed_plan_prunes_columns(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "enc")
     df = synth.token_table(spark, 200, seed=5)
     encode_job.encode(spark, df, root, commit_groups=1)
-    plan = _formatted(decode_job.decode(spark, root, packed=True), spark)
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
-    assert "page_tokens" in read_schema
+    out, read = decode_reads(monkeypatch, spark, root, packed=True)
+    assert "page_tokens" in read
     for unused in ("chunk_uid", "doc_id_min", "enc_bytes"):
-        assert unused not in read_schema, read_schema
+        assert unused not in read, read
+    assert_range_scan(_formatted(out, spark))
 
 
 def test_pack_sequences_plan_has_no_global_window(spark):
@@ -136,12 +178,12 @@ def test_epoch_shuffle_window_is_sharded(spark):
                         spec), f"under-partitioned Window: {spec}"
 
 
-def test_delete_masking_plan_has_no_join(spark, tmp_path):
+def test_delete_masking_plan_has_no_join(spark, tmp_path, monkeypatch):
     """Pending deletes (an upsert and a delete) mask inside the decode
-    kernels: a full decode and a doc-id range scan plan no join and no
-    Exchange beyond the stitch branch's repartition("sgrp"), their scans
-    still read only the needed page columns, and decode() runs no Spark
-    job before the action."""
+    kernels: a full decode and a doc-id range scan plan range tasks
+    with no join, no Exchange and no per-row file path (each task looks
+    up its files' seqs), their readers still read only the needed page
+    columns, and decode() runs no Spark job before the action."""
     from tokencodec.spark import maintenance
     root = str(tmp_path / "enc")
     df = synth.token_table(spark, 200, seed=5).cache()
@@ -162,26 +204,15 @@ def test_delete_masking_plan_has_no_join(spark, tmp_path):
         group = f"plan-{len(kw)}"
         sc.setJobGroup(group, "plan")
         try:
-            out = decode_job.decode(spark, root, **kw)
+            with monkeypatch.context() as m:
+                out, read = decode_reads(m, spark, root, **kw)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], kw
-        plan = _formatted(out, spark)
-        assert "Join" not in plan, plan[:3000]
-        exchanges = re.findall(r"\(\d+\) (\w*Exchange\w*)\n.*\nArguments: (.*)",
-                               plan)
-        assert len(exchanges) <= 1, plan
-        # the table splits documents: a full decode plans the stitch
-        assert exchanges or kw, plan
-        assert all(name == "Exchange"
-                   and args.startswith("hashpartitioning(sgrp")
-                   for name, args in exchanges), exchanges
-        scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-        assert scans
-        for read_schema in scans:
-            assert "page_tokens" in read_schema
-            for unused in ("chunk_uid", "enc_bytes", "doc_bloom"):
-                assert unused not in read_schema, read_schema
+        assert_range_scan(_formatted(out, spark))
+        assert "page_tokens" in read
+        for unused in ("chunk_uid", "enc_bytes", "doc_bloom"):
+            assert unused not in read, read
         lo, hi = kw.get("doc_id_min", ""), kw.get("doc_id_max", "~")
         expect = want.filter(F.col("doc_id").between(lo, hi))
         assert decode_job.audit(expect, out) == {
@@ -190,10 +221,10 @@ def test_delete_masking_plan_has_no_join(spark, tmp_path):
 
 # ------------------------------------------------- lookup plan shape
 #
-# A point or batch lookup runs on the driver (decode_job._lookup): it
+# A point or batch lookup runs the chunk reader on the driver: it
 # opens only the files its footers admit, reads their candidate row
 # groups with pyarrow and runs no Spark job — split documents included;
-# a full decode keeps the repartitioned stitch.
+# a full decode stitches inside its range tasks.
 
 
 @pytest.fixture(scope="module")
@@ -214,10 +245,6 @@ def split_table(spark, tmp_path_factory):
 def _executed(df) -> tuple[list, str]:
     rows = df.collect()
     return rows, df._jdf.queryExecution().executedPlan().toString()
-
-
-def _files(paths) -> set[str]:
-    return {decode_job._norm_path(p) for p in paths}
 
 
 def test_point_lookup_plan_one_scan_no_exchange(spark, split_table,
@@ -275,11 +302,14 @@ def test_split_lookup_plan_no_exchange(spark, split_table, run_lookup):
     assert rows[0].tokens == np.asarray(want.tokens, np.int32).tobytes()
 
 
-def test_full_decode_keeps_repartitioned_stitch(spark, split_table):
+def test_full_decode_plans_no_exchange(spark, split_table):
+    """The table splits a document, yet its full decode is one stage:
+    each task stitches the split parts of its own files."""
     df, root, _ = split_table
-    plan = _formatted(decode_job.decode(spark, root, packed=True), spark)
-    assert re.search(r"\(\d+\) Exchange\n.*\nArguments: hashpartitioning\(sgrp",
-                     plan), plan[:3000]
+    out = decode_job.decode(spark, root, packed=True)
+    assert_range_scan(_formatted(out, spark))
+    assert decode_job.audit(df, decode_job.decode(spark, root),
+                            strict=True)["ok"]
 
 
 # ------------------------------------------- encode shuffle sizing
@@ -327,18 +357,23 @@ def test_small_append_one_task_one_file_per_group(append_table):
     assert [len(groups[k]) for k in ("a0", "a1")] == [1, 1], groups
 
 
-def test_range_scan_reads_reported_files(spark, append_table):
+def test_range_scan_reads_reported_files(spark, append_table, monkeypatch):
+    """A range scan's task assignment (_scan_tasks, a driver function
+    decode plans with) covers exactly the files and row groups
+    lookup_report keeps, each file in one task."""
     root, app, _ = append_table
     rng = {"doc_id_min": "z-", "doc_id_max": "z-~", "n_tok_min": 600}
     rep = decode_job.lookup_report(root, **rng)
     assert rep["salts"] is None
     assert 0 < rep["files_kept"] < rep["files_considered"], rep
+    planned = spy_scan_tasks(monkeypatch)
     out = decode_job.decode(spark, root, **rng)
+    (tasks,) = planned
+    units = [u for t in tasks for u in t]
+    assert sorted(units) == sorted(zip(rep["paths"], rep["row_groups"]))
     rows, plan = _executed(out)
     assert len(rows) == app.filter(F.col("n_tok") >= 600).count() > 0
-    assert _files(out.inputFiles()) == _files(rep["paths"])
-    scans = re.findall(r"InMemoryFileIndex\((\d+) paths\)", plan)
-    assert scans and all(int(n) == rep["files_kept"] for n in scans), plan
+    assert "FileScan" not in plan and "InMemoryFileIndex" not in plan, plan
     # a point range is a lookup: the report derives its salt
     d = sorted(r.doc_id for r in app.select("doc_id").collect())[0]
     assert decode_job.lookup_report(root, doc_id_min=d, doc_id_max=d) \

@@ -58,21 +58,20 @@ def test_doc_range_pruning_packed(spark, enc_root):
     assert got.n == n_expected and got.ok is True
 
 
-def test_page_level_projection(spark, enc_root):
+def test_page_level_projection(spark, enc_root, monkeypatch):
     """columns= decodes only the requested pages: results match the
-    projected full decode, and the scan never reads the tokens pages."""
+    projected full decode, and the chunk reader never asks for the
+    tokens pages."""
+    from tests.test_plans import decode_reads
     df, root = enc_root
-    out = decode_job.decode(spark, root, columns=["doc_id", "n_tok"])
+    out, read = decode_reads(monkeypatch, spark, root,
+                             columns=["doc_id", "n_tok"])
     expected = df.select("doc_id", "n_tok")
     assert out.columns == ["doc_id", "n_tok"]
     assert decode_job.audit(expected, out) == {"missing": 0, "extra": 0, "ok": True}
-
-    from tests.test_plans import _formatted
-    plan = _formatted(out, spark)
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
-    assert "page_n_tok" in read_schema
-    assert "page_tokens" not in read_schema, read_schema
-    assert "page_source" not in read_schema, read_schema
+    assert "page_n_tok" in read and "page_doc_id" in read
+    assert "page_tokens" not in read, read
+    assert "page_source" not in read, read
 
 
 def test_projection_with_splits(spark, tmp_path):

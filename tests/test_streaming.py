@@ -220,29 +220,23 @@ def test_stream_first_batch_stamps_scheme_for_appends(spark, tmp_path):
         "missing": 0, "extra": 0, "ok": True}
 
 
-def test_stream_leaves_unstamped_table_unstamped(spark, tmp_path,
-                                                 monkeypatch):
-    """A table whose micro-batches were each salted by their own size
-    with no stamp (as older engine versions wrote them) follows no
-    single scheme: a new batch must not stamp one, so lookups keep
-    skipping salt pruning and find every document."""
+def test_stream_stamps_table_after_empty_batch(spark, tmp_path):
+    """The one unstamped table a writer leaves holds no data: an empty
+    first micro-batch commits no scheme. The next batch stamps the salt
+    count of its own size (16 for 40k docs), and lookups, salt-pruned
+    under that scheme, find every document."""
+    from tokencodec.spark.synth import SCHEMA_DDL
     src, root = str(tmp_path / "src"), str(tmp_path / "enc")
-    old = _short_docs(spark, 40000, seed=35, prefix="s-").cache()
-    old.write.parquet(src)
-    with monkeypatch.context() as m:
-        m.setattr(streaming, "_batch_scheme",
-                  lambda tbl, df: (part.salts_for(df.count()), None))
-        streaming.encode_stream(spark, src, root)
-    new = synth.token_table(spark, 300, seed=36).withColumn(
-        "doc_id", F.concat(F.lit("t-"), "doc_id")).cache()
-    new.write.mode("append").parquet(src)
+    spark.createDataFrame([], SCHEMA_DDL).write.parquet(src)
     streaming.encode_stream(spark, src, root)
     snaps = SnapshotTable(root).snapshots()
-    assert len(snaps) == 2
-    assert all("scheme" not in s["metrics"] for s in snaps)
-    ids, new_ids = _ids(old), _ids(new)
-    _assert_lookups(spark, root, _salt_differs(ids, 16, 4)[:6]
-                    + new_ids[:6], ids[:30] + new_ids[:30])
+    assert len(snaps) == 1 and "scheme" not in snaps[0]["metrics"]
+    batch = _short_docs(spark, 40000, seed=35, prefix="s-").cache()
+    batch.write.mode("append").parquet(src)
+    streaming.encode_stream(spark, src, root)
+    assert decode_job._scheme_from_manifest(root, None)["n_salts"] == 16
+    ids = _ids(batch)
+    _assert_lookups(spark, root, _salt_differs(ids, 16, 4)[:6], ids[:30])
 
 
 def test_encode_resumes_after_stream_commit(spark, tmp_path, monkeypatch):

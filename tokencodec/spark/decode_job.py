@@ -12,8 +12,8 @@ Projection pushdown reaches the PAGE level (the reference's projection
 cleanup, op #20, pushed into the binary format): ``columns=`` decodes
 only the pages of requested columns, so a (doc_id, n_tok) scan never
 reads the tokens pages — 98.7% of the table's bytes on the bench
-corpus — and `.explain` shows only the needed page binaries in
-ReadSchema.
+corpus: the chunk reader asks pyarrow for the needed page columns
+only.
 
 ``packed=True`` returns tokens as little-endian int32 BINARY blobs
 instead of array<int32>: binary columns cross the Python->JVM Arrow
@@ -41,23 +41,26 @@ Lookups and range scans are narrowed on the driver before any job:
 `_file_plan` reads each committed data file's parquet footer row-group
 statistics (salt, doc-id and n_tok bounds, max doc_parts, compressed
 size; cached by path) and keeps only candidate files and row groups —
-unknown stats always stay candidates. A range scan lists the kept files
-in its FileScan and stitches split documents in a branch co-located by
-repartition("sgrp"). A point or batch lookup runs no Spark job at all
-(`_lookup`): the driver reads the kept row groups with pyarrow, one at
-a time, keeps the chunks whose doc-id range and salt admit a target,
-decodes them with the same kernels the tasks run (Bloom probe, page
-decode, split-part stitch), masks pending deletes by each file's commit
-seq and returns a local DataFrame. It holds one row group, the
-candidate chunks and the decoded hits at a time, and reads
-`lookup_report`'s ``bytes_kept`` from storage; the root must be one
-pyarrow can address. `lookup_report` exposes the file and row group
-decision without running a job.
+unknown stats always stay candidates. Scans and lookups share one chunk
+reader (`_chunk_reader`): it reads a file's kept row groups with
+pyarrow, masks chunks with pyarrow predicates, decodes whole chunks as
+they stream and stitches a file's split parts in (split_uid, doc_part)
+order when the file ends — every writer puts all parts of a split
+document in one file (fsck checks it). A scan runs the reader in
+``spark.range(0, k, 1, k)`` tasks over the files `_scan_tasks` gives
+them, so its plan has no FileScan and no Exchange. A point or batch
+lookup runs it on the driver with no Spark job at all and returns a
+local DataFrame; it holds one row group and the decoded hits
+at a time, and reads `lookup_report`'s ``bytes_kept`` from storage.
+Both mask pending deletes by each file's commit seq, and both need a
+root pyarrow can address. `lookup_report` exposes the file and row
+group decision without running a job.
 """
 
 from __future__ import annotations
 
 import bisect
+import copy
 from collections.abc import Iterator
 
 import numpy as np
@@ -66,7 +69,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from tokencodec import pageformat
-from tokencodec.spark.encode_job import read_pages
 from tokencodec.spark.table import SnapshotTable, is_delete_group
 
 ALL_COLUMNS = ["doc_id", "tokens", "n_tok", "source"]
@@ -265,21 +267,21 @@ def _bloom_rows(it: Iterator[pa.RecordBatch],
             yield batch.filter(pa.array(keep))
 
 
-# chunk columns the decode kernels mask pending deletes with: the
-# chunk's doc-id bounds (_Deletes.may_hit) and its file (_Deletes.seq_of)
-_DEL_COLS = ("doc_id_min", "doc_id_max", "_fp")
+# chunk columns the decode kernel masks pending deletes with: the
+# chunk's doc-id bounds (_Deletes.may_hit)
+_DEL_COLS = ("doc_id_min", "doc_id_max")
 
 
 def make_decode_batches(packed: bool = False, cols: list[str] | None = None,
                         extras: tuple = (),
                         targets: list[str] | None = None,
                         dels: _Deletes | None = None):
-    """mapInArrow kernel decoding one chunk per input row, and the input
-    columns it needs. ``targets`` (point / batch lookups) adds the
-    in-kernel Bloom probe over ``doc_bloom``. ``dels`` (pending deletes;
-    ``cols`` then holds doc_id) drops the rows it masks, reading each
-    chunk's seq from its ``_fp`` file path; a chunk whose doc-id bounds
-    hold no deleted id is not checked."""
+    """Kernel decoding one chunk per input row, and the input columns it
+    needs. ``targets`` (point / batch lookups) adds the in-kernel Bloom
+    probe over ``doc_bloom``. ``dels`` (pending deletes; ``cols`` then
+    holds doc_id) drops the rows it masks; the kernel's ``seq`` argument
+    is the data seq of the file the rows come from (_Deletes.seq_of). A
+    chunk whose doc-id bounds hold no deleted id is not checked."""
     cols = list(ALL_COLUMNS) if cols is None else cols
     page_cols = sorted({_COL_PAGE[c] for c in cols}
                        | ({"page_n_tok"} if "tokens" in cols else set()))
@@ -287,7 +289,8 @@ def make_decode_batches(packed: bool = False, cols: list[str] | None = None,
     scal = ((("extra_pages",) if extras else ())
             + (_DEL_COLS if dels is not None else ()))
 
-    def decode_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def decode_batches(it: Iterator[pa.RecordBatch],
+                       seq: int | None = None) -> Iterator[pa.RecordBatch]:
         for _, pages, sc in iter_page_rows(_bloom_rows(it, targets),
                                            page_cols, scal):
             chunk = _decode_chunk(pages, cols, packed)
@@ -304,8 +307,7 @@ def make_decode_batches(packed: bool = False, cols: list[str] | None = None,
             out = pa.RecordBatch.from_arrays(arrays, names=names)
             if dels is not None and dels.may_hit(sc["doc_id_min"],
                                                  sc["doc_id_max"]):
-                dead = dels.dead(out.column("doc_id").to_pylist(),
-                                 dels.seq_of(sc["_fp"]))
+                dead = dels.dead(out.column("doc_id").to_pylist(), seq)
                 if dead.any():
                     out = out.filter(pa.array(~dead))
             yield out
@@ -317,31 +319,31 @@ def make_decode_batches(packed: bool = False, cols: list[str] | None = None,
 
 def make_stitch_batches(packed: bool, cols: list[str], extras: tuple = (),
                         dels: _Deletes | None = None):
-    """mapInArrow over SPLIT-PART page rows, co-partitioned by the split
-    group (``sgrp``) and sorted (sgrp, doc_part): linear reassembly of
-    oversized documents. Each split-part chunk is single-row by
-    construction (encode_job slices one oversized doc per part), so the
-    stitch is one np.concatenate per document — O(total bytes), where
-    the previous JVM fold-concat (F.aggregate over collect_list) recopied
-    the accumulated blob per part: O(P²) bytes, ~20 GB of transient
-    copies for a 10⁸-token doc at a 1M budget (VERDICT r3 wrong #2).
-    Shuffling happens BEFORE decode too, so the exchange moves encoded
-    pages, not decoded token arrays. ``dels`` (pending deletes; ``cols``
-    then holds doc_id) drops a masked document whole, by its first
-    part's ``_fp`` seq: the parts of a split document are committed
-    together; its later parts are never decoded."""
+    """Kernel over the SPLIT-PART page rows of one file, sorted by the
+    split group (``sgrp``, the split uid) and doc_part: linear
+    reassembly of oversized documents, decoding each part's compressed
+    pages only when its turn comes. Each split-part chunk is single-row
+    by construction (encode_job slices one oversized doc per part), so
+    the stitch is one np.concatenate per document — O(total bytes),
+    where the previous JVM fold-concat (F.aggregate over collect_list)
+    recopied the accumulated blob per part: O(P²) bytes, ~20 GB of
+    transient copies for a 10⁸-token doc at a 1M budget (VERDICT r3
+    wrong #2). ``dels`` (pending deletes; ``cols`` then holds doc_id)
+    drops a masked document whole, by the kernel's ``seq``
+    argument, the data seq of the parts' file: its later parts are
+    never decoded."""
     dec_cols = [c for c in cols if c in ("doc_id", "source")]
     need_tok = "tokens" in cols
     need_ntok = "n_tok" in cols
     page_cols = sorted({_COL_PAGE[c] for c in dec_cols}
                        | ({"page_tokens"} if need_tok else set())
                        | ({"page_n_tok"} if need_ntok else set()))
-    scal = ((("extra_pages",) if extras else ())
-            + (("_fp",) if dels is not None else ()))
+    scal = ("extra_pages",) if extras else ()
     ext_names = [n for n, _ in extras]
     out_names = cols + ext_names
 
-    def stitch(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def stitch(it: Iterator[pa.RecordBatch],
+               seq: int | None = None) -> Iterator[pa.RecordBatch]:
         # bind at call time so tests can shrink the thresholds
         _FLUSH_BYTES = STITCH_FLUSH_BYTES
         _INT32_SAFE = STITCH_INT32_SAFE
@@ -440,8 +442,8 @@ def make_stitch_batches(packed: bool, cols: list[str], extras: tuple = (),
                 got_first = True
                 for c in dec_cols:
                     first[c] = _string_array(pages[_COL_PAGE[c]])[0].as_py()
-                dead = dels is not None and bool(dels.dead(
-                    [first["doc_id"]], dels.seq_of(scalars["_fp"]))[0])
+                dead = dels is not None and bool(
+                    dels.dead([first["doc_id"]], seq)[0])
                 if extras and not dead:
                     m = dict(scalars["extra_pages"] or {})
                     for n_, t in extras:
@@ -461,24 +463,6 @@ def make_stitch_batches(packed: bool, cols: list[str], extras: tuple = (),
             yield b
 
     return stitch, page_cols + list(scal)
-
-
-def _lookup_batches(decode_fn, stitch_fn, targets: list[str]):
-    """The decode of a lookup's chunk rows (_lookup), sorted (sgrp,
-    doc_part): whole chunks (``_split`` false) decoded as they stream
-    through ``decode_fn`` (which probes the Bloom filters itself),
-    split parts kept in order, Bloom-probed and stitched at the end by
-    ``stitch_fn``."""
-    def run(it):
-        parts = []
-        for batch in it:
-            split = batch.column("_split").to_numpy(zero_copy_only=False)
-            if not split.all():
-                yield from decode_fn(iter([batch.filter(pa.array(~split))]))
-            if split.any():
-                parts.append(batch.filter(pa.array(split)))
-        yield from stitch_fn(_bloom_rows(iter(parts), targets))
-    return run
 
 
 def _out_schema(cols: list[str], packed: bool, extras: tuple) -> pa.Schema:
@@ -552,12 +536,18 @@ class _Deletes:
     ``ids`` is {doc_id: newest delete seq}: a copy dies only when its
     data seq is strictly older, so upsert replacements and later
     re-adds survive. ``path_seqs`` maps normalized committed data files
-    to their group's seq (_path_seq_map)."""
+    to their group's seq (_path_seq_map); ``at`` binds another map to
+    the same ids without copying or re-sorting them."""
 
-    def __init__(self, ids: dict[str, int], path_seqs: dict[str, int]):
+    def __init__(self, ids: dict[str, int]):
         self.ids = ids
-        self.path_seqs = path_seqs
+        self.path_seqs: dict[str, int] = {}
         self.sorted = sorted(d for d in ids if d is not None)
+
+    def at(self, path_seqs: dict[str, int]) -> _Deletes:
+        bound = copy.copy(self)
+        bound.path_seqs = path_seqs
+        return bound
 
     def may_hit(self, lo: str | None, hi: str | None) -> bool:
         """May doc-id bounds [lo, hi] hold a deleted id? Unknown: yes."""
@@ -588,35 +578,22 @@ def _path_seq_map(groups: dict, seqs: dict, min_seq: int) -> dict:
             for p in groups.get(g, [])}
 
 
-# the ids of the last-read set of delete files, keyed by their sorted
-# paths (one entry): delete-id files are immutable and uniquely named,
-# so repeated lookups and scans of one snapshot read them once. The
-# driver holds this id set during every read of that snapshot anyway.
-_IDS_CACHE: dict[tuple, dict[str, list[str]]] = {}
-
-
-def _read_ids_pyarrow(paths: list[str]) -> dict[str, list[str]]:
-    """{delete file: its doc_ids}, read on the driver: delete files are
-    takedown-sized by delete_docs' contract."""
-    from tokencodec.spark.encode_job import _open_parquet
-    key = tuple(sorted(paths))
-    ids = _IDS_CACHE.get(key)
-    if ids is None:
-        ids = {p: _open_parquet(p).read(columns=["doc_id"]).column(0)
-               .to_numpy(zero_copy_only=False).tolist() for p in key}
-        _IDS_CACHE.clear()
-        _IDS_CACHE[key] = ids
-    return ids
+# the last-built delete set (one entry), keyed by its (seq, delete
+# file) pairs: delete-id files are immutable and uniquely named, so
+# repeated lookups and scans of one snapshot read, map and sort the ids
+# once. The driver holds this id set during every read of that
+# snapshot anyway.
+_DELETES_MEMO: dict[tuple, _Deletes] = {}
 
 
 def _pending_deletes(tbl: SnapshotTable, snap: dict) -> _Deletes | None:
     """The delete manifests of ``snap`` as one _Deletes; None when they
     list no id. Each delete group masks by its first-commit sequence
     (table.group_seqs); a pending group without one is a fault. Ids are
-    read on the driver with pyarrow, so a root pyarrow cannot address
-    is refused once it holds a delete manifest (no writer creates one
-    there)."""
-    from tokencodec.spark.encode_job import require_direct_write
+    read on the driver with pyarrow (delete files are takedown-sized by
+    delete_docs' contract), so a root pyarrow cannot address is refused
+    once it holds a delete manifest (no writer creates one there)."""
+    from tokencodec.spark.encode_job import _open_parquet, require_direct_write
     groups = tbl.resolve_groups(snap)
     del_groups = {k: ps for k, ps in groups.items()
                   if is_delete_group(k) and ps}
@@ -630,15 +607,22 @@ def _pending_deletes(tbl: SnapshotTable, snap: dict) -> _Deletes | None:
             f"pending delete group(s) {unattributed[:3]} under {tbl.root} "
             "have no sequence attribution (the chain and group-seqs.json "
             "both lack them): the table's metadata is damaged")
-    ids = _read_ids_pyarrow([p for ps in del_groups.values() for p in ps])
-    by_id: dict[str, int] = {}
     # oldest delete first: a doc deleted more than once takes the
     # NEWEST delete's seq
-    for s, k in sorted((seqs[k], k) for k in del_groups):
-        for p in del_groups[k]:
-            by_id.update(dict.fromkeys(ids[p], s))
-    return (_Deletes(by_id, _path_seq_map(
-        groups, seqs, min(seqs[k] for k in del_groups))) if by_id else None)
+    key = tuple(sorted((seqs[k], p) for k, ps in del_groups.items()
+                       for p in ps))
+    dels = _DELETES_MEMO.get(key)
+    if dels is None:
+        by_id: dict[str, int] = {}
+        for s, p in key:
+            by_id.update(dict.fromkeys(
+                _open_parquet(p).read(columns=["doc_id"]).column(0)
+                .to_numpy(zero_copy_only=False).tolist(), s))
+        dels = _Deletes(by_id)
+        _DELETES_MEMO.clear()
+        _DELETES_MEMO[key] = dels
+    return (dels.at(_path_seq_map(groups, seqs, key[0][0]))
+            if dels.ids else None)
 
 
 # Per-file data skipping (Delta Lake's per-file statistics): before a
@@ -742,9 +726,10 @@ def _file_plan(root: str, snap: dict, paths: list[str],
       other decodes keep every file.
     - ``row_groups``: per kept path, the indices of its kept row
       groups, None when unknown (a file without footer stats, or no
-      narrowing) — the whole path is then read.
-      ``row_groups_kept`` / ``bytes_kept`` total them and their
-      compressed sizes; None when any kept path is unknown.
+      narrowing) — the whole path is then read. ``path_bytes``: per
+      kept path, the compressed size of its kept row groups, None when
+      unknown. ``row_groups_kept`` / ``bytes_kept`` total them; None
+      when any kept path is unknown.
     - ``salts``: the salts ``targets`` hash to under the table's
       salt_mod scheme, None when the scheme derives none.
     - ``stitch``: whether split documents may be read, so the stitch
@@ -760,12 +745,12 @@ def _file_plan(root: str, snap: dict, paths: list[str],
             n = int(sch["n_salts"])
             salts = [zlib.crc32(d.encode("utf-8")) % n for d in targets]
     stitch = snap["metrics"]["max_doc_parts_chain"] > 1
-    kept, rgs, nbytes = paths, [None] * len(paths), 0
+    kept, rgs, nbytes = paths, [None] * len(paths), [None] * len(paths)
     if targets is not None or any(v is not None for v in (
             doc_id_min, doc_id_max, n_tok_min, n_tok_max)):
         pairs = (None if targets is None else
                  list(zip(targets, salts or [None] * len(targets))))
-        kept, rgs, may_split = [], [], False
+        kept, rgs, nbytes, may_split = [], [], [], False
         for p in paths:
             bounds = _footer_bounds(p)
             hit = (None if bounds is None else
@@ -777,13 +762,14 @@ def _file_plan(root: str, snap: dict, paths: list[str],
                 rgs.append(hit)
                 may_split = may_split or hit is None or any(
                     _rg_may_split(bounds[i]) for i in hit)
-                nbytes += sum(bounds[i]["bytes"] for i in hit or ())
+                nbytes.append(None if hit is None else
+                              sum(bounds[i]["bytes"] for i in hit))
         stitch = stitch and may_split
     known = None not in rgs
     return {"files_considered": len(paths), "files_kept": len(kept),
-            "paths": kept, "row_groups": rgs,
+            "paths": kept, "row_groups": rgs, "path_bytes": nbytes,
             "row_groups_kept": sum(map(len, rgs)) if known else None,
-            "bytes_kept": nbytes if known else None,
+            "bytes_kept": sum(nbytes) if known else None,
             "salts": sorted(set(salts)) if salts else None,
             "stitch": stitch}
 
@@ -829,12 +815,6 @@ def lookup_report(root: str, doc_ids: list[str] | None = None,
                       n_tok_max=n_tok_max)
 
 
-# chunk metadata a lookup reads next to the page columns: the inputs of
-# its chunk masks, Bloom probe and split-part order
-_LOOKUP_META = ("salt", "doc_id_min", "doc_id_max", "doc_part", "doc_parts",
-                "split_uid", "doc_bloom")
-
-
 def _read_chunks(path: str, row_groups: list[int] | None,
                  columns: list[str]) -> Iterator[pa.Table]:
     """``columns`` of the chunk rows of one committed data file, read
@@ -847,98 +827,146 @@ def _read_chunks(path: str, row_groups: list[int] | None,
             yield pf.read_row_group(i, columns=columns)
 
 
-def _lookup(spark: SparkSession, root: str, tbl: SnapshotTable, snap: dict,
-            paths: list[str] | None, targets: list[str], req: list[str],
-            cols: list[str], extras: tuple, packed: bool, branch: str | None,
-            buckets: list[int] | None, sources: list[str] | None,
-            n_tok_min: int | None, n_tok_max: int | None) -> DataFrame:
-    """A point or batch lookup, run on the driver with no Spark job.
-    The row groups _file_plan keeps are read with pyarrow, masked to
-    chunks whose doc-id range covers a target and whose salt is a
-    target's, sorted (sgrp, doc_part) and decoded by the task kernels
-    (_lookup_batches: Bloom probe and page decode, split parts
-    stitched), which also mask pending deletes by each chunk's
-    committed path (_Deletes.seq_of), as scans do; rows are re-filtered
-    exactly (ids, sources, n_tok range).
-    Decodes ``cols`` and the extras; returns a local DataFrame of the
-    ``req`` columns."""
+def _chunk_reader(cols: list[str], extras: tuple, packed: bool,
+                  dels: _Deletes | None = None,
+                  targets: list[str] | None = None,
+                  salts: list[int] | None = None,
+                  doc_id_min: str | None = None,
+                  doc_id_max: str | None = None,
+                  buckets: list[int] | None = None,
+                  sources: list[str] | None = None,
+                  n_tok_min: int | None = None,
+                  n_tok_max: int | None = None):
+    """The one chunk reader of scans (in tasks) and lookups (on the
+    driver): a function from (path, row groups) units to the decoded
+    rows of ``cols`` and the extras that pass the filters, and the
+    chunk columns it reads.
+
+    Each row group is read with pyarrow and masked to the chunks that
+    may hold a matching row: the doc-id and n_tok ranges against the
+    chunk's bounds (split parts are exempt from the n_tok range: their
+    bounds describe part lengths), lookup ``targets`` (the first target
+    at or above a chunk's doc_id_min is not above its doc_id_max) and
+    their ``salts``, ``buckets``, and ``sources`` against the chunk's
+    JSON source set, a substring test that may keep an extra chunk but
+    never drops a matching one (NULL = unknown = keep). Decoded rows
+    are then filtered exactly.
+
+    Whole chunks decode as they stream. A file's split parts are held,
+    compressed, until the file ends, then stitched in (split_uid,
+    doc_part) order: every writer puts all parts of a split document in
+    one file. A projection without tokens or n_tok reads only part 0 of
+    a split document, which carries its identity. Pending deletes
+    (``dels``) mask by each file's data seq, looked up once per file."""
+    import json
+
     import pyarrow.compute as pc
 
-    schema = _out_schema(cols, packed, extras)
-
-    def result(rows: pa.Table | None = None) -> DataFrame:
-        # a local relation: collect() runs no job. An empty result
-        # converts from one empty chunk, never from zero chunks
-        if rows is None or not rows.num_rows:
-            rows = schema.empty_table()
-        return spark.createDataFrame(rows.select(req))
-
-    if not targets:
-        return result()
-    # explicit-paths reads are scoped by their caller: no deletes
-    dels = None if paths is not None else _pending_deletes(tbl, snap)
-    plan = _file_plan(root, snap, _data_paths(tbl, snap) if paths is None
-                      else list(paths), branch=branch, targets=targets,
-                      n_tok_min=n_tok_min, n_tok_max=n_tok_max)
+    stitch = "tokens" in cols or "n_tok" in cols
     fn, page_cols = make_decode_batches(packed, cols, extras,
                                         targets=targets, dels=dels)
     sfn, spage_cols = make_stitch_batches(packed, cols, extras, dels=dels)
-    read = sorted({*page_cols, *spage_cols, *_LOOKUP_META,
-                   *(["bucket"] if buckets is not None else [])}
-                  - {"_fp"})
-    salts = (None if plan["salts"] is None
-             else pa.array(plan["salts"], pa.int32()))
-    tgt = np.array(targets, dtype=object)
+    need = {"doc_part", "doc_parts"} | ({"split_uid"} if stitch else set())
+    conds, exact = [], []
+    for c, op, v in (("doc_id", "greater_equal", doc_id_min),
+                     ("doc_id", "less_equal", doc_id_max),
+                     ("n_tok", "greater_equal", n_tok_min),
+                     ("n_tok", "less_equal", n_tok_max)):
+        if v is None:
+            continue
+        # a chunk may hold a row >= v if its max is, <= v if its min is
+        bound = f"{c}_max" if op == "greater_equal" else f"{c}_min"
+        need.add(bound)
 
-    def candidates(t: pa.Table) -> pa.Table:
-        """The chunks of ``t`` whose doc-id range covers a target — the
-        first target >= doc_id_min (targets are sorted) is also <=
-        doc_id_max — and whose salt is a target's."""
-        lo_s = t["doc_id_min"].to_numpy(zero_copy_only=False)
-        hi_s = t["doc_id_max"].to_numpy(zero_copy_only=False)
-        first = tgt[np.minimum(np.searchsorted(tgt, lo_s), len(tgt) - 1)]
-        keep = pa.array((lo_s <= first) & (first <= hi_s), pa.bool_())
-        if salts is not None:
-            # a doc's salt is crc32(doc_id) % n_salts under the table's
-            # one salt_mod scheme, and split parts and compaction
-            # rewrites keep it: a lookup reads only its targets' salts
-            # of n_salts (65536 at design scale), which hash-spread
-            # doc-id ranges alone barely narrow
-            keep = pc.and_(keep, pc.is_in(t["salt"], value_set=salts))
-        if buckets is not None:
-            keep = pc.and_(keep, pc.is_in(
-                t["bucket"], value_set=pa.array(buckets, pa.int32())))
-        return t.filter(keep)
+        def cond(t: pa.Table, op=op, b=bound, v=v, exempt=c == "n_tok"):
+            m = getattr(pc, op)(t[b], v)
+            return pc.or_(pc.greater(t["doc_parts"], 1), m) if exempt else m
+        conds.append(cond)
+        exact.append(lambda r, op=op, c=c, v=v: getattr(pc, op)(r[c], v))
+    for c, vs in (("doc_id", targets), ("source", sources)):
+        if vs is not None:
+            exact.append(lambda r, c=c, vs=pa.array(vs, pa.string()):
+                         pc.is_in(r[c], value_set=vs))
+    if targets is not None:
+        need |= {"doc_id_min", "doc_id_max"}
+        tgt = np.array(targets, dtype=object)
 
-    # one row group in memory at a time: only its candidate chunks stay
-    tables = []
-    for p, rgs in zip(plan["paths"], plan["row_groups"]):
-        for t in _read_chunks(p, rgs, read):
-            t = candidates(t)
-            if dels is not None:
-                t = t.append_column("_fp", pa.array([p] * t.num_rows,
-                                                    pa.string()))
-            tables.append(t)
-    if not tables:
-        return result()
-    chunks = pa.concat_tables(tables)
-    chunks = (chunks
-              .append_column("sgrp", chunks["split_uid"])
-              .append_column("_split", pc.greater(chunks["doc_parts"], 1))
-              .sort_by([("sgrp", "ascending"), ("doc_part", "ascending")]))
-    out = list(_lookup_batches(fn, sfn, targets)(chunks.to_batches()))
-    if not out:
-        return result()
-    rows = pa.Table.from_batches(out)
-    keep = pc.is_in(rows["doc_id"], value_set=pa.array(targets, pa.string()))
+        def covers(t: pa.Table) -> pa.Array:
+            lo = t["doc_id_min"].to_numpy(zero_copy_only=False)
+            hi = t["doc_id_max"].to_numpy(zero_copy_only=False)
+            first = tgt[np.minimum(np.searchsorted(tgt, lo), len(tgt) - 1)]
+            return pa.array((lo <= first) & (first <= hi), pa.bool_())
+        conds.append(covers)
+    # a doc's salt is crc32(doc_id) % n_salts under the table's one
+    # salt_mod scheme, and split parts and compaction rewrites keep
+    # it: a lookup reads only its targets' salts of n_salts (65536 at
+    # design scale), which hash-spread doc-id ranges alone barely narrow
+    for name, vals in (("salt", salts), ("bucket", buckets)):
+        if vals is not None:
+            need.add(name)
+            conds.append(lambda t, name=name, vs=pa.array(vals, pa.int32()):
+                         pc.is_in(t[name], value_set=vs))
     if sources is not None:
-        keep = pc.and_(keep, pc.is_in(
-            rows["source"], value_set=pa.array(sources, pa.string())))
-    if n_tok_min is not None:
-        keep = pc.and_(keep, pc.greater_equal(rows["n_tok"], n_tok_min))
-    if n_tok_max is not None:
-        keep = pc.and_(keep, pc.less_equal(rows["n_tok"], n_tok_max))
-    return result(rows.filter(keep))
+        need.add("source_set")
+        needles = [json.dumps(s) for s in sources]
+
+        def overlaps(t: pa.Table) -> pa.Array:
+            m = pc.is_null(t["source_set"])
+            for s in needles:
+                m = pc.or_kleene(m, pc.match_substring(t["source_set"], s))
+            return m
+        conds.append(overlaps)
+    if not stitch:
+        conds.append(lambda t: pc.equal(t["doc_part"], 0))
+    read = sorted({*page_cols, *(spage_cols if stitch else ()), *need})
+
+    def rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            for f in exact:
+                b = b.filter(f(b))
+            if b.num_rows:
+                yield b
+
+    def run(units) -> Iterator[pa.RecordBatch]:
+        for path, rgs in units:
+            seq = None if dels is None else dels.seq_of(path)
+            parts = []
+            for t in _read_chunks(path, rgs, read):
+                for c in conds:
+                    t = t.filter(c(t))
+                split = pc.greater(t["doc_parts"], 1)
+                if stitch and pc.any(split).as_py():
+                    parts.append(t.filter(split))
+                    t = t.filter(pc.invert(split))
+                if t.num_rows:
+                    yield from rows(fn(iter(t.to_batches()), seq))
+            if parts:
+                parts = pa.concat_tables(parts)
+                parts = (parts.append_column("sgrp", parts["split_uid"])
+                         .sort_by([("sgrp", "ascending"),
+                                   ("doc_part", "ascending")]))
+                # every part carries its document's id in its Bloom
+                # filter, so a lookup keeps all parts or none
+                yield from rows(sfn(_bloom_rows(iter(parts.to_batches()),
+                                                targets), seq))
+
+    return run, read
+
+
+def _scan_tasks(snap: dict, plan: dict, n_files: int,
+                cores: int) -> list[list[tuple]]:
+    """The (path, row groups) units each scan task reads, from a
+    _file_plan: one unit per kept file, so all parts of a split document
+    land in one task. encode_job.assign_splits sizes and balances the
+    tasks by each file's kept bytes; a file read whole (an un-narrowed
+    decode reads no footer on the driver) or without stats weighs the
+    snapshot's mean file, ``table_totals.enc_bytes / n_files``. A scan
+    with no kept file runs one task that reads nothing."""
+    from tokencodec.spark.encode_job import assign_splits
+    mean = snap["metrics"]["table_totals"]["enc_bytes"] // max(n_files, 1)
+    units = [(p, rgs, mean if b is None else b) for p, rgs, b in zip(
+        plan["paths"], plan["row_groups"], plan["path_bytes"])]
+    return assign_splits(units, cores) or [[]]
 
 
 def decode(spark: SparkSession, root: str,
@@ -959,7 +987,7 @@ def decode(spark: SparkSession, root: str,
     column chunk of every row group, /root/reference/src/Parquet/Reader.hs:577-585):
     per-chunk stats recorded at encode time — doc-id range, length
     bucket, n_tok range, and the distinct-source set — prune whole
-    chunks BEFORE any page crosses the Arrow boundary, min/max skipping
+    chunks BEFORE any of their pages is parsed, min/max skipping
     exactly like Iceberg/parquet row-group stats. Every chunk predicate
     is re-applied row-level after decode (chunk ranges merely overlap
     the predicate; rows must match it exactly). A NULL source set (over
@@ -975,16 +1003,16 @@ def decode(spark: SparkSession, root: str,
     re-filtered to the exact set. Takedown-sized lists by contract
     (the same bound as delete sets); mutually exclusive with
     doc_id_min/max. A lookup (``doc_ids``, or doc_id_min == doc_id_max)
-    runs on the driver and returns a local DataFrame: no Spark job
-    (_lookup). Its root must be one pyarrow can address.
+    runs the chunk reader (_chunk_reader) on the driver and returns a
+    local DataFrame: no Spark job. Any other decode is a scan:
+    ``spark.range`` tasks run the same reader over their files
+    (_scan_tasks), with no FileScan and no Exchange in the plan. Either
+    way the root must be one pyarrow can address.
     """
-    from pyspark.sql import functions as F
-
     # lookup targets: an exact point lookup is the one-id batch lookup
     targets = _lookup_targets(doc_ids, doc_id_min, doc_id_max)
-    if targets is not None:
-        from tokencodec.spark.encode_job import require_direct_write
-        require_direct_write(root, "a lookup")
+    from tokencodec.spark.encode_job import require_direct_write
+    require_direct_write(root, "a scan" if targets is None else "a lookup")
 
     # the target snapshot is resolved ONCE; every manifest helper below
     # reads it from here. Time travel by name: a tag
@@ -1021,11 +1049,9 @@ def decode(spark: SparkSession, root: str,
         cols = cols + ["source"]
     if (n_tok_min is not None or n_tok_max is not None) and "n_tok" not in cols:
         cols = cols + ["n_tok"]
-    if targets is not None:
-        return _lookup(
-            spark, root, tbl, snap, paths, targets, req,
-            cols if "doc_id" in cols else ["doc_id"] + cols, extras, packed,
-            branch, buckets, sources, n_tok_min, n_tok_max)
+    if targets == []:  # an empty lookup opens no file
+        return spark.createDataFrame(
+            _out_schema(cols, packed, extras).empty_table().select(req))
     # row-level deletes (equality-delete manifests): the ids are read
     # on the driver into one _Deletes, which the decode kernels apply
     # to each chunk by its file's commit seq (a delete masks only rows
@@ -1035,102 +1061,47 @@ def decode(spark: SparkSession, root: str,
     # an incremental consumer sees appends only; delete commits are not
     # a changelog event in this engine.
     dels = None if paths is not None else _pending_deletes(tbl, snap)
-    needs_doc = (doc_id_min is not None or doc_id_max is not None
-                 or dels is not None or "tokens" in cols or "n_tok" in cols)
+    needs_doc = (targets is not None or doc_id_min is not None
+                 or doc_id_max is not None or dels is not None
+                 or "tokens" in cols or "n_tok" in cols)
     if needs_doc and "doc_id" not in cols:
         cols = ["doc_id"] + cols
 
-    # driver-side file narrowing and the stitch decision, from manifests
-    # and parquet footers (_file_plan — also what lookup_report shows):
-    # the scan lists only candidate files
-    plan = _file_plan(root, snap, _data_paths(tbl, snap) if paths is None
-                      else list(paths), branch=branch,
+    # driver-side file narrowing from manifests and parquet footers
+    # (_file_plan — also what lookup_report shows), with no Spark job
+    table_paths = _data_paths(tbl, snap)
+    plan = _file_plan(root, snap, table_paths if paths is None
+                      else list(paths), branch=branch, targets=targets,
                       doc_id_min=doc_id_min, doc_id_max=doc_id_max,
                       n_tok_min=n_tok_min, n_tok_max=n_tok_max)
-    pages = read_pages(spark, root, paths=plan["paths"])
-    if dels is not None and plan["paths"]:
-        # each chunk's file gives its commit seq (no candidate file:
-        # the empty literal frame has no _metadata column, and no row)
-        pages = pages.withColumn("_fp", F.col("_metadata.file_path"))
-    else:
-        dels = None
-    # chunk-level pruning: every predicate below is one conjunct of a
-    # single JVM-side filter over chunk metadata rows
-    keep = []
-    if doc_id_min is not None:
-        keep.append(F.col("doc_id_max") >= doc_id_min)
-    if doc_id_max is not None:
-        keep.append(F.col("doc_id_min") <= doc_id_max)
-    if buckets is not None:
-        keep.append(F.col("bucket").isin(buckets))
-    if sources is not None:
-        # keep chunks whose recorded source set (a JSON array, safe for
-        # any source value) overlaps the filter; NULL set = unknown =
-        # keep
-        keep.append(
-            F.col("source_set").isNull()
-            | (F.size(F.array_intersect(
-                F.from_json(F.col("source_set"), "array<string>"),
-                F.array(*[F.lit(s) for s in sources]))) > 0))
-    n_parts = F.col("doc_parts")
-    if n_tok_min is not None:
-        keep.append((n_parts > 1) | (F.col("n_tok_max") >= n_tok_min))
-    if n_tok_max is not None:
-        keep.append((n_parts > 1) | (F.col("n_tok_min") <= n_tok_max))
-    if keep:
-        cond = keep[0]
-        for c in keep[1:]:
-            cond = cond & c
-        pages = pages.filter(cond)
-    # zero-job planning: every snapshot carries max_doc_parts_chain,
-    # and narrowed decodes read doc_parts bounds from footers, so the
-    # reassembly branch is decided without a job — building a decode
-    # plan over a 100-TB table must not run a metadata scan
-    any_split = plan["stitch"]
-    # column pruning down to the PAGE level: only requested columns'
-    # binary pages cross the Arrow boundary
-    fn, page_cols = make_decode_batches(packed, cols, extras, dels=dels)
+    run, _ = _chunk_reader(cols, extras, packed, dels=dels,
+                           targets=targets, salts=plan["salts"],
+                           doc_id_min=doc_id_min, doc_id_max=doc_id_max,
+                           buckets=buckets, sources=sources,
+                           n_tok_min=n_tok_min, n_tok_max=n_tok_max)
+    schema = _out_schema(cols, packed, extras)
+    if targets is not None:
+        # a lookup reads its kept row groups on the driver and returns a
+        # local relation: collect() runs no job. An empty result
+        # converts from one empty chunk, never from zero chunks
+        out = list(run(zip(plan["paths"], plan["row_groups"])))
+        rows = pa.Table.from_batches(out) if out else schema.empty_table()
+        return spark.createDataFrame(rows.select(req))
+
+    # a scan: each range task runs the reader over the files
+    # _scan_tasks gives it; the assignment travels in the closure,
+    # O(files) bytes
+    tasks = _scan_tasks(snap, plan, len(table_paths),
+                        spark.sparkContext.defaultParallelism)
+
+    def scan(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in it:
+            for t in b.column(0).to_pylist():
+                yield from run(tasks[t])
+
     from pyspark.sql.pandas.types import from_arrow_schema
-    out_type = from_arrow_schema(_out_schema(cols, packed, extras))
-    if not any_split:
-        out = pages.select(page_cols).mapInArrow(fn, out_type)
-    elif "tokens" not in cols and "n_tok" not in cols:
-        # split parts duplicate (doc_id, source); part 0 is the identity
-        # — pruned BEFORE decode, so parts 1..P-1 never even decode
-        out = (pages.filter(F.col("doc_part") == 0)
-               .select(page_cols).mapInArrow(fn, out_type))
-    else:
-        whole = (pages.filter(n_parts == 1).select(page_cols)
-                 .mapInArrow(fn, out_type))
-        # oversized documents were split across chunks at encode time
-        # (skew handling); co-locate their ENCODED part pages on the
-        # encode-time split uid (NOT doc_id: a duplicate doc_id encoded
-        # twice must yield two rows, never one merged corruption), sort
-        # by doc_part, and stitch linearly in the Arrow decode stage —
-        # the shuffle moves compressed pages, not decoded token arrays,
-        # and reassembly is one np.concatenate per doc (the former
-        # collect_list + binary fold-concat recopied the accumulated
-        # blob per part: O(P²) bytes).
-        sfn, spage_cols = make_stitch_batches(packed, cols, extras,
-                                              dels=dels)
-        stitched = (pages.filter(n_parts > 1)
-                    .withColumn("sgrp", F.col("split_uid"))
-                    .select(spage_cols + ["sgrp", "doc_part"])
-                    .repartition("sgrp")
-                    .sortWithinPartitions("sgrp", "doc_part")
-                    .mapInArrow(sfn, out_type))
-        out = whole.unionByName(stitched)
-    if doc_id_min is not None:
-        out = out.filter(F.col("doc_id") >= doc_id_min)
-    if doc_id_max is not None:
-        out = out.filter(F.col("doc_id") <= doc_id_max)
-    if sources is not None:
-        out = out.filter(F.col("source").isin(sources))
-    if n_tok_min is not None:
-        out = out.filter(F.col("n_tok") >= n_tok_min)
-    if n_tok_max is not None:
-        out = out.filter(F.col("n_tok") <= n_tok_max)
-    return out.select(*req)
+    return (spark.range(0, len(tasks), 1, len(tasks))
+            .mapInArrow(scan, from_arrow_schema(schema)).select(*req))
 
 
 def audit(original: DataFrame, decoded: DataFrame, strict: bool = False) -> dict:

@@ -9,9 +9,12 @@ the n_tok page's sum, string pages must carry n_rows values, and the
 recorded enc/raw byte metrics must match the page headers. It also
 checks the invariants the readers assume of this table format: a
 chunk's salt, doc-id bounds, split and n_tok columns are set, its
-source set is NULL or a JSON array, and every committed data path is a
-parquet file. Runs as
-one mapInArrow pass; returns a per-chunk report DataFrame.
+source set is NULL or a JSON array, every committed data path is a
+parquet file, and each split document's parts 0..doc_parts-1 appear
+exactly once, all in one data file (the scan planner gives each file to
+one task, which stitches its split parts when the file ends). Runs as
+one mapInArrow pass plus one aggregate over the split parts' metadata;
+returns a per-chunk report DataFrame.
 """
 
 from __future__ import annotations
@@ -157,18 +160,45 @@ def fsck_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             names=["chunk_uid", "ok", "error", "n_rows", "n_tokens", "crc_checked"])
 
 
+def _split_groups(pages: DataFrame) -> DataFrame:
+    """One bad report row (``chunk_uid`` holding the split uid) per
+    split document whose parts are not exactly 0..doc_parts-1, each
+    once, in one data file. A scan stitches each file's split parts on
+    their own, so parts spread over two files decode as two truncated
+    rows with the same doc_id; no writer leaves that."""
+    from pyspark.sql import functions as F
+    g = (pages.filter(F.col("doc_parts") > 1).groupBy("split_uid")
+         .agg(F.sort_array(F.collect_list("doc_part")).alias("parts"),
+              F.max("doc_parts").alias("of"),
+              F.countDistinct("doc_parts").alias("counts"),
+              F.countDistinct("_metadata.file_path").alias("files")))
+    whole = ((F.col("parts") == F.sequence(F.lit(0), F.col("of") - 1))
+             & (F.col("counts") == 1) & (F.col("files") == 1))
+    return g.filter(~whole).select(
+        F.col("split_uid").alias("chunk_uid"), F.lit(False).alias("ok"),
+        F.format_string("split document parts %s of doc_parts %d in %d "
+                        "data files", F.col("parts").cast("string"), "of",
+                        "files").alias("error"),
+        F.lit(0).alias("n_rows"), F.lit(0).cast("bigint").alias("n_tokens"),
+        F.lit(0).alias("crc_checked"))
+
+
 def fsck(spark: SparkSession, root: str,
          branch: str | None = None) -> DataFrame:
     """One report row per chunk of the current snapshot, plus one bad
     row (``chunk_uid`` holding the path) per committed data path that
-    is not a ``.parquet`` file."""
+    is not a ``.parquet`` file and one (holding the split uid) per
+    split document whose parts are incomplete, repeated or spread over
+    several files."""
     tbl = SnapshotTable(root, branch=branch)
     snap = tbl.current_snapshot()
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
     paths = _data_paths(tbl, snap)
-    rep = (read_pages(spark, root, paths=paths).select(_COLS)
-           .mapInArrow(fsck_batches, REPORT_DDL))
+    pages = read_pages(spark, root, paths=paths)
+    rep = pages.select(_COLS).mapInArrow(fsck_batches, REPORT_DDL)
+    if paths:
+        rep = rep.unionByName(_split_groups(pages))
     bad = [(p, False, "committed data path is not a .parquet file", 0, 0, 0)
            for p in paths if not p.endswith(".parquet")]
     return rep.unionByName(spark.createDataFrame(bad, REPORT_DDL)) \

@@ -84,25 +84,20 @@ def _batch_scheme(tbl: SnapshotTable,
 
     - a stamped table: the batch adopts its n_salts and re-stamps the
       same scheme (no row count needed);
-    - a table with no data: the batch picks ``salts_for(rows)`` and
-      stamps it, so later batches and ``encode()`` appends adopt it;
-    - data but no stamp (micro-batches of older engine versions, each
-      salted by its own size): the batch is salted by its size and
-      the table stays unstamped — lookups skip salt pruning there.
+    - an unstamped table (no data yet: only empty micro-batches leave
+      one, since every writer that adds rows stamps): the batch picks
+      ``salts_for(rows)`` and stamps it, so later batches and
+      ``encode()`` appends adopt it.
 
     An empty batch stamps nothing, so it cannot pin a salt count."""
     from tokencodec.spark.decode_job import _salt_scheme
-    from tokencodec.spark.table import is_delete_group
     snap = tbl.current_snapshot()
     sch = None if snap is None else _salt_scheme(tbl.root, snap=snap)
     if sch is not None:
         return int(sch["n_salts"]), sch
     n_rows = batch_df.count()
     n_salts = part.salts_for(n_rows)
-    has_data = snap is not None and any(
-        ps for k, ps in tbl.resolve_groups(snap).items()
-        if not is_delete_group(k))
-    if n_rows == 0 or has_data:
+    if n_rows == 0:
         return n_salts, None
     return n_salts, {"group_scheme": "salt_mod", "n_salts": n_salts,
                      "commit_groups": 1}
