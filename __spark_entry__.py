@@ -851,7 +851,8 @@ FROM embeddings ORDER BY vec_id
 
 def _vectors_wap_root(spark: SparkSession, sf_dir: str) -> str:
     """Write-audit-publish for the VECTOR table (round 5b,
-    maintenance.publish_staged_vectors): even-id vectors encoded to the
+    maintenance.publish_staged, which reads the kind from the staging
+    snapshot): even-id vectors encoded to the
     main table, odd-id vectors to a staging root under a fresh group
     name, audited there in isolation, then adopted by one metadata-only
     commit."""
@@ -872,7 +873,7 @@ def _vectors_wap_root(spark: SparkSession, sf_dir: str) -> str:
             # the AUDIT step, against the staging root in isolation
             if vectors.decode_vectors(spark, stage).count() != staged.count():
                 raise RuntimeError("vector staging audit failed")
-            maintenance.publish_staged_vectors(main, stage)
+            maintenance.publish_staged(main, stage)
         _ENGINE_CACHE[main] = main
     return main
 
@@ -880,7 +881,7 @@ def _vectors_wap_root(spark: SparkSession, sf_dir: str) -> str:
 def q_engine_vectors_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector-table write-audit-publish under the oracle: half the
     embeddings land via a staging vector table adopted by ONE
-    metadata-only commit (publish_staged_vectors). The merged main
+    metadata-only commit (publish_staged). The merged main
     table must decode to EXACTLY the full embeddings table — l2-norm
     protocol, the same cross-engine float check as
     engine_vectors_roundtrip."""

@@ -44,9 +44,10 @@ def run_lookup(spark, monkeypatch):
 
 def _jvm_commit(spark, df, root, group, n_salts, max_chunk_tokens):
     """Write ``df``'s pages with Spark's JVM parquet writer into one run
-    directory and commit the directory as data group ``group``: the
-    commit granularity vector tables still use, which snapshot expiry
-    handles. Token readers do not serve it (fsck reports the path)."""
+    directory and commit the directory as data group ``group``: a
+    commit granularity no engine writer makes any more, which snapshot
+    expiry still handles. Readers do not serve it (fsck reports the
+    path)."""
     from pyspark.sql import functions as F
 
     from tokencodec.spark import encode_job

@@ -6,7 +6,7 @@ hdfs:// or s3a:// root would take)."""
 import pytest
 
 from tokencodec.spark.fsio import HadoopFS, LocalFS, fs_for
-from tokencodec.spark.table import SnapshotTable
+from tokencodec.spark.table import FORMAT, SnapshotTable
 
 
 def test_fs_routing():
@@ -68,7 +68,7 @@ def test_commit_race_never_overwrites_and_rebases(tmp_path):
     tbl = SnapshotTable(root)
     tbl.commit({"g0": ["a"]})
     # a racing committer landed snapshot 1 (complete, well-formed)
-    winner = {"format": 1, "snapshot_id": 1, "parent_id": 0,
+    winner = {"format": FORMAT, "kind": "tokens", "snapshot_id": 1, "parent_id": 0,
               "timestamp_ms": 0, "groups": {"g0": ["a"], "gwin": ["w"]},
               "new_groups": ["gwin"],
               "metrics": tbl.current_snapshot()["metrics"]}

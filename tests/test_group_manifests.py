@@ -27,7 +27,7 @@ import posixpath
 
 import pytest
 
-from tokencodec.spark.table import SnapshotTable
+from tokencodec.spark.table import FORMAT, SnapshotTable
 
 
 def _mk(tmp_path, name="t"):
@@ -336,7 +336,7 @@ def test_commit_race_loser_rebases_across_sets(tmp_path):
     tbl = _mk(tmp_path)
     tbl.commit(_groups(20))  # spilled set
     parent = tbl.current_snapshot()
-    winner = {"format": 1, "snapshot_id": parent["snapshot_id"] + 1,
+    winner = {"format": FORMAT, "kind": "tokens", "snapshot_id": parent["snapshot_id"] + 1,
               "parent_id": parent["snapshot_id"],
               "timestamp_ms": 0,
               "groups": dict(parent["groups"], w0=["/w0.parquet"]),
@@ -376,7 +376,7 @@ def test_commit_race_loser_reclaims_spilled_sets(tmp_path):
     tbl = _mk(tmp_path)
     tbl.commit(_groups(20))  # parent already owns spilled sets
     parent = tbl.current_snapshot()
-    winner = {"format": 1, "snapshot_id": parent["snapshot_id"] + 1,
+    winner = {"format": FORMAT, "kind": "tokens", "snapshot_id": parent["snapshot_id"] + 1,
               "parent_id": parent["snapshot_id"],
               "timestamp_ms": 0,
               "groups": dict(parent["groups"], w0=["/w0.parquet"]),
@@ -417,7 +417,7 @@ def test_commit_race_duplicate_after_rebase_refused(tmp_path):
     tbl = _mk(tmp_path)
     tbl.commit(_groups(20))
     parent = tbl.current_snapshot()
-    winner = {"format": 1, "snapshot_id": parent["snapshot_id"] + 1,
+    winner = {"format": FORMAT, "kind": "tokens", "snapshot_id": parent["snapshot_id"] + 1,
               "parent_id": parent["snapshot_id"],
               "timestamp_ms": 0,
               "groups": dict(parent["groups"], w0=["/theirs.parquet"]),

@@ -294,11 +294,12 @@ def test_expire_removes_emptied_run_dirs(spark, tmp_path):
 
 def test_expire_mixed_dir_and_file_commits_keeps_live_data(spark, tmp_path,
                                                            jvm_commit):
-    """A dir-granular snapshot (the run-directory commits vector tables
-    still make) superseded by a file-granular replace-commit must
-    expire without touching the live files: the dead run DIR's parent
-    is {root}/data, and sweeping that would destroy every sibling run
-    dir (regression test for exactly that)."""
+    """A dir-granular snapshot (only the ``jvm_commit`` fixture still
+    commits a run directory; every engine writer commits files)
+    superseded by a file-granular replace-commit must expire without
+    touching the live files: the dead run DIR's parent is {root}/data,
+    and sweeping that would destroy every sibling run dir (regression
+    test for exactly that)."""
     from tokencodec.spark import partition as part
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 300, seed=21)

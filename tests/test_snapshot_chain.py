@@ -15,7 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tokencodec.spark import decode_job, encode_job, maintenance, synth
 from tokencodec.spark.fsio import LocalFS
-from tokencodec.spark.table import SnapshotTable
+from tokencodec.spark.table import FORMAT, SnapshotTable
 
 
 def _plant_unswapped_commit(root):
@@ -26,7 +26,7 @@ def _plant_unswapped_commit(root):
     tbl = SnapshotTable(root)
     cur = tbl.current_snapshot()
     sid = cur["snapshot_id"] + 1
-    snap = {"format": 1, "snapshot_id": sid, "parent_id": cur["snapshot_id"],
+    snap = {"format": FORMAT, "kind": "tokens", "snapshot_id": sid, "parent_id": cur["snapshot_id"],
             "timestamp_ms": 0, "groups": {**cur["groups"], "gnew": []},
             "new_groups": ["gnew"], "metrics": cur["metrics"]}
     path = os.path.join(root, "_manifest", f"snapshot-{sid:06d}.json")
@@ -143,7 +143,7 @@ def test_orphan_gc_refuses_without_chain_anchor(tmp_path, monkeypatch):
     root = str(tmp_path / "t")
     os.makedirs(os.path.join(root, "_manifest"))
     with open(os.path.join(root, "_manifest", "snapshot-000000.json"), "w") as f:
-        json.dump({"format": 1, "snapshot_id": 0, "parent_id": None,
+        json.dump({"format": FORMAT, "kind": "tokens", "snapshot_id": 0, "parent_id": None,
                    "timestamp_ms": 0, "groups": {"g0": []},
                    "new_groups": ["g0"], "metrics": {}}, f)
     # sanity: with a readable anchor GC runs fine

@@ -1,6 +1,6 @@
-"""One table format: every snapshot carries ``"format": 1``, and every
-entry point refuses a chain of any other format before it reads data
-or writes a byte.
+"""One table format: every snapshot carries ``"format": 2`` and a
+``kind``, and every entry point refuses a chain of any other format
+before it reads data or writes a byte.
 
 SnapshotTable.commit and create_branch stamp the format; current_snapshot()
 and snapshot() check it, and every reader, writer and maintenance entry
@@ -52,10 +52,15 @@ _ENTRY_POINTS = {
     "remove_orphan_files": lambda spark, root, df, ids:
         maintenance.remove_orphan_files(root, older_than_hours=0),
     "fsck": lambda spark, root, df, ids: fsck.fsck(spark, root),
+    "publish_staged": lambda spark, root, df, ids:
+        maintenance.publish_staged(root + "-main", root),
 }
 
 
-@pytest.mark.parametrize("fmt", [None, 2], ids=["stripped", "format2"])
+# "format2" is a later engine's format, FORMAT + 1; "format1" the one
+# before the kind stamp
+@pytest.mark.parametrize("fmt", [None, FORMAT + 1, FORMAT - 1],
+                         ids=["stripped", "format2", "format1"])
 @pytest.mark.parametrize("entry", sorted(_ENTRY_POINTS))
 def test_other_format_is_refused(spark, tmp_path, base, entry, fmt,
                                  set_format, file_state):
@@ -79,7 +84,7 @@ def test_time_travel_and_branches_are_refused(spark, tmp_path, base,
     root = str(tmp_path / "t")
     shutil.copytree(src, root)
     SnapshotTable(root).create_branch("b")
-    set_format(root, 2)
+    set_format(root, FORMAT + 1)
     with pytest.raises(ValueError, match="re-encode"):
         decode_job.decode(spark, root, snapshot_id=0)
     fork = os.path.join(root, "_manifest", "branch-b", "snapshot-000000.json")
@@ -104,4 +109,6 @@ def test_commit_and_branch_stamp_every_snapshot(spark, tmp_path, base):
     maintenance.compact(spark, root)
     snaps = tbl.snapshots() + SnapshotTable(root, branch="b").snapshots()
     assert len(snaps) >= 6
-    assert all(s["format"] == FORMAT == 1 for s in snaps)
+    assert all(s["format"] == FORMAT == 2 and s["kind"] == "tokens"
+               for s in snaps)
+

@@ -77,8 +77,10 @@ def test_vectors_idempotent_commit_and_time_travel(spark, tmp_path):
     # a re-run is a no-op (the group is committed)
     vectors.encode_vectors(spark, src, root)
     assert SnapshotTable(root).current_snapshot()["snapshot_id"] == sid
-    m = SnapshotTable(root).current_snapshot()["metrics"]
+    snap = SnapshotTable(root).current_snapshot()
+    m = snap["metrics"]
     assert m["n_rows"] == 100 and m["op"] == "encode_vectors"
+    assert snap["kind"] == "vectors"
 
 
 def test_vectors_rejects_nulls_and_handles_mixed_dims(spark, tmp_path):
@@ -110,7 +112,7 @@ def test_vectors_fsck_clean_and_detects_corruption(spark, tmp_path):
     src = spark.read.parquet(os.path.join(SF, "embeddings.parquet")).limit(200)
     root = str(tmp_path / "v")
     vectors.encode_vectors(spark, src, root, chunk_rows=32)
-    rep = fsck.fsck_vectors(spark, root)
+    rep = fsck.fsck(spark, root)
     assert rep.filter("not ok").count() == 0
     assert rep.count() > 1
 
@@ -131,7 +133,7 @@ def test_vectors_fsck_clean_and_detects_corruption(spark, tmp_path):
     crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    bad = fsck.fsck_vectors(spark, root).filter("not ok")
+    bad = fsck.fsck(spark, root).filter("not ok")
     assert bad.count() == 1
     assert "crc" in bad.collect()[0].error.lower()
 
@@ -175,9 +177,10 @@ def test_vectors_publish_staged_adopts_and_retires(spark, tmp_path):
                            main, chunk_rows=64)
     vectors.encode_vectors(spark, src.filter(F.col("vec_id") % 2 == 1),
                            stage, chunk_rows=64, group="odd")
-    snap = maintenance.publish_staged_vectors(main, stage)
+    snap = maintenance.publish_staged(main, stage)
     assert set(snap["groups"]) == {"vectors", "odd"}
-    assert snap["metrics"]["op"] == "publish_staged_vectors"
+    assert snap["metrics"]["op"] == "publish_staged"
+    assert snap["kind"] == "vectors"
     # bit-exact union after the metadata-only adoption
     out = vectors.decode_vectors(spark, main)
     assert _bits(out.collect()) == _bits(src.collect())
@@ -194,18 +197,18 @@ def test_vectors_publish_refusals(spark, tmp_path):
     # duplicate group key refused by the commit itself
     vectors.encode_vectors(spark, src, stage, chunk_rows=64)
     with pytest.raises(ValueError, match="already committed"):
-        maintenance.publish_staged_vectors(main, stage)
-    # a token table on either side is routed to publish_staged
+        maintenance.publish_staged(main, stage)
+    # a token table on either side is refused by the kind stamp
     tok = str(tmp_path / "tok")
     encode_job.encode(spark, token_table(spark, 60, seed=5), tok,
                       commit_groups=1)
-    with pytest.raises(ValueError, match="token table"):
-        maintenance.publish_staged_vectors(main, tok)
-    with pytest.raises(ValueError, match="token table"):
-        maintenance.publish_staged_vectors(tok, stage)
+    with pytest.raises(ValueError, match="is a vectors table"):
+        maintenance.publish_staged(main, tok)
+    with pytest.raises(ValueError, match="is a tokens table"):
+        maintenance.publish_staged(tok, stage)
     # empty staging refused
     with pytest.raises(ValueError, match="no committed snapshot"):
-        maintenance.publish_staged_vectors(main, str(tmp_path / "empty"))
+        maintenance.publish_staged(main, str(tmp_path / "empty"))
 
 
 def test_vectors_cli_fsck_detects_fresh_group_tables(spark, tmp_path, capsys):

@@ -139,8 +139,9 @@ def main(argv: list[str] | None = None) -> int:
 
     pub = sub.add_parser(
         "publish", help="write-audit-publish: adopt an audited staging "
-                        "table's groups into the main table (one "
-                        "metadata-only commit; no data movement)")
+                        "table's groups into the main table of the same "
+                        "kind, token or vector (one metadata-only "
+                        "commit; no data movement)")
     pub.add_argument("main_root")
     pub.add_argument("staging_root")
     pub.add_argument("--keep-staging-manifests", action="store_true",
@@ -237,17 +238,7 @@ def main(argv: list[str] | None = None) -> int:
     venc.add_argument("--chunk-rows", type=int, default=4096)
     venc.add_argument("--group", default="vectors",
                       help="commit-group name (fresh name = append a new "
-                      "batch, or a staging batch for publish-vectors)")
-
-    vpub = sub.add_parser(
-        "publish-vectors",
-        help="adopt an audited staging VECTOR table into a main vector "
-        "table (metadata-only; the vector counterpart of publish)")
-    vpub.add_argument("main_root")
-    vpub.add_argument("staging_root")
-    vpub.add_argument("--keep-staging-manifests", action="store_true",
-                      help="do not retire the staging _manifest dir "
-                      "(you become responsible for deleting it)")
+                      "batch, or a staging batch for publish)")
 
     vdec = sub.add_parser("decode-vectors",
                           help="decode a vector table back to parquet (bit-exact)")
@@ -355,19 +346,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({
             "snapshot_id": snap["snapshot_id"],
             "groups": sorted(SnapshotTable(args.root).resolve_groups(snap)),
-            "metrics": snap["metrics"]}))
-        return 0
-
-    if args.cmd == "publish-vectors":  # manifest-only, no Spark needed
-        from tokencodec.spark.maintenance import publish_staged_vectors
-        from tokencodec.spark.table import SnapshotTable
-        snap = publish_staged_vectors(
-            args.main_root, args.staging_root,
-            retire_staging=not args.keep_staging_manifests)
-        print(json.dumps({
-            "snapshot_id": snap["snapshot_id"],
-            "groups": sorted(
-                SnapshotTable(args.main_root).resolve_groups(snap)),
             "metrics": snap["metrics"]}))
         return 0
 
@@ -524,18 +502,7 @@ def main(argv: list[str] | None = None) -> int:
             from pyspark.sql import functions as F
 
             from tokencodec.spark import fsck
-            from tokencodec.spark.table import SnapshotTable
-            # auto-detect the table kind from the manifest alone: vector
-            # commits stamp their op (group names alone are not enough —
-            # appended/staged vector batches use fresh group names)
-            tbl = SnapshotTable(args.root, branch=args.branch)
-            groups = tbl.committed_groups()
-            ops = {s.get("metrics", {}).get("op") for s in tbl.chain()}
-            if (set(groups) == {"vectors"}
-                    or ops & {"encode_vectors", "publish_staged_vectors"}):
-                rep = fsck.fsck_vectors(spark, args.root)
-            else:
-                rep = fsck.fsck(spark, args.root, branch=args.branch)
+            rep = fsck.fsck(spark, args.root, branch=args.branch)
             bad = rep.filter(~F.col("ok"))
             n_bad = bad.count()
             for r in bad.limit(20).collect():

@@ -59,7 +59,6 @@ group decision without running a job.
 
 from __future__ import annotations
 
-import bisect
 import copy
 from collections.abc import Iterator
 
@@ -307,7 +306,7 @@ def make_decode_batches(packed: bool = False, cols: list[str] | None = None,
             out = pa.RecordBatch.from_arrays(arrays, names=names)
             if dels is not None and dels.may_hit(sc["doc_id_min"],
                                                  sc["doc_id_max"]):
-                dead = dels.dead(out.column("doc_id").to_pylist(), seq)
+                dead = dels.dead(out.column("doc_id"), seq)
                 if dead.any():
                     out = out.filter(pa.array(~dead))
             yield out
@@ -442,8 +441,8 @@ def make_stitch_batches(packed: bool, cols: list[str], extras: tuple = (),
                 got_first = True
                 for c in dec_cols:
                     first[c] = _string_array(pages[_COL_PAGE[c]])[0].as_py()
-                dead = dels is not None and bool(
-                    dels.dead([first["doc_id"]], seq)[0])
+                dead = dels is not None and bool(dels.dead(
+                    pa.array([first["doc_id"]], pa.string()), seq)[0])
                 if extras and not dead:
                     m = dict(scalars["extra_pages"] or {})
                     for n_, t in extras:
@@ -533,16 +532,40 @@ class _Deletes:
     lookups, compact and purge_deletes all mask through this object,
     inside their kernels.
 
-    ``ids`` is {doc_id: newest delete seq}: a copy dies only when its
-    data seq is strictly older, so upsert replacements and later
-    re-adds survive. ``path_seqs`` maps normalized committed data files
-    to their group's seq (_path_seq_map); ``at`` binds another map to
-    the same ids without copying or re-sorting them."""
+    Built from (doc_id, seq) rows, one per deleted id of each delete
+    file: ``ids`` holds the deleted ids sorted and unique (an Arrow
+    string array), ``seqs`` the newest delete seq of each. A copy dies
+    only when its data seq is strictly older, so upsert replacements
+    and later re-adds survive. ``path_seqs`` maps normalized committed
+    data files to their group's seq (_path_seq_map); ``at`` binds
+    another map to the same ids without copying or re-sorting them."""
 
-    def __init__(self, ids: dict[str, int]):
-        self.ids = ids
+    def __init__(self, rows: pa.Table):
+        import pyarrow.compute as pc
+        t = rows.filter(pc.is_valid(rows["doc_id"])).sort_by(
+            [("doc_id", "ascending"), ("seq", "descending")])
+        ids = t["doc_id"].combine_chunks()
+        first = np.ones(len(ids), dtype=bool)  # the newest seq of an id
+        first[1:] = pc.not_equal(ids[1:], ids[:-1]).to_numpy(
+            zero_copy_only=False)
+        self.ids = ids.filter(pa.array(first))
+        self.seqs = t["seq"].to_numpy()[first]
+        # distinct deleted ids; a NULL id counts but masks nothing
+        self.n_ids = len(self.ids) + bool(rows["doc_id"].null_count)
         self.path_seqs: dict[str, int] = {}
-        self.sorted = sorted(d for d in ids if d is not None)
+        # the hash index over ``ids``, built on first use and shared by
+        # every ``at`` copy; pickling ships the Arrow ids, not it
+        self._index: dict = {}
+
+    def __getstate__(self) -> dict:
+        return {**self.__dict__, "_index": {}}
+
+    def _lookup(self):
+        if not self._index:
+            import pandas as pd
+            self._index["ix"] = pd.Index(
+                self.ids.to_numpy(zero_copy_only=False))
+        return self._index["ix"]
 
     def at(self, path_seqs: dict[str, int]) -> _Deletes:
         bound = copy.copy(self)
@@ -553,8 +576,9 @@ class _Deletes:
         """May doc-id bounds [lo, hi] hold a deleted id? Unknown: yes."""
         if lo is None or hi is None:
             return True
-        i = bisect.bisect_left(self.sorted, lo)
-        return i < len(self.sorted) and self.sorted[i] <= hi
+        keys = self._lookup().values
+        i = keys.searchsorted(lo)
+        return i < len(keys) and keys[i] <= hi
 
     def seq_of(self, file_path: str) -> int:
         """The data seq of rows read from ``file_path`` (any scheme
@@ -562,10 +586,11 @@ class _Deletes:
         than the oldest pending delete, which every delete masks."""
         return self.path_seqs.get(_norm_path(file_path), _ANCIENT_SEQ)
 
-    def dead(self, docs: list[str], seq: int) -> np.ndarray:
-        """Which of ``docs``, all read from data of seq ``seq``, die."""
-        return np.array([d in self.ids and self.ids[d] > seq
-                         for d in docs], dtype=bool)
+    def dead(self, docs: pa.Array, seq: int) -> np.ndarray:
+        """Which of ``docs`` (a string array), all read from data of seq
+        ``seq``, die."""
+        i = self._lookup().get_indexer(docs.to_numpy(zero_copy_only=False))
+        return (i >= 0) & (self.seqs[i] > seq)
 
 
 def _path_seq_map(groups: dict, seqs: dict, min_seq: int) -> dict:
@@ -613,16 +638,16 @@ def _pending_deletes(tbl: SnapshotTable, snap: dict) -> _Deletes | None:
                        for p in ps))
     dels = _DELETES_MEMO.get(key)
     if dels is None:
-        by_id: dict[str, int] = {}
+        rows = []
         for s, p in key:
-            by_id.update(dict.fromkeys(
-                _open_parquet(p).read(columns=["doc_id"]).column(0)
-                .to_numpy(zero_copy_only=False).tolist(), s))
-        dels = _Deletes(by_id)
+            t = _open_parquet(p).read(columns=["doc_id"])
+            rows.append(t.append_column(
+                "seq", pa.array(np.full(t.num_rows, s, dtype=np.int64))))
+        dels = _Deletes(pa.concat_tables(rows))
         _DELETES_MEMO.clear()
         _DELETES_MEMO[key] = dels
     return (dels.at(_path_seq_map(groups, seqs, key[0][0]))
-            if dels.ids else None)
+            if dels.n_ids else None)
 
 
 # Per-file data skipping (Delta Lake's per-file statistics): before a

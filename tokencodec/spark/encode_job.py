@@ -473,21 +473,26 @@ def meta_batch(rows: list[dict], fields=META_FIELDS) -> pa.RecordBatch:
         names=[k for k, _ in fields])
 
 
+def task_file_name(suffix: str = "") -> str:
+    """The name of a data file this task attempt writes. Task retries
+    write under a fresh taskAttemptId-suffixed name, so a lost attempt
+    leaves only an orphan file that write_from_tasks' post-job sweep
+    (or snapshot GC) removes — the manifest lists exactly the files of
+    attempts whose summary row was collected."""
+    from pyspark import TaskContext
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx else 0
+    att = ctx.taskAttemptId() if ctx else 0
+    return f"part-{pid:05d}-{att}{suffix}.parquet"
+
+
 def write_task_files(pieces, run_dir: str, parquet_codec: str,
                      commit_groups: int = 1) -> list[dict]:
     """Write pages batches (or tables) into this task's parquet files
     under ``run_dir``: one file per commit group (salt % commit_groups),
     each piece's rows of a group written as one row group. Returns one
-    summary row (META_FIELDS) per file; its ``n_rows`` counts documents.
-    Task retries write under a fresh taskAttemptId-suffixed name, so a
-    lost attempt leaves only an orphan file that the driver's post-job
-    sweep (or snapshot GC) removes — the manifest lists exactly the
-    files of attempts whose summary row was collected."""
+    summary row (META_FIELDS) per file; its ``n_rows`` counts documents."""
     import pyarrow.parquet as pq
-    from pyspark import TaskContext
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx else 0
-    att = ctx.taskAttemptId() if ctx else 0
     pafs_fs, base = pyarrow_fs(run_dir)
     schema = pa.schema(_PAGES_TYPES)
     writers: dict[int, pq.ParquetWriter] = {}
@@ -502,7 +507,7 @@ def write_task_files(pieces, run_dir: str, parquet_codec: str,
                 g = int(g)
                 sub = piece.filter(pa.array(grps == g))
                 if g not in writers:
-                    name = f"part-{pid:05d}-{att}-g{g}.parquet"
+                    name = task_file_name(f"-g{g}")
                     files[g] = posixpath.join(run_dir, name)
                     writers[g] = pq.ParquetWriter(
                         posixpath.join(base, name), schema,

@@ -14,7 +14,8 @@ parquet file, and each split document's parts 0..doc_parts-1 appear
 exactly once, all in one data file (the scan planner gives each file to
 one task, which stitches its split parts when the file ends). Runs as
 one mapInArrow pass plus one aggregate over the split parts' metadata;
-returns a per-chunk report DataFrame.
+returns a per-chunk report DataFrame. A vector table (the snapshot's
+``kind``) gets the same discipline over its three pages.
 """
 
 from __future__ import annotations
@@ -124,40 +125,48 @@ def _check_chunk(row: dict) -> tuple[bool, str, int]:
 _PAGE_COLS = ("page_tokens", "page_doc_id", "page_n_tok", "page_source")
 
 
-def fsck_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from tokencodec.spark.decode_job import _binary_views, _map_binary_views
-    for batch in it:
-        if batch.num_rows == 0:
-            continue
-        idx = {n: i for i, n in enumerate(batch.schema.names)}
-        cols = {n: batch.column(idx[n]) for n in _COLS}
-        # zero-copy page access: memoryview slices into the binary
-        # columns (incl. the extra_pages map values); .as_py() would
-        # copy every page's bytes per row. Scalar metadata converts
-        # once per batch, not per row.
-        views = {n: _binary_views(cols[n]) for n in _PAGE_COLS}
-        moff, mkeys, voff, vdata = _map_binary_views(cols["extra_pages"])
-        scalars = {n: cols[n].to_pylist() for n in _COLS
-                   if n not in _PAGE_COLS and n != "extra_pages"}
-        rows_ok, errs, nrows, ntoks, uids, checked = [], [], [], [], [], []
-        for r in range(batch.num_rows):
-            row = {n: v[r] for n, v in scalars.items()}
-            for n, (off, data) in views.items():
-                row[n] = data[off[r]:off[r + 1]]
-            row["extra_pages"] = {mkeys[j]: vdata[voff[j]:voff[j + 1]]
-                                  for j in range(moff[r], moff[r + 1])}
-            ok, err, chk = _check_chunk(row)
-            uids.append(row["chunk_uid"])
-            rows_ok.append(ok)
-            errs.append(err)
-            nrows.append(row["n_rows"])
-            ntoks.append(row["n_tokens"])
-            checked.append(chk)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(uids, pa.string()), pa.array(rows_ok, pa.bool_()),
-             pa.array(errs, pa.string()), pa.array(nrows, pa.int32()),
-             pa.array(ntoks, pa.int64()), pa.array(checked, pa.int32())],
-            names=["chunk_uid", "ok", "error", "n_rows", "n_tokens", "crc_checked"])
+_REPORT = pa.schema([("chunk_uid", pa.string()), ("ok", pa.bool_()),
+                     ("error", pa.string()), ("n_rows", pa.int32()),
+                     ("n_tokens", pa.int64()), ("crc_checked", pa.int32())])
+
+
+def _report_batches(check, cols: list[str], page_cols: tuple):
+    """mapInArrow kernel: one report row per chunk row of ``cols``,
+    from ``check(row)``."""
+    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from tokencodec.spark.decode_job import (_binary_views,
+                                                 _map_binary_views)
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            c = {n: batch.column(n) for n in cols}
+            # zero-copy page access: memoryview slices into the binary
+            # columns (incl. the extra_pages map values); .as_py() would
+            # copy every page's bytes per row. Scalar metadata converts
+            # once per batch, not per row.
+            views = {n: _binary_views(c[n]) for n in page_cols}
+            maps = (_map_binary_views(c["extra_pages"])
+                    if "extra_pages" in c else None)
+            scalars = {n: c[n].to_pylist() for n in cols
+                       if n not in page_cols and n != "extra_pages"}
+            out = []
+            for r in range(batch.num_rows):
+                row = {n: v[r] for n, v in scalars.items()}
+                for n, (off, data) in views.items():
+                    row[n] = data[off[r]:off[r + 1]]
+                if maps is not None:
+                    moff, mkeys, voff, vdata = maps
+                    row["extra_pages"] = {
+                        mkeys[j]: vdata[voff[j]:voff[j + 1]]
+                        for j in range(moff[r], moff[r + 1])}
+                ok, err, chk = check(row)
+                out.append((row["chunk_uid"], ok, err, row["n_rows"],
+                            row.get("n_tokens", 0), chk))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(v, f.type) for v, f in zip(zip(*out), _REPORT)],
+                schema=_REPORT)
+
+    return fn
 
 
 def _split_groups(pages: DataFrame) -> DataFrame:
@@ -185,20 +194,28 @@ def _split_groups(pages: DataFrame) -> DataFrame:
 
 def fsck(spark: SparkSession, root: str,
          branch: str | None = None) -> DataFrame:
-    """One report row per chunk of the current snapshot, plus one bad
-    row (``chunk_uid`` holding the path) per committed data path that
-    is not a ``.parquet`` file and one (holding the split uid) per
-    split document whose parts are incomplete, repeated or spread over
-    several files."""
+    """One report row per chunk of the current snapshot (token or vector
+    chunks, by the snapshot's ``kind``), plus one bad row (``chunk_uid``
+    holding the path) per committed data path that is not a
+    ``.parquet`` file and, in a token table, one (holding the split
+    uid) per split document whose parts are incomplete, repeated or
+    spread over several files."""
     tbl = SnapshotTable(root, branch=branch)
     snap = tbl.current_snapshot()
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
     paths = _data_paths(tbl, snap)
-    pages = read_pages(spark, root, paths=paths)
-    rep = pages.select(_COLS).mapInArrow(fsck_batches, REPORT_DDL)
-    if paths:
-        rep = rep.unionByName(_split_groups(pages))
+    if snap["kind"] == "vectors":
+        from tokencodec.spark.vectors import read_vector_pages
+        rep = (read_vector_pages(spark, root, paths=paths).select(_VCOLS)
+               .mapInArrow(_report_batches(_check_vec_chunk, _VCOLS,
+                                           _VPAGE_COLS), REPORT_DDL))
+    else:
+        pages = read_pages(spark, root, paths=paths)
+        rep = pages.select(_COLS).mapInArrow(
+            _report_batches(_check_chunk, _COLS, _PAGE_COLS), REPORT_DDL)
+        if paths:
+            rep = rep.unionByName(_split_groups(pages))
     bad = [(p, False, "committed data path is not a .parquet file", 0, 0, 0)
            for p in paths if not p.endswith(".parquet")]
     return rep.unionByName(spark.createDataFrame(bad, REPORT_DDL)) \
@@ -236,41 +253,3 @@ def _check_vec_chunk(row: dict) -> tuple[bool, str, int]:
         return True, "", checked
     except Exception as e:  # corrupt page: CRC, truncation, bad magic
         return False, f"{type(e).__name__}: {e}", checked
-
-
-def fsck_vector_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from tokencodec.spark.decode_job import _binary_views
-    for batch in it:
-        if batch.num_rows == 0:
-            continue
-        idx = {n: i for i, n in enumerate(batch.schema.names)}
-        cols = {n: batch.column(idx[n]) for n in _VCOLS}
-        views = {n: _binary_views(cols[n]) for n in _VPAGE_COLS}
-        scalars = {n: cols[n].to_pylist() for n in _VCOLS
-                   if n not in _VPAGE_COLS}
-        uids, rows_ok, errs, nrows, checked = [], [], [], [], []
-        for r in range(batch.num_rows):
-            row = {n: v[r] for n, v in scalars.items()}
-            for n, (off, data) in views.items():
-                row[n] = data[off[r]:off[r + 1]]
-            ok, err, chk = _check_vec_chunk(row)
-            uids.append(row["chunk_uid"])
-            rows_ok.append(ok)
-            errs.append(err)
-            nrows.append(row["n_rows"])
-            checked.append(chk)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(uids, pa.string()), pa.array(rows_ok, pa.bool_()),
-             pa.array(errs, pa.string()), pa.array(nrows, pa.int32()),
-             pa.array([0] * len(uids), pa.int64()),
-             pa.array(checked, pa.int32())],
-            names=["chunk_uid", "ok", "error", "n_rows", "n_tokens",
-                   "crc_checked"])
-
-
-def fsck_vectors(spark: SparkSession, root: str) -> DataFrame:
-    """Same validation discipline over a vector table's three pages:
-    CRCs, count/stat cross-checks, byte-metric reconciliation."""
-    from tokencodec.spark.vectors import read_vector_pages
-    pages = read_vector_pages(spark, root).select(_VCOLS)
-    return pages.mapInArrow(fsck_vector_batches, REPORT_DDL)

@@ -27,7 +27,7 @@ same rewrite over only the files that may hold a deleted id, with no
 merging.
 
 ``expire_snapshots`` drops manifests older than the last N snapshots
-and deletes run directories referenced ONLY by expired snapshots (the
+and deletes data files referenced ONLY by expired snapshots (the
 garbage compaction leaves behind). The current snapshot's files are
 never touched; time travel keeps working for the retained window.
 """
@@ -83,7 +83,7 @@ def _mask_chunk(dels: _Deletes, batch: pa.RecordBatch, r: int, pages: dict,
 
     if not dels.may_hit(col("doc_id_min"), col("doc_id_max")):
         return 0, None
-    docs = _string_array(pages["page_doc_id"]).to_pylist()
+    docs = _string_array(pages["page_doc_id"])
     dead = dels.dead(docs, seq)
     n_dead = int(dead.sum())
     if n_dead in (0, len(docs)):
@@ -96,7 +96,7 @@ def _mask_chunk(dels: _Deletes, batch: pa.RecordBatch, r: int, pages: dict,
     ext = col("extra_pages")
     row = _encode_chunk(
         col("bucket"), col("salt"), col("chunk_seq"),
-        pa.array([d for d, k in zip(docs, keep) if k], pa.string()),
+        docs.take(kidx).cast(pa.string()),
         np.concatenate([toks[s:e] for s, e, k
                         in zip(ends - ntok, ends, keep) if k]),
         ntok[keep],
@@ -581,7 +581,7 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
          "rechunked_split_groups": len(rech),
          "kept_files": len(kept),
          "rewritten_files": len(selected),
-         "n_delete_ids": len(dels.ids) if dels is not None else 0,
+         "n_delete_ids": dels.n_ids if dels is not None else 0,
          "n_purged_rows": sum(r["n_purged_rows"] for r in meta),
          "op": "purge" if purge else "compact"}
     m["table_totals"] = {k: m[k] for k in _TOTAL_KEYS}
@@ -880,7 +880,11 @@ def publish_staged(main_root: str, staging_root: str,
     to the main table, and leaving a second manifest pointing at them
     would let the staging root's own expiry/GC delete files the main
     table references. Pass False only if you delete the staging
-    manifests yourself."""
+    manifests yourself.
+
+    Token and vector tables publish alike: the commit carries the
+    staging snapshot's ``kind``, so a staging table of the other kind
+    than main is refused by the commit, which writes nothing."""
     from urllib.parse import urlparse
 
     if urlparse(main_root).scheme != urlparse(staging_root).scheme:
@@ -929,6 +933,7 @@ def publish_staged(main_root: str, staging_root: str,
     # (correct) reassembly branch conservatively
     s_parts = sm["max_doc_parts_chain"]
     m = {
+        "op": "publish_staged",
         "published_from": staging_root,
         "published_snapshot_id": s_snap["snapshot_id"],
         "n_chunks": s_totals["n_chunks"],
@@ -941,61 +946,7 @@ def publish_staged(main_root: str, staging_root: str,
         m["scheme"] = s_scheme  # first data on an empty main table
     if s_extra:
         m["extra_schema"] = s_extra
-    snap = dst.commit(dict(s_groups), metrics=m)
-    if retire_staging:
-        src.fs.delete(src.manifest_dir, recursive=True)
-    return snap
-
-
-def publish_staged_vectors(main_root: str, staging_root: str,
-                           retire_staging: bool = True, fs=None) -> dict:
-    """Write-audit-publish for VECTOR tables (vectors.encode_vectors):
-    adopt an audited staging vector table's groups into the main vector
-    table with one metadata-only commit — the vector-table counterpart
-    of publish_staged. Chunk uids are group-prefixed, so the commit's
-    duplicate-key refusal is the uid-collision guard: encode the
-    staging batch under a fresh ``group`` name.
-
-    Refused loudly: token tables on either side (their publish path is
-    publish_staged — detected by the partitioning-scheme metric vector
-    commits never carry), cross-scheme roots, and an empty staging
-    table. ``retire_staging`` transfers file ownership exactly like
-    publish_staged."""
-    from urllib.parse import urlparse
-    if urlparse(main_root).scheme != urlparse(staging_root).scheme:
-        raise ValueError(
-            f"main ({main_root}) and staging ({staging_root}) are on "
-            "different filesystem schemes; expiry could not manage the "
-            "adopted files")
-    src = SnapshotTable(staging_root, fs=fs)
-    if src.current_snapshot() is None:
-        raise ValueError(f"staging table {staging_root} has no "
-                         "committed snapshot")
-
-    def _is_token_table(tbl):
-        return any(s.get("metrics", {}).get("scheme")
-                   for s in tbl.chain())
-
-    if _is_token_table(src):
-        raise ValueError(f"{staging_root} is a token table; use "
-                         "publish_staged for it")
-    s_groups = src.committed_groups()
-    if not s_groups:
-        raise ValueError(f"staging table {staging_root} has no groups")
-    dst = SnapshotTable(main_root, fs=fs)
-    if dst.current_snapshot() is not None and _is_token_table(dst):
-        raise ValueError(f"{main_root} is a token table; use "
-                         "publish_staged for it")
-    agg = {"n_chunks": 0, "n_rows": 0, "raw_bytes": 0, "enc_bytes": 0}
-    for s in src.chain():
-        m = s.get("metrics", {})
-        for k in agg:
-            agg[k] += int(m.get(k, 0))
-    m = {"op": "publish_staged_vectors",
-         "published_from": staging_root,
-         "published_snapshot_id": src.current_snapshot()["snapshot_id"],
-         **agg}
-    snap = dst.commit(dict(s_groups), metrics=m)
+    snap = dst.commit(dict(s_groups), metrics=m, kind=s_snap["kind"])
     if retire_staging:
         src.fs.delete(src.manifest_dir, recursive=True)
     return snap
@@ -1089,7 +1040,7 @@ def rewrite_manifests(root: str, fs=None) -> dict:
         return snap
     m = {"op": "rewrite_manifests", "sets_before": len(sets),
          "inline_before": len(snap["groups"])}
-    return tbl.commit({}, metrics=m, consolidate=True)
+    return tbl.commit({}, metrics=m, consolidate=True, kind=snap["kind"])
 
 
 def _branch_live_refs(tbl: SnapshotTable) -> tuple[set[str], set[str]]:
@@ -1114,8 +1065,8 @@ def remove_orphan_files(root: str, older_than_hours: float = 24.0,
     """Delete data/run-* entries referenced by NO snapshot and last
     modified more than ``older_than_hours`` ago — Iceberg's
     remove-orphan-files. These are the debris of jobs that crashed
-    between writing a run dir and committing it (both write paths can
-    leave them); readers never see them, but they accumulate. The age
+    between writing a run dir and committing it (or whose commit was
+    refused); readers never see them, but they accumulate. The age
     guard protects a concurrent writer's in-flight run dir — never set
     it below your longest plausible job wall time."""
     import time as _time
@@ -1220,8 +1171,9 @@ def remove_orphan_files(root: str, older_than_hours: float = 24.0,
 def expire_snapshots(root: str, keep_last: int = 1,
                      older_than_hours: float | None = None,
                      fs=None) -> dict:
-    """Drop all but the last ``keep_last`` snapshots and delete run
-    directories referenced only by the dropped ones. Tagged snapshots
+    """Drop all but the last ``keep_last`` snapshots and delete the data
+    files referenced only by the dropped ones, and the run directories
+    that leaves empty. Tagged snapshots
     (SnapshotTable.create_tag) are retention holds: their manifests and
     data files survive expiry regardless of age — also when the tagged
     snapshot already sits OUTSIDE the retained parent chain from an
@@ -1288,12 +1240,12 @@ def expire_snapshots(root: str, keep_last: int = 1,
         tbl.fs.delete(p, recursive=True)
     # drop run dirs emptied by file-granular deletes (file-list commits
     # delete individual parquet files; their parent run dir may now hold
-    # nothing, or only Spark's _SUCCESS marker). Candidates are ONLY the
-    # parents of dead FILE paths and only run-* dirs themselves: a dead
-    # DIRECTORY path (a vector table's run-directory commit) has
-    # {root}/data as its parent, and sweeping that would destroy every
-    # sibling run dir — including the live ones, whose parquet files
-    # are invisible to a non-recursive listdir of data/.
+    # nothing). Candidates are ONLY the parents of dead .parquet paths
+    # and only run-* dirs themselves: every writer commits files, but a
+    # committed directory path (which fsck reports) has {root}/data as
+    # its parent, and sweeping that would destroy every sibling run dir
+    # — including the live ones, whose parquet files are invisible to a
+    # non-recursive listdir of data/.
     parents = {p.rsplit("/", 1)[0] for p in dead
                if "/" in p and p.endswith(".parquet")}
     live_parents = {p.rsplit("/", 1)[0] for p in live if "/" in p} | live

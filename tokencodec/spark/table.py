@@ -193,8 +193,13 @@ def _chain_metrics(parent: dict | None, m: dict) -> dict:
 # which every reader, writer and maintenance entry point resolves its
 # snapshot, refuse any other value instead of guessing at an older
 # shape; there is no migration path, a table of an older format is
-# re-encoded.
-FORMAT = 1
+# re-encoded. Next to it, "kind" names what the table holds: "tokens"
+# (encode_job's pages) or "vectors" (vectors.encode_vectors' pages).
+# publish_staged and fsck dispatch on it, and commit refuses a commit of
+# another kind than its parent's, so one root never mixes the two.
+# Format 2 is format 1 plus the kind stamp: a format-1 chain cannot say
+# what it holds, so it is refused like any other format.
+FORMAT = 2
 
 
 class TableFormatError(ValueError):
@@ -581,6 +586,7 @@ class SnapshotTable:
             carried["scheme"] = bm["scheme"]
         fork = {
             "format": FORMAT,
+            "kind": base["kind"],
             "snapshot_id": 0,
             "parent_id": None,
             "timestamp_ms": int(time.time() * 1000),
@@ -678,7 +684,8 @@ class SnapshotTable:
     def commit(self, new_groups: dict[str, list[str]], metrics: dict | None = None,
                replace: bool = False, retries: int = 3,
                consolidate: bool = False,
-               require_parent_id: int | None = None) -> dict:
+               require_parent_id: int | None = None,
+               kind: str = "tokens") -> dict:
         """Append ``new_groups`` to the current snapshot atomically.
 
         ``consolidate=True`` forces the manifest-merge path regardless
@@ -715,7 +722,9 @@ class SnapshotTable:
         every committed page, so it includes the copies pending deletes
         mask (delete and upsert commits remove no page) until compact or
         purge_deletes rewrites them away. Every snapshot written carries
-        the table-format stamp (``"format": FORMAT``)."""
+        the table-format stamp (``"format": FORMAT``) and ``kind``;
+        a commit of another kind than its parent's is refused before
+        its claim."""
         last_err: Exception | None = None
         for _ in range(retries + 1):
             parent = self.current_snapshot()
@@ -733,6 +742,10 @@ class SnapshotTable:
                         f"{pid} while this operation planned against "
                         f"{require_parent_id}; re-run it against the "
                         "current state")
+            if parent is not None and parent["kind"] != kind:
+                raise ValueError(
+                    f"{self.root} is a {parent['kind']} table: refusing a "
+                    f"{kind} commit onto it")
             m = dict(metrics or {})
             # the partitioning scheme is chain-invariant between resalt
             # migrations: every commit inherits its parent's, so readers
@@ -783,7 +796,12 @@ class SnapshotTable:
                             f"group {k} already committed "
                             f"(snapshot {parent['snapshot_id']})")
                 inline.update(new_groups)
-            if consolidate and (sets or inline):
+            spill = len(inline) > spill_threshold()
+            if (consolidate and (sets or inline)) or \
+                    (spill and len(sets) + 1 > merge_sets_threshold()):
+                # manifest merge: consolidate into key-ordered,
+                # range-disjoint chunks so both the set list and
+                # per-commit validation reads stay bounded forever
                 full = {}
                 for e in sets:
                     full.update(self._read_groupset(e["name"]))
@@ -794,25 +812,12 @@ class SnapshotTable:
                     {k: full[k] for k in ks[i:i + chunk]})
                     for i in range(0, len(ks), chunk)]
                 inline = {}
-            elif len(inline) > spill_threshold():
-                if len(sets) + 1 > merge_sets_threshold():
-                    # manifest merge: consolidate into key-ordered,
-                    # range-disjoint chunks so both the set list and
-                    # per-commit validation reads stay bounded forever
-                    full = {}
-                    for e in sets:
-                        full.update(self._read_groupset(e["name"]))
-                    full.update(inline)
-                    ks = sorted(full)
-                    chunk = max(spill_threshold() * 64, 1)
-                    sets = [self._write_groupset(
-                        {k: full[k] for k in ks[i:i + chunk]})
-                        for i in range(0, len(ks), chunk)]
-                else:
-                    sets = sets + [self._write_groupset(inline)]
+            elif spill:
+                sets = sets + [self._write_groupset(inline)]
                 inline = {}
             snap = {
                 "format": FORMAT,
+                "kind": kind,
                 "snapshot_id": sid,
                 "parent_id": parent["snapshot_id"] if parent else None,
                 "timestamp_ms": int(time.time() * 1000),

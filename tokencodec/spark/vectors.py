@@ -23,7 +23,10 @@ Layout per chunk (one row of the pages parquet):
 Plan shape (scale notes): `repartitionByRange(vec_id)` gives each task
 a contiguous id range (one sampling pass — the same trade Spark's own
 range writer makes), `sortWithinPartitions` makes chunk stats tight,
-and one mapInArrow slices/encodes. Decode prunes chunks on the
+and one mapInArrow slices, encodes and writes each task's chunks to one
+parquet file (encode_job.write_from_tasks, the token tables' writer:
+row-group stats on vec_id_min/vec_id_max); the driver commits the file
+list as a snapshot of kind "vectors". Decode prunes chunks on the
 (vec_id_min, vec_id_max) stats before any page is parsed.
 """
 
@@ -34,11 +37,15 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tokencodec import pageformat
+from tokencodec.spark.encode_job import (meta_batch, pyarrow_fs,
+                                         require_direct_write, sum_meta,
+                                         task_file_name, write_from_tasks)
 from tokencodec.spark.table import SnapshotTable
 
 VEC_PAGES_DDL = (
@@ -138,6 +145,42 @@ def _rows_to_batch(rows: list[dict]) -> pa.RecordBatch:
         names=list(_VEC_TYPES))
 
 
+def _file_writer(chunk_rows: int, group: str, parquet_codec: str):
+    """write_from_tasks kernel: encode this task's rows and write its
+    chunks to one parquet file under ``run_dir``, one row group per
+    pages batch; yield its summary row (encode_job.META_FIELDS)."""
+    def kernel(run_dir: str):
+        encode = _encode_batches(chunk_rows, group)
+
+        def write(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            import pyarrow.parquet as pq
+            pafs_fs, base = pyarrow_fs(run_dir)
+            name = task_file_name()
+            w = None
+            agg = {"n_chunks": 0, "n_rows": 0, "raw_bytes": 0, "enc_bytes": 0}
+            try:
+                for b in encode(it):
+                    if w is None:
+                        w = pq.ParquetWriter(
+                            posixpath.join(base, name), b.schema,
+                            compression=parquet_codec, filesystem=pafs_fs)
+                    w.write_batch(b)
+                    agg["n_chunks"] += b.num_rows
+                    for k in ("n_rows", "raw_bytes", "enc_bytes"):
+                        agg[k] += pc.sum(b.column(k)).as_py()
+            finally:
+                if w is not None:
+                    w.close()
+            if w is not None:
+                yield meta_batch([{"grp": 0,
+                                   "file": posixpath.join(run_dir, name),
+                                   "n_tokens": 0, "max_doc_parts": 0, **agg}])
+
+        return write
+
+    return kernel
+
+
 def encode_vectors(spark: SparkSession, df: DataFrame, out_root: str,
                    chunk_rows: int = 4096, n_partitions: int | None = None,
                    parquet_codec: str = "zstd",
@@ -147,10 +190,11 @@ def encode_vectors(spark: SparkSession, df: DataFrame, out_root: str,
     ``group`` names the commit group: the default makes re-runs
     idempotent; incremental ingestion appends further batches under
     fresh group names (readers see the union; decode_changes consumes
-    just the new ones)."""
+    just the new ones). A token table's root is refused at commit."""
     tbl = SnapshotTable(out_root)
     if group in tbl.committed_groups():
         return read_vector_pages(spark, out_root)
+    require_direct_write(out_root, "encode_vectors")
     if n_partitions is None:
         try:
             n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -161,20 +205,11 @@ def encode_vectors(spark: SparkSession, df: DataFrame, out_root: str,
                      F.col("label").cast("int"))
            .repartitionByRange(n_partitions, "vec_id")
            .sortWithinPartitions("vec_id"))
-    pages = src.mapInArrow(_encode_batches(chunk_rows, group), VEC_PAGES_DDL)
-    from pyspark.sql import Observation
-    obs = Observation()
-    pages = pages.observe(obs,
-                          F.count(F.lit(1)).alias("n_chunks"),
-                          F.sum("n_rows").alias("n_rows"),
-                          F.sum("raw_bytes").alias("raw_bytes"),
-                          F.sum("enc_bytes").alias("enc_bytes"))
-    run_dir = tbl.new_run_dir()
-    pages.write.mode("overwrite").option("compression", parquet_codec) \
-        .parquet(run_dir)
-    m = {k: int(v or 0) for k, v in obs.get.items()}
-    m["op"] = "encode_vectors"
-    tbl.commit({group: [run_dir]}, metrics=m)
+    meta = write_from_tasks(tbl, src,
+                            _file_writer(chunk_rows, group, parquet_codec))
+    tbl.commit({group: sorted(r["file"] for r in meta)},
+               metrics={**sum_meta(meta), "op": "encode_vectors"},
+               kind="vectors")
     return read_vector_pages(spark, out_root)
 
 
