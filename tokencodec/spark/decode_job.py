@@ -553,19 +553,21 @@ class _Deletes:
         # distinct deleted ids; a NULL id counts but masks nothing
         self.n_ids = len(self.ids) + bool(rows["doc_id"].null_count)
         self.path_seqs: dict[str, int] = {}
-        # the hash index over ``ids``, built on first use and shared by
-        # every ``at`` copy; pickling ships the Arrow ids, not it
-        self._index: dict = {}
+        self._set_index()
+
+    def _set_index(self) -> None:
+        import pandas as pd
+        # pandas builds the hash table on the first lookup and keeps it
+        # in the Index, which every ``at`` copy shares
+        self._index = pd.Index(self.ids.to_numpy(zero_copy_only=False))
 
     def __getstate__(self) -> dict:
-        return {**self.__dict__, "_index": {}}
+        # a scan ships the Arrow ids, not 10^6 Python strings
+        return {k: v for k, v in self.__dict__.items() if k != "_index"}
 
-    def _lookup(self):
-        if not self._index:
-            import pandas as pd
-            self._index["ix"] = pd.Index(
-                self.ids.to_numpy(zero_copy_only=False))
-        return self._index["ix"]
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self._set_index()
 
     def at(self, path_seqs: dict[str, int]) -> _Deletes:
         bound = copy.copy(self)
@@ -576,7 +578,7 @@ class _Deletes:
         """May doc-id bounds [lo, hi] hold a deleted id? Unknown: yes."""
         if lo is None or hi is None:
             return True
-        keys = self._lookup().values
+        keys = self._index.values
         i = keys.searchsorted(lo)
         return i < len(keys) and keys[i] <= hi
 
@@ -589,7 +591,7 @@ class _Deletes:
     def dead(self, docs: pa.Array, seq: int) -> np.ndarray:
         """Which of ``docs`` (a string array), all read from data of seq
         ``seq``, die."""
-        i = self._lookup().get_indexer(docs.to_numpy(zero_copy_only=False))
+        i = self._index.get_indexer(docs.to_numpy(zero_copy_only=False))
         return (i >= 0) & (self.seqs[i] > seq)
 
 

@@ -145,40 +145,38 @@ def _rows_to_batch(rows: list[dict]) -> pa.RecordBatch:
         names=list(_VEC_TYPES))
 
 
-def _file_writer(chunk_rows: int, group: str, parquet_codec: str):
-    """write_from_tasks kernel: encode this task's rows and write its
-    chunks to one parquet file under ``run_dir``, one row group per
-    pages batch; yield its summary row (encode_job.META_FIELDS)."""
-    def kernel(run_dir: str):
-        encode = _encode_batches(chunk_rows, group)
+def _file_writer(run_dir: str, chunk_rows: int, group: str,
+                 parquet_codec: str):
+    """mapInArrow function for write_from_tasks: encode this task's
+    rows and write its chunks to one parquet file under ``run_dir``, one
+    row group per pages batch; yield its summary row
+    (encode_job.META_FIELDS)."""
+    encode = _encode_batches(chunk_rows, group)
 
-        def write(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import pyarrow.parquet as pq
-            pafs_fs, base = pyarrow_fs(run_dir)
-            name = task_file_name()
-            w = None
-            agg = {"n_chunks": 0, "n_rows": 0, "raw_bytes": 0, "enc_bytes": 0}
-            try:
-                for b in encode(it):
-                    if w is None:
-                        w = pq.ParquetWriter(
-                            posixpath.join(base, name), b.schema,
-                            compression=parquet_codec, filesystem=pafs_fs)
-                    w.write_batch(b)
-                    agg["n_chunks"] += b.num_rows
-                    for k in ("n_rows", "raw_bytes", "enc_bytes"):
-                        agg[k] += pc.sum(b.column(k)).as_py()
-            finally:
-                if w is not None:
-                    w.close()
+    def write(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.parquet as pq
+        pafs_fs, base = pyarrow_fs(run_dir)
+        name = task_file_name()
+        w = None
+        agg = {"n_chunks": 0, "n_rows": 0, "raw_bytes": 0, "enc_bytes": 0}
+        try:
+            for b in encode(it):
+                if w is None:
+                    w = pq.ParquetWriter(
+                        posixpath.join(base, name), b.schema,
+                        compression=parquet_codec, filesystem=pafs_fs)
+                w.write_batch(b)
+                agg["n_chunks"] += b.num_rows
+                for k in ("n_rows", "raw_bytes", "enc_bytes"):
+                    agg[k] += pc.sum(b.column(k)).as_py()
+        finally:
             if w is not None:
-                yield meta_batch([{"grp": 0,
-                                   "file": posixpath.join(run_dir, name),
-                                   "n_tokens": 0, "max_doc_parts": 0, **agg}])
+                w.close()
+        if w is not None:
+            yield meta_batch([{"grp": 0, "file": posixpath.join(run_dir, name),
+                               "n_tokens": 0, "max_doc_parts": 0, **agg}])
 
-        return write
-
-    return kernel
+    return write
 
 
 def encode_vectors(spark: SparkSession, df: DataFrame, out_root: str,
@@ -205,8 +203,8 @@ def encode_vectors(spark: SparkSession, df: DataFrame, out_root: str,
                      F.col("label").cast("int"))
            .repartitionByRange(n_partitions, "vec_id")
            .sortWithinPartitions("vec_id"))
-    meta = write_from_tasks(tbl, src,
-                            _file_writer(chunk_rows, group, parquet_codec))
+    meta = write_from_tasks(tbl, src, lambda run_dir: _file_writer(
+        run_dir, chunk_rows, group, parquet_codec))
     tbl.commit({group: sorted(r["file"] for r in meta)},
                metrics={**sum_meta(meta), "op": "encode_vectors"},
                kind="vectors")
