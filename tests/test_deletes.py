@@ -7,6 +7,7 @@ import os
 import sys
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -196,3 +197,35 @@ def test_lookups_read_delete_ids_once(spark, tmp_path, monkeypatch):
                              doc_id_max=d).count() for d in (ids[0], ids[5])]
     assert got == [0, 1]
     assert sorted(p for p in opened if p in del_files) == del_files
+
+
+@settings(max_examples=200, deadline=None)
+@given(rows=st.lists(st.tuples(st.one_of(st.none(), st.text(max_size=3)),
+                               st.integers(-3, 3)), max_size=30),
+       docs=st.lists(st.text(max_size=3), max_size=20),
+       seq=st.integers(-4, 4),
+       bounds=st.tuples(st.text(max_size=3), st.text(max_size=3)))
+def test_delete_mask_matches_the_per_row_rule(rows, docs, seq, bounds):
+    """_Deletes' array masking against the rule row by row: a doc dies
+    when the NEWEST delete of its id is strictly newer than its data;
+    a NULL id counts as deleted but masks nothing. Pickling (how scan
+    tasks receive it) keeps the answers."""
+    import pickle
+
+    import numpy as np
+    import pyarrow as pa
+
+    newest = {}
+    for d, s in rows:
+        newest[d] = max(s, newest.get(d, s))
+    dels = decode_job._Deletes(pa.table({
+        "doc_id": pa.array([d for d, _ in rows], pa.string()),
+        "seq": pa.array([s for _, s in rows], pa.int64())}))
+    lo, hi = sorted(bounds)
+    want = np.array([d in newest and newest[d] > seq for d in docs], bool)
+    for d_ in (dels, pickle.loads(pickle.dumps(dels)), dels.at({})):
+        assert d_.n_ids == len(newest)
+        assert d_.dead(pa.array(docs, pa.string()), seq).tolist() == \
+            want.tolist()
+        assert d_.may_hit(lo, hi) == any(
+            d is not None and lo <= d <= hi for d in newest)

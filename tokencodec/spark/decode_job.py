@@ -592,7 +592,9 @@ class _Deletes:
         """Which of ``docs`` (a string array), all read from data of seq
         ``seq``, die."""
         i = self._index.get_indexer(docs.to_numpy(zero_copy_only=False))
-        return (i >= 0) & (self.seqs[i] > seq)
+        dead = i >= 0
+        dead[dead] = self.seqs[i[dead]] > seq
+        return dead
 
 
 def _path_seq_map(groups: dict, seqs: dict, min_seq: int) -> dict:
