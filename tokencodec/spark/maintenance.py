@@ -96,7 +96,7 @@ def _mask_chunk(dels: _Deletes, batch: pa.RecordBatch, r: int, pages: dict,
     ext = col("extra_pages")
     row = _encode_chunk(
         col("bucket"), col("salt"), col("chunk_seq"),
-        docs.take(kidx).cast(pa.string()),
+        docs.take(kidx),
         np.concatenate([toks[s:e] for s, e, k
                         in zip(ends - ntok, ends, keep) if k]),
         ntok[keep],
@@ -1173,11 +1173,11 @@ def expire_snapshots(root: str, keep_last: int = 1,
                      fs=None) -> dict:
     """Drop all but the last ``keep_last`` snapshots and delete the data
     files referenced only by the dropped ones, and the run directories
-    that leaves empty. Tagged snapshots
-    (SnapshotTable.create_tag) are retention holds: their manifests and
-    data files survive expiry regardless of age — also when the tagged
-    snapshot already sits OUTSIDE the retained parent chain from an
-    earlier expire (a tag is resolvable for as long as it exists).
+    that leaves empty. Tagged snapshots (SnapshotTable.create_tag) are
+    retention holds: their manifests and data files survive expiry
+    regardless of age — also when the tagged snapshot already sits
+    OUTSIDE the retained parent chain from an earlier expire (a tag is
+    resolvable for as long as it exists).
 
     ``older_than_hours`` adds Iceberg's time-based retention policy on
     top of the count: a snapshot committed more recently than the
