@@ -120,7 +120,6 @@ def phases(n_rows: int) -> None:
         ("pack+shuffle+encode", lambda: noop(part.bucketed(
             encode_job.pack_source(spark, src, splits),
             n_salts=n_salts, partitions=partitions)
-            .select(encode_job._COLS)
             .mapInArrow(encode_job.make_encoder(commit_groups=1),
                         encode_job.PAGES_DDL))),
     ]:

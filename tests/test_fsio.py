@@ -116,8 +116,9 @@ def test_encode_from_parquet_file_uri_byte_identical(spark, tmp_path):
 
     def fingerprint(root_suffix, src_addr):
         root = str(tmp_path / root_suffix)
-        pages = encode_job.encode_from_parquet(spark, src_addr, root,
-                                               commit_groups=1)
+        encode_job.encode_from_parquet(spark, src_addr, root,
+                                       commit_groups=1)
+        pages = encode_job.read_pages(spark, root)
         return sorted(
             (r.chunk_uid, r.enc_bytes, r.h) for r in
             pages.select("chunk_uid", "enc_bytes",

@@ -357,6 +357,75 @@ def test_small_append_one_task_one_file_per_group(append_table):
     assert [len(groups[k]) for k in ("a0", "a1")] == [1, 1], groups
 
 
+def test_one_partition_append_is_one_stage(spark, tmp_path):
+    """A one-partition source holds every (bucket, salt) group in its
+    one task: its append sorts in place with no Exchange, runs one Spark
+    job of one task and commits one file per group, and its page rows
+    equal those of the same rows encoded from a multi-partition frame,
+    whose append keeps the one Exchange."""
+    import uuid
+
+    from tokencodec.spark.table import SnapshotTable
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    pages = {}
+    for n in (1, 4):
+        root = str(tmp_path / f"p{n}")
+        encode_job.encode(spark, synth.token_table(spark, 100, seed=5),
+                          root, commit_groups=2)
+        app = synth.token_table(spark, 300, seed=6, partitions=n).withColumn(
+            "doc_id", F.concat(F.lit("z-"), "doc_id"))
+        jobs, group = [], f"append-{uuid.uuid4().hex}"
+        cls = type(app)
+        real = cls.mapInArrow
+
+        def spy(self, *a, **kw):
+            jobs.append(real(self, *a, **kw))
+            return jobs[-1]
+
+        sc.setJobGroup(group, "append")
+        try:
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(cls, "mapInArrow", spy)
+                encode_job.encode(spark, app, root, commit_groups=2,
+                                  group_prefix="a")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        (job,) = jobs
+        plan = job._jdf.queryExecution().executedPlan().toString()
+        exchanges = re.findall(r"\bExchange\b",
+                               plan.split("== Initial Plan ==")[0])
+        assert len(exchanges) == (0 if n == 1 else 1), plan
+        groups = SnapshotTable(root).committed_groups()
+        assert [len(groups[k]) for k in ("a0", "a1")] == [1, 1], groups
+        if n == 1:
+            (job_id,) = tracker.getJobIdsForGroup(group)
+            (stage,) = tracker.getJobInfo(job_id).stageIds
+            assert tracker.getStageInfo(stage).numTasks == 1
+        pages[n] = {r.chunk_uid: r.asDict() for r in
+                    encode_job.read_pages(spark, root).filter(
+                        F.col("chunk_uid").startswith("a")).collect()}
+    assert pages[1] and pages[1] == pages[4]
+
+
+def test_encode_lists_no_committed_file(spark, tmp_path, monkeypatch):
+    """encode() returns the snapshot of its last commit, or the current
+    one when a resume has nothing left to do, without reading the
+    table's pages."""
+    from tokencodec.spark.table import SnapshotTable
+
+    def listed(*a, **kw):
+        raise AssertionError("encode() read the table's pages")
+
+    monkeypatch.setattr(encode_job, "read_pages", listed)
+    root = str(tmp_path / "t")
+    df = synth.token_table(spark, 60, seed=3)
+    snap = encode_job.encode(spark, df, root, commit_groups=2)
+    assert snap == SnapshotTable(root).current_snapshot()
+    assert snap["new_groups"] == ["g1"]
+    assert encode_job.encode(spark, df, root, commit_groups=2) == snap
+
+
 def test_range_scan_reads_reported_files(spark, append_table, monkeypatch):
     """A range scan's task assignment (_scan_tasks, a driver function
     decode plans with) covers exactly the files and row groups

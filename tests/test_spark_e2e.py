@@ -22,8 +22,9 @@ SEED = 42
 def roundtrip(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("enc"))
     df = synth.token_table(spark, N_ROWS, seed=SEED).cache()
-    pages = encode_job.encode(spark, df, root, commit_groups=2,
-                              max_chunk_tokens=1 << 18)
+    encode_job.encode(spark, df, root, commit_groups=2,
+                      max_chunk_tokens=1 << 18)
+    pages = encode_job.read_pages(spark, root)
     decoded = decode_job.decode(spark, root)
     return df, pages, decoded, root
 

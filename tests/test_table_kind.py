@@ -55,8 +55,16 @@ def test_publish_across_kinds_is_refused(roots, main, stage):
     assert SnapshotTable(roots[stage]).current_snapshot() is not None
 
 
+def _entries(root):
+    return sorted(os.path.join(d, n) for d, dirs, files in os.walk(root)
+                  for n in dirs + files)
+
+
 def test_writers_refuse_a_root_of_the_other_kind(spark, roots):
+    """Each writer refuses before its job runs: the refused root holds
+    exactly the files and directories it held before."""
     before = {k: _head(roots[k]) for k in ("vec", "tok")}
+    entries = {k: _entries(roots[k]) for k in ("vec", "tok")}
     with pytest.raises(ValueError, match="is a vectors table"):
         encode_job.encode(spark, token_table(spark, 20, seed=7),
                           roots["vec"], commit_groups=1, group_prefix="t")
@@ -64,6 +72,7 @@ def test_writers_refuse_a_root_of_the_other_kind(spark, roots):
         vectors.encode_vectors(spark, _emb(spark), roots["tok"],
                                chunk_rows=64)
     assert {k: _head(roots[k]) for k in ("vec", "tok")} == before
+    assert {k: _entries(roots[k]) for k in ("vec", "tok")} == entries
 
 
 def test_published_then_expired_vector_table_passes_cli_fsck(

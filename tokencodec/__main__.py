@@ -380,10 +380,11 @@ def main(argv: list[str] | None = None) -> int:
     try:
         if args.cmd == "encode":
             from tokencodec.spark import encode_job
-            pages = encode_job.encode_from_parquet(
+            encode_job.encode_from_parquet(
                 spark, args.src, args.out, commit_groups=args.commit_groups,
                 max_chunk_tokens=args.max_chunk_tokens,
                 group_prefix=args.group_prefix, branch=args.branch)
+            pages = encode_job.read_pages(spark, args.out, branch=args.branch)
             from pyspark.sql import functions as F
             m = pages.agg(F.count("*").alias("chunks"), F.sum("n_tokens").alias("tokens"),
                           F.sum("raw_bytes").alias("raw"), F.sum("enc_bytes").alias("enc")
@@ -392,9 +393,10 @@ def main(argv: list[str] | None = None) -> int:
                               "raw_bytes": int(m.raw), "enc_bytes": int(m.enc),
                               "ratio": round(m.enc / m.raw, 4)}))
         elif args.cmd == "pack":
-            from tokencodec.spark import packing
-            pages = packing.encode_packed(spark, spark.read.parquet(args.src),
-                                          args.out, seq_len=args.seq_len)
+            from tokencodec.spark import encode_job, packing
+            packing.encode_packed(spark, spark.read.parquet(args.src),
+                                  args.out, seq_len=args.seq_len)
+            pages = encode_job.read_pages(spark, args.out)
             from pyspark.sql import functions as F
             m = pages.agg(F.count("*").alias("chunks"),
                           F.sum("n_rows").alias("seqs"),

@@ -4,7 +4,8 @@ snapshot commits.
 Pipeline (SURVEY.md §3 "our engine's lifecycle"):
   source df -> add (bucket, salt) [no shuffle] -> hash repartition on
   (bucket, salt) [the one shuffle: encode_from_parquet's source is
-  range tasks with no Exchange] -> sortWithinPartitions ->
+  range tasks with no Exchange; a one-partition source skips it] ->
+  sortWithinPartitions ->
   mapInArrow vectorized encode [JVM->Python Arrow boundary] -> each
   task writes its pages parquet files with pyarrow -> the driver
   commits the collected file list [atomic manifest create].
@@ -70,7 +71,7 @@ _EXTRA_NP_FLOAT = {"float": np.float32, "double": np.float64}
 # ("unknown"): an over-mixed chunk carries no pruning power anyway
 _SOURCE_SET_CAP = 8
 
-_COLS = ["doc_id", "tokens", "n_tok", "source", "bucket", "salt"]
+_COLS = [*part.CORE_COLS, "bucket", "salt"]
 
 
 def _str_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -382,10 +383,9 @@ def extra_schema_of(df: DataFrame) -> dict[str, str]:
     """Validate and collect a source frame's EXTRA columns (everything
     beyond the doc_id/tokens/n_tok/source core) — shared by encode and
     upsert so the supported-type surface cannot diverge."""
-    core = {"doc_id", "tokens", "n_tok", "source"}
     out: dict[str, str] = {}
     for f in df.schema.fields:
-        if f.name in core:
+        if f.name in part.CORE_COLS:
             continue
         t = f.dataType.simpleString()
         if t not in _EXTRA_KINDS:
@@ -591,8 +591,10 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
            direct_write: bool = True,
            extra_metrics: dict | None = None,
            group_prefix: str = "g",
-           branch: str | None = None) -> DataFrame:
-    """Run the encode pipeline with snapshot commits; returns pages DF.
+           branch: str | None = None) -> dict:
+    """Run the encode pipeline with snapshot commits; returns the last
+    commit's snapshot (the current one when a resume has nothing to do).
+    A root of another table kind is refused before the job runs.
 
     ``branch`` commits onto a named branch (SnapshotTable.create_branch)
     instead of main — the write-audit-publish path: encode here, audit
@@ -623,10 +625,13 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
     used to select was removed.
 
     ``partitions`` fixes the task count of the encode shuffle. Left
-    unset, the shuffle has no fixed count and Spark's adaptive execution
-    coalesces it from the bytes it measures: a small append runs as one
-    task and writes one file per commit group, while a large frame gets
-    at most ``spark.sql.shuffle.partitions`` tasks (large sources go
+    unset, a source of one partition is not shuffled (its append is one
+    stage; a large frame in one partition also encodes in one task, so
+    pass ``partitions`` to spread it), and a source of several is
+    shuffled with no fixed count: Spark's adaptive execution coalesces
+    it from the bytes it measures, so a small append runs as one task
+    and writes one file per commit group, while a large frame gets at
+    most ``spark.sql.shuffle.partitions`` tasks (large sources go
     through ``encode_from_parquet``, which sizes the count from parquet
     footers). Chunk bytes do not depend on it: coalescing merges whole
     hash partitions, so a (bucket, salt) group is never split.
@@ -651,11 +656,12 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
     extra_cols = tuple(sorted(extra_schema.items()))
     tbl = SnapshotTable(out_root, branch=branch)
     snap = tbl.current_snapshot()
+    tbl.require_kind(snap, "tokens")
     done = set(tbl.resolve_groups(snap)) if snap else set()
     remaining = [g for g in range(commit_groups)
                  if f"{group_prefix}{g}" not in done]
     if not remaining:
-        return read_pages(spark, out_root, branch=branch)
+        return snap
     # salt-scheme consistency for APPENDS (any prefix): the table's
     # n_salts is load-bearing — point/batch lookups derive a doc's salt
     # from the CHAIN's scheme, so chunks salted under a different count
@@ -702,13 +708,13 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
         grp = F.pmod(F.pmod(F.crc32(F.col("doc_id")), F.lit(n_salts)),
                      F.lit(commit_groups))
         sub = df.filter(grp.isin([int(g) for g in remaining]))
-    bucketed = part.bucketed(sub, n_salts=n_salts, partitions=partitions)
     # parquet_codec wraps the (already entropy-tight) pages: zstd is the
     # measured dominant default on 149M tokens — write wall equal to
     # snappy within noise, 6% smaller files and faster decode reads;
     # pass "uncompressed" when write CPU is the binding resource
     meta = write_from_tasks(
-        tbl, bucketed.select(_COLS + [n for n, _ in extra_cols]),
+        tbl, part.bucketed(sub, n_salts=n_salts, partitions=partitions,
+                           extra_cols=extra_cols),
         lambda run_dir: make_direct_writer(
             run_dir, parquet_codec, max_chunk_tokens, commit_groups,
             extra_cols=extra_cols, group_prefix=group_prefix))
@@ -723,9 +729,10 @@ def encode(spark: SparkSession, df: DataFrame, out_root: str,
             m["pass_groups"] = len(remaining)
         # a group with no rows commits an empty path list: resume knows
         # it is done and readers see a valid empty table
-        tbl.commit({f"{group_prefix}{g}": sorted(r["file"] for r in rows)},
-                   metrics=m)
-    return read_pages(spark, out_root, branch=branch)
+        snap = tbl.commit(
+            {f"{group_prefix}{g}": sorted(r["file"] for r in rows)},
+            metrics=m)
+    return snap
 
 
 def _sweep_orphans(fs, run_dir: str, keep: set[str]) -> list[str]:
@@ -946,7 +953,7 @@ def pack_source(spark: SparkSession, src_dir: "str | list[str]",
 
 
 def encode_from_parquet(spark: SparkSession, src_dir: "str | list[str]",
-                        out_root: str, **kw) -> DataFrame:
+                        out_root: str, **kw) -> dict:
     """encode() over a parquet directory via the fast file-split source;
     one footer pass discovers splits and their bytes (source task
     assignment), the row count for salting, and the byte size for

@@ -9,8 +9,8 @@ superseded files behind.
 ``compact`` is "rewrite data files" in one pass and one commit. The
 driver plans from manifests and parquet footers: it reads the pending
 delete ids with pyarrow and selects small files and files whose footer
-doc-id ranges may hold a deleted id (a metadata scan
-of the files whose footers admit split parts finds split documents to
+doc-id ranges may hold a deleted id (a metadata read of the row
+groups whose footers admit split parts finds split documents to
 re-slice). One Spark job then shuffles the selected chunk rows on ``salt``, sorts
 them (salt, bucket, chunk_uid) and runs one mapInArrow kernel. Per
 (bucket, salt) run the kernel drops deleted rows (dead chunks vanish,
@@ -39,6 +39,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,7 +48,7 @@ from tokencodec import grouped, pageformat
 from tokencodec.spark import partition as part
 from tokencodec.spark.decode_job import (_Deletes, _binary_views,
                                          _extra_array, _footer_bounds,
-                                         _norm_path, _pending_deletes,
+                                         _pending_deletes, _read_chunks,
                                          _rg_may_split, _scheme_from_manifest,
                                          _string_array, decode,
                                          decode_extra_page, iter_page_rows,
@@ -411,30 +412,32 @@ def _file_may_hit(path: str, dels: _Deletes) -> bool:
                      b.get("doc_id_max", (None, None))[1]) for b in bounds)
 
 
-def _rechunk_groups(spark: SparkSession, paths: list[str],
-                    max_chunk_tokens: int) -> list:
+def _rechunk_groups(paths: list[str], max_chunk_tokens: int) -> list[dict]:
     """Complete split groups whose parts would SHRINK under
-    ``max_chunk_tokens`` (encode ran with a smaller budget), as rows
-    (sgrp, k, files) — a partial group (corruption, concurrent surgery)
-    passes through. Scans the metadata columns of only the files whose
-    footers may hold split parts; no job when none does."""
-    cand = [p for p in paths
-            if (b := _footer_bounds(p)) is None or any(map(_rg_may_split, b))]
-    if not cand:
+    ``max_chunk_tokens`` (encode ran with a smaller budget), as
+    {sgrp, k, files} — a partial group (corruption, concurrent surgery)
+    passes through. Reads on the driver the metadata columns of only the
+    row groups whose footers may hold split parts."""
+    parts = []
+    for p in paths:
+        b = _footer_bounds(p)
+        rgs = None if b is None else [i for i, r in enumerate(b)
+                                      if _rg_may_split(r)]
+        if rgs != []:
+            parts += [t.append_column("file", pa.repeat(p, t.num_rows))
+                      for t in _read_chunks(
+                          p, rgs, ["split_uid", "n_tokens", "doc_parts"])]
+    if not parts:
         return []
-    return (spark.read.schema(PAGES_DDL).parquet(*cand)
-            .filter(F.col("doc_parts") > 1)
-            .select(F.col("split_uid").alias("sgrp"), "n_tokens", "doc_parts",
-                    F.input_file_name().alias("fname"))
-            .groupBy("sgrp")
-            .agg(F.sum("n_tokens").alias("tot_tok"),
-                 F.count(F.lit(1)).alias("k"),
-                 F.max("doc_parts").alias("parts"),
-                 F.collect_set("fname").alias("files"))
-            .filter((F.col("k") == F.col("parts"))
-                    & (F.ceil(F.col("tot_tok") / F.lit(max_chunk_tokens))
-                       < F.col("parts")))
-            .select("sgrp", "k", "files").collect())
+    t = pa.concat_tables(parts)
+    agg = t.filter(pc.greater(t["doc_parts"], 1)).group_by("split_uid") \
+        .aggregate([("n_tokens", "sum"), ("doc_parts", "count"),
+                    ("doc_parts", "max"), ("file", "distinct")])
+    return [{"sgrp": r["split_uid"], "k": r["doc_parts_count"],
+             "files": r["file_distinct"]} for r in agg.to_pylist()
+            if r["doc_parts_count"] == r["doc_parts_max"]
+            and -(-r["n_tokens_sum"] // max_chunk_tokens)
+            < r["doc_parts_max"]]
 
 
 def _page_totals(spark: SparkSession, paths: list[str]) -> dict:
@@ -507,18 +510,9 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     # forever otherwise); their files are rewritten in full, whatever
     # their size — leaving them referenced would double-read the parts
     mdp = snap["metrics"]["max_doc_parts_chain"]
-    rech = (_rechunk_groups(spark, all_paths, max_chunk_tokens)
+    rech = (_rechunk_groups(all_paths, max_chunk_tokens)
             if not purge and mdp > 1 else [])
-    committed = {_norm_path(p): p for p in all_paths}
-    for f in {_norm_path(f) for r in rech for f in r["files"]}:
-        # a scan URI maps back to a committed file; failing that,
-        # stitching from a PARTIAL part set while the unmapped file
-        # stays referenced would corrupt rows: refuse
-        p = committed.get(f)
-        if p is None:
-            raise RuntimeError("compact: cannot map scan URI back to a "
-                               f"committed path for split-group rechunk: {f}")
-        selected.add(p)
+    selected.update(f for r in rech for f in r["files"])
 
     uid_prefix = f"{'prg' if purge else 'cmp'}{snap['snapshot_id'] + 1}"
     meta, new_files = [], []
@@ -606,7 +600,6 @@ def _write_ids(tbl: SnapshotTable, ids) -> tuple[list[str], int]:
     driver as one sorted, de-duplicated parquet file under a fresh run
     directory. Returns (its path, or none when there is no id; the
     number of distinct ids)."""
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     ids = pc.unique(ids)  # a NULL id is kept: it masks nothing
@@ -692,12 +685,12 @@ def resalt(spark: SparkSession, root: str, n_salts: int,
     grp_map = tbl.resolve_groups(snap)
     extra_schema = table_extra_schema(root, snap=snap)
     extra_cols = tuple(sorted(extra_schema.items()))
-    cols = ["doc_id", "tokens", "n_tok", "source"] + [n for n, _ in extra_cols]
-    rows = decode(spark, root, columns=cols, snapshot_id=snap["snapshot_id"])
-    bucketed = part.bucketed(rows.select(cols), n_salts=int(n_salts))
+    rows = decode(spark, root, columns=[*part.CORE_COLS,
+                                        *(n for n, _ in extra_cols)],
+                  snapshot_id=snap["snapshot_id"])
     uid_prefix = f"rs{snap['snapshot_id'] + 1}"
     meta = write_from_tasks(
-        tbl, bucketed,
+        tbl, part.bucketed(rows, n_salts=int(n_salts), extra_cols=extra_cols),
         lambda run_dir: make_direct_writer(
             run_dir, parquet_codec, max_chunk_tokens, extra_cols=extra_cols,
             group_prefix=uid_prefix))
@@ -782,7 +775,7 @@ def upsert_docs(spark: SparkSession, root: str, df: DataFrame,
             "upsert_docs requires a table with a committed salt_mod "
             "scheme (encode_job.encode writes one); this chain records "
             f"{scheme!r}")
-    missing = {"doc_id", "tokens", "n_tok", "source"} - set(df.columns)
+    missing = set(part.CORE_COLS) - set(df.columns)
     if missing:
         raise ValueError(f"upsert frame lacks core columns {sorted(missing)}")
     extra_schema = extra_schema_of(df)
@@ -809,11 +802,9 @@ def _upsert_pinned(tbl, df, scheme, extra_schema, extra_cols, nonce, prefix,
         raise ValueError("empty upsert frame (use delete_docs for "
                          "pure deletions)")
     # re-encode the replacements under the table's own salt scheme
-    sel = ["doc_id", "tokens", "n_tok", "source"] + [n for n, _ in extra_cols]
-    bucketed = part.bucketed(df.select(sel),
-                             n_salts=int(scheme["n_salts"]))
     meta = write_from_tasks(
-        tbl, bucketed,
+        tbl, part.bucketed(df, n_salts=int(scheme["n_salts"]),
+                           extra_cols=extra_cols),
         lambda run_dir: make_direct_writer(
             run_dir, parquet_codec, max_chunk_tokens, extra_cols=extra_cols,
             group_prefix=prefix))

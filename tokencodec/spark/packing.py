@@ -200,12 +200,12 @@ def pack_sequences(df: DataFrame, seq_len: int,
 
 
 def encode_packed(spark: SparkSession, df: DataFrame, root: str,
-                  seq_len: int, **encode_kw) -> DataFrame:
+                  seq_len: int, **encode_kw) -> dict:
     """Pack ``df`` and COMMIT the result as a page-format snapshot table
     at ``root`` (sequences become rows of the standard token table:
     doc_id = 's%012d' of seq_id, source = 'packed:<L>'), with the
     lineage written as parquet under ``root``/lineage and its path
-    recorded in the commit metrics. Returns the pages DataFrame.
+    recorded in the commit metrics. Returns encode()'s snapshot.
 
     The packed table round-trips through the ordinary decode() path —
     it IS a token table, so pruning/projection/audit/incremental reads

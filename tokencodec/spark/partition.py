@@ -15,7 +15,8 @@ never of Spark partition boundaries, cf. SURVEY.md §7.4):
 - ``salt``    = crc32(doc_id) % n_salts — spreads each length class
   over many reducers so one hot length range cannot stall an executor.
 - shuffle     = hash repartition on (bucket, salt): all rows of a
-  (bucket, salt) group land in one task, deterministically.
+  (bucket, salt) group land in one task, deterministically; a source
+  of one partition already holds every group and is not shuffled.
 - order       = sortWithinPartitions(bucket, salt, n_tok, doc_id):
   deterministic row order inside each group.
 - chunks      = inside mapInArrow, rows of one (bucket, salt) group are
@@ -31,6 +32,7 @@ from pyspark.sql import functions as F
 
 DEFAULT_SALTS = 64
 MAX_CHUNK_TOKENS = 1 << 20  # 1M token values per chunk (~4 MB int32)
+CORE_COLS = ("doc_id", "tokens", "n_tok", "source")
 
 
 def salts_for(n_rows: int) -> int:
@@ -44,16 +46,23 @@ def salts_for(n_rows: int) -> int:
 
 
 def bucketed(df: DataFrame, n_salts: int = DEFAULT_SALTS,
-             partitions: int | None = None) -> DataFrame:
-    """Add (bucket, salt) and shuffle so each group is co-located.
-    ``partitions`` fixes the shuffle's task count; None leaves it to
-    adaptive execution, which coalesces whole hash partitions from the
-    shuffled bytes."""
-    out = (df
-           .withColumn("bucket", F.length(F.bin(F.col("n_tok"))).cast("int"))
-           .withColumn("salt", F.pmod(F.crc32(F.col("doc_id")), F.lit(n_salts)).cast("int")))
+             partitions: int | None = None,
+             extra_cols: tuple = ()) -> DataFrame:
+    """The encode kernel's input in one projection: the core columns,
+    the ``extra_cols`` ((name, type) pairs), ``bucket`` and ``salt``,
+    each (bucket, salt) group in one task in (bucket, salt, n_tok,
+    doc_id) order. Rows are hash-repartitioned on (bucket, salt) into
+    ``partitions`` tasks; when None, into as many as adaptive execution
+    coalesces from the shuffled bytes, or not at all when the source's
+    physical plan reports one partition: its one task holds every
+    group already (and a large frame in it encodes in that task)."""
+    out = df.select(
+        *map(F.col, CORE_COLS), *(F.col(n) for n, _ in extra_cols),
+        F.length(F.bin("n_tok")).cast("int").alias("bucket"),
+        F.pmod(F.crc32("doc_id"), F.lit(n_salts)).cast("int").alias("salt"))
     if partitions:
         out = out.repartition(partitions, "bucket", "salt")
-    else:
+    elif df._jdf.queryExecution().executedPlan().outputPartitioning() \
+            .numPartitions() != 1:
         out = out.repartition("bucket", "salt")
     return out.sortWithinPartitions("bucket", "salt", "n_tok", "doc_id")

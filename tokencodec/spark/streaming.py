@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from tokencodec.spark import partition as part
-from tokencodec.spark.encode_job import (_COLS, make_direct_writer,
+from tokencodec.spark.encode_job import (make_direct_writer,
                                          require_direct_write, sum_meta,
                                          write_from_tasks)
 from tokencodec.spark.synth import SCHEMA_DDL
@@ -56,9 +56,8 @@ def encode_stream(spark: SparkSession, source_dir: str, out_root: str,
         # per-batch uid prefix: each micro-batch is its own commit group
         # and restarts chunk_seq per (bucket, salt), so appended batches
         # would otherwise repeat chunk uids
-        bucketed = part.bucketed(batch_df, n_salts=n_salts)
         meta = write_from_tasks(
-            tbl, bucketed.select(_COLS),
+            tbl, part.bucketed(batch_df, n_salts=n_salts),
             lambda run_dir: make_direct_writer(
                 run_dir, "zstd", max_chunk_tokens, commit_groups=1,
                 uid_prefix=key))
@@ -92,6 +91,7 @@ def _batch_scheme(tbl: SnapshotTable,
     An empty batch stamps nothing, so it cannot pin a salt count."""
     from tokencodec.spark.decode_job import _salt_scheme
     snap = tbl.current_snapshot()
+    tbl.require_kind(snap, "tokens")
     sch = None if snap is None else _salt_scheme(tbl.root, snap=snap)
     if sch is not None:
         return int(sch["n_salts"]), sch

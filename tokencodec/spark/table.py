@@ -677,6 +677,13 @@ class SnapshotTable:
         return out
 
     # ------------------------------------------------------------- writes
+    def require_kind(self, snap: dict | None, kind: str) -> None:
+        """Refuse a ``kind`` write onto ``snap`` of another kind: writers
+        before their job runs, commit on the parent it lands on."""
+        if snap is not None and snap["kind"] != kind:
+            raise ValueError(f"{self.root} is a {snap['kind']} table: "
+                             f"refusing a {kind} commit onto it")
+
     def new_run_dir(self) -> str:
         run_id = uuid.uuid4().hex[:12]
         return posixpath.join(self.root, "data", f"run-{run_id}")
@@ -742,10 +749,7 @@ class SnapshotTable:
                         f"{pid} while this operation planned against "
                         f"{require_parent_id}; re-run it against the "
                         "current state")
-            if parent is not None and parent["kind"] != kind:
-                raise ValueError(
-                    f"{self.root} is a {parent['kind']} table: refusing a "
-                    f"{kind} commit onto it")
+            self.require_kind(parent, kind)
             m = dict(metrics or {})
             # the partitioning scheme is chain-invariant between resalt
             # migrations: every commit inherits its parent's, so readers

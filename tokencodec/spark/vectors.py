@@ -188,9 +188,12 @@ def encode_vectors(spark: SparkSession, df: DataFrame, out_root: str,
     ``group`` names the commit group: the default makes re-runs
     idempotent; incremental ingestion appends further batches under
     fresh group names (readers see the union; decode_changes consumes
-    just the new ones). A token table's root is refused at commit."""
+    just the new ones). A token table's root is refused before the
+    write job runs."""
     tbl = SnapshotTable(out_root)
-    if group in tbl.committed_groups():
+    snap = tbl.current_snapshot()
+    tbl.require_kind(snap, "vectors")
+    if snap is not None and group in tbl.resolve_groups(snap):
         return read_vector_pages(spark, out_root)
     require_direct_write(out_root, "encode_vectors")
     if n_partitions is None:
