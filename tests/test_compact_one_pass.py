@@ -260,6 +260,29 @@ def test_noop_compact_writes_nothing(spark, tmp_path):
     assert _data_files(root) == before
 
 
+def test_compact_selecting_no_file_commits_nothing(spark, tmp_path,
+                                                   file_state):
+    """No small file, no pending delete and no shrinkable split group:
+    compact returns the current snapshot with no Spark job and leaves
+    every file under the root as it was."""
+    root = str(tmp_path / "t")
+    _encode(spark, root, _source(spark, n=60), 4096)
+    sid = SnapshotTable(root).current_snapshot()["snapshot_id"]
+    before = file_state(root)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("tc-noop", "compact")
+        snap = maintenance.compact(spark, root, max_chunk_tokens=4096,
+                                   small_file_bytes=0)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("tc-noop"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert snap["snapshot_id"] == sid
+    assert SnapshotTable(root).current_snapshot()["snapshot_id"] == sid
+    assert jobs == []
+    assert file_state(root) == before
+
+
 def test_compact_refuses_hadoop_only_root(spark):
     with pytest.raises(ValueError, match=r"s3://bucket/table"):
         maintenance.compact(spark, "s3a://bucket/table")

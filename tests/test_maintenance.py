@@ -96,6 +96,26 @@ def test_compact_same_budget_leaves_split_docs_alone(spark, tmp_path):
     assert decode_job.audit(df, decode_job.decode(spark, root), strict=True)["ok"]
 
 
+def test_rechunk_groups_only_regroups_within_one_file(tmp_path):
+    """A split group whose parts all lie in one file is re-sliced; one
+    spread over two files (which fsck reports) passes through."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write(name, parts):
+        path = str(tmp_path / name)
+        pq.write_table(pa.table({
+            "split_uid": [u for u, _ in parts],
+            "n_tokens": pa.array([n for _, n in parts], pa.int64()),
+            "doc_parts": pa.array([3] * len(parts), pa.int32())}), path)
+        return path
+
+    one = write("one.parquet", [("a", 100)] * 3 + [("b", 100)] * 2)
+    two = write("two.parquet", [("b", 100)])
+    assert maintenance._rechunk_groups([one, two], 4096) == \
+        [{"sgrp": "a", "k": 3, "file": one}]
+
+
 def test_compact_noop_when_nothing_mergeable(spark, tmp_path):
     root = str(tmp_path / "t")
     df = synth.token_table(spark, 50, seed=9)

@@ -451,35 +451,77 @@ def test_range_scan_reads_reported_files(spark, append_table, monkeypatch):
         decode_job.lookup_report(root, [d], doc_id_min=d)
 
 
-def test_compact_rewrite_one_salt_shuffle(spark, tmp_path):
-    """A compaction with pending sequence-aware deletes rewrites in one
-    salt shuffle into one MapInArrow: no Window, no join, no second
-    Exchange (each chunk's data seq comes from its scanned file path)."""
+def _compact_write_plan(spark, root, op="compact", **kw):
+    """Run ``maintenance.compact`` (or ``purge_deletes``) on ``root``;
+    return its new snapshot and the final executed plan of its write
+    job."""
     from tokencodec.spark import maintenance
-    root = str(tmp_path / "t")
+    frames = []
+    cls = type(spark.range(1))
+    real = cls.mapInArrow
+
+    def spy(self, *a, **k):
+        frames.append(real(self, *a, **k))
+        return frames[-1]
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(cls, "mapInArrow", spy)
+        snap = getattr(maintenance, op)(spark, root, **kw)
+    (job,) = [f for f in frames if "n_purged_rows" in f.columns]
+    plan = job._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in plan, plan
+    return snap, plan
+
+
+def _assert_compact_plan(plan):
+    """Range tasks read the files, one salt shuffle, one kernel."""
+    assert re.search(r"\bRange \(0, \d+, step=1, splits=\d+\)", plan), plan
+    assert "FileScan" not in plan and "_metadata" not in plan, plan
+    assert re.search(r"Exchange hashpartitioning\(salt#\d+, \d+\), "
+                     r"REPARTITION_BY_COL", plan), plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert plan.count("MapInArrow") == 2, plan
+    assert "Window" not in plan and "Join" not in plan, plan
+
+
+def _table_with_deletes(spark, root):
+    from tokencodec.spark import maintenance
     df = synth.token_table(spark, 240, seed=77)
     encode_job.encode(spark, df, root, commit_groups=2, n_salts=4,
                       max_chunk_tokens=512, direct_write=True)
     ids = sorted(r.doc_id for r in df.select("doc_id").collect())[:4]
     maintenance.delete_docs(spark, root, ids)
-    jobs = []
-    cls = type(df)
-    real = cls.mapInArrow
 
-    def spy(self, *a, **kw):
-        jobs.append(real(self, *a, **kw))
-        return jobs[-1]
 
-    with pytest.MonkeyPatch.context() as m:
-        m.setattr(cls, "mapInArrow", spy)
-        snap = maintenance.compact(spark, root, max_chunk_tokens=512)
+def test_compact_rewrite_one_salt_shuffle(spark, tmp_path):
+    """A compaction with pending sequence-aware deletes reads its files
+    in range tasks and rewrites in one salt shuffle into one kernel: no
+    FileScan, no _metadata, no Window, no join, no second Exchange
+    (each chunk's data seq comes from its committed file path)."""
+    root = str(tmp_path / "t")
+    _table_with_deletes(spark, root)
+    snap, plan = _compact_write_plan(spark, root, max_chunk_tokens=512)
     assert snap["metrics"]["n_purged_rows"] == 4
-    (job,) = jobs
-    plan = job._jdf.queryExecution().executedPlan().toString()
-    plan = plan.split("== Initial Plan ==")[0]
-    assert "isFinalPlan=true" in plan, plan
-    assert re.search(r"Exchange hashpartitioning\(salt#\d+, \d+\), "
-                     r"REPARTITION_BY_COL", plan), plan
-    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
-    assert plan.count("MapInArrow") == 1, plan
-    assert "Window" not in plan and "Join" not in plan, plan
+    _assert_compact_plan(plan)
+
+
+def test_purge_rewrite_plan(spark, tmp_path):
+    """purge_deletes runs compact's rewrite: the same plan."""
+    root = str(tmp_path / "t")
+    _table_with_deletes(spark, root)
+    snap, plan = _compact_write_plan(spark, root, op="purge_deletes")
+    assert snap["metrics"]["n_purged_rows"] == 4
+    _assert_compact_plan(plan)
+
+
+def test_compact_reslice_plans_one_exchange(spark, tmp_path):
+    """Re-slicing split documents under a larger budget happens in the
+    tasks that read their files: the write plans the salt shuffle and
+    no second Exchange."""
+    root = str(tmp_path / "t")
+    encode_job.encode(spark, synth.token_table(spark, 120, seed=5), root,
+                      commit_groups=2, n_salts=4, max_chunk_tokens=512)
+    snap, plan = _compact_write_plan(spark, root, max_chunk_tokens=4096)
+    assert snap["metrics"]["rechunked_split_groups"] > 0
+    _assert_compact_plan(plan)

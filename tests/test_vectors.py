@@ -27,7 +27,8 @@ def _bits(rows):
 def test_vectors_roundtrip_bit_exact_on_testdata(spark, tmp_path):
     src = spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
     root = str(tmp_path / "v")
-    pages = vectors.encode_vectors(spark, src, root, chunk_rows=64)
+    vectors.encode_vectors(spark, src, root, chunk_rows=64)
+    pages = vectors.read_vector_pages(spark, root)
     assert pages.count() > 1
     # every chunk's encoded bytes beat raw (float pages compress or
     # break even; the envelope overhead is amortized at 64 rows/chunk)
@@ -62,7 +63,8 @@ def test_vectors_codec_selection(spark, tmp_path):
     df = spark.createDataFrame(rows_q + rows_n,
                                "vec_id bigint, embedding array<float>, label int")
     root = str(tmp_path / "v")
-    pages = vectors.encode_vectors(spark, df, root, chunk_rows=128)
+    vectors.encode_vectors(spark, df, root, chunk_rows=128)
+    pages = vectors.read_vector_pages(spark, root)
     codecs_seen = {r.emb_codec for r in pages.select("emb_codec").collect()}
     assert "alp" in codecs_seen and "fpshuf" in codecs_seen
     out = vectors.decode_vectors(spark, root)
@@ -72,10 +74,12 @@ def test_vectors_codec_selection(spark, tmp_path):
 def test_vectors_idempotent_commit_and_time_travel(spark, tmp_path):
     src = spark.read.parquet(os.path.join(SF, "embeddings.parquet")).limit(100)
     root = str(tmp_path / "v")
-    vectors.encode_vectors(spark, src, root)
+    first = vectors.encode_vectors(spark, src, root)
     sid = SnapshotTable(root).current_snapshot()["snapshot_id"]
-    # a re-run is a no-op (the group is committed)
-    vectors.encode_vectors(spark, src, root)
+    assert first["snapshot_id"] == sid  # the commit's snapshot
+    # a re-run is a no-op (the group is committed) and returns the
+    # current snapshot
+    assert vectors.encode_vectors(spark, src, root)["snapshot_id"] == sid
     assert SnapshotTable(root).current_snapshot()["snapshot_id"] == sid
     snap = SnapshotTable(root).current_snapshot()
     m = snap["metrics"]
@@ -96,7 +100,8 @@ def test_vectors_rejects_nulls_and_handles_mixed_dims(spark, tmp_path):
     df2 = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<float>, label int")
     root = str(tmp_path / "v2")
-    pages = vectors.encode_vectors(spark, df2, root, chunk_rows=16)
+    vectors.encode_vectors(spark, df2, root, chunk_rows=16)
+    pages = vectors.read_vector_pages(spark, root)
     assert {r.dim for r in pages.select("dim").collect()} == {4, 7}
     out = vectors.decode_vectors(spark, root)
     assert _bits(out.collect()) == _bits(df2.collect())

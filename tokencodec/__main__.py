@@ -432,9 +432,10 @@ def main(argv: list[str] | None = None) -> int:
             from pyspark.sql import functions as F
 
             from tokencodec.spark import vectors
-            pages = vectors.encode_vectors(
+            vectors.encode_vectors(
                 spark, spark.read.parquet(args.src), args.out,
                 chunk_rows=args.chunk_rows, group=args.group)
+            pages = vectors.read_vector_pages(spark, args.out)
             m = pages.agg(F.count("*").alias("chunks"),
                           F.sum("n_rows").alias("rows"),
                           F.sum("raw_bytes").alias("raw"),

@@ -123,13 +123,13 @@ def _map_binary_views(col: pa.Array):
 
 def iter_page_rows(it: Iterator[pa.RecordBatch], page_cols: list[str],
                    scalar_cols: tuple = (), key_cols: tuple = ()):
-    """Shared row driver for the sorted-rows mapInArrow kernels
-    (maintenance._resplit_batches, stitch, decode): yields ``(key, pages, scalars)`` per row, where ``key``
-    is the tuple of ``key_cols`` values (group-change detection is the
-    caller's one remaining job), ``pages`` maps each page column to a
-    zero-copy memoryview slice (never an .as_py() byte copy), and
-    ``scalars`` holds the per-row values of ``scalar_cols`` (including
-    map columns like extra_pages)."""
+    """Shared row driver over sorted chunk rows (decode, stitch,
+    maintenance._reslice): yields ``(key, pages, scalars)`` per row,
+    where ``key`` is the tuple of ``key_cols`` values (group-change
+    detection is the caller's one remaining job), ``pages`` maps each
+    page column to a zero-copy memoryview slice (never an .as_py() byte
+    copy), and ``scalars`` holds the per-row values of ``scalar_cols``
+    (including map columns like extra_pages)."""
     for batch in it:
         if batch.num_rows == 0:
             continue
@@ -515,16 +515,6 @@ def _salt_scheme(root: str, branch: str | None = None,
 _ANCIENT_SEQ = -(1 << 62)
 
 
-def _norm_path(p: str) -> str:
-    """Canonicalize a data path for matching against Spark's
-    ``_metadata.file_path``: drop the scheme (Spark may render
-    ``file:/x``, ``file:///x`` or ``s3a://b/k`` for a committed
-    ``/x`` / ``s3://b/k``) and leading slashes, leaving a bare
-    ``segments/...`` key that both sides agree on."""
-    import re
-    return re.sub(r"^[a-zA-Z][a-zA-Z0-9+.-]*:", "", p).lstrip("/")
-
-
 class _Deletes:
     """The pending row-level deletes of one snapshot and the one rule
     that applies them, Iceberg's equality-delete sequence rule: a
@@ -536,8 +526,8 @@ class _Deletes:
     file: ``ids`` holds the deleted ids sorted and unique (an Arrow
     string array), ``seqs`` the newest delete seq of each. A copy dies
     only when its data seq is strictly older, so upsert replacements
-    and later re-adds survive. ``path_seqs`` maps normalized committed
-    data files to their group's seq (_path_seq_map); ``at`` binds
+    and later re-adds survive. ``path_seqs`` maps committed data paths
+    to their group's seq (_path_seq_map); ``at`` binds
     another map to the same ids without copying or re-sorting them."""
 
     def __init__(self, rows: pa.Table):
@@ -582,11 +572,11 @@ class _Deletes:
         i = keys.searchsorted(lo)
         return i < len(keys) and keys[i] <= hi
 
-    def seq_of(self, file_path: str) -> int:
-        """The data seq of rows read from ``file_path`` (any scheme
-        spelling): its committed file's, else _ANCIENT_SEQ — data older
-        than the oldest pending delete, which every delete masks."""
-        return self.path_seqs.get(_norm_path(file_path), _ANCIENT_SEQ)
+    def seq_of(self, path: str) -> int:
+        """The data seq of rows read from the committed data path
+        ``path``: its group's, else _ANCIENT_SEQ — data older than the
+        oldest pending delete, which every delete masks."""
+        return self.path_seqs.get(path, _ANCIENT_SEQ)
 
     def dead(self, docs: pa.Array, seq: int) -> np.ndarray:
         """Which of ``docs`` (a string array), all read from data of seq
@@ -598,11 +588,11 @@ class _Deletes:
 
 
 def _path_seq_map(groups: dict, seqs: dict, min_seq: int) -> dict:
-    """{normalized data path: group seq} for groups at/after
+    """{committed data path: group seq} for groups at/after
     ``min_seq``, the oldest pending delete's seq: everything older
     defaults to _ANCIENT_SEQ in _Deletes.seq_of, so the map is bounded
     by the data committed since that delete, not by table size."""
-    return {_norm_path(p): s for g, s in seqs.items()
+    return {p: s for g, s in seqs.items()
             if not is_delete_group(g) and s >= min_seq
             for p in groups.get(g, [])}
 

@@ -9,22 +9,22 @@ superseded files behind.
 ``compact`` is "rewrite data files" in one pass and one commit. The
 driver plans from manifests and parquet footers: it reads the pending
 delete ids with pyarrow and selects small files and files whose footer
-doc-id ranges may hold a deleted id (a metadata read of the row
-groups whose footers admit split parts finds split documents to
-re-slice). One Spark job then shuffles the selected chunk rows on ``salt``, sorts
+doc-id ranges may hold a deleted id (a metadata read of the row groups
+whose footers admit split parts finds split documents to re-slice).
+``spark.range`` tasks read the selected files whole, as scans do
+(_file_source), and re-slice those split documents in the file that
+holds them. One Spark job shuffles the chunk rows on ``salt``, sorts
 them (salt, bucket, chunk_uid) and runs one mapInArrow kernel. Per
 (bucket, salt) run the kernel drops deleted rows (dead chunks vanish,
 partly dead ones are re-encoded), merges consecutive under-filled
 whole-document chunks into budget-filled ones, and passes every other
 chunk through byte-identical. It writes its own parquet file, one salt
 per row group (the salt-major layout: a lookup's footer narrowing keeps
-only the files holding its salt). Split documents whose parts would
-shrink under the budget are reassembled and re-sliced before the
-shuffle. One replace-commit swaps the selected files for the written
-ones and empties the delete groups; decoded rows equal the
-pre-compaction decode (tests audit this). ``purge_deletes`` runs the
-same rewrite over only the files that may hold a deleted id, with no
-merging.
+only the files holding its salt). One replace-commit swaps the selected
+files for the written ones and empties the delete groups; decoded rows
+equal the pre-compaction decode (tests audit this). ``purge_deletes``
+runs the same rewrite over only the files that may hold a deleted id,
+with no merging.
 
 ``expire_snapshots`` drops manifests older than the last N snapshots
 and deletes data files referenced ONLY by expired snapshots (the
@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import posixpath
 from collections.abc import Iterator
+from itertools import groupby
 
 import numpy as np
 import pyarrow as pa
@@ -54,8 +55,8 @@ from tokencodec.spark.decode_job import (_Deletes, _binary_views,
                                          decode_extra_page, iter_page_rows,
                                          spark_type_of_extra_page)
 from tokencodec.spark.encode_job import (_PAGES_TYPES, META_DDL, META_FIELDS,
-                                         PAGES_DDL, _encode_chunk,
-                                         _rows_to_batch, make_direct_writer,
+                                         _encode_chunk, _rows_to_batch,
+                                         assign_splits, make_direct_writer,
                                          pyarrow_fs, require_direct_write,
                                          sum_meta, table_extra_schema,
                                          write_from_tasks)
@@ -199,81 +200,88 @@ def _merge_chunks(bucket: int, salt: int, gid: int, parts: list,
                 for n, t in extras if n in ext_seen} or None)
 
 
-def _resplit_batches(uid_prefix: str, max_chunk_tokens: int,
-                     carry: tuple = ()):
-    """mapInArrow: split-doc part chunks co-partitioned by split group
-    (``sgrp``) and sorted (sgrp, doc_part) -> re-chunked output. Each
-    part chunk is single-row by construction; the group's tokens are
-    concatenated once (linear) and re-sliced under the NEW budget —
-    one whole-doc chunk when it fits, else fewer/larger parts.
-    chunk_uids derive from the (table-unique) split uid, so rewritten
-    chunks can never collide with each other or with merge output.
+def _reslice(parts: pa.Table, uid_prefix: str,
+             max_chunk_tokens: int) -> pa.RecordBatch:
+    """One file's parts of the split groups _rechunk_groups names,
+    re-sliced under ``max_chunk_tokens``: a group's tokens are
+    concatenated once in doc_part order and re-sliced into one
+    whole-doc chunk when it fits, else fewer, larger parts. chunk_uids
+    derive from the (table-unique) split uid, so rewritten chunks never
+    collide with each other or with merge output. Extra pages ride
+    along VERBATIM: every part of a split group carries the same
+    single-doc extras, so each new chunk copies the first part's."""
+    parts = parts.sort_by([("split_uid", "ascending"),
+                           ("doc_part", "ascending")])
+    rows = []
+    for (sgrp,), group in groupby(
+            iter_page_rows(iter(parts.to_batches()), _PAGE_COLS,
+                           ("bucket", "salt", "extra_pages"),
+                           key_cols=("split_uid",)),
+            key=lambda row: row[0]):
+        group = list(group)
+        _, first, sc = group[0]
+        values = np.concatenate([grouped.decode_tokens_column(
+            pages["page_tokens"]) for _, pages, _ in group])
+        total = len(values)
+        n_parts = max(1, -(-total // max_chunk_tokens))
+        doc_id = _string_array(first["page_doc_id"])
+        source = _string_array(first["page_source"])
+        extras = dict(sc["extra_pages"] or {}) or None
+        for p in range(n_parts):
+            lo, hi = p * max_chunk_tokens, min(total, (p + 1) * max_chunk_tokens)
+            row = _encode_chunk(
+                sc["bucket"], sc["salt"], p, doc_id, values[lo:hi],
+                np.array([hi - lo], dtype=np.int64), source,
+                doc_part=p if n_parts > 1 else 0, doc_parts=n_parts,
+                uid_prefix=uid_prefix,
+                split_uid=sgrp if n_parts > 1 else "", extras=extras)
+            row["chunk_uid"] = (f"{uid_prefix}-r-{sgrp}-p{p}"
+                                if n_parts > 1 else f"{uid_prefix}-r-{sgrp}")
+            rows.append(row)
+    return _rows_to_batch(rows)
 
-    Schema-evolution extra pages ride along VERBATIM: every part of a
-    split group carries the same single-doc extras (encode slices one
-    oversized doc per group), so each emitted chunk copies the first
-    part's page bytes — no decode, no re-encode. The ``carry`` string
-    columns are copied from the first part too: compaction carries each
-    part's source file path, which gives the new chunks their data seq
-    (all parts of a split group come from one commit)."""
 
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cur = None  # (sgrp, bucket, salt)
-        vals: list[np.ndarray] = []
-        doc_id = source = extras = carried = None
-        rows: list[dict] = []
+def _file_source(spark: SparkSession, paths: list[str], size: dict,
+                 columns: list[str], dels: _Deletes | None = None,
+                 reslice: tuple | None = None) -> DataFrame:
+    """``columns`` of every chunk row of the committed files ``paths``:
+    ``spark.range`` tasks read whole files with _read_chunks, assigned
+    by encode_job.assign_splits on their bytes (``size``) as a scan's
+    _scan_tasks are. ``dels`` adds each file's data seq as ``seq``;
+    ``reslice`` = (split uids, uid prefix, budget) re-slices the parts
+    of those groups when their file ends (_reslice)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+    schema = pa.schema([(c, _PAGES_TYPES[c]) for c in columns]
+                       + ([("seq", pa.int64())] if dels is not None else []))
+    tasks = assign_splits([(p, None, size[p]) for p in paths],
+                          spark.sparkContext.defaultParallelism)
+    uids = (None if reslice is None
+            else pa.array(sorted(reslice[0]), pa.string()))
 
-        def finish():
-            nonlocal vals, doc_id, source, extras
-            if cur is None or not vals:
-                return
-            sgrp, bucket, salt = cur
-            values = np.concatenate(vals) if len(vals) != 1 else vals[0]
-            total = len(values)
-            n_parts = max(1, (total + max_chunk_tokens - 1) // max_chunk_tokens)
-            for p in range(n_parts):
-                lo, hi = p * max_chunk_tokens, min(total, (p + 1) * max_chunk_tokens)
-                row = _encode_chunk(
-                    bucket, salt, p, doc_id, values[lo:hi],
-                    np.array([hi - lo], dtype=np.int64), source,
-                    doc_part=p if n_parts > 1 else 0,
-                    doc_parts=n_parts,
-                    uid_prefix=uid_prefix,
-                    split_uid=sgrp if n_parts > 1 else "",
-                    extras=extras)
-                row["chunk_uid"] = (f"{uid_prefix}-r-{sgrp}-p{p}"
-                                    if n_parts > 1 else f"{uid_prefix}-r-{sgrp}")
-                row.update(carried)
-                rows.append(row)
-            vals, doc_id, source, extras = [], None, None, None
+    def chunks(path: str) -> Iterator[pa.Table]:
+        held = []
+        for t in _read_chunks(path, None, columns):
+            if uids is not None:
+                split = pc.is_in(t["split_uid"], value_set=uids)
+                held.append(t.filter(split))
+                t = t.filter(pc.invert(split))
+            yield t
+        if any(h.num_rows for h in held):
+            yield pa.Table.from_batches([_reslice(pa.concat_tables(held),
+                                                  *reslice[1:])])
 
-        def emit():
-            b = _rows_to_batch(rows)
-            for c in carry:
-                b = b.append_column(c, pa.array([r[c] for r in rows],
-                                                 pa.string()))
-            rows.clear()
-            return b
+    def read(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in it:
+            for t in b.column(0).to_pylist():
+                for path, _ in tasks[t]:
+                    seq = None if dels is None else dels.seq_of(path)
+                    for c in chunks(path):
+                        if seq is not None:
+                            c = c.append_column("seq", pa.repeat(seq, len(c)))
+                        yield from c.cast(schema).to_batches()
 
-        for key, pages, sc in iter_page_rows(
-                it, _PAGE_COLS, ("extra_pages", *carry),
-                key_cols=("sgrp", "bucket", "salt")):
-            if key != cur:
-                finish()
-                cur = key
-                if len(rows) >= 4:
-                    yield emit()
-            vals.append(grouped.decode_tokens_column(pages["page_tokens"]))
-            if doc_id is None:
-                doc_id = _string_array(pages["page_doc_id"])
-                source = _string_array(pages["page_source"])
-                extras = dict(sc["extra_pages"] or {}) or None
-                carried = {c: sc[c] for c in carry}
-        finish()
-        if rows:
-            yield emit()
-
-    return fn
+    return (spark.range(0, len(tasks), 1, len(tasks))
+            .mapInArrow(read, from_arrow_schema(schema)))
 
 
 def _compact_stream(it: Iterator[pa.RecordBatch], budget: int,
@@ -281,7 +289,7 @@ def _compact_stream(it: Iterator[pa.RecordBatch], budget: int,
                     stats: dict) -> Iterator[pa.Table]:
     """Chunk rows sorted (salt, bucket, chunk_uid) -> pages tables of one
     salt each. Per chunk, in order: pending deletes apply (_mask_chunk,
-    each chunk's seq from its ``_fp`` file path), the survivor joins a
+    the chunk's data seq from its ``seq`` column), the survivor joins a
     merge group (_MergeGroups; a ``budget`` of 0 merges nothing), groups
     of 2+ chunks re-encode as one (_merge_chunks); every other chunk
     passes through byte-identical. ``stats`` counts purged documents (a
@@ -338,7 +346,7 @@ def _compact_stream(it: Iterator[pa.RecordBatch], budget: int,
         views = {c: _binary_views(batch.column(c)) for c in _PAGE_COLS}
         cols = {c: batch.column(c).to_pylist() for c in
                 ("bucket", "salt", "n_tokens", "doc_part", "doc_parts")}
-        fps = batch.column("_fp").to_pylist() if dels is not None else None
+        seqs = batch.column("seq").to_pylist() if dels is not None else None
         for r in range(batch.num_rows):
             k = (cols["bucket"][r], cols["salt"][r])
             if k != key:
@@ -353,8 +361,8 @@ def _compact_stream(it: Iterator[pa.RecordBatch], budget: int,
             item = (batch, r, pages)
             n_tok, parts = cols["n_tokens"][r], cols["doc_parts"][r]
             if dels is not None:
-                n_dead, row = _mask_chunk(dels, batch, r, pages,
-                                          dels.seq_of(fps[r]), uid_prefix)
+                n_dead, row = _mask_chunk(dels, batch, r, pages, seqs[r],
+                                          uid_prefix)
                 if n_dead and (parts == 1 or cols["doc_part"][r] == 0):
                     stats["n_purged_rows"] += n_dead
                 if row is not None:
@@ -414,10 +422,11 @@ def _file_may_hit(path: str, dels: _Deletes) -> bool:
 
 def _rechunk_groups(paths: list[str], max_chunk_tokens: int) -> list[dict]:
     """Complete split groups whose parts would SHRINK under
-    ``max_chunk_tokens`` (encode ran with a smaller budget), as
-    {sgrp, k, files} — a partial group (corruption, concurrent surgery)
-    passes through. Reads on the driver the metadata columns of only the
-    row groups whose footers may hold split parts."""
+    ``max_chunk_tokens`` (encode ran with a smaller budget) and all lie
+    in one file, as {sgrp, k, file}; a partial group or one spread over
+    files (corruption, concurrent surgery) passes through. Reads on the
+    driver the metadata columns of only the row groups whose footers
+    may hold split parts."""
     parts = []
     for p in paths:
         b = _footer_bounds(p)
@@ -434,19 +443,21 @@ def _rechunk_groups(paths: list[str], max_chunk_tokens: int) -> list[dict]:
         .aggregate([("n_tokens", "sum"), ("doc_parts", "count"),
                     ("doc_parts", "max"), ("file", "distinct")])
     return [{"sgrp": r["split_uid"], "k": r["doc_parts_count"],
-             "files": r["file_distinct"]} for r in agg.to_pylist()
+             "file": r["file_distinct"][0]} for r in agg.to_pylist()
             if r["doc_parts_count"] == r["doc_parts_max"]
+            and len(r["file_distinct"]) == 1
             and -(-r["n_tokens_sum"] // max_chunk_tokens)
             < r["doc_parts_max"]]
 
 
-def _page_totals(spark: SparkSession, paths: list[str]) -> dict:
+def _page_totals(spark: SparkSession, paths: list[str], size: dict) -> dict:
     """Chunk, document, token, byte totals and max doc_parts of
     ``paths``, aggregated from metadata columns (page blobs never read).
     A split document counts once, in its first part."""
     if not paths:
         return dict.fromkeys(_TOTAL_KEYS + ("max_doc_parts",), 0)
-    tot = (spark.read.schema(PAGES_DDL).parquet(*paths)
+    tot = (_file_source(spark, paths, size, ["doc_part", "n_rows", "n_tokens",
+                                             "enc_bytes", "doc_parts"])
            .agg(F.count(F.lit(1)).alias("n_chunks"),
                 F.sum(F.when(F.col("doc_part") == 0, F.col("n_rows")))
                 .alias("n_rows"),
@@ -475,10 +486,11 @@ def compact(spark: SparkSession, root: str,
     deleted id and files holding shrinkable split parts are
     rewritten; healthy big files stay referenced untouched. Without
     pending deletes a metadata-only probe first looks for a merge group
-    of 2+ chunks: a no-op compaction writes and commits nothing. Commit
-    metrics come from the tasks' summary rows plus a metadata aggregate
-    over the untouched files. The tasks write with pyarrow, so a root
-    pyarrow cannot address is refused."""
+    of 2+ chunks: a no-op compaction writes and commits nothing (and
+    runs no Spark job when it selects no file). Commit metrics come from
+    the tasks' summary rows plus a metadata aggregate over the untouched
+    files. The tasks write with pyarrow, so a root pyarrow cannot
+    address is refused."""
     return _rewrite(spark, root, max_chunk_tokens, parquet_codec,
                     small_file_bytes)
 
@@ -496,14 +508,15 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
     grp_map = tbl.resolve_groups(snap)
-    if purge and not any(is_delete_group(k) and ps
-                         for k, ps in grp_map.items()):
+    has_deletes = any(is_delete_group(k) and ps for k, ps in grp_map.items())
+    if purge and not has_deletes:
         return snap
     dels = _pending_deletes(tbl, snap)
     all_paths = [p for k, ps in grp_map.items()
                  if not is_delete_group(k) for p in ps]
+    size = {p: tbl.fs.size(p) for p in all_paths}
     selected = {p for p in all_paths
-                if (not purge and tbl.fs.size(p) < small_file_bytes)
+                if (not purge and size[p] < small_file_bytes)
                 or (dels is not None and _file_may_hit(p, dels))}
     # shrinkable split groups are reassembled and re-sliced (a table
     # re-compacted with a larger budget would keep its fragments
@@ -512,43 +525,29 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     mdp = snap["metrics"]["max_doc_parts_chain"]
     rech = (_rechunk_groups(all_paths, max_chunk_tokens)
             if not purge and mdp > 1 else [])
-    selected.update(f for r in rech for f in r["files"])
+    selected.update(r["file"] for r in rech)
+    if not selected and not has_deletes:
+        return snap  # nothing to rewrite and no delete group to empty
 
     uid_prefix = f"{'prg' if purge else 'cmp'}{snap['snapshot_id'] + 1}"
     meta, new_files = [], []
     if selected:
-        pages = spark.read.schema(PAGES_DDL).parquet(*sorted(selected))
+        paths = sorted(selected)
         if dels is None and not rech:
             # only a merge can change anything: look for a merge group
             # of 2+ chunks in the metadata columns before writing a byte
-            probe = _salt_sorted(pages.select(
-                "bucket", "salt", "chunk_uid", "n_tokens", "doc_parts"))
+            probe = _salt_sorted(_file_source(
+                spark, paths, size,
+                ["bucket", "salt", "chunk_uid", "n_tokens", "doc_parts"]))
             if not sum(r["n"] for r in probe.mapInArrow(
                     _merge_probe(max_chunk_tokens), "n bigint").collect()):
                 return snap
-        # deletes need each chunk's data seq: its file path rides along
-        # to the kernel (through the resplit too)
-        carry = ("_fp",) if dels is not None else ()
-        if carry:
-            pages = pages.withColumn("_fp", F.col("_metadata.file_path"))
-        pages = pages.select(*_PAGES_TYPES, *carry)
-        if rech:
-            # re-slice FIRST, so a doc that reassembles small enough
-            # joins a merge group in this same pass
-            in_rech = ((F.col("doc_parts") > 1)
-                       & F.col("split_uid").isin([r["sgrp"] for r in rech]))
-            resplit = (pages.filter(in_rech)
-                       .withColumn("sgrp", F.col("split_uid"))
-                       .repartition("sgrp")
-                       .sortWithinPartitions("sgrp", "doc_part")
-                       .select("bucket", "salt", "sgrp", "extra_pages",
-                               *_PAGE_COLS, *carry)
-                       .mapInArrow(
-                           _resplit_batches(uid_prefix, max_chunk_tokens,
-                                            carry),
-                           PAGES_DDL + "".join(f", {c} string"
-                                               for c in carry)))
-            pages = pages.filter(~in_rech).unionByName(resplit)
+        # re-slice in the source, so a doc that reassembles small enough
+        # joins a merge group in this same pass
+        pages = _file_source(
+            spark, paths, size, list(_PAGES_TYPES), dels,
+            reslice=([r["sgrp"] for r in rech], uid_prefix,
+                     max_chunk_tokens) if rech else None)
         extras = tuple(sorted(table_extra_schema(
             root, branch=branch, snap=snap).items()))
         meta = write_from_tasks(
@@ -564,7 +563,7 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     # chain's historical max doc_parts survives a layout that no longer
     # splits
     kept = [p for p in all_paths if p not in selected]
-    tot, new = _page_totals(spark, kept), sum_meta(meta)
+    tot, new = _page_totals(spark, kept, size), sum_meta(meta)
     n_rech_parts = sum(r["k"] for r in rech)
     m = {**{k: tot[k] + new[k] for k in _TOTAL_KEYS},
          "max_doc_parts": max(tot["max_doc_parts"], new["max_doc_parts"],

@@ -182,19 +182,20 @@ def _file_writer(run_dir: str, chunk_rows: int, group: str,
 def encode_vectors(spark: SparkSession, df: DataFrame, out_root: str,
                    chunk_rows: int = 4096, n_partitions: int | None = None,
                    parquet_codec: str = "zstd",
-                   group: str = "vectors") -> DataFrame:
+                   group: str = "vectors") -> dict:
     """Encode a (vec_id, embedding, label) DataFrame into a snapshot
-    table under ``out_root``; returns the committed pages DataFrame.
-    ``group`` names the commit group: the default makes re-runs
-    idempotent; incremental ingestion appends further batches under
-    fresh group names (readers see the union; decode_changes consumes
-    just the new ones). A token table's root is refused before the
-    write job runs."""
+    table under ``out_root``; returns its commit's snapshot (the
+    current one when ``group`` is already committed; read_vector_pages
+    lists the pages). ``group`` names the commit group: the default
+    makes re-runs idempotent; incremental ingestion appends further
+    batches under fresh group names (readers see the union;
+    decode_changes consumes just the new ones). A token table's root is
+    refused before the write job runs."""
     tbl = SnapshotTable(out_root)
     snap = tbl.current_snapshot()
     tbl.require_kind(snap, "vectors")
     if snap is not None and group in tbl.resolve_groups(snap):
-        return read_vector_pages(spark, out_root)
+        return snap
     require_direct_write(out_root, "encode_vectors")
     if n_partitions is None:
         try:
@@ -208,10 +209,9 @@ def encode_vectors(spark: SparkSession, df: DataFrame, out_root: str,
            .sortWithinPartitions("vec_id"))
     meta = write_from_tasks(tbl, src, lambda run_dir: _file_writer(
         run_dir, chunk_rows, group, parquet_codec))
-    tbl.commit({group: sorted(r["file"] for r in meta)},
-               metrics={**sum_meta(meta), "op": "encode_vectors"},
-               kind="vectors")
-    return read_vector_pages(spark, out_root)
+    return tbl.commit({group: sorted(r["file"] for r in meta)},
+                      metrics={**sum_meta(meta), "op": "encode_vectors"},
+                      kind="vectors")
 
 
 def read_vector_pages(spark: SparkSession, root: str,
