@@ -260,6 +260,45 @@ def test_noop_compact_writes_nothing(spark, tmp_path):
     assert _data_files(root) == before
 
 
+def _compact_jobs(spark, root, group, budget):
+    """compact's snapshot and the Spark jobs it ran."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, "compact")
+        snap = maintenance.compact(spark, root, max_chunk_tokens=budget)
+        return snap, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_merge_check_runs_no_job(spark, tmp_path):
+    """Without pending deletes or split groups to re-slice, whether a
+    compaction merges is decided on the driver: a merging compaction
+    runs only its salt-shuffled write (at most 2 jobs under AQE), and
+    one that selects files but finds nothing to merge runs none."""
+    root = str(tmp_path / "t")
+    # no split document, and two appends leave two whole-document
+    # chunks per (bucket, salt) to merge
+    df = _source(spark, n=120)
+    for k, prefix in ((0, "g"), (1, "a")):
+        encode_job.encode(spark, df.filter(F.col("n_tok") % 2 == k), root,
+                          commit_groups=2, n_salts=4,
+                          max_chunk_tokens=1 << 20, partitions=4,
+                          group_prefix=prefix)
+    sid = SnapshotTable(root).current_snapshot()["snapshot_id"]
+    snap, jobs = _compact_jobs(spark, root, "tc-merge", 1 << 21)
+    assert snap["snapshot_id"] == sid + 1
+    assert snap["metrics"]["compacted_chunks"] >= 2
+    assert snap["metrics"]["rechunked_split_groups"] == 0
+    assert snap["metrics"]["kept_files"] == 0
+    assert 1 <= len(jobs) <= 2, jobs
+    snap, jobs = _compact_jobs(spark, root, "tc-nomerge", 1 << 21)
+    assert snap["snapshot_id"] == sid + 1
+    assert jobs == []
+    assert decode_job.audit(df, decode_job.decode(spark, root),
+                            strict=True) == OK
+
+
 def test_compact_selecting_no_file_commits_nothing(spark, tmp_path,
                                                    file_state):
     """No small file, no pending delete and no shrinkable split group:

@@ -81,7 +81,7 @@ def test_many_part_doc_reassembles_packed_and_list(spark, tmp_path):
 
 
 def _part_row(doc_id: str, toks, part: int):
-    """One split-part page row (single-doc chunk), as stitch sees it."""
+    """One split-part page row (single-doc chunk), as _stitch sees it."""
     import numpy as np
     import pyarrow as pa
 
@@ -99,38 +99,34 @@ def _part_row(doc_id: str, toks, part: int):
             np.asarray(toks, dtype=np.int64)),
         "page_n_tok": pageformat.encode_int_page(
             np.array([len(toks)], dtype=np.int64)),
-        "sgrp": f"{doc_id}-uid",
+        "split_uid": f"{doc_id}-uid",
         "doc_part": part,
     }
 
 
 def test_stitch_flushes_before_int32_offset_overflow(monkeypatch):
-    """ADVICE r4 (medium): the flush check used to run only BETWEEN
-    groups, so a final huge reassembled doc on top of a nearly-full
-    buffer could push packed value bytes past int32 and the offsets
-    would astype-wrap silently. The stitcher must flush BEFORE the
-    append would cross the ceiling; driven in-process with a shrunken
-    ceiling."""
+    """ADVICE r4 (medium): packed value bytes of one output batch must
+    never pass int32, or the offsets would astype-wrap silently. The
+    stitch gives each reassembled doc its own batch, so docs that fit
+    the ceiling one by one never add up past it; driven in-process with
+    a shrunken ceiling."""
     import numpy as np
     import pyarrow as pa
 
     from tokencodec.spark import decode_job as dj
 
     monkeypatch.setattr(dj, "STITCH_INT32_SAFE", 1000)   # 250 tokens
-    monkeypatch.setattr(dj, "STITCH_FLUSH_BYTES", 1 << 40)  # only the guard
     cols = ["doc_id", "tokens", "n_tok", "source"]
-    stitch, page_cols = dj.make_stitch_batches(packed=True, cols=cols)
 
     rng = np.random.default_rng(7)
     docs = {f"d{i}": rng.integers(0, 1 << 20, 200) for i in range(3)}
     rows = []
-    for did, toks in docs.items():  # two parts per doc, in sgrp order
-        rows.append(_part_row(did, toks[:100], 0))
+    for did, toks in docs.items():  # two parts per doc, parts reversed
         rows.append(_part_row(did, toks[100:], 1))
-    batch = pa.RecordBatch.from_pylist(rows).select(
-        page_cols + ["sgrp", "doc_part"])
+        rows.append(_part_row(did, toks[:100], 0))
+    parts = pa.Table.from_pylist(rows)
 
-    out = list(stitch(iter([batch])))
+    out = list(dj._stitch(parts, cols, (), True, None, None))
     # 3 docs x 800 value bytes with a 1000-byte ceiling: one doc per batch
     assert [b.num_rows for b in out] == [1, 1, 1]
     got = {}
@@ -153,10 +149,11 @@ def test_stitch_raises_instead_of_wrapping(monkeypatch):
 
     monkeypatch.setattr(dj, "STITCH_INT32_SAFE", 1000)
     cols = ["doc_id", "tokens", "n_tok", "source"]
-    stitch, page_cols = dj.make_stitch_batches(packed=True, cols=cols)
     toks = np.arange(300)  # 1200 value bytes > ceiling, single group
     rows = [_part_row("big", toks[:150], 0), _part_row("big", toks[150:], 1)]
-    batch = pa.RecordBatch.from_pylist(rows).select(
-        page_cols + ["sgrp", "doc_part"])
     with pytest.raises(ValueError, match="int32 binary offsets"):
-        list(stitch(iter([batch])))
+        list(dj._stitch(pa.Table.from_pylist(rows), cols, (), True, None,
+                        None))
+    # a whole chunk past the ceiling raises the same way
+    with pytest.raises(ValueError, match="int32 binary offsets"):
+        dj._decode_chunk(_part_row("big", toks, 0), cols, True)

@@ -154,6 +154,25 @@ def test_encode_packed_roundtrip(spark, tmp_path):
     assert m["op"] == "pack" and m["seq_len"] == L
 
 
+def test_cli_pack_summary_matches_pages(spark, tmp_path, capsys):
+    """The CLI `pack` line reports the committed table: chunks,
+    sequences and tokens equal an aggregate over its pages."""
+    import json
+
+    from tokencodec.__main__ import main as cli_main
+    from tokencodec.spark import encode_job
+
+    src, root = str(tmp_path / "src"), str(tmp_path / "packed")
+    synth.token_table(spark, 100, seed=75).write.parquet(src)
+    assert cli_main(["pack", src, root, "--seq-len", str(L)]) == 0
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    m = encode_job.read_pages(spark, root).agg(
+        F.count("*").alias("chunks"), F.sum("n_rows").alias("sequences"),
+        F.sum("n_tokens").alias("tokens")).collect()[0]
+    assert got == {"chunks": m["chunks"], "sequences": m["sequences"],
+                   "tokens": m["tokens"], "seq_len": L}
+
+
 def test_bound_sample_is_bounded_and_deterministic(spark):
     """The bound-selection job must collect O(n_partitions) rows no
     matter how many documents exist (VERDICT r5 weak #3: the former

@@ -393,16 +393,14 @@ def main(argv: list[str] | None = None) -> int:
                               "raw_bytes": int(m.raw), "enc_bytes": int(m.enc),
                               "ratio": round(m.enc / m.raw, 4)}))
         elif args.cmd == "pack":
-            from tokencodec.spark import encode_job, packing
-            packing.encode_packed(spark, spark.read.parquet(args.src),
-                                  args.out, seq_len=args.seq_len)
-            pages = encode_job.read_pages(spark, args.out)
-            from pyspark.sql import functions as F
-            m = pages.agg(F.count("*").alias("chunks"),
-                          F.sum("n_rows").alias("seqs"),
-                          F.sum("n_tokens").alias("tokens")).collect()[0]
-            print(json.dumps({"chunks": m.chunks, "sequences": int(m.seqs),
-                              "tokens": int(m.tokens),
+            from tokencodec.spark import packing
+            # the commit's own totals: no file listing, no aggregate job
+            t = packing.encode_packed(
+                spark, spark.read.parquet(args.src), args.out,
+                seq_len=args.seq_len)["metrics"]["table_totals"]
+            print(json.dumps({"chunks": t["n_chunks"],
+                              "sequences": t["n_rows"],
+                              "tokens": t["n_tokens"],
                               "seq_len": args.seq_len}))
         elif args.cmd == "decode" and args.since_snapshot is not None:
             from tokencodec.spark import decode_job

@@ -35,8 +35,8 @@ never touched; time travel keeps working for the retained window.
 from __future__ import annotations
 
 import posixpath
+from collections import Counter
 from collections.abc import Iterator
-from itertools import groupby
 
 import numpy as np
 import pyarrow as pa
@@ -52,8 +52,8 @@ from tokencodec.spark.decode_job import (_Deletes, _binary_views,
                                          _pending_deletes, _read_chunks,
                                          _rg_may_split, _scheme_from_manifest,
                                          _string_array, decode,
-                                         decode_extra_page, iter_page_rows,
-                                         spark_type_of_extra_page)
+                                         decode_extra_page, doc_tokens,
+                                         spark_type_of_extra_page, split_docs)
 from tokencodec.spark.encode_job import (_PAGES_TYPES, META_DDL, META_FIELDS,
                                          _encode_chunk, _rows_to_batch,
                                          assign_splits, make_direct_writer,
@@ -133,26 +133,23 @@ class _MergeGroups:
         return (self.cum - 1) // self.budget
 
 
-def _merge_probe(budget: int):
-    """mapInArrow over sorted chunk METADATA rows -> one row ``n``: the
-    chunks sitting in merge groups of 2 or more."""
-
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        groups = _MergeGroups(budget)
-        open_g, k, n = None, 0, 0
-        for batch in it:
-            for b, s, nt, dp in zip(*(batch.column(c).to_pylist() for c in (
-                    "bucket", "salt", "n_tokens", "doc_parts"))):
-                g = groups.gid((b, s), nt, dp)
-                if g is not None and (b, s, g) != open_g:
-                    n += k if k >= 2 else 0
-                    open_g, k = (b, s, g), 0
-                k += g is not None
-        n += k if k >= 2 else 0
-        yield pa.RecordBatch.from_arrays([pa.array([n], pa.int64())],
-                                         names=["n"])
-
-    return fn
+def _merges(paths: list[str], budget: int) -> bool:
+    """Would a rewrite of ``paths`` merge anything: does _MergeGroups
+    put 2+ chunks in one group? Decided on the driver from the files'
+    metadata columns, sorted (salt, bucket, chunk_uid) as the rewrite
+    sorts them."""
+    t = pa.concat_tables([t for p in paths for t in _read_chunks(
+        p, None, ["bucket", "salt", "chunk_uid", "n_tokens", "doc_parts"])])
+    t = t.sort_by([("salt", "ascending"), ("bucket", "ascending"),
+                   ("chunk_uid", "ascending")])
+    groups = _MergeGroups(budget)
+    gids = Counter()
+    for b, s, nt, dp in zip(*(t[c].to_pylist() for c in (
+            "bucket", "salt", "n_tokens", "doc_parts"))):
+        g = groups.gid((b, s), nt, dp)
+        if g is not None:
+            gids[b, s, g] += 1
+    return any(n >= 2 for n in gids.values())
 
 
 def _merge_chunks(bucket: int, salt: int, gid: int, parts: list,
@@ -210,27 +207,20 @@ def _reslice(parts: pa.Table, uid_prefix: str,
     collide with each other or with merge output. Extra pages ride
     along VERBATIM: every part of a split group carries the same
     single-doc extras, so each new chunk copies the first part's."""
-    parts = parts.sort_by([("split_uid", "ascending"),
-                           ("doc_part", "ascending")])
     rows = []
-    for (sgrp,), group in groupby(
-            iter_page_rows(iter(parts.to_batches()), _PAGE_COLS,
-                           ("bucket", "salt", "extra_pages"),
-                           key_cols=("split_uid",)),
-            key=lambda row: row[0]):
-        group = list(group)
-        _, first, sc = group[0]
-        values = np.concatenate([grouped.decode_tokens_column(
-            pages["page_tokens"]) for _, pages, _ in group])
+    for doc in split_docs(parts):
+        values = doc_tokens(doc)
+        sgrp, bucket, salt = (doc[c][0].as_py()
+                              for c in ("split_uid", "bucket", "salt"))
         total = len(values)
         n_parts = max(1, -(-total // max_chunk_tokens))
-        doc_id = _string_array(first["page_doc_id"])
-        source = _string_array(first["page_source"])
-        extras = dict(sc["extra_pages"] or {}) or None
+        doc_id = _string_array(doc["page_doc_id"][0].as_py())
+        source = _string_array(doc["page_source"][0].as_py())
+        extras = dict(doc["extra_pages"][0].as_py() or {}) or None
         for p in range(n_parts):
             lo, hi = p * max_chunk_tokens, min(total, (p + 1) * max_chunk_tokens)
             row = _encode_chunk(
-                sc["bucket"], sc["salt"], p, doc_id, values[lo:hi],
+                bucket, salt, p, doc_id, values[lo:hi],
                 np.array([hi - lo], dtype=np.int64), source,
                 doc_part=p if n_parts > 1 else 0, doc_parts=n_parts,
                 uid_prefix=uid_prefix,
@@ -485,9 +475,10 @@ def compact(spark: SparkSession, root: str,
     ``small_file_bytes``, files whose footers may hold a pending
     deleted id and files holding shrinkable split parts are
     rewritten; healthy big files stay referenced untouched. Without
-    pending deletes a metadata-only probe first looks for a merge group
-    of 2+ chunks: a no-op compaction writes and commits nothing (and
-    runs no Spark job when it selects no file). Commit metrics come from
+    pending deletes or split groups to re-slice, the driver first looks
+    for a merge group of 2+ chunks in the selected files' metadata
+    columns (_merges): a no-op compaction runs no Spark job and writes
+    and commits nothing. Commit metrics come from
     the tasks' summary rows plus a metadata aggregate over the untouched
     files. The tasks write with pyarrow, so a root pyarrow cannot
     address is refused."""
@@ -501,7 +492,9 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     """compact's rewrite. ``purge`` is purge_deletes': it rewrites only
     the files _file_may_hit selects, re-slices nothing and commits
     ``op: purge``; its ``max_chunk_tokens`` of 0 merges nothing.
-    ``branch`` rewrites that branch's chain."""
+    ``branch`` rewrites that branch's chain. A rewrite that only merges
+    runs the salt-shuffled write (two Spark jobs under AQE) plus, when
+    files are kept, their metadata aggregate."""
     require_direct_write(root, "purge_deletes" if purge else "compact")
     tbl = SnapshotTable(root, branch=branch)
     snap = tbl.current_snapshot()
@@ -533,15 +526,11 @@ def _rewrite(spark: SparkSession, root: str, max_chunk_tokens: int,
     meta, new_files = [], []
     if selected:
         paths = sorted(selected)
-        if dels is None and not rech:
-            # only a merge can change anything: look for a merge group
-            # of 2+ chunks in the metadata columns before writing a byte
-            probe = _salt_sorted(_file_source(
-                spark, paths, size,
-                ["bucket", "salt", "chunk_uid", "n_tokens", "doc_parts"]))
-            if not sum(r["n"] for r in probe.mapInArrow(
-                    _merge_probe(max_chunk_tokens), "n bigint").collect()):
-                return snap
+        if dels is None and not rech and not _merges(paths,
+                                                      max_chunk_tokens):
+            # only a merge could have changed anything, and the
+            # metadata columns show none: no job, no byte written
+            return snap
         # re-slice in the source, so a doc that reassembles small enough
         # joins a merge group in this same pass
         pages = _file_source(
